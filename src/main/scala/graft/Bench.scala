@@ -90,16 +90,21 @@ object Bench {
     // vs work). task_s ≈ wall·threads ⇒ the work itself is that big;
     // wall ≫ task_s/threads ⇒ the box was oversubscribed. Cold and warm
     // are attributed separately — warm runs reread the cold run's
-    // per-line caches, so their task_s is the marginal cost.
+    // per-line caches, so their task_s is the marginal cost. memo_builds
+    // counts the memo store builds of the cold run: a consumer line that
+    // builds a chain's entry is paying for that chain.
     val queryMeta = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def memoBuilds(): Long = graft.store.Memo.stats(spark).map(_.builds).sum
     def timedWarm(name: String)(body: => Unit): (String, Double) = {
       val (tc0, sc0) = snapshot()
+      val b0 = memoBuilds()
       val cold = once(name)(body)
       val (tc1, sc1) = snapshot()
+      val builds = memoBuilds() - b0
       def emit(taskS: Double, shufMbV: Double): Unit =
         queryMeta(name) =
           s"""{"cold":${r3(cold)},"task_cold_s":${r3((tc1 - tc0) / 1e3)},""" +
-            s""""shuf_cold_mb":${r3((sc1 - sc0) / 1e6)},""" +
+            s""""shuf_cold_mb":${r3((sc1 - sc0) / 1e6)},"memo_builds":$builds,""" +
             s""""task_s":${r3(taskS)},"shuf_mb":${r3(shufMbV)}}"""
       if (cold < 0 || warmRuns == 0) { emit(-1.0, -1.0); name -> cold }
       else {
@@ -118,8 +123,8 @@ object Bench {
     // query body may persist/localCheckpoint intermediates it never
     // unpersists, and cold+3-warm × 582 lines of dead blocks is enough
     // pressure to evict whatever the next line needed (the round-11
-    // regression cluster). Chains are parquet-backed (Extensions
-    // .memoStore), so dropping EVERY cached block is safe — consumers
+    // regression cluster). Chains are parquet-backed (graft.store.Memo),
+    // so dropping EVERY cached block is safe — consumers
     // still read the store. clearCache() drops CacheManager entries
     // (plan-level persists) AND their blocks; the getPersistentRDDs pass
     // reaps RDD-level blocks clearCache cannot see (localCheckpoint
@@ -137,19 +142,19 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def selected(name: String): Boolean = only.forall(_.contains(name))
-    // Chain lines: min-of-2 — the first (timed cold) materialization IS
-    // the memo every consumer reads; the second rebuilds the same plan
-    // OUTSIDE the memo (Extensions.chainResamples) and is discarded. A
-    // load spike must hit both materializations to fake a regression,
-    // and the emitted task/shuffle metrics expose it when it does.
+    // Chain lines (graft.queries.Chains, registry order): min-of-2 — the
+    // first (timed cold) materialization IS the memo every consumer
+    // reads; the second rebuilds the chain's own work OUTSIDE the memo
+    // (Chain.rebuild) and is discarded. A load spike must hit both
+    // materializations to fake a regression, and the emitted
+    // task/shuffle metrics expose it when it does.
     // SPARK_GRAFT_BENCH_RUNS=0 (the sf10 scale-step harness) skips the
     // resample like it skips warm repeats.
-    val resamples = graft.queries.Extensions.chainResamples(spark, sfDir)
     val chainMeta = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def timedChain(name: String, thunk: () => org.apache.spark.sql.DataFrame)
-        : (String, Double) = {
+    def timedChain(c: graft.queries.Chains.Chain): (String, Double) = {
+      val name = c.name
       val (t0, s0) = snapshot()
-      val w1 = once(name) { thunk().count(): Unit }
+      val w1 = once(name) { c(spark, sfDir).count(): Unit }
       val (t1, s1) = snapshot()
       val (w2, t2, s2) =
         if (w1 < 0 || warmRuns == 0) (-1.0, t1, s1)
@@ -162,9 +167,18 @@ object Bench {
           // everything itself from parquet-backed upstreams, so nothing
           // it references is cached (the Harness.sweepStorage invariant).
           sweepStorage()
-          val w = resamples.get(name) match {
-            case Some(r) => once(s"$name#2") { r() }
-            case None => -1.0
+          val w = once(s"$name#2") {
+            // noop sink, NOT count(): count() lets the optimizer
+            // column-prune a map-only rebuild down to a parquet row-count
+            // (chain_simhash_sigs timed 0.06 task-s for a ~2.3 task-s
+            // fold). The noop write computes EVERY output column and
+            // discards it. Run 1 is unaffected (the store write forces
+            // full materialization); query lines keep count() for
+            // driver comparability.
+            val df = c.rebuild(spark, sfDir)
+            df.write.format("noop").mode("overwrite").save()
+            try df.unpersist(blocking = false)
+            catch { case scala.util.control.NonFatal(_) => }
           }
           val (t, sh) = snapshot()
           (w, t, sh)
@@ -176,10 +190,9 @@ object Bench {
       val best = if (w2 >= 0) math.min(w1, w2) else w1
       name -> best
     }
-    val chain = graft.queries.Extensions.sharedIntermediates(spark, sfDir)
-      .filter { case (name, _) => selected(name) }
-      .map { case (name, thunk) =>
-        val line = timedChain(name, thunk)
+    val chain = graft.queries.Chains.all.filter(c => selected(c.name))
+      .map { c =>
+        val line = timedChain(c)
         sweepStorage() // chain results live in the parquet store, not cache
         line
       }
@@ -206,8 +219,14 @@ object Bench {
       if (v < 0) Double.MinValue else -v }.map(_._1)
     val qmeta = metaOrder.flatMap(k => queryMeta.get(k).map(v => s"\"" + k + "\":" + v))
       .mkString("{", ",", "}")
+    // the memo store's own account of the run, per entry name
+    val memo = graft.store.Memo.stats(spark).map { m =>
+      s""""${m.name}":{"entries":${m.entries},"hits":${m.hits},""" +
+        s""""builds":${m.builds},"build_s":${r3(m.buildMs / 1e3)},""" +
+        s""""mb":${r3(m.bytes / 1e6)}}"""
+    }.mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","failures":$failures,"warm":true,"queries":$qs,"chains":$chains,"qmeta":$qmeta,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","failures":$failures,"warm":true,"queries":$qs,"chains":$chains,"qmeta":$qmeta,"memo":$memo,"sf":"$sfDir"}"""
     // Emit both ways: bare line on real stdout (build.sbt sets
     // run/outputStrategy := StdoutOutput so sbt does not "[info]"-prefix
     // it), and a file a consumer can read without scraping sbt logs.

@@ -16,7 +16,7 @@ object Harness {
     * frame that still references one throws "checkpoint block not
     * found". Safe here ONLY because the harness is single-threaded and
     * every intermediate that outlives a harness line is parquet-backed
-    * (Extensions.memoStore / Stores.materialized), never cached: a
+    * (graft.store.Memo / Stores.materialized), never cached: a
     * query/chain body may persist or checkpoint whatever it likes
     * INSIDE its line, but nothing cached may be referenced across a
     * sweep. Do not call this from concurrent code or a long-lived user

@@ -29,7 +29,7 @@ object Tables {
     * fresh attribute ids each call, so (unlike memoizing the DataFrame
     * itself) repeated loads can never trip self-join ambiguity.
     * Schemas are plain structs, session-free. Staleness contract as
-    * Extensions.memoStore: regenerating the files under `dir` with a
+    * graft.store.Memo: regenerating the files under `dir` with a
     * DIFFERENT schema mid-JVM would serve the old schema — the driver
     * runs one harness JVM per data generation (documented). */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[

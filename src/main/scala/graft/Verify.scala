@@ -50,7 +50,7 @@ object Verify {
       // storage sweep between queries: per-query persists/checkpoints are
       // dead after the dump, and 571 queries of dead blocks in one
       // session is real pressure; shared chains are parquet-backed
-      // (Extensions.memoStore) so dropping every cached block is safe
+      // (graft.store.Memo) so dropping every cached block is safe
       Harness.sweepStorage(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -669,18 +669,11 @@ object Dedup {
     * consumers' numbers stay their marginal band-join cost. */
   def simhashSigTable(docs: DataFrame, idCol: String, textCol: String,
                       blockCol: String): DataFrame =
-    graft.queries.Breadth13.memoizedOnPlan(docs,
-        s"simhash_sims|$idCol|$blockCol|$textCol") {
-      simhashSigTablePlan(docs, idCol, textCol, blockCol)
+    graft.store.Memo(docs, s"simhash_sims|$idCol|$blockCol|$textCol") {
+      withRowwiseSimhash64(
+          docs.select(col(idCol), col(blockCol), col(textCol)), textCol)
+        .select(col(idCol), col(blockCol), col("simhash"))
     }
-
-  /** The raw (un-memoized) signature-fold plan — plan pins and the
-    * bench's memo-bypassing resample build it directly. */
-  def simhashSigTablePlan(docs: DataFrame, idCol: String, textCol: String,
-                          blockCol: String): DataFrame =
-    withRowwiseSimhash64(
-        docs.select(col(idCol), col(blockCol), col(textCol)), textCol)
-      .select(col(idCol), col(blockCol), col("simhash"))
 
   /** [[simhashNearDups]] at the corpus-sized combination-banding point:
     * one count job picks the block count (see [[simhashOperatingPoint]]),

@@ -33,7 +33,7 @@ case class Bar(close: Long, high: Long, low: Long, vol: Long)
   * agree bit-for-bit.
   *
   * At 100 TB the shape holds: the shuffle is the |keys|·|days| bar grid
-  * (already memoized session-wide via Breadth13.memoizedOnPlan), the
+  * (already memoized session-wide via graft.store.Memo), the
   * fold state is O(1)–O(w) per key, and no driver-side state exists.
   * The one scale knob is per-key history length: a multi-decade series
   * is still ≤~10⁴ elements — executor-local arrays hold to centuries.
@@ -49,7 +49,7 @@ object Recurrence {
   def barArrays(df: DataFrame, keyCol: String, tsCol: String,
                 valCol: String, tieBreak: String,
                 qtyJsonField: Option[String] = None): DataFrame =
-    Breadth13.memoizedOnPlan(df,
+    graft.store.Memo(df,
         s"bararr|$keyCol|$tsCol|$valCol|$tieBreak|$qtyJsonField") {
       val bars = Breadth13.dayBarsCents(df, keyCol, tsCol, valCol, tieBreak)
       val withVol = qtyJsonField match {

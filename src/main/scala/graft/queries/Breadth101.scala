@@ -166,7 +166,7 @@ object Breadth101 {
       rollingMedian(Tables.events(s, dir), "user_id", "ts", "value",
         "event_id")),
     "q_kcore" -> ((s, dir) =>
-      kcoreFromDirected(Extensions.knnDirectedEdges(s, dir))),
+      kcoreFromDirected(Chains.knnDirected(Tables.embeddings(s, dir)))),
     "q_trimmed_mean" -> ((s, dir) =>
       trimmedMean(Tables.events(s, dir), "event_type", "value")))
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.store.Memo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -75,19 +76,16 @@ object Breadth117 {
     // (102x shuffle at 10x data); bucketed, edge bytes cross the wire
     // once per orientation at build, and iterations shuffle only the
     // node-sized score frames.
-    val edges = Breadth13.memoizedOnPlanStored(edgesRaw, "hits_edges_bsrc") {
+    val edges = Memo(edgesRaw, "hits_edges_bsrc") {
       // plain store first (also the exact row count for bucket sizing),
       // then the one bucketed rewrite — both one-time, memoized
-      val dist = Extensions.materializeToStore(edgesRaw.sparkSession,
-        edgesRaw.select(col("src"), col("dst")).distinct())
-      Extensions.bucketedToStore(dist, "src",
-        Extensions.bucketsForRows(dist.count()))
+      val dist = Memo.write(edgesRaw.select(col("src"), col("dst")).distinct())
+      Memo.writeBucketed(dist, "src", Memo.bucketsForRows(dist.count()))
     }
-    val edgesByDst = Breadth13.memoizedOnPlanStored(edgesRaw, "hits_edges_bdst") {
+    val edgesByDst = Memo(edgesRaw, "hits_edges_bdst") {
       // second orientation reads the FIRST store, not the raw input —
       // the distinct is paid once
-      Extensions.bucketedToStore(edges, "dst",
-        Extensions.bucketsForRows(edges.count()))
+      Memo.writeBucketed(edges, "dst", Memo.bucketsForRows(edges.count()))
     }
     val srcs = edges.select(col("src")).distinct()
     var h = srcs
@@ -137,14 +135,13 @@ object Breadth117 {
     // key u so each hop's frontier join reads co-located buckets and
     // only the frontier (node-sized) shuffles; `nodes` is derived once
     // from the stored adjacency.
-    val adj = Breadth13.memoizedOnPlanStored(edgesU, "hop_adj_bu") {
-      val raw = Extensions.materializeToStore(edgesU.sparkSession,
+    val adj = Memo(edgesU, "hop_adj_bu") {
+      val raw = Memo.write(
         edgesU.select(col("id_a").as("u"), col("id_b").as("v"))
           .unionAll(edgesU.select(col("id_b").as("u"), col("id_a").as("v"))))
-      Extensions.bucketedToStore(raw, "u",
-        Extensions.bucketsForRows(raw.count()))
+      Memo.writeBucketed(raw, "u", Memo.bucketsForRows(raw.count()))
     }
-    val nodes = Breadth13.memoizedOnPlan(edgesU, "hop_nodes") {
+    val nodes = Memo(edgesU, "hop_nodes") {
       adj.select(col("u").as("node")).distinct()
     }
     val srcs = nodes.join(labels, Seq("node"))
@@ -184,7 +181,7 @@ object Breadth117 {
       hits(Tables.lineitem(s, dir).select(
         col("l_suppkey").as("src"), col("l_partkey").as("dst")))),
     "q_hop_histogram" -> ((s, dir) =>
-      hopHistogram(Extensions.knnGraphEdges(s, dir),
+      hopHistogram(Chains.KnnEdges(s, dir),
         Tables.embeddings(s, dir)
           .select(col("vec_id").as("node"), col("label")))))
 

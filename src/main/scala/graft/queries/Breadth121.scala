@@ -104,21 +104,12 @@ object Breadth121 {
   /** ADC shortlist size for the exact re-rank stage. */
   private[queries] val PqShortlist = 50
 
-  /** The ADC shortlist (top-50 per probe), memoized per (session, sf
-    * dir) — q_pq_adc, q_pq_recall and the RRF fusion all read the SAME
-    * encoded ranking instead of each re-running the |V|·|labels|·dims
-    * encode join (measured 10.6×/9.8× duplicated at the sf1 step
-    * before the memo). Bench attributes the one-time build to
-    * `chain_pq_topk`. The top-5 is a filter on it: row_number ranks
-    * agree on every prefix. */
-  private[queries] def pqShortlist(s: org.apache.spark.sql.SparkSession,
-                                   dir: String): DataFrame =
-    Extensions.memoized(s, s"pqadc$PqShortlist|$dir") {
-      pqShortlistPlan(Tables.embeddings(s, dir))
-    }
-
-  /** The raw (un-memoized) ADC-shortlist plan — the bench's min-of-2
-    * chain resample. */
+  /** The ADC shortlist (top-50 per probe) — the build of Chains.PqTopK:
+    * q_pq_adc, q_pq_recall and the RRF fusion all read the SAME encoded
+    * ranking instead of each re-running the |V|·|labels|·dims encode
+    * join (measured 10.6×/9.8× duplicated at the sf1 step before the
+    * memo). The top-5 is a filter on it: row_number ranks agree on
+    * every prefix. */
   private[graft] def pqShortlistPlan(emb: DataFrame): DataFrame =
     pqAdc(emb, PqShortlist)
 
@@ -130,7 +121,7 @@ object Breadth121 {
   private[graft] def pqRecall(s: org.apache.spark.sql.SparkSession,
                               dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val short = pqShortlist(s, dir)
+    val short = Chains.PqTopK(s, dir)
       .select(col("probe_id"), col("rank"), col("neighbor_id"))
     val pv = emb.select(col("vec_id").as("probe_id"),
       col("embedding").as("__pv"))
@@ -146,7 +137,7 @@ object Breadth121 {
       .select(col("probe_id"), col("neighbor_id"))
     val adc5 = short.filter(col("rank") <= PqTopK)
       .select(col("probe_id"), col("neighbor_id"))
-    val brute = Extensions.bruteTopK(s, dir)
+    val brute = Chains.BruteTopK(s, dir)
       .filter(col("rank") <= PqTopK)
       .select(col("probe_id"), col("neighbor_id"))
     def hits(cand: DataFrame) =
@@ -167,7 +158,7 @@ object Breadth121 {
 
   val defs: Map[String, Q] = Map(
     "q_pq_adc" -> ((s, dir) =>
-      pqShortlist(s, dir).filter(col("rank") <= PqTopK)
+      Chains.PqTopK(s, dir).filter(col("rank") <= PqTopK)
         .orderBy(col("probe_id").asc, col("rank").asc)),
     "q_pq_recall" -> ((s, dir) => pqRecall(s, dir)))
 

@@ -63,7 +63,7 @@ object Breadth122 {
   private[graft] def rpDistortion(s: org.apache.spark.sql.SparkSession,
                                   dir: String): DataFrame = {
     import s.implicits._
-    val edges = Extensions.knnGraphEdges(s, dir)
+    val edges = Chains.KnnEdges(s, dir)
     val e = exploded(Tables.embeddings(s, dir))
     // 64×16 broadcast sign table
     val signs = (for (p <- 1 to InDims; j <- 1 to RpOutDims)
@@ -114,13 +114,13 @@ object Breadth122 {
                                   dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id"))
     val reps = docs.join(
-        Extensions.dupClusters(s, dir)
+        Chains.DupClusters(s, dir)
           .select(col("doc_id"), col("cluster_id")), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_id"), col("doc_id")).as("__rep"))
       .withColumn("__tn", trainFlag(col("doc_id")))
       .withColumn("__ta", trainFlag(col("__rep")))
-    val pairs = Extensions.verifiedPairs(s, dir)
+    val pairs = Chains.MinhashPairs(s, dir)
       .select(col("id_a"), col("id_b"))
     def flagOf(idCol: String, side: String) =
       reps.select(col("doc_id").as(idCol), col("__tn").as(s"__tn$side"),

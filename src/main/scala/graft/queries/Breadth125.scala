@@ -28,10 +28,10 @@ object Breadth125 {
 
   private[graft] def rrfFusion(s: org.apache.spark.sql.SparkSession,
                                dir: String): DataFrame = {
-    val brute = Extensions.bruteTopK(s, dir)
+    val brute = Chains.BruteTopK(s, dir)
       .filter(col("rank") <= TopK)
       .select(col("probe_id"), col("neighbor_id"), col("rank").as("__ra"))
-    val pq = Breadth121.pqShortlist(s, dir)
+    val pq = Chains.PqTopK(s, dir)
       .filter(col("rank") <= TopK)
       .select(col("probe_id"), col("neighbor_id"), col("rank").as("__rb"))
     val fused = brute.join(pq, Seq("probe_id", "neighbor_id"), "full_outer")

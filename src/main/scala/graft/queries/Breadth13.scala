@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.store.Memo
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -24,83 +25,21 @@ object Breadth13 {
 
   private def cents(c: Column): Column = Breadth11.cents(c)
 
-  /** Shared materialized-intermediate store for the (key, day) bar/vol
-    * grids, keyed on (session, canonicalized input plan, arg fingerprint)
-    * — the CacheManager lookup discipline, so ~36 indicator queries across
-    * 14 files that each derive day bars from the SAME events scan share
-    * ONE |keys·days|-sized frame instead of re-running the
-    * window+aggregate per query (round-8 verdict: the single biggest
-    * recoverable chunk of the bench total, and the reason bar-family
-    * timings were noisy). Plan equality is semantic (`sameResult`), so any
-    * caller passing an equivalent scan hits the memo with zero call-site
-    * changes; a DIFFERENT input frame (tests, other tables) gets its own
-    * entry. Entries are parquet-backed through Extensions
-    * .materializeToStore (round-12): a persisted grid was hostage to
-    * executor storage pressure — a full-surface bench run's dead blocks
-    * could evict it and turn every later indicator query back into a
-    * grid rebuild — while a written-through grid survives any cache
-    * sweep. Same staleness contract as Extensions.memoStore: one session
-    * per data generation. Bounded: past 64 entries the whole map drops
-    * (entries are only memos — recompute is correct, just slower).
-    * Streaming frames bypass (a materialized grid is a batch-only
-    * notion; the streaming twins carry their own transformWithState
-    * state). */
-  private val planMemo = scala.collection.mutable.ArrayBuffer.empty[
-    (org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      String, DataFrame)]
-  private[graft] def memoizedOnPlan(df: DataFrame, argsKey: String)
-                                     (build: => DataFrame): DataFrame =
-    memoizedOnPlanWith(df, argsKey)(b =>
-      Extensions.materializeToStore(df.sparkSession, b))(build)
-
-  /** Like [[memoizedOnPlan]] but the BUILD ITSELF is the store
-    * boundary (e.g. Extensions.bucketedToStore registers a bucketed
-    * table and returns its reader) — no second plain-parquet write. */
-  private[graft] def memoizedOnPlanStored(df: DataFrame, argsKey: String)
-                                           (build: => DataFrame): DataFrame =
-    memoizedOnPlanWith(df, argsKey)(identity)(build)
-
-  private def memoizedOnPlanWith(df: DataFrame, argsKey: String)
-                                (store: DataFrame => DataFrame)
-                                (build: => DataFrame): DataFrame = {
-    if (df.isStreaming) return build
-    val s = df.sparkSession
-    val plan = df.queryExecution.analyzed
-    def lookup(): Option[DataFrame] = planMemo.synchronized {
-      planMemo.find(e => (e._1 eq s) && e._3 == argsKey &&
-        e._2.sameResult(plan)).map(_._4)
-    }
-    lookup().getOrElse {
-      // materialization RUNS the grid job — never under the lock (other
-      // callers' lookups would serialize behind it); a same-key race
-      // double-writes and the second insert defers to the first
-      val mat = store(build)
-      planMemo.synchronized {
-        lookup() match {
-          case Some(df0) => df0
-          case None =>
-            if (planMemo.size > 64) planMemo.clear()
-            planMemo += ((s, plan, argsKey, mat))
-            mat
-        }
-      }
-    }
-  }
-
   /** Daily integer-cent OHLC bars per key: open/close via the tie-safe
     * explicit-full-frame window (q_ohlc formulation), high/low as plain
     * min/max. One (key, day) window + one aggregate — a single shuffle,
-    * paid ONCE per (session, input plan) via the shared memo above. */
+    * paid ONCE per (session, input plan) via graft.store.Memo: ~36
+    * indicator queries across 14 files derive day bars from the SAME
+    * events scan and share ONE |keys·days|-sized frame (round-8 verdict:
+    * the single biggest recoverable chunk of the bench total). */
   private[graft] def dayBarsCents(df: DataFrame, keyCol: String, tsCol: String,
                                   valCol: String, tieBreak: String): DataFrame =
-    memoizedOnPlan(df, s"bars|$keyCol|$tsCol|$valCol|$tieBreak") {
+    Memo(df, s"bars|$keyCol|$tsCol|$valCol|$tieBreak") {
       dayBarsCentsPlan(df, keyCol, tsCol, valCol, tieBreak)
     }
 
-  /** The raw (un-memoized) bar-grid plan — the bench's min-of-2 chain
-    * resample builds it directly so the second materialization can never
-    * hit the memo. */
+  /** The raw (un-memoized) bar-grid plan — plan pins read its real
+    * lineage here (the memoized grid plans as a bare parquet scan). */
   private[graft] def dayBarsCentsPlan(df: DataFrame, keyCol: String, tsCol: String,
                                       valCol: String, tieBreak: String): DataFrame = {
       val bar = Window.partitionBy(col(keyCol), col("__day"))

@@ -28,7 +28,7 @@ object Breadth133 {
                                   dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("lang"))
     val flagged = docs.join(
-        Extensions.dupClusters(s, dir)
+        Chains.DupClusters(s, dir)
           .select(col("doc_id"), col("cluster_id")), Seq("doc_id"), "left")
       .select(col("doc_id"), col("lang"),
         when(trainFlag(coalesce(col("cluster_id"), col("doc_id"))),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.store.Memo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -143,10 +144,10 @@ object Breadth141 {
     // aggregate cost, not a private IVF rebuild.
     "q_modularity" -> ((s, dir) =>
       modularity(Tables.embeddings(s, dir),
-        Extensions.globalMutualKnnEdges(s, dir))),
+        Chains.GlobalMutual(s, dir))),
     "q_label_cohesion" -> ((s, dir) =>
       labelCohesion(Tables.embeddings(s, dir),
-        Extensions.globalMutualKnnEdges(s, dir))),
+        Chains.GlobalMutual(s, dir))),
     // Recall audit of the approximate graph build: per probe, how many
     // of the brute-force exact top-k the projection-window directed
     // top-k actually found. UNLIKE the q_embed_ann_* reports (whose
@@ -185,7 +186,7 @@ object Breadth141 {
     }),
     "q_mutual_recall" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val ann = Extensions.globalApproxDirected(s, dir)
+      val ann = Chains.globalApproxDirected(emb)
         .filter(col("src") < RecallProbes)
         .select(col("src").as("probe_id"), col("dst").as("neighbor_id"),
           lit(1L).as("__hit"))
@@ -219,7 +220,7 @@ object Breadth141 {
     * consumers (ANN build, brute ground truth, probe filter) read the
     * parquet, not three rebuilds. */
   private[graft] def clusteredCorpus(emb: DataFrame): DataFrame =
-    Breadth13.memoizedOnPlan(emb, "clustered_corpus") {
+    Memo(emb, "clustered_corpus") {
       val q = emb.select(col("vec_id"), col("label"),
         transform(col("embedding").cast("array<double>"), x =>
           floor(x * lit(graft.sim.ProjGraph.QScale) + lit(0.5)).cast("long"))
@@ -242,7 +243,7 @@ object Breadth141 {
     * ANN rebuild per run (the bruteTopK discipline). */
   private[queries] def clusteredDirectedTopK(
       s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    Extensions.memoized(s, s"clusterann|$dir") {
+    Memo(Tables.embeddings(s, dir), "clusterann") {
       val cemb = clusteredCorpus(Tables.embeddings(s, dir))
       val w = graft.sim.ProjGraph.adaptiveWindow(cemb.count())
       graft.sim.ProjGraph.approxDirectedTopK(cemb, GlobalKnnK,
@@ -252,7 +253,7 @@ object Breadth141 {
   /** Brute-force ground truth over the clustered corpus, memoized. */
   private[queries] def clusteredBruteTopK(
       s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    Extensions.memoized(s, s"clusterbrute|$dir") {
+    Memo(Tables.embeddings(s, dir), "clusterbrute") {
       val cemb = clusteredCorpus(Tables.embeddings(s, dir))
       graft.sim.Similarity.bruteForceTopK(
         cemb.filter(col("vec_id") < RecallProbes), cemb, GlobalKnnK,

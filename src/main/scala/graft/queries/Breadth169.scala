@@ -91,9 +91,9 @@ object Breadth169 {
 
   val defs: Map[String, Q] = Map(
     "q_closeness" -> ((s, dir) =>
-      closeness(Extensions.globalMutualKnnEdges(s, dir))),
+      closeness(Chains.GlobalMutual(s, dir))),
     "q_reach_curve" -> ((s, dir) =>
-      reachCurve(Extensions.globalMutualKnnEdges(s, dir))))
+      reachCurve(Chains.GlobalMutual(s, dir))))
 
   /** Mutual-kNN + bounded BFS closure CTE chain (no leading WITH).
     * The graph is the SHARED projection-window construction

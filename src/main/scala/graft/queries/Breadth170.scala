@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.store.Memo
 import graft.text.Text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -53,11 +54,11 @@ object Breadth170 {
   private[graft] def freqGrid(docs: DataFrame, m: Int): DataFrame = {
     // store-backed, not persist: four derived reads below, and the
     // public facade would otherwise leak one cached frame per call.
-    // Through the PLAN-KEYED memo, not a bare materializeToStore
+    // Through the PLAN-KEYED memo, not a bare Memo.write
     // (ADVICE, round 14): the bare write created a fresh un-memoized
     // parquet dir on EVERY call — unbounded temp-disk growth plus a
     // blocking corpus-wide tokenize per call in a long-lived session.
-    val cells = Breadth13.memoizedOnPlan(docs, "freq_cells") {
+    val cells = Memo(docs, "freq_cells") {
       docs.select(col("source"),
         explode(Text.tokens(col("text"))).as("tok"))
       .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("__n"))

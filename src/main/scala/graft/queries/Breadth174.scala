@@ -110,9 +110,9 @@ object Breadth174 {
 
   val defs: Map[String, Q] = Map(
     "q_rich_club" -> ((s, dir) =>
-      richClub(Extensions.globalMutualKnnEdges(s, dir))),
+      richClub(Chains.GlobalMutual(s, dir))),
     "q_local_clustering" -> ((s, dir) =>
-      localClustering(Extensions.globalMutualKnnEdges(s, dir))))
+      localClustering(Chains.GlobalMutual(s, dir))))
 
   /** Mutual-kNN + degree/triangle CTE chain (no leading WITH). The
     * graph is the SHARED projection-window construction

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.store.Memo
 import graft.dedup.Dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -204,10 +205,10 @@ object Breadth178 {
     // Graft.seqPatterns facade would leak one cached frame per call in
     // a long-lived session, and a store-backed frame survives the
     // harness storage sweep by construction). PLAN-KEYED memo, not a
-    // bare materializeToStore (ADVICE, round 14): the bare write
+    // bare Memo.write (ADVICE, round 14): the bare write
     // created a fresh un-memoized parquet dir per call — unbounded
     // temp-disk growth plus a blocking write per call.
-    val seqs = Breadth13.memoizedOnPlan(events, "seq_prefix8") { seqsPlan }
+    val seqs = Memo(events, "seq_prefix8") { seqsPlan }
     val nUsers = seqs.select(count(lit(1)).as("__nu"))
     def frequent(cands: DataFrame): DataFrame =
       seqs.crossJoin(broadcast(cands))
@@ -250,8 +251,8 @@ object Breadth178 {
     "q_unseen_mass" -> ((s, dir) =>
       unseenMass(shingleDf(Tables.documents(s, dir)))),
     "q_rbo_pq" -> ((s, dir) => rbo(
-      Extensions.bruteTopK(s, dir).select("probe_id", "rank", "neighbor_id"),
-      Breadth121.pqShortlist(s, dir).filter(col("rank") <= RboDepth)
+      Chains.BruteTopK(s, dir).select("probe_id", "rank", "neighbor_id"),
+      Chains.PqTopK(s, dir).filter(col("rank") <= RboDepth)
         .select("probe_id", "rank", "neighbor_id"))),
     "q_lsh_power" -> ((s, dir) => lshPower(Tables.documents(s, dir))),
     "q_seq_patterns" -> ((s, dir) => seqPatterns(Tables.events(s, dir))))

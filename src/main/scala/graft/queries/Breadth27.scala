@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.store.Memo
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -56,16 +57,16 @@ object Breadth27 {
   /** Per-(key, day) traded volume: the summed JSON `k` prop (the
     * q_amihud convention); days with no parseable quantity drop. Shared
     * across the ~15 volume-indicator queries via the plan-keyed memo
-    * (Breadth13.memoizedOnPlan) — the JSON extraction + aggregate runs
+    * (graft.store.Memo) — the JSON extraction + aggregate runs
     * once per (session, input plan), not once per query. */
   private[graft] def dayVols(df: DataFrame, keyCol: String, tsCol: String,
                              qtyJsonField: String): DataFrame =
-    Breadth13.memoizedOnPlan(df, s"vols|$keyCol|$tsCol|$qtyJsonField") {
+    Memo(df, s"vols|$keyCol|$tsCol|$qtyJsonField") {
       dayVolsPlan(df, keyCol, tsCol, qtyJsonField)
     }
 
   /** The raw (un-memoized) day-volume plan — see Breadth13
-    * .dayBarsCentsPlan (the bench chain-resample twin). */
+    * .dayBarsCentsPlan. */
   private[graft] def dayVolsPlan(df: DataFrame, keyCol: String, tsCol: String,
                                  qtyJsonField: String): DataFrame =
     df.withColumn("__day", col(tsCol).cast("date"))

@@ -77,7 +77,7 @@ object Breadth3 {
     // Extensions.verifiedPairs).
     "q_dedup_apply" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val dups = Extensions.verifiedPairs(s, dir)
+      val dups = Chains.MinhashPairs(s, dir)
         .select(col("id_b").as("doc_id")).distinct()
       docs.join(dups, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("lang"), col("n_chars"))

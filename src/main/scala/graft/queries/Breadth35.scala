@@ -85,7 +85,7 @@ object Breadth35 {
     * zeros (the curve's tail is part of the answer). */
   private[graft] def dedupSensitivity(s: org.apache.spark.sql.SparkSession,
                                       dir: String): DataFrame = {
-    val pairs = Extensions.verifiedPairs(s, dir)
+    val pairs = Chains.MinhashPairs(s, dir)
     val ths = SensThresholds
       .foldLeft(Seq.empty[Column])((acc, t) => acc :+ lit(t))
     val tdf = s.range(1)

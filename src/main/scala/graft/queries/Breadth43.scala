@@ -183,10 +183,10 @@ object Breadth43 {
 
   val defs: Map[String, Q] = Map(
     "q_knn_triangles" -> ((s, dir) =>
-      triangleStats(Extensions.knnGraphEdges(s, dir))
+      triangleStats(Chains.KnnEdges(s, dir))
         .orderBy(col("vec_id").asc)),
     "q_link_predict" -> ((s, dir) =>
-      linkPredict(Extensions.knnGraphEdges(s, dir))))
+      linkPredict(Chains.KnnEdges(s, dir))))
 
   /** The kNN edge set as a WITH-chain body (no leading WITH), shared by
     * both oracles so the graph definition cannot drift. Mirrors

@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -79,16 +78,7 @@ object Breadth46 {
       .orderBy(col("k").asc)
   }
 
-  /** Quantized top-5 ranking, memoized (chain_quant_topk) — both eval
-    * queries read the SAME frame, so each benches at marginal cost. */
-  private[queries] def quantTop5(s: org.apache.spark.sql.SparkSession,
-                                 dir: String): DataFrame =
-    Extensions.memoized(s, s"quanttopk|$dir") {
-      quantTop5Plan(Tables.embeddings(s, dir))
-    }
-
-  /** The raw (un-memoized) quantized-ranking plan — the bench's
-    * min-of-2 chain resample. */
+  /** Quantized top-5 ranking — the build of Chains.QuantTopK. */
   private[queries] def quantTop5Plan(emb: DataFrame): DataFrame = {
     val dq = Extensions11.quantizeInt8(emb, "vec_id", "embedding")
     graft.sim.Similarity.bruteForceTopK(dq.filter(col("vec_id") < 10), dq,
@@ -97,9 +87,9 @@ object Breadth46 {
 
   val defs: Map[String, Q] = Map(
     "q_quant_ndcg" -> ((s, dir) =>
-      ndcgAt5(Extensions.bruteTopK(s, dir), quantTop5(s, dir))),
+      ndcgAt5(Chains.BruteTopK(s, dir), Chains.QuantTopK(s, dir))),
     "q_recall_curve" -> ((s, dir) =>
-      recallCurve(Extensions.bruteTopK(s, dir), quantTop5(s, dir))))
+      recallCurve(Chains.BruteTopK(s, dir), Chains.QuantTopK(s, dir))))
 
   /** The quantized ranking as CTEs (names prefixed q* to coexist with
     * the brute chain's probes/corpus/scored/ranked). Mirrors the

@@ -48,8 +48,8 @@ object Breadth49 {
 
   val defs: Map[String, Q] = Map(
     "q_graph_components" -> ((s, dir) => {
-      val edges = Extensions.knnGraphEdges(s, dir)
-      componentStats(edges, Extensions.knnComponents(s, dir))
+      val edges = Chains.KnnEdges(s, dir)
+      componentStats(edges, Chains.KnnComponents(s, dir))
     }))
 
   val oracle: Map[String, String] = Map(

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.store.Memo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,12 +39,12 @@ object Breadth59 {
     * run at sf0.1), and at warehouse scale the pair-counts table is the
     * materialized artifact every basket consumer reads. */
   private[graft] def pairTable(lineitem: DataFrame): DataFrame =
-    Breadth13.memoizedOnPlan(lineitem, "basket_pairs") {
+    Memo(lineitem, "basket_pairs") {
       pairTablePlan(lineitem)
     }
 
-  /** The raw (un-memoized) pair-table plan — plan pins and the bench's
-    * memo-bypassing resamples build it directly. */
+  /** The raw (un-memoized) pair-table plan — plan pins and PlanDump
+    * build it directly. */
   private[graft] def pairTablePlan(lineitem: DataFrame): DataFrame = {
     val items = lineitem.select(col("l_orderkey").as("okey"),
       col("l_partkey").as("part")).distinct()

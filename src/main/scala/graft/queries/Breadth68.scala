@@ -119,7 +119,7 @@ object Breadth68 {
       jarqueBera(Tables.events(s, dir), "user_id", "ts", "value",
         "event_id")),
     "q_assortativity" -> ((s, dir) =>
-      assortativity(Extensions.knnGraphEdges(s, dir))),
+      assortativity(Chains.KnnEdges(s, dir))),
     "q_tail_ratio" -> ((s, dir) =>
       tailRatio(Tables.events(s, dir), "user_id", "ts", "value",
         "event_id")))

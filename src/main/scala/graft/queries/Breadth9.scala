@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.store.Memo
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -115,9 +116,8 @@ object Breadth9 {
     // never |intervals|². Days with one active user emit 0 pairs (left
     // join + coalesce), so the output is the full per-day record.
     "q_interval_join" -> ((s, dir) => {
-      val iv = Extensions.memoized(s, s"dayiv|$dir") {
-        dayIntervals(Tables.events(s, dir), "user_id", "ts")
-      }
+      val ev = Tables.events(s, dir)
+      val iv = Memo(ev, "dayiv")(dayIntervals(ev, "user_id", "ts"))
       val perDay = iv.groupBy(col("day")).agg(count(lit(1)).as("n_intervals"))
       val pairs = overlapPairsPerDay(iv, "user_id")
         .groupBy(col("day")).agg(count(lit(1)).as("np"))

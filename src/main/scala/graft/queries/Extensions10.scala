@@ -101,7 +101,7 @@ object Extensions10 {
 
     // What did near-dup keep-one save, per source.
     "q_dup_survivorship" -> ((s, dir) =>
-      dedupSavings(Extensions.dupClusters(s, dir), Tables.documents(s, dir))
+      dedupSavings(Chains.DupClusters(s, dir), Tables.documents(s, dir))
         .orderBy(col("source").asc)))
 
   val oracle: Map[String, String] = Map(

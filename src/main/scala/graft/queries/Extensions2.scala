@@ -72,7 +72,7 @@ object Extensions2 {
     // their provenance" step of corpus curation. vec_id keys the
     // documents row (testdata contract: aligned ids).
     "q_semantic_dedup" -> ((s, dir) => {
-      val pairs = Extensions.embedNearDupPairs(s, dir)
+      val pairs = Chains.EmbedPairs(s, dir)
       val meta = Tables.documents(s, dir).select(
         col("doc_id"), col("lang"), col("source"))
       pairs

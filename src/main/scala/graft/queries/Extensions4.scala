@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.store.Memo
 import graft.text.Text
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,13 +42,13 @@ object Extensions4 {
   private def sqlHashBucket(key: String, seed: String, m: Int) =
     s"('0x' || substr(md5($key || '#' || CAST($seed AS VARCHAR)), 1, 15))::BIGINT % $m"
 
-  /** Per-token exact counts over the corpus, memoized per (session, sf
-    * dir) through Extensions' shared bounded cache — q_heavy_hitters
+  /** Per-token exact counts over the corpus, memoized per (session,
+    * corpus) through the memo store — q_heavy_hitters
     * consumes it twice (sketch build + probe set) and repeat
     * invocations must not each pin a fresh persisted copy. */
   private[graft] def tokenCounts(s: org.apache.spark.sql.SparkSession,
                                    dir: String): org.apache.spark.sql.DataFrame =
-    Extensions.memoized(s, s"tokcounts|$dir") {
+    Memo(Tables.documents(s, dir), "tokcounts") {
       Tables.documents(s, dir)
         .select(explode(Text.tokens(col("text"))).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as("true_n"))
@@ -99,8 +100,8 @@ object Extensions4 {
       // a memoized persist so the token explode + aggregate runs once,
       // not twice, AND repeat invocations reuse one cached frame (a
       // bare per-call persist() leaked a new cached frame per build for
-      // the session lifetime; Extensions.memoized is the shared bounded
-      // cache every other materialized intermediate already uses)
+      // the session lifetime; graft.store.Memo is the shared bounded
+      // store every other materialized intermediate already uses)
       val counts = tokenCounts(s, dir)
       val cms = counts
         .withColumn("r", explode(sequence(lit(0), lit(CmsRows - 1))))

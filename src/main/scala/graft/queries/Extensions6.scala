@@ -114,7 +114,7 @@ object Extensions6 {
     // q_dedup_apply / q_dedup_clusters), so the marginal cost is two
     // key-sized aggregates.
     "q_graph_degree" -> ((s, dir) => {
-      val pairs = Extensions.verifiedPairs(s, dir)
+      val pairs = Chains.MinhashPairs(s, dir)
       pairs.select(col("id_a").as("doc_id"))
         .unionAll(pairs.select(col("id_b").as("doc_id")))
         .groupBy(col("doc_id"))

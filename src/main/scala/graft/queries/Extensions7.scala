@@ -37,7 +37,7 @@ object Extensions7 {
     // lookup is a broadcast-sized dimension join at any scale (sources
     // are few even when docs are billions).
     "q_cross_source_overlap" -> ((s, dir) => {
-      val pairs = Extensions.verifiedPairs(s, dir)
+      val pairs = Chains.MinhashPairs(s, dir)
       val src = Tables.documents(s, dir).select(col("doc_id"), col("source"))
       pairs
         .join(src.select(col("doc_id").as("id_a"), col("source").as("src_a")),

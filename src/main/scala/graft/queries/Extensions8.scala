@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.store.Memo
 import graft.text.Text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -32,6 +33,8 @@ object Extensions8 {
     * tokens, so per-doc pair fan-out is ≤ C(K,2) — a constant — and the
     * aggregate is ≤ C(K,2) rows however large the corpus. */
   private val PmiVocab = 100
+  // the per-doc rank bitmask is two longs: ranks past 127 would wrap
+  require(PmiVocab <= 128, s"PmiVocab $PmiVocab exceeds the 128-bit mask")
 
   /** PageRank damping / teleport as INDEPENDENT decimal literals: both
     * engines parse "0.85"/"0.15" to the same nearest doubles, while a
@@ -114,8 +117,9 @@ object Extensions8 {
       val top = Extensions4.tokenCounts(s, dir)
         .orderBy(col("true_n").desc, col("tok").asc).limit(PmiVocab)
         .select(col("tok"))
-      val dt = Extensions.memoized(s, s"pmitok|$dir") {
-        Tables.documents(s, dir)
+      val docs = Tables.documents(s, dir)
+      val dt = Memo(docs, "pmitok") {
+        docs
           .select(col("doc_id"),
             explode(array_distinct(Text.tokens(col("text")))).as("tok"))
           .join(top, Seq("tok"), "left_semi")
@@ -184,7 +188,7 @@ object Extensions8 {
     // from the same nestable pair CTE, so graph and parameters cannot
     // drift from the other graph queries.
     "q_pagerank" -> ((s, dir) =>
-      pagerank(Extensions.verifiedPairs(s, dir), PrIters)
+      pagerank(Chains.MinhashPairs(s, dir), PrIters)
         .select(col("node").as("doc_id"), round(col("pr"), 6).as("pagerank"))
         .orderBy(col("doc_id").asc)))
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Pins for the round-14 bucketed edge stores and the no-persist-leak
   * contract of the iterative-graph facades (round-13 verdict #5):
   *
-  *  - `Extensions.bucketedToStore` round-trips rows exactly and its
+  *  - `Memo.writeBucketed` round-trips rows exactly and its
   *    table satisfies the bucket-column hash distribution, so a groupBy
   *    on the bucket column plans WITHOUT any shuffle exchange — the
   *    property that makes per-iteration edge joins exchange-free;
@@ -20,7 +20,7 @@ class BucketStoreSpec extends SparkSpec {
   test("bucketedToStore: exact row round-trip and groupBy on the " +
     "bucket column plans with no shuffle exchange") {
     val df = (1L to 5000L).map(i => (i % 97L, i)).toDF("src", "dst")
-    val stored = queries.Extensions.bucketedToStore(df, "src", 4)
+    val stored = store.Memo.writeBucketed(df, "src", 4)
     assert(stored.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     val agg = stored.groupBy(col("src")).agg(count(lit(1)).as("n"))
@@ -34,10 +34,10 @@ class BucketStoreSpec extends SparkSpec {
   }
 
   test("bucketsForRows: ~1M rows per bucket, clamped to [1, 4096]") {
-    assert(queries.Extensions.bucketsForRows(0L) == 1)
-    assert(queries.Extensions.bucketsForRows(600000L) == 1)
-    assert(queries.Extensions.bucketsForRows(5900000L) == 6)
-    assert(queries.Extensions.bucketsForRows(Long.MaxValue / 2) == 4096)
+    assert(store.Memo.bucketsForRows(0L) == 1)
+    assert(store.Memo.bucketsForRows(600000L) == 1)
+    assert(store.Memo.bucketsForRows(5900000L) == 6)
+    assert(store.Memo.bucketsForRows(Long.MaxValue / 2) == 4096)
   }
 
   test("iterative-graph facades leave no new persisted RDDs (the r13 " +

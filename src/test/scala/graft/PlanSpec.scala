@@ -19,7 +19,7 @@ class PlanSpec extends SparkSpec {
 
   /** MARGINAL shuffle count: Exchange nodes in the executed tree, with
     * cached intermediates (InMemoryTableScan — the memoized day-bar /
-    * day-vol grids, Breadth13.memoizedOnPlan) as LEAVES. The plan STRING
+    * day-vol grids, graft.store.Memo) as LEAVES. The plan STRING
     * also renders each InMemoryRelation's cached lineage (nested, so a
     * bars+vols query prints the chain's exchanges several times) — those
     * run once per session at chain materialization (pinned separately in

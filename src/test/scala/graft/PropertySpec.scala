@@ -505,4 +505,61 @@ class PropertySpec extends SparkSpec {
       assert(got.toSeq === v.toSeq, s"t=$t")
     }
   }
+
+  test("ProjGraph.roundedCosine equals round(Similarity.cosine, 6) on " +
+    "random float vectors and next to .5 decimal boundaries") {
+    import graft.sim.{ProjGraph, Similarity}
+    val vecGen = for {
+      n <- Gen.choose(1, 8)
+      a <- Gen.listOfN(n, Gen.choose(-2.0f, 2.0f))
+      b <- Gen.listOfN(n, Gen.choose(-2.0f, 2.0f))
+    } yield (a.toArray, b.toArray)
+    // the unrounded fold of roundedCosine, to steer the constructions
+    def cos(a: Array[Float], b: Array[Float]): Double = {
+      var dot = 0.0; var na = 0.0; var nb = 0.0
+      a.indices.foreach { i =>
+        val x = a(i).toDouble; val y = b(i).toDouble
+        dot += x * y; na += x * x; nb += y * y
+      }
+      dot / (math.sqrt(na) * math.sqrt(nb))
+    }
+    // Boundary cases: a = e1 and b = (1, q, e1, e2), so cos = 1/|b|. For
+    // the double t nearest a 7-digit decimal ending in 5, q is the
+    // float just below the value putting cos on t; the small components
+    // then lower cos onto t — e1 in coarse steps (last value still above
+    // t), e2 in sub-ulp steps of |b|² (both sides of the crossing).
+    val e1 = Array(1.0f, 0.0f, 0.0f, 0.0f)
+    def lastAbove(b: Array[Float], i: Int, t: Double): Array[Float] = {
+      def at(bits: Int) = { val c = b.clone(); c(i) = java.lang.Float.intBitsToFloat(bits); c }
+      var lo = 0; var hi = java.lang.Float.floatToIntBits(1.0f)
+      while (hi - lo > 1) {
+        val mid = (lo + hi) >>> 1
+        if (cos(e1, at(mid)) > t) lo = mid else hi = mid
+      }
+      at(lo)
+    }
+    val boundary = samples(Gen.choose(100000, 999999), 24).flatMap { k =>
+      val t = (BigDecimal(k) + BigDecimal("0.5")).bigDecimal.movePointLeft(6).doubleValue
+      var q = math.sqrt(1.0 / (t * t) - 1.0).toFloat
+      while (cos(e1, Array(1.0f, q, 0.0f, 0.0f)) <= t) q = Math.nextDown(q)
+      val coarse = lastAbove(Array(1.0f, q, 0.0f, 0.0f), 2, t)
+      val above = lastAbove(coarse, 3, t)
+      val below = above.clone()
+      below(3) = Math.nextUp(above(3))
+      val closest = Seq(above, below).map(b => math.abs(cos(e1, b) - t)).min
+      assert(closest <= Math.ulp(t), s"construction missed t=$t by $closest")
+      Seq((e1, above), (e1, below))
+    }
+    val cases = samples(vecGen, 200) ++ boundary
+    val got = cases.zipWithIndex
+      .map { case ((a, b), i) => (i, a.toSeq, b.toSeq) }
+      .toDF("i", "a", "b")
+      .select(col("i"), round(Similarity.cosine(col("a"), col("b")), 6))
+      .collect().map(r => r.getInt(0) ->
+        (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
+    cases.zipWithIndex.foreach { case ((a, b), i) =>
+      assert(ProjGraph.roundedCosine(a, b) == got(i),
+        s"a=${a.toSeq} b=${b.toSeq} cos=${cos(a, b)}")
+    }
+  }
 }

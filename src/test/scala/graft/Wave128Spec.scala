@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.{Breadth122, Extensions}
+import graft.queries.{Breadth122, Chains}
 import org.apache.spark.sql.functions._
 
 /** Fixtures for the hundred-twenty-third wave (Breadth122 RP
@@ -35,10 +35,8 @@ class Wave128Spec extends SparkSpec {
 
   test("leakageSplit invariant: both endpoints of every verified pair " +
     "share a representative") {
-    val chains = Extensions.sharedIntermediates(spark,
-      "/root/testdata/sf0.001").toMap
-    val pairs = chains("chain_minhash_pairs")()
-    val cl = chains("chain_dup_clusters")()
+    val pairs = Chains.MinhashPairs(spark, sf0001)
+    val cl = Chains.DupClusters(spark, sf0001)
     val bad = pairs
       .join(cl.select(col("doc_id").as("id_a"),
         col("cluster_id").as("ra")), Seq("id_a"))
