@@ -1,39 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Env-overridable for floor A/Bs only — the default stays true
-      // (measured round 15: AQE OFF pushes every shuffle stage to the
-      // full session width, 32 tiny tasks of launch overhead per stage;
-      // FloorProbe exec 143 -> 226 ms on q_distinct_keys).
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // AQE partition coalescing: back to Spark's shipped default
-      // (parallelismFirst=true) in round 15, REVERSING the round-14
-      // size-first flip with measurements. Size-first coalescing
-      // targets advisoryPartitionSizeInBytes, but bytes are the wrong
-      // proxy for stages whose compute-per-byte is huge (pair
-      // enumeration, band self-joins): it shrank those stages to 1-5
-      // tasks with 31 cores idle (q_bipartite_proj 6.9 s -> 2.2 s and
-      // an 18-heavy-line subset -14% under true; the 150-line floor
-      // subset measured 21.2 s false vs 19.5 s true — parity-or-better,
-      // matching the round-14 parity A/B). At cluster scale
-      // parallelism-first still honors advisory sizing for byte-heavy
-      // stages (coalescing only merges small partitions); it differs
-      // only on small-byte stages, where keeping cores busy is equally
-      // right on a cluster. Env-overridable for A/B.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen/parquet-reader warmup so the first measured query does
     // not absorb one-time session costs (no data is cached).

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main: decompose the per-line bench floor for a set of
   * cheap queries — how much of a ~0.3 s line is plan construction,
   * analysis, optimization/physical planning, execution, listener-bus
@@ -14,19 +12,7 @@ object FloorProbe {
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q_winnow", "q_window_lag", "q_text_quality", "q_window_rank",
         "q_pii_redact", "q_distinct_keys", "q_scalar_funcs", "q_json_extract")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // A/B knobs for the floor decomposition (diagnostic main only)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_PROBE_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).count()
     spark.range(1000).selectExpr("sum(id)").collect()

@@ -16,28 +16,44 @@ import org.apache.spark.sql.functions._
   *  - the dashboard's top-7 + "Other" doughnut feed
   *    (`frontend/src/App.js:87-142`) → `topWithOther`.
   *
-  * `session` builds the canonically configured SparkSession (UTC, AQE,
-  * ns-parquet handling, graft SQL extensions) so the facade works
-  * against the same engine configuration the test/bench harnesses pin.
+  * Scope: this object is the public surface of what is called — the
+  * three endpoints above, the curation entry points, the live quote
+  * pipeline calls, and the operators the test suites and perfbench
+  * drive through it. Every other operator is reached by its
+  * implementation name (`queries.*`, `ops.*`, `streaming.*`, ...); a
+  * forward nobody calls is not added here (FacadeInventorySpec fails on
+  * one).
+  *
+  * `session` is the one session factory: every main and the test
+  * session build their SparkSession through it, so the facade, the
+  * harnesses and the tests run on the same engine configuration.
   */
 object Graft {
 
-  /** `getOrCreate` ignores builder configs when a session already
-    * exists, so the runtime-settable canon (UTC, nanos handling, AQE,
-    * shuffle width) is re-asserted on the returned session either way.
+  /** The canonically configured session. Create-time canon (applies
+    * only when this call creates the session): graft SQL extensions and
+    * no Spark UI. `getOrCreate` ignores builder configs when a session
+    * already exists, so the runtime canon (shuffle width, UTC, ns-parquet
+    * handling, AQE) is re-asserted on the returned session either way.
     * `spark.sql.extensions` is create-time-only: an inherited session
     * keeps graft SQL functions/rules only if it was built with them —
-    * the one contract `session()` cannot retrofit (documented, not
-    * silent: the facade's Column API works regardless). */
+    * the one contract `session()` cannot retrofit (the facade's Column
+    * API works regardless). */
   def session(master: String = "local[*]",
               shufflePartitions: Int = 32): SparkSession = {
     val s = SparkSession.builder()
       .master(master)
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
     s.conf.set("spark.sql.session.timeZone", "UTC")
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // AQE with Spark's default parallelism-first coalescing. Measured in
+    // round 15: size-first coalescing shrank pair-enumeration stages to
+    // 1-5 tasks with most cores idle (q_bipartite_proj 6.9 s vs 2.2 s),
+    // and AQE off pushed every shuffle stage to the full session width
+    // (q_distinct_keys execution 143 -> 226 ms).
     s.conf.set("spark.sql.adaptive.enabled", "true")
     s
   }
@@ -86,15 +102,6 @@ object Graft {
       graft.dedup.Dedup.clusterIds(docs.select(col(idCol)), pairs, idCol),
       idCol)
       .withColumn("keep", col("cluster_id") === col(idCol))
-
-  /** Streaming near-dup screen: live documents (needs an event-time `ts`
-    * column) checked against the batch corpus index — see
-    * graft.streaming.Streams.streamingMinhashNearDups. */
-  def liveNearDupScreen(live: DataFrame, corpus: DataFrame, delay: String,
-                        idCol: String = "doc_id", textCol: String = "text",
-                        threshold: Double = 0.8): DataFrame =
-    graft.streaming.Streams.streamingMinhashNearDups(live, corpus,
-      idCol, textCol, delay, threshold = threshold)
 
   // ---- warehouse time-series / maintenance (round-4 surface) ----------
 
@@ -145,14 +152,6 @@ object Graft {
   def compactionPlan(perBucket: DataFrame, bucketCol: String, nCol: String,
                      targetRows: Long): DataFrame =
     queries.Breadth9.compactionPlan(perBucket, bucketCol, nCol, targetRows)
-
-  /** Streaming twin of [[anomalyScreen]]: the trailing z-score fold on
-    * `transformWithState`, per-key state = the ≤6-deep value buffer in
-    * the (RocksDB) state store. Spec-pinned equal to the batch form on
-    * in-order delivery — see streaming.Streams.streamingZscore. */
-  def liveAnomalyScreen(events: org.apache.spark.sql.Dataset[streaming.EventRow])
-      : org.apache.spark.sql.Dataset[streaming.ZScored] =
-    streaming.Streams.streamingZscore(events)
 
   /** Fixed-iteration PageRank over an undirected pair list
     * (id_a, id_b) → (node, pr): which member of each near-dup cluster
@@ -219,14 +218,6 @@ object Graft {
   def readability(docs: DataFrame): DataFrame =
     queries.Extensions9.readability(docs)
 
-  /** Streaming twin of [[maxDrawdown]]: running peak + worst drawdown as
-    * O(1) keyed state on `transformWithState`, one refreshed per-key row
-    * per micro-batch. Spec-pinned equal to the batch aggregate on
-    * in-order delivery — see streaming.Streams.streamingDrawdown. */
-  def liveDrawdown(events: org.apache.spark.sql.Dataset[streaming.EventRow])
-      : org.apache.spark.sql.Dataset[streaming.DrawdownSnap] =
-    streaming.Streams.streamingDrawdown(events)
-
   // ---- distribution screens & selection (wave 11) ---------------------
 
   /** CUSUM change-point screen per series key: range of the
@@ -291,28 +282,6 @@ object Graft {
     ops.Latest.asOfJoinNativeValues(facts, probes, key, tsCol, probeTsCol,
       valueCols, tieBreak)
 
-  /** Tolerance-bounded as-of (pandas merge_asof `tolerance`): the
-    * latest fact within [probe − tol, probe]; older matches null out.
-    * Union+window form; tolerance in micros for timestamp columns
-    * (column units for integer time columns). Oracle-checked as
-    * q_asof_tol. */
-  def asOfLookupTol(facts: DataFrame, probes: DataFrame, key: String,
-                    tsCol: String, probeTsCol: String, valueCol: String,
-                    tieBreak: String, tolMicros: Long): DataFrame =
-    ops.Latest.asOfJoinTol(facts, probes, key, tsCol, probeTsCol, valueCol,
-      tieBreak, tolMicros)
-
-  /** [[asOfLookupTol]] on the native merge — the tolerance is an O(1)
-    * emit check inside AsofJoinExec (the candidate stays buffered, so a
-    * later probe can re-enter tolerance via a newer fact).
-    * Oracle-checked as q_asof_tol_native. */
-  def asOfLookupTolNative(facts: DataFrame, probes: DataFrame, key: String,
-                          tsCol: String, probeTsCol: String,
-                          valueCols: Seq[String], tieBreak: String,
-                          tolMicros: Long): DataFrame =
-    ops.Latest.asOfJoinNativeValues(facts, probes, key, tsCol, probeTsCol,
-      valueCols, tieBreak, Some(tolMicros))
-
   // ---- market microstructure (wave 12) --------------------------------
 
   /** Daily time-weighted average price per series key — dwell-weighted
@@ -334,22 +303,6 @@ object Graft {
   def tickHealth(df: DataFrame, keyCol: String, tsCol: String,
                  valCol: String, tieBreak: String): DataFrame =
     queries.Breadth12.tickHealth(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Streaming twin of [[realizedVol]]: the exact integer sum of squared
-    * cent moves as O(1) keyed state; division + IEEE sqrt at emit only,
-    * so stream and batch compute the identical double. Spec-pinned —
-    * see streaming.Streams.streamingRealizedVol. */
-  def liveRealizedVol(events: org.apache.spark.sql.Dataset[streaming.EventRow])
-      : org.apache.spark.sql.Dataset[streaming.RealizedVolSnap] =
-    streaming.Streams.streamingRealizedVol(events)
-
-  /** Streaming twin of [[tickHealth]]: largest move + longest silence as
-    * O(1) keyed state on `transformWithState`, one refreshed per-key row
-    * per micro-batch. Spec-pinned equal to the batch window form on
-    * in-order delivery — see streaming.Streams.streamingTickHealth. */
-  def liveTickHealth(events: org.apache.spark.sql.Dataset[streaming.EventRow])
-      : org.apache.spark.sql.Dataset[streaming.TickHealthSnap] =
-    streaming.Streams.streamingTickHealth(events)
 
   // ---- pattern & dispersion screens (wave 13) --------------------------
 
@@ -407,13 +360,6 @@ object Graft {
   def userChurn(df: DataFrame, keyCol: String, tsCol: String): DataFrame =
     queries.Breadth15.userChurn(df, keyCol, tsCol)
 
-  /** Streaming twin of [[bestTrade]]: prefix-min + best profit as O(1)
-    * keyed state, integer throughout. Spec-pinned equal to the batch
-    * form — see streaming.Streams.streamingBestTrade. */
-  def liveBestTrade(events: org.apache.spark.sql.Dataset[streaming.EventRow])
-      : org.apache.spark.sql.Dataset[streaming.BestTradeSnap] =
-    streaming.Streams.streamingBestTrade(events)
-
   // ---- dashboard digests (wave 16) --------------------------------------
 
   /** (ISO day-of-week × hour) activity/price grid — the calendar
@@ -436,14 +382,6 @@ object Graft {
   def bollinger(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
                 tieBreak: String, w: Int = 5, k: Int = 2): DataFrame =
     queries.Breadth17.bollinger(df, keyCol, tsCol, valCol, tieBreak, w, k)
-
-  /** Streaming twin of [[bollinger]] (w=5, k=2): the prior-window cent
-    * buffer as ≤5-deep keyed state, the same integer breakout test —
-    * stream and batch agree bit-for-bit. Spec-pinned — see
-    * streaming.Streams.streamingBollinger. */
-  def liveBollinger(events: org.apache.spark.sql.Dataset[streaming.EventRow])
-      : org.apache.spark.sql.Dataset[streaming.BollScored] =
-    streaming.Streams.streamingBollinger(events)
 
   /** Stochastic %K against the prior `w`-tick range — one division of
     * integer cent differences; flat windows unscored. Oracle-checked as
@@ -496,20 +434,6 @@ object Graft {
                   tieBreak: String): DataFrame =
     queries.Breadth20.dailySharpe(df, keyCol, tsCol, valCol, tieBreak)
 
-  /** Streaming twin of [[rollSpread]]: the serial-covariance sums as
-    * O(1) keyed state; emitted spread is the batch expression verbatim.
-    * Spec-pinned — see streaming.Streams.streamingRollSpread. */
-  def liveRollSpread(events: org.apache.spark.sql.Dataset[streaming.EventRow])
-      : org.apache.spark.sql.Dataset[streaming.RollSnap] =
-    streaming.Streams.streamingRollSpread(events)
-
-  /** Streaming twin of [[dailySharpe]] over the finalized day-bar
-    * stream: integer moment sums as O(1) keyed state, running Sharpe
-    * per bar. Spec-pinned — see streaming.Streams.streamingDailySharpe. */
-  def liveDailySharpe(bars: org.apache.spark.sql.Dataset[streaming.BarRow])
-      : org.apache.spark.sql.Dataset[streaming.SharpeScored] =
-    streaming.Streams.streamingDailySharpe(bars)
-
   /** EMA(n) series over daily closes, seeded at the first bar — the
     * per-row recurrence run as a calendar-bounded per-key fold.
     * Oracle-checked as q_ema (DuckDB recursive CTE). */
@@ -530,89 +454,12 @@ object Graft {
                 tieBreak: String): DataFrame =
     queries.Breadth19.wilderRsiSeries(df, keyCol, tsCol, valCol, tieBreak)
 
-  /** Keltner channel per key: EMA-20 midline ± 2 × Wilder ATR-10 with
-    * breakout flags — both recurrences in one calendar-bounded fold.
-    * Oracle-checked as q_keltner. */
-  def keltner(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-              tieBreak: String): DataFrame =
-    queries.Breadth19.keltnerSeries(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Streaming twin of [[ema]] + [[macd]]: the four EMA recurrence
-    * values as O(1) keyed state over the finalized day-bar stream —
-    * stream and batch emit bit-equal doubles. Spec-pinned — see
-    * streaming.Streams.streamingEmaMacd. */
-  def liveEmaMacd(bars: org.apache.spark.sql.Dataset[streaming.BarRow])
-      : org.apache.spark.sql.Dataset[streaming.EmaMacdScored] =
-    streaming.Streams.streamingEmaMacd(bars)
-
-  /** Streaming twin of [[wilderRsi]]: previous close + integer warm-up
-    * sums + the two Wilder averages as O(1) keyed state. Spec-pinned —
-    * see streaming.Streams.streamingWilderRsi. */
-  def liveWilderRsi(bars: org.apache.spark.sql.Dataset[streaming.BarRow])
-      : org.apache.spark.sql.Dataset[streaming.WilderScored] =
-    streaming.Streams.streamingWilderRsi(bars)
-
-  /** Donchian channel per key: `w`-day PRIOR high/low band (integer
-    * cents) + breakout flags; midline is the band's one terminal
-    * division. */
-  def donchian(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-               tieBreak: String, w: Int = queries.Breadth21.W): DataFrame =
-    queries.Breadth21.donchian(df, keyCol, tsCol, valCol, tieBreak, w)
-
-  /** Williams %R per key over the trailing `w`-day range (current bar
-    * included) — one division of integer cent differences. */
-  def williamsR(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-                tieBreak: String, w: Int = queries.Breadth21.W): DataFrame =
-    queries.Breadth21.williamsR(df, keyCol, tsCol, valCol, tieBreak, w)
-
-  /** Vortex VI+/VI− per key over the trailing `w` diff bars — integer
-    * range-movement and true-range sums, two terminal divisions. */
-  def vortex(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-             tieBreak: String, w: Int = queries.Breadth21.W): DataFrame =
-    queries.Breadth21.vortex(df, keyCol, tsCol, valCol, tieBreak, w)
-
-  /** Money Flow Index per key over the trailing `w` diff bars: ×3
-    * typical-price flows weighted by the JSON quantity prop, one
-    * terminal division. */
-  def mfi(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-          tieBreak: String, qtyJsonField: String = "k",
-          w: Int = queries.Breadth21.W): DataFrame =
-    queries.Breadth21.mfi(df, keyCol, tsCol, valCol, tieBreak, qtyJsonField, w)
-
-  /** CCI per key over the trailing `w` bars — the textbook mean-
-    * deviation form integer-rescaled by n², one terminal division. */
-  def cci(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-          tieBreak: String, w: Int = queries.Breadth21.W): DataFrame =
-    queries.Breadth21.cci(df, keyCol, tsCol, valCol, tieBreak, w)
-
   /** Wilder's directional movement system per key (DI+/DI−, DX,
     * ADX) — the trend-strength recurrence-of-a-recurrence, one O(L)
     * fold per key over calendar-bounded day bars. */
   def adx(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
           tieBreak: String): DataFrame =
     queries.Breadth22.adxSeries(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Streaming twin of [[adx]] over the finalized OHLC day-bar stream:
-    * the whole directional-movement accumulator as O(1) keyed state,
-    * running the SAME step function as the batch fold. Spec-pinned —
-    * see streaming.Streams.streamingAdx. */
-  def liveAdx(bars: org.apache.spark.sql.Dataset[streaming.OhlcBarRow])
-      : org.apache.spark.sql.Dataset[streaming.AdxScored] =
-    streaming.Streams.streamingAdx(bars)
-
-  /** Fixed-iteration integer PageRank over a (src, dst) edge frame —
-    * micro-rank units, floor-division damping, bit-exact on any
-    * cluster (no float mass to drift). */
-  def pageRank(edges: DataFrame, iters: Int = queries.Extensions11.PrIters)
-      : DataFrame =
-    queries.Extensions11.pageRank(edges, iters)
-
-  /** Int8 scalar quantization of an embedding column (per-vector
-    * max-abs scale): emits the dequantized double vectors the scoring
-    * math runs on — the 4× ANN memory cut. */
-  def quantizeInt8(emb: DataFrame, idCol: String = "vec_id",
-                   vecCol: String = "embedding"): DataFrame =
-    queries.Extensions11.quantizeInt8(emb, idCol, vecCol)
 
   /** True strength index per key: double EMA smoothing (13, 25) of the
     * day-over-day momentum and its absolute value, one O(L) fold per
@@ -627,47 +474,11 @@ object Graft {
                  valCol: String, tieBreak: String): DataFrame =
     queries.Breadth23.supertrendSeries(df, keyCol, tsCol, valCol, tieBreak)
 
-  /** Streaming twin of [[tsi]] over the finalized day-bar stream —
-    * runs the SAME step function as the batch fold. Spec-pinned. */
-  def liveTsi(bars: org.apache.spark.sql.Dataset[streaming.BarRow])
-      : org.apache.spark.sql.Dataset[streaming.TsiScored] =
-    streaming.Streams.streamingTsi(bars)
-
-  /** Streaming twin of [[supertrend]] over the finalized OHLC day-bar
-    * stream — the SAME step function as the batch fold. Spec-pinned. */
-  def liveSupertrend(bars: org.apache.spark.sql.Dataset[streaming.OhlcBarRow])
-      : org.apache.spark.sql.Dataset[streaming.SupertrendScored] =
-    streaming.Streams.streamingSupertrend(bars)
-
-  /** Ichimoku cloud per key: integer tenkan/kijun midlines, displaced
-    * senkou spans, lagging chikou close — pure windows over day bars. */
-  def ichimoku(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-               tieBreak: String): DataFrame =
-    queries.Breadth24.ichimoku(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Aroon up/down/oscillator per key: bars since the window's most
-    * recent highest high / lowest low, scaled to 0..100 integers. */
-  def aroon(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-            tieBreak: String): DataFrame =
-    queries.Breadth24.aroon(df, keyCol, tsCol, valCol, tieBreak)
-
   /** Heikin-Ashi smoothed candles per key: the dyadic midpoint
     * recurrence, one O(L) fold per key over daily bars. */
   def heikinAshi(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
                  tieBreak: String): DataFrame =
     queries.Breadth24.heikinAshi(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Ulcer index per key: RMS percent drawdown from each window's
-    * running peak, integer-quantized squared drawdowns. */
-  def ulcer(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-            tieBreak: String): DataFrame =
-    queries.Breadth24.ulcer(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Streaming twin of [[heikinAshi]] over the open-carrying day-bar
-    * stream — the SAME step function as the batch fold. Spec-pinned. */
-  def liveHeikinAshi(bars: org.apache.spark.sql.Dataset[streaming.Ohlc4BarRow])
-      : org.apache.spark.sql.Dataset[streaming.HaScored] =
-    streaming.Streams.streamingHeikinAshi(bars)
 
   /** Historical VaR + expected shortfall per key from the exact
     * ceil(n/5) day-move tail — order statistics, no interpolation. */
@@ -753,18 +564,6 @@ object Graft {
     queries.Breadth27.adlChaikin(df, keyCol, tsCol, valCol, tieBreak,
       qtyJsonField)
 
-  /** Streaming twin of [[forceIndex]] over the volume-carrying day-bar
-    * stream — the SAME step function as the batch fold. Spec-pinned. */
-  def liveForceIndex(bars: org.apache.spark.sql.Dataset[streaming.VolBarRow])
-      : org.apache.spark.sql.Dataset[streaming.FiScored] =
-    streaming.Streams.streamingForceIndex(bars)
-
-  /** Streaming twin of [[adlChaikin]] — the SAME money-flow quantum and
-    * fold step as the batch form. Spec-pinned. */
-  def liveChaikinOsc(bars: org.apache.spark.sql.Dataset[streaming.VolBarRow])
-      : org.apache.spark.sql.Dataset[streaming.AdlScored] =
-    streaming.Streams.streamingChaikinOsc(bars)
-
   /** Fosback NVI/PVI per key: volume-direction-gated multiplicative
     * indices over daily bars, both seeded at 1000. */
   def nviPvi(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
@@ -795,12 +594,6 @@ object Graft {
            tieBreak: String): DataFrame =
     queries.Breadth28.dema(df, keyCol, tsCol, valCol, tieBreak)
 
-  /** Streaming twin of [[dema]] — the SAME step function as the batch
-    * fold. Spec-pinned. */
-  def liveDema(bars: org.apache.spark.sql.Dataset[streaming.BarRow])
-      : org.apache.spark.sql.Dataset[streaming.DemaScored] =
-    streaming.Streams.streamingDema(bars)
-
   /** PPO(12,26) per key: MACD normalized to the slow EMA — scale-free
     * momentum, comparable across price levels. Oracle-checked as
     * q_ppo. */
@@ -808,427 +601,11 @@ object Graft {
           tieBreak: String): DataFrame =
     queries.Breadth28.ppo(df, keyCol, tsCol, valCol, tieBreak)
 
-  /** Streaming twin of [[ppo]] — the SAME step function. Spec-pinned. */
-  def livePpo(bars: org.apache.spark.sql.Dataset[streaming.BarRow])
-      : org.apache.spark.sql.Dataset[streaming.PpoScored] =
-    streaming.Streams.streamingPpo(bars)
-
-  /** Information ratio per key vs the daily cross-sectional median
-    * move. Oracle-checked as q_info_ratio. */
-  def infoRatio(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-                tieBreak: String): DataFrame =
-    queries.Breadth67.infoRatio(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Correlogram per key: day-move autocorrelation at lags 1..maxLag.
-    * Oracle-checked as q_acf. */
-  def acf(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-          tieBreak: String, maxLag: Int = 5): DataFrame =
-    queries.Breadth67.acf(df, keyCol, tsCol, valCol, tieBreak, maxLag)
-
-  /** Efraimidis-Spirakis weighted top-k sample per stratum (w = `wCol`,
-    * RNG-free md5 uniforms). Oracle-checked as q_weighted_sample. */
-  def weightedSample(df: DataFrame, stratCol: String, idCol: String,
-                     wCol: String, k: Int): DataFrame =
-    queries.Breadth67.weightedSample(df, stratCol, idCol, wCol, k)
-
-  /** Jarque-Bera normality test per key over day moves (exact decimal
-    * power sums). Oracle-checked as q_jarque_bera. */
-  def jarqueBera(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-                 tieBreak: String): DataFrame =
-    queries.Breadth68.jarqueBera(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Newman degree assortativity of an undirected (id_a, id_b) edge
-    * list. Oracle-checked as q_assortativity (kNN embedding graph). */
-  def assortativity(edges: DataFrame): DataFrame =
-    queries.Breadth68.assortativity(edges)
-
-  /** Exact p10/p90 day-move order statistics per key + tail ratio.
-    * Oracle-checked as q_tail_ratio. */
-  def tailRatio(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-                tieBreak: String): DataFrame =
-    queries.Breadth68.tailRatio(df, keyCol, tsCol, valCol, tieBreak)
-
   /** RiskMetrics EWMA volatility (λ = 0.94) per key over day moves.
     * Oracle-checked as q_ewma_vol. */
   def ewmaVol(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
               tieBreak: String): DataFrame =
     queries.Breadth69.ewmaVol(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Streaming twin of [[ewmaVol]] — the SAME step function.
-    * Spec-pinned. */
-  def liveEwmaVol(bars: org.apache.spark.sql.Dataset[streaming.BarRow])
-      : org.apache.spark.sql.Dataset[streaming.EwmaVolScored] =
-    streaming.Streams.streamingEwmaVol(bars)
-
-  /** QStick(k): SMA of the candle body (close − open) per key.
-    * Oracle-checked as q_qstick. */
-  def qstick(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-             tieBreak: String, k: Int = 5): DataFrame =
-    queries.Breadth69.qstick(df, keyCol, tsCol, valCol, tieBreak, k)
-
-  /** Williams fractal swing highs/lows per key (±2-bar neighbourhood).
-    * Oracle-checked as q_fractals. */
-  def fractals(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-               tieBreak: String): DataFrame =
-    queries.Breadth69.fractals(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Jensen's alpha + Treynor ratio per key vs the q_beta market
-    * factor. Oracle-checked as q_jensen_alpha. */
-  def jensenAlpha(df: DataFrame, keyCol: String, tsCol: String,
-                  valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth70.jensenAlpha(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Day-of-week anomaly: mean move + up-share per ISO weekday.
-    * Oracle-checked as q_weekday_effect. */
-  def weekdayEffect(df: DataFrame, keyCol: String, tsCol: String,
-                    valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth70.weekdayEffect(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Per-source unigram KL divergence vs the corpus (microbit-
-    * quantized). Oracle-checked as q_kl_source. */
-  def klSource(docs: DataFrame, srcCol: String, textCol: String): DataFrame =
-    queries.Breadth70.klSource(docs, srcCol, textCol)
-
-  /** Awesome Oscillator (fast/slow midpoint SMAs) per key.
-    * Oracle-checked as q_awesome_osc. */
-  def awesomeOsc(df: DataFrame, keyCol: String, tsCol: String,
-                 valCol: String, tieBreak: String,
-                 fast: Int = 3, slow: Int = 13): DataFrame =
-    queries.Breadth71.awesomeOsc(df, keyCol, tsCol, valCol, tieBreak,
-      fast, slow)
-
-  /** Mann-Whitney U test of each stratum's metric vs the rest.
-    * Oracle-checked as q_mann_whitney. */
-  def mannWhitney(df: DataFrame, stratCol: String, vCol: String): DataFrame =
-    queries.Breadth71.mannWhitney(df, stratCol, vCol)
-
-  /** Theil T inequality index over per-key summed cents.
-    * Oracle-checked as q_theil_index. */
-  def theilIndex(df: DataFrame, keyCol: String,
-                 amountCents: org.apache.spark.sql.Column): DataFrame =
-    queries.Breadth71.theilIndex(df, keyCol, amountCents)
-
-  /** Cross-correlation of each key's move vs the market move at lags
-    * 0..maxLag. Oracle-checked as q_xcf. */
-  def xcf(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-          tieBreak: String, maxLag: Int = 3): DataFrame =
-    queries.Breadth72.xcf(df, keyCol, tsCol, valCol, tieBreak, maxLag)
-
-  /** Hill tail-index estimator over the k largest |day moves| per key.
-    * Oracle-checked as q_hill_tail. */
-  def hillTail(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-               tieBreak: String, k: Int = 10): DataFrame =
-    queries.Breadth72.hillTail(df, keyCol, tsCol, valCol, tieBreak, k)
-
-  /** Opening-gap event study: gaps + their fill days.
-    * Oracle-checked as q_gap_fill. */
-  def gapFill(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-              tieBreak: String): DataFrame =
-    queries.Breadth72.gapFill(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Mean-variance + win/loss Kelly fractions per key.
-    * Oracle-checked as q_kelly. */
-  def kelly(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-            tieBreak: String): DataFrame =
-    queries.Breadth73.kelly(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Up/down market capture per key (aggregate-ratio form).
-    * Oracle-checked as q_capture_ratio. */
-  def captureRatio(df: DataFrame, keyCol: String, tsCol: String,
-                   valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth73.captureRatio(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Pain index (mean + max drawdown below the running peak).
-    * Oracle-checked as q_pain_index. */
-  def painIndex(df: DataFrame, keyCol: String, tsCol: String,
-                valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth73.painIndex(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Simpson diversity of each source's unigram distribution.
-    * Oracle-checked as q_simpson_diversity. */
-  def simpsonDiversity(docs: DataFrame, srcCol: String,
-                       textCol: String): DataFrame =
-    queries.Breadth74.simpsonDiversity(docs, srcCol, textCol)
-
-  /** Exact p25/p50/p75 order statistics of a metric per stratum.
-    * Oracle-checked as q_length_quartiles. */
-  def lengthQuartiles(df: DataFrame, stratCol: String, vCol: String,
-                      idCol: String): DataFrame =
-    queries.Breadth74.lengthQuartiles(df, stratCol, vCol, idCol)
-
-  /** Fixed-window type-token ratio per doc.
-    * Oracle-checked as q_ttr_window. */
-  def ttrWindow(docs: DataFrame, idCol: String, textCol: String,
-                w: Int = 100): DataFrame =
-    queries.Breadth74.ttrWindow(docs, idCol, textCol, w)
-
-  /** OLS slope + R² of close vs bar index per key.
-    * Oracle-checked as q_trend_r2. */
-  def trendR2(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-              tieBreak: String): DataFrame =
-    queries.Breadth75.trendR2(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Volatility regime flags (w-bar move energy vs full sample).
-    * Oracle-checked as q_vol_regime. */
-  def volRegime(df: DataFrame, keyCol: String, tsCol: String,
-                valCol: String, tieBreak: String, w: Int = 5): DataFrame =
-    queries.Breadth75.volRegime(df, keyCol, tsCol, valCol, tieBreak, w)
-
-  /** Shannon entropy of the up/down/flat sign distribution per key.
-    * Oracle-checked as q_sign_entropy. */
-  def signEntropy(df: DataFrame, keyCol: String, tsCol: String,
-                  valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth75.signEntropy(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Streaming twin of [[qstick]] — an O(k) candle-body ring.
-    * Spec-pinned. */
-  def liveQstick(bars: org.apache.spark.sql.Dataset[streaming.FullBarRow],
-                 k: Int = 5)
-      : org.apache.spark.sql.Dataset[streaming.QstickScored] =
-    streaming.Streams.streamingQstick(bars, k)
-
-  /** Streaming twin of [[fractals]] — a 5-bar ring with the two-bar
-    * confirmation lag. Spec-pinned. */
-  def liveFractals(bars: org.apache.spark.sql.Dataset[streaming.FullBarRow])
-      : org.apache.spark.sql.Dataset[streaming.FractalScored] =
-    streaming.Streams.streamingFractals(bars)
-
-  /** Lag-1 rank ACF of move magnitude (the Spearman-robust ARCH
-    * screen). Oracle-checked as q_arch_effect. */
-  def archEffect(df: DataFrame, keyCol: String, tsCol: String,
-                 valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth76.archEffect(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Ljung-Box Q(5) portmanteau test on day moves per key.
-    * Oracle-checked as q_ljung_box. */
-  def ljungBox(df: DataFrame, keyCol: String, tsCol: String,
-               valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth76.ljungBox(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** AR(1) mean-reversion half-life per key.
-    * Oracle-checked as q_half_life. */
-  def halfLife(df: DataFrame, keyCol: String, tsCol: String,
-               valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth76.halfLife(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Exact-dup doc/token accounting per source.
-    * Oracle-checked as q_dup_inflation. */
-  def dupInflation(docs: DataFrame, srcCol: String, idCol: String,
-                   textCol: String): DataFrame =
-    queries.Breadth77.dupInflation(docs, srcCol, idCol, textCol)
-
-  /** First-k-token template clusters per source.
-    * Oracle-checked as q_prefix_dup. */
-  def prefixDup(docs: DataFrame, srcCol: String, textCol: String,
-                k: Int = 5): DataFrame =
-    queries.Breadth77.prefixDup(docs, srcCol, textCol, k)
-
-  /** Letter/digit/space/other character shares per source.
-    * Oracle-checked as q_char_classes. */
-  def charClasses(docs: DataFrame, srcCol: String,
-                  textCol: String): DataFrame =
-    queries.Breadth77.charClasses(docs, srcCol, textCol)
-
-  /** Monthly seasonal (mean move + up-share per calendar month).
-    * Oracle-checked as q_month_effect. */
-  def monthEffect(df: DataFrame, keyCol: String, tsCol: String,
-                  valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth78.monthEffect(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Drawdown episode count + mean length per key.
-    * Oracle-checked as q_dd_episodes. */
-  def ddEpisodes(df: DataFrame, keyCol: String, tsCol: String,
-                 valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth78.ddEpisodes(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Peak-over-threshold |move| exceedance counts per key.
-    * Oracle-checked as q_pot_exceed. */
-  def potExceed(df: DataFrame, keyCol: String, tsCol: String,
-                valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth78.potExceed(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Rolling w-bar Pearson of key move vs the market move.
-    * Oracle-checked as q_rolling_corr. */
-  def rollingCorr(df: DataFrame, keyCol: String, tsCol: String,
-                  valCol: String, tieBreak: String, w: Int = 10): DataFrame =
-    queries.Breadth79.rollingCorr(df, keyCol, tsCol, valCol, tieBreak, w)
-
-  /** Mean h-day cumulative move after >4×median shocks.
-    * Oracle-checked as q_event_drift. */
-  def eventDrift(df: DataFrame, keyCol: String, tsCol: String,
-                 valCol: String, tieBreak: String, h: Int = 3): DataFrame =
-    queries.Breadth79.eventDrift(df, keyCol, tsCol, valCol, tieBreak, h)
-
-  /** Mean |tick move| by hour of day.
-    * Oracle-checked as q_intraday_activity. */
-  def intradayActivity(df: DataFrame, keyCol: String, tsCol: String,
-                       valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth79.intradayActivity(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Pooled rank information coefficient of the 1-day momentum signal.
-    * Oracle-checked as q_signal_ic. */
-  def signalIc(df: DataFrame, keyCol: String, tsCol: String,
-               valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth80.signalIc(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Per-key Pearson of |day move| vs day traded volume.
-    * Oracle-checked as q_volume_move_corr. */
-  def volumeMoveCorr(df: DataFrame, keyCol: String, tsCol: String,
-                     valCol: String, tieBreak: String,
-                     qtyJsonField: String): DataFrame =
-    queries.Breadth80.volumeMoveCorr(df, keyCol, tsCol, valCol, tieBreak,
-      qtyJsonField)
-
-  /** Order fulfilment span rolled up per order priority.
-    * Oracle-checked as q_order_fill_span. */
-  def orderFillSpan(orders: DataFrame, lineitem: DataFrame): DataFrame =
-    queries.Breadth80.orderFillSpan(orders, lineitem)
-
-  /** Top-k open-revenue backlog for one customer segment (the TPC-H Q3
-    * skeleton). Oracle-checked as q_segment_backlog. */
-  def segmentBacklog(customer: DataFrame, orders: DataFrame,
-                     lineitem: DataFrame, segment: String,
-                     cutoff: String = "1998-01-01", k: Int = 10): DataFrame =
-    queries.Breadth81.segmentBacklog(customer, orders, lineitem, segment,
-      cutoff, k)
-
-  /** Per-priority any-line-late order counts (the TPC-H Q4 skeleton).
-    * Oracle-checked as q_late_priority. */
-  def latePriority(orders: DataFrame, lineitem: DataFrame,
-                   lateDays: Int = 90): DataFrame =
-    queries.Breadth81.latePriority(orders, lineitem, lateDays)
-
-  /** Exact revenue by customer nation (the TPC-H Q5 skeleton).
-    * Oracle-checked as q_nation_revenue. */
-  def nationRevenue(nation: DataFrame, customer: DataFrame,
-                    orders: DataFrame, lineitem: DataFrame): DataFrame =
-    queries.Breadth81.nationRevenue(nation, customer, orders, lineitem)
-
-  /** Bilateral supplier-nation↔customer-nation revenue per ship year
-    * (the TPC-H Q7 skeleton). Oracle-checked as q_volume_shipping. */
-  def volumeShipping(nation: DataFrame, supplier: DataFrame,
-                     customer: DataFrame, orders: DataFrame,
-                     lineitem: DataFrame, nationA: String,
-                     nationB: String): DataFrame =
-    queries.Breadth95.volumeShipping(nation, supplier, customer, orders,
-      lineitem, nationA, nationB)
-
-  /** One nation's revenue share of a part type sold into a region, per
-    * order year (the TPC-H Q8 skeleton). Oracle-checked as
-    * q_market_share. */
-  def marketShare(region: DataFrame, nation: DataFrame, supplier: DataFrame,
-                  customer: DataFrame, orders: DataFrame,
-                  lineitem: DataFrame, part: DataFrame, shareNation: String,
-                  regionName: String, pType: String): DataFrame =
-    queries.Breadth95.marketShare(region, nation, supplier, customer,
-      orders, lineitem, part, shareNation, regionName, pType)
-
-  /** Ship-delay buckets × high/low order-priority line counts (the
-    * TPC-H Q12 skeleton). Oracle-checked as q_priority_delay. */
-  def priorityDelay(orders: DataFrame, lineitem: DataFrame): DataFrame =
-    queries.Breadth95.priorityDelay(orders, lineitem)
-
-  /** Customer order-count distribution, zero-order customers kept (the
-    * TPC-H Q13 skeleton). Oracle-checked as q_custdist. */
-  def custdist(customer: DataFrame, orders: DataFrame): DataFrame =
-    queries.Breadth95.custdist(customer, orders)
-
-  /** Cheapest observed supplier per part under a size/type screen (the
-    * TPC-H Q2 skeleton). Oracle-checked as q_min_cost_supplier. */
-  def minCostSupplier(part: DataFrame, supplier: DataFrame,
-                      nation: DataFrame, lineitem: DataFrame, pType: String,
-                      maxSize: Int): DataFrame =
-    queries.Breadth96.minCostSupplier(part, supplier, nation, lineitem,
-      pType, maxSize)
-
-  /** Exact profit by supplier nation × order year over one part-name
-    * prefix (the TPC-H Q9 skeleton). Oracle-checked as
-    * q_product_profit. */
-  def productProfit(part: DataFrame, supplier: DataFrame, nation: DataFrame,
-                    orders: DataFrame, lineitem: DataFrame,
-                    namePrefix: String): DataFrame =
-    queries.Breadth96.productProfit(part, supplier, nation, orders,
-      lineitem, namePrefix)
-
-  /** Supplier(s) with the max exact revenue over one quarter (the
-    * TPC-H Q15 skeleton). Oracle-checked as q_top_supplier. */
-  def topSupplier(supplier: DataFrame, lineitem: DataFrame,
-                  start: String): DataFrame =
-    queries.Breadth96.topSupplier(supplier, lineitem, start)
-
-  /** Avg weekly revenue in sub-20%-of-average-quantity lines of one
-    * brand (the TPC-H Q17 skeleton). Oracle-checked as
-    * q_small_qty_revenue. */
-  def smallQtyRevenue(part: DataFrame, lineitem: DataFrame,
-                      brand: String): DataFrame =
-    queries.Breadth96.smallQtyRevenue(part, lineitem, brand)
-
-  /** Parts whose exact revenue exceeds (pct10/10)× the average part
-    * revenue, cross-multiplied (the TPC-H Q11 skeleton with a
-    * scale-invariant threshold). Oracle-checked as q_important_parts. */
-  def importantParts(lineitem: DataFrame, pct10: Int = 15): DataFrame =
-    queries.Breadth97.importantParts(lineitem, pct10)
-
-  /** Distinct non-blacklisted suppliers per (brand, type, size) (the
-    * TPC-H Q16 skeleton). Oracle-checked as q_supplier_part_counts. */
-  def supplierPartCounts(part: DataFrame, supplier: DataFrame,
-                         lineitem: DataFrame, minAcct: Double): DataFrame =
-    queries.Breadth97.supplierPartCounts(part, supplier, lineitem, minAcct)
-
-  /** Exact revenue under an OR of brand×qty×size conjunctions (the
-    * TPC-H Q19 skeleton). Oracle-checked as q_disjunctive_revenue. */
-  def disjunctiveRevenue(part: DataFrame, lineitem: DataFrame): DataFrame =
-    queries.Breadth97.disjunctiveRevenue(part, lineitem)
-
-  /** Suppliers shipping >1.5× the per-supplier part average in a year
-    * (the TPC-H Q20 skeleton). Oracle-checked as q_excess_shippers. */
-  def excessShippers(part: DataFrame, supplier: DataFrame, nation: DataFrame,
-                     lineitem: DataFrame, namePrefix: String,
-                     shipYear: Int): DataFrame =
-    queries.Breadth97.excessShippers(part, supplier, nation, lineitem,
-      namePrefix, shipYear)
-
-  /** Sole-late-supplier wait counts over multi-supplier orders (the
-    * TPC-H Q21 skeleton). Oracle-checked as q_waiting_suppliers. */
-  def waitingSuppliers(supplier: DataFrame, orders: DataFrame,
-                       lineitem: DataFrame, lateDays: Int = 60,
-                       k: Int = 10): DataFrame =
-    queries.Breadth97.waitingSuppliers(supplier, orders, lineitem, lateDays,
-      k)
-
-  /** Per nation, rich customers with no order since the cutoff (the
-    * TPC-H Q22 skeleton). Oracle-checked as q_idle_customers. */
-  def idleCustomers(customer: DataFrame, orders: DataFrame,
-                    nation: DataFrame, cutoff: String): DataFrame =
-    queries.Breadth97.idleCustomers(customer, orders, nation, cutoff)
-
-  /** Welch's unequal-variance t between two groups of `grpCol`.
-    * Oracle-checked as q_welch_t. */
-  def welchT(df: DataFrame, grpCol: String, valCol: String, a: String,
-             b: String): DataFrame =
-    queries.Breadth98.welchT(df, grpCol, valCol, a, b)
-
-  /** Brown–Forsythe Levene test (median-based dispersion ANOVA).
-    * Oracle-checked as q_levene_bf. */
-  def leveneBF(df: DataFrame, grpCol: String, valCol: String): DataFrame =
-    queries.Breadth98.leveneBF(df, grpCol, valCol)
-
-  /** Grubbs' max-studentized-deviation outlier score per group.
-    * Oracle-checked as q_grubbs. */
-  def grubbs(df: DataFrame, grpCol: String, valCol: String): DataFrame =
-    queries.Breadth98.grubbs(df, grpCol, valCol)
-
-  /** Tie-robust Chatterjee ξ (time → value dependence) per key.
-    * Oracle-checked as q_chatterjee_xi. */
-  def chatterjeeXi(df: DataFrame, keyCol: String, tsCol: String,
-                   valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth98.chatterjeeXi(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Wilcoxon signed-rank z over per-(key, day) open→close moves.
-    * Oracle-checked as q_wilcoxon_signed. */
-  def wilcoxonSigned(df: DataFrame, keyCol: String, tsCol: String,
-                     valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth98.wilcoxonSigned(df, keyCol, tsCol, valCol, tieBreak)
 
   /** Additive Holt–Winters(7) level/trend/weekday-season per key.
     * Oracle-checked as q_holt_winters. */
@@ -1242,35 +619,6 @@ object Graft {
               qtyJsonField: String): DataFrame =
     queries.Breadth99.croston(df, keyCol, tsCol, qtyJsonField)
 
-  /** Theta-method θ=2 line + SES per key over day bars.
-    * Oracle-checked as q_theta. */
-  def theta(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-            tieBreak: String): DataFrame =
-    queries.Breadth99.theta(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Per-type adoption curve: daily new + cumulative first-time users.
-    * Oracle-checked as q_feature_adoption. */
-  def featureAdoption(df: DataFrame, keyCol: String, tsCol: String,
-                      typeCol: String): DataFrame =
-    queries.Breadth100.featureAdoption(df, keyCol, tsCol, typeCol)
-
-  /** Day-N retention at N ∈ {1,7,14,28}. Oracle-checked as
-    * q_dayn_retention. */
-  def daynRetention(df: DataFrame, keyCol: String, tsCol: String): DataFrame =
-    queries.Breadth100.daynRetention(df, keyCol, tsCol)
-
-  /** Rank-exact p50/p90 of 30-min-gap session durations.
-    * Oracle-checked as q_session_quantiles. */
-  def sessionQuantiles(df: DataFrame, keyCol: String, tsCol: String,
-                       tieBreak: String): DataFrame =
-    queries.Breadth100.sessionQuantiles(df, keyCol, tsCol, tieBreak)
-
-  /** Exact mean / p50 / p90 of per-key repeat-event day gaps.
-    * Oracle-checked as q_repeat_interval. */
-  def repeatInterval(df: DataFrame, keyCol: String, tsCol: String,
-                     typeCol: String, typeVal: String): DataFrame =
-    queries.Breadth100.repeatInterval(df, keyCol, tsCol, typeCol, typeVal)
-
   /** Exact trailing-window median of day-bar closes per key.
     * Oracle-checked as q_rolling_median. */
   def rollingMedian(df: DataFrame, keyCol: String, tsCol: String,
@@ -1279,69 +627,11 @@ object Graft {
     queries.Breadth101.rollingMedian(df, keyCol, tsCol, valCol, tieBreak,
       win)
 
-  /** k-core of the mutual within-label kNN graph after bounded peel rounds.
-    * Oracle-checked as q_kcore. */
-  def kcore(emb: DataFrame, k: Long = 2L, rounds: Int = 8): DataFrame =
-    queries.Breadth101.kcore(emb, k, rounds)
-
-  /** Rank-exact 10%-per-side trimmed mean per group. Oracle-checked as
-    * q_trimmed_mean. */
-  def trimmedMean(df: DataFrame, grpCol: String, valCol: String): DataFrame =
-    queries.Breadth101.trimmedMean(df, grpCol, valCol)
-
-  /** BM25 top-k of documents against the fixed three-term query.
-    * Oracle-checked as q_bm25. */
-  /** Tukey 1.5·IQR outlier fences per group, rank- and int64-exact.
-    * Oracle-checked as q_iqr_outliers. */
-  def iqrOutliers(df: DataFrame, grpCol: String, valCol: String): DataFrame =
-    queries.Breadth103.iqrOutliers(df, grpCol, valCol)
-
-  /** Process-capability Cpk per group against the fixed spec band.
-    * Oracle-checked as q_cpk. */
-  def cpk(df: DataFrame, grpCol: String, valCol: String): DataFrame =
-    queries.Breadth103.cpk(df, grpCol, valCol)
-
   /** Corwin–Schultz 2-day high-low spread proxy per key-day.
     * Oracle-checked as q_cs_spread. */
   def csSpread(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
                tieBreak: String): DataFrame =
     queries.Breadth103.csSpread(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Daily rank-exact p10/p50/p90 bands of the key cross-section.
-    * Oracle-checked as q_percentile_bands. */
-  def percentileBands(df: DataFrame, keyCol: String, tsCol: String,
-                      valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth104.percentileBands(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Jaccard of bottom-decile crash-day sets per key pair, top 15.
-    * Oracle-checked as q_tail_dependence. */
-  def tailDependence(df: DataFrame, keyCol: String, tsCol: String,
-                     valCol: String, tieBreak: String,
-                     k: Int = 15): DataFrame =
-    queries.Breadth104.tailDependence(df, keyCol, tsCol, valCol, tieBreak,
-      k)
-
-  /** One-factor beta estimated on market-down days only.
-    * Oracle-checked as q_beta_downside. */
-  def downsideBeta(df: DataFrame, keyCol: String, tsCol: String,
-                   valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth104.downsideBeta(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Quantity-weighted median line price per brand. Oracle-checked as
-    * q_weighted_median. */
-  def weightedMedian(part: DataFrame, lineitem: DataFrame): DataFrame =
-    queries.Breadth105.weightedMedian(part, lineitem)
-
-  /** Top consecutive-order dominant-type transitions. Oracle-checked
-    * as q_category_transitions. */
-  def categoryTransitions(orders: DataFrame, lineitem: DataFrame,
-                          part: DataFrame, k: Int = 20): DataFrame =
-    queries.Breadth105.categoryTransitions(orders, lineitem, part, k)
-
-  /** Rising/falling census of per-customer spend OLS slopes.
-    * Oracle-checked as q_spend_trajectory. */
-  def spendTrajectory(orders: DataFrame): DataFrame =
-    queries.Breadth105.spendTrajectory(orders)
 
   /** Trailing volume-weighted moving average per key-day.
     * Oracle-checked as q_vwma. */
@@ -1364,406 +654,11 @@ object Graft {
                 valCol: String, tieBreak: String, n: Int = 13): DataFrame =
     queries.Breadth106.disparity(df, keyCol, tsCol, valCol, tieBreak, n)
 
-  /** Global top-k centroid-proxy hard negatives for contrastive
-    * training. Oracle-checked as q_hard_negatives. */
-  def hardNegatives(emb: DataFrame, k: Int = 20): DataFrame =
-    queries.Breadth107.hardNegatives(emb, k)
-
-  /** Mann–Kendall trend test per key (tie-corrected, continuity z).
-    * Oracle-checked as q_mann_kendall. */
-  def mannKendall(df: DataFrame, keyCol: String, tsCol: String,
-                  valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth108.mannKendall(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Poisson(1) bootstrap CI of the mean day move per key.
-    * Oracle-checked as q_poisson_bootstrap. */
-  def poissonBootstrap(df: DataFrame, keyCol: String, tsCol: String,
-                       valCol: String, tieBreak: String,
-                       nBoot: Int = 32): DataFrame =
-    queries.Breadth108.poissonBootstrap(df, keyCol, tsCol, valCol,
-      tieBreak, nBoot)
-
-  /** Cliff's δ effect size between two groups (count-table exact).
-    * Oracle-checked as q_cliffs_delta. */
-  def cliffsDelta(df: DataFrame, grpCol: String, valCol: String, a: String,
-                  b: String): DataFrame =
-    queries.Breadth108.cliffsDelta(df, grpCol, valCol, a, b)
-
-  /** 1-Wasserstein distance between two groups' value distributions.
-    * Oracle-checked as q_wasserstein1. */
-  def wasserstein1(df: DataFrame, grpCol: String, valCol: String, a: String,
-                   b: String): DataFrame =
-    queries.Breadth109.wasserstein1(df, grpCol, valCol, a, b)
-
-  /** Squared energy distance between two groups on an int column.
-    * Oracle-checked as q_energy_distance. */
-  def energyDistance(docs: DataFrame, grpCol: String, numCol: String,
-                     a: String, b: String): DataFrame =
-    queries.Breadth109.energyDistance(docs, grpCol, numCol, a, b)
-
-  /** Rank-exact decile QQ table between two groups. Oracle-checked as
-    * q_qq_deciles. */
-  def qqDeciles(docs: DataFrame, grpCol: String, numCol: String, a: String,
-                b: String): DataFrame =
-    queries.Breadth109.qqDeciles(docs, grpCol, numCol, a, b)
-
-  /** PACF at lags 1–3 per key (Durbin–Levinson over exact-moment lag
-    * correlations). Oracle-checked as q_pacf. */
-  def pacf(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-           tieBreak: String): DataFrame =
-    queries.Breadth110.pacf(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Spectral power at fixed calendar periods over day moves.
-    * Oracle-checked as q_periodogram. */
-  def periodogram(df: DataFrame, keyCol: String, tsCol: String,
-                  valCol: String, tieBreak: String,
-                  periods: Seq[Int] = Seq(7, 30)): DataFrame =
-    queries.Breadth110.periodogram(df, keyCol, tsCol, valCol, tieBreak,
-      periods)
-
-  /** Turning-point randomness z per key. Oracle-checked as
-    * q_turning_points. */
-  def turningPoints(df: DataFrame, keyCol: String, tsCol: String,
-                    valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth110.turningPoints(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Per-supplier ship-delay consistency, top-k most erratic by CV².
-    * Oracle-checked as q_vendor_consistency. */
-  def vendorConsistency(supplier: DataFrame, orders: DataFrame,
-                        lineitem: DataFrame, k: Int = 10): DataFrame =
-    queries.Breadth111.vendorConsistency(supplier, orders, lineitem, k)
-
-  /** Granger-lite: market-lag F beyond the own lag, per key.
-    * Oracle-checked as q_granger_lite. */
-  def grangerLite(df: DataFrame, keyCol: String, tsCol: String,
-                  valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth111.grangerLite(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Dollar-grain zero-move share + mean unchanged-run length per key.
-    * Oracle-checked as q_price_stickiness. */
-  def priceStickiness(df: DataFrame, keyCol: String, tsCol: String,
-                      valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth111.priceStickiness(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Bollinger-inside-Keltner squeeze flags (integer verdict).
-    * Oracle-checked as q_ttm_squeeze. */
-  def ttmSqueeze(df: DataFrame, keyCol: String, tsCol: String,
-                 valCol: String, tieBreak: String, n: Int = 20): DataFrame =
-    queries.Breadth112.ttmSqueeze(df, keyCol, tsCol, valCol, tieBreak, n)
-
-  /** JdK-style relative strength ratio vs the equal-weight market.
-    * Oracle-checked as q_rs_ratio. */
-  def rsRatio(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-              tieBreak: String, n: Int = 10): DataFrame =
-    queries.Breadth112.rsRatio(df, keyCol, tsCol, valCol, tieBreak, n)
-
-  /** Volume-price trend (quantized proportional flows).
-    * Oracle-checked as q_vpt. */
-  def vpt(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-          tieBreak: String, qtyJsonField: String): DataFrame =
-    queries.Breadth112.vpt(df, keyCol, tsCol, valCol, tieBreak,
-      qtyJsonField)
-
-  /** ES₀.₁ gain/loss tail means and the Rachev ratio per key.
-    * Oracle-checked as q_rachev_ratio. */
-  def rachevRatio(df: DataFrame, keyCol: String, tsCol: String,
-                  valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth113.rachevRatio(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Mean day move / ulcer index per key. Oracle-checked as
-    * q_martin_ratio. */
-  def martinRatio(df: DataFrame, keyCol: String, tsCol: String,
-                  valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth113.martinRatio(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Mean day move / mean of the 3 deepest drawdown episodes.
-    * Oracle-checked as q_sterling_lite. */
-  def sterlingLite(df: DataFrame, keyCol: String, tsCol: String,
-                   valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth113.sterlingLite(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Lines-per-order histogram with exact mean basket value.
-    * Oracle-checked as q_basket_size_dist. */
-  def basketSizeDist(lineitem: DataFrame): DataFrame =
-    queries.Breadth114.basketSizeDist(lineitem)
-
-  /** Per-part price spread over the rank-exact median, top 20.
-    * Oracle-checked as q_price_dispersion. */
-  def priceDispersion(lineitem: DataFrame, k: Int = 20): DataFrame =
-    queries.Breadth114.priceDispersion(lineitem, k)
-
-  /** Repurchase share per part over its distinct buyers, top 20.
-    * Oracle-checked as q_repurchase_rate. */
-  def repurchaseRate(orders: DataFrame, lineitem: DataFrame,
-                     k: Int = 20): DataFrame =
-    queries.Breadth114.repurchaseRate(orders, lineitem, k)
-
-  /** Quantity share index per (part type, ship month). Oracle-checked
-    * as q_type_seasonality. */
-  def typeSeasonality(part: DataFrame, lineitem: DataFrame): DataFrame =
-    queries.Breadth115.typeSeasonality(part, lineitem)
-
-  /** Rank-exact p50/p90 of order totals per month. Oracle-checked as
-    * q_spend_quantile_trend. */
-  def spendQuantileTrend(orders: DataFrame): DataFrame =
-    queries.Breadth115.spendQuantileTrend(orders)
-
-  /** Volume / revenue response per exact discount level.
-    * Oracle-checked as q_discount_effect. */
-  def discountEffect(lineitem: DataFrame): DataFrame =
-    queries.Breadth115.discountEffect(lineitem)
-
-  /** Centroid-argmax purity, mean own cosine and margin per label.
-    * Oracle-checked as q_label_purity. */
-  def labelPurity(emb: DataFrame): DataFrame =
-    queries.Breadth116.labelPurity(emb)
-
-  /** Centroid-form simplified silhouette per label. Oracle-checked as
-    * q_silhouette_lite. */
-  def silhouetteLite(emb: DataFrame): DataFrame =
-    queries.Breadth116.silhouetteLite(emb)
-
-  def bm25(docs: DataFrame, textCol: String, k: Int = 20): DataFrame =
-    queries.Breadth102.bm25(docs, textCol, k)
-
-  /** Per-dimension mean/σ of the embedding corpus (quantized-exact).
-    * Oracle-checked as q_dim_stats. */
-  def dimStats(emb: DataFrame): DataFrame =
-    queries.Breadth102.dimStats(emb)
-
-  /** Cosine-to-centroid spread of the embedding corpus.
-    * Oracle-checked as q_isotropy. */
-  def isotropy(emb: DataFrame): DataFrame =
-    queries.Breadth102.isotropy(emb)
-
-  /** One-way ANOVA F + η² of a numeric column across groups.
-    * Oracle-checked as q_anova_f. */
-  def anovaF(df: DataFrame, grpCol: String, xCol: String): DataFrame =
-    queries.Breadth82.anovaF(df, grpCol, xCol)
-
-  /** Cramér's V of a categorical column × calendar month.
-    * Oracle-checked as q_cramers_v. */
-  def cramersV(df: DataFrame, typeCol: String, tsCol: String): DataFrame =
-    queries.Breadth82.cramersV(df, typeCol, tsCol)
-
-  /** Tie-corrected Kruskal-Wallis H across groups (value-domain-bounded
-    * ranks, no global per-row sort). Oracle-checked as q_kruskal. */
-  def kruskal(df: DataFrame, grpCol: String, xCol: String): DataFrame =
-    queries.Breadth82.kruskal(df, grpCol, xCol)
-
-  /** Merged-interval union coverage of per-supplier ship windows.
-    * Oracle-checked as q_ship_coverage. */
-  def shipCoverage(lineitem: DataFrame): DataFrame =
-    queries.Breadth83.shipCoverage(lineitem)
-
-  /** Idle-gap anatomy between merged ship islands per supplier.
-    * Oracle-checked as q_ship_gaps. */
-  def shipGaps(lineitem: DataFrame): DataFrame =
-    queries.Breadth83.shipGaps(lineitem)
-
-  /** Peak simultaneous open orders per customer nation (sweep line over
-    * day-grain deltas). Oracle-checked as q_order_concurrency. */
-  def orderConcurrency(nation: DataFrame, customer: DataFrame,
-                       orders: DataFrame): DataFrame =
-    queries.Breadth83.orderConcurrency(nation, customer, orders)
-
-  /** Integer-exact stationary distribution of the pooled per-key state
-    * chain (20 fixed-point power iterations).
-    * Oracle-checked as q_markov_stationary. */
-  def markovStationary(df: DataFrame, keyCol: String, stateCol: String,
-                       tsCol: String, tieBreak: String): DataFrame =
-    queries.Breadth84.markovStationary(df, keyCol, stateCol, tsCol, tieBreak)
-
-  /** Supplier-side projection of the supplier–part bipartite graph.
-    * Oracle-checked as q_bipartite_proj. */
-  def bipartiteProj(lineitem: DataFrame, minShared: Int = 2,
-                    topN: Int = 20): DataFrame =
-    queries.Breadth84.bipartiteProj(lineitem, minShared, topN)
-
-  /** Degree histogram of both sides of the supplier–part graph.
-    * Oracle-checked as q_degree_hist. */
-  def degreeHist(lineitem: DataFrame): DataFrame =
-    queries.Breadth84.degreeHist(lineitem)
-
   /** Lo–MacKinlay variance ratio VR(q) per key from exact integer sums.
     * Oracle-checked as q_variance_ratio. */
   def varianceRatio(df: DataFrame, keyCol: String, tsCol: String,
                     valCol: String, tieBreak: String, q: Int = 5): DataFrame =
     queries.Breadth85.varianceRatio(df, keyCol, tsCol, valCol, tieBreak, q)
-
-  /** Cornish–Fisher modified 95% VaR per key from decimal power sums.
-    * Oracle-checked as q_cf_var. */
-  def cfVar(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-            tieBreak: String): DataFrame =
-    queries.Breadth85.cfVar(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Rank-exact p95 + max daily drawdown depth per key.
-    * Oracle-checked as q_dar. */
-  def drawdownAtRisk(df: DataFrame, keyCol: String, tsCol: String,
-                     valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth85.drawdownAtRisk(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Top customers by returned-line revenue (the TPC-H Q10 skeleton).
-    * Oracle-checked as q_returned_revenue. */
-  def returnedRevenue(nation: DataFrame, customer: DataFrame,
-                      orders: DataFrame, lineitem: DataFrame,
-                      k: Int = 20): DataFrame =
-    queries.Breadth86.returnedRevenue(nation, customer, orders, lineitem, k)
-
-  /** PROMO revenue share per ship month (the TPC-H Q14 skeleton).
-    * Oracle-checked as q_promo_share. */
-  def promoShare(part: DataFrame, lineitem: DataFrame): DataFrame =
-    queries.Breadth86.promoShare(part, lineitem)
-
-  /** Large-volume orders joined back to their customer (the TPC-H Q18
-    * skeleton). Oracle-checked as q_big_orders. */
-  def bigOrders(customer: DataFrame, orders: DataFrame,
-                lineitem: DataFrame, minQty: Long = 200L,
-                k: Int = 25): DataFrame =
-    queries.Breadth86.bigOrders(customer, orders, lineitem, minQty, k)
-
-  /** RAKE keyword extraction: top phrases by deg/freq word scores.
-    * Oracle-checked as q_rake_keywords. */
-  def rakeKeywords(docs: DataFrame, idCol: String, textCol: String,
-                   topN: Int = 15): DataFrame =
-    queries.Breadth87.rakeKeywords(docs, idCol, textCol, topN)
-
-  /** Top-k character trigrams per language label (the classic lang-ID
-    * profile table). Oracle-checked as q_lang_trigrams. */
-  def langTrigrams(docs: DataFrame, langCol: String, textCol: String,
-                   k: Int = 5): DataFrame =
-    queries.Breadth87.langTrigrams(docs, langCol, textCol, k)
-
-  /** Gini concentration of the token-frequency distribution per source.
-    * Oracle-checked as q_token_gini. */
-  def tokenGini(docs: DataFrame, srcCol: String, textCol: String): DataFrame =
-    queries.Breadth87.tokenGini(docs, srcCol, textCol)
-
-  /** Additive 7-day-trend / weekday-seasonal / residual decomposition
-    * per key. Oracle-checked as q_stl_decomp. */
-  def stlDecomp(df: DataFrame, keyCol: String, tsCol: String,
-                valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth88.stlDecomp(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Exact binary-segmentation changepoint per key.
-    * Oracle-checked as q_changepoint. */
-  def changepoint(df: DataFrame, keyCol: String, tsCol: String,
-                  valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth88.changepoint(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Closed-form 2×2 PCA per key on (day move, day volume).
-    * Oracle-checked as q_pca2. */
-  def pca2(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-           tieBreak: String, qtyJsonField: String): DataFrame =
-    queries.Breadth88.pca2(df, keyCol, tsCol, valCol, tieBreak,
-      qtyJsonField)
-
-  /** DAU/MAU stickiness per day via the merged-interval sweep (no
-    * distinct-over-window). Oracle-checked as q_stickiness. */
-  def stickiness(df: DataFrame, keyCol: String, tsCol: String,
-                 win: Int = 28): DataFrame =
-    queries.Breadth89.stickiness(df, keyCol, tsCol, win)
-
-  /** Power-user curve: users active on exactly k of the trailing
-    * window days. Oracle-checked as q_l28_histogram. */
-  def l28Histogram(df: DataFrame, keyCol: String, tsCol: String,
-                   win: Int = 28): DataFrame =
-    queries.Breadth89.l28Histogram(df, keyCol, tsCol, win)
-
-  /** New vs returning user counts per day.
-    * Oracle-checked as q_new_returning. */
-  def newReturning(df: DataFrame, keyCol: String, tsCol: String): DataFrame =
-    queries.Breadth89.newReturning(df, keyCol, tsCol)
-
-  /** Open-order aging buckets at a snapshot date.
-    * Oracle-checked as q_backlog_aging. */
-  def backlogAging(orders: DataFrame, lineitem: DataFrame,
-                   snapshot: String = "1998-01-01"): DataFrame =
-    queries.Breadth90.backlogAging(orders, lineitem, snapshot)
-
-  /** Weekly order fill rate (worst line lag within k days).
-    * Oracle-checked as q_fill_rate. */
-  def fillRate(orders: DataFrame, lineitem: DataFrame,
-               fillDays: Int = 14): DataFrame =
-    queries.Breadth90.fillRate(orders, lineitem, fillDays)
-
-  /** ABC (revenue cumshare) × XYZ (demand CV) inventory matrix.
-    * Oracle-checked as q_abc_xyz. */
-  def abcXyz(lineitem: DataFrame): DataFrame =
-    queries.Breadth90.abcXyz(lineitem)
-
-  /** Exact per-label centroid component table (1e-6-quantized integer
-    * sums). Oracle-checked as q_label_centroids. */
-  def labelCentroids(emb: DataFrame): DataFrame =
-    queries.Breadth91.labelCentroids(emb)
-
-  /** Inter-label centroid cosine matrix from exact integer sums.
-    * Oracle-checked as q_centroid_sim. */
-  def centroidSim(emb: DataFrame): DataFrame =
-    queries.Breadth91.centroidSim(emb)
-
-  /** Per-label vector-norm histogram (0.1-wide buckets).
-    * Oracle-checked as q_norm_hist. */
-  def normHist(emb: DataFrame): DataFrame =
-    queries.Breadth91.normHist(emb)
-
-  /** Coppock curve (cent WMA(10) of ROC14+ROC11) per key.
-    * Oracle-checked as q_coppock. */
-  def coppock(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-              tieBreak: String): DataFrame =
-    queries.Breadth92.coppock(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Know Sure Thing + signal line per key, exact integer numerators.
-    * Oracle-checked as q_kst. */
-  def kst(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-          tieBreak: String): DataFrame =
-    queries.Breadth92.kst(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Chandelier long/short exits over w bars (simple-mean ATR).
-    * Oracle-checked as q_chandelier. */
-  def chandelier(df: DataFrame, keyCol: String, tsCol: String,
-                 valCol: String, tieBreak: String, w: Int = 22): DataFrame =
-    queries.Breadth92.chandelier(df, keyCol, tsCol, valCol, tieBreak, w)
-
-  /** Top first-3-event-type journey paths.
-    * Oracle-checked as q_user_paths. */
-  def userPaths(df: DataFrame, keyCol: String, tsCol: String,
-                tieBreak: String, typeCol: String,
-                topN: Int = 20): DataFrame =
-    queries.Breadth93.userPaths(df, keyCol, tsCol, tieBreak, typeCol, topN)
-
-  /** Step-indexed transition counts over each user's opening events.
-    * Oracle-checked as q_step_transitions. */
-  def stepTransitions(df: DataFrame, keyCol: String, tsCol: String,
-                      tieBreak: String, typeCol: String): DataFrame =
-    queries.Breadth93.stepTransitions(df, keyCol, tsCol, tieBreak, typeCol)
-
-  /** Rank-exact median/p90 of first-signup→first-purchase latency.
-    * Oracle-checked as q_time_to_convert. */
-  def timeToConvert(df: DataFrame, keyCol: String, tsCol: String,
-                    tieBreak: String, typeCol: String, fromType: String,
-                    toType: String): DataFrame =
-    queries.Breadth93.timeToConvert(df, keyCol, tsCol, tieBreak, typeCol,
-      fromType, toType)
-
-  /** Mean move + up-share by turn-of-month bucket.
-    * Oracle-checked as q_turn_of_month. */
-  def turnOfMonth(df: DataFrame, keyCol: String, tsCol: String,
-                  valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth94.turnOfMonth(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Month-anchored running VWAP per key.
-    * Oracle-checked as q_anchored_vwap. */
-  def anchoredVwap(df: DataFrame, keyCol: String, tsCol: String,
-                   valCol: String, tieBreak: String,
-                   qtyJsonField: String): DataFrame =
-    queries.Breadth94.anchoredVwap(df, keyCol, tsCol, valCol, tieBreak,
-      qtyJsonField)
-
-  /** Lognormal μ/σ fit of order totals per market segment.
-    * Oracle-checked as q_price_lognorm. */
-  def priceLognorm(customer: DataFrame, orders: DataFrame): DataFrame =
-    queries.Breadth94.priceLognorm(customer, orders)
 
   /** Elder Ray per key: EMA-13 mid + bull/bear power from the bar
     * high/low. Oracle-checked as q_elder_ray. */
@@ -1771,127 +666,17 @@ object Graft {
                tieBreak: String): DataFrame =
     queries.Breadth28.elderRay(df, keyCol, tsCol, valCol, tieBreak)
 
-  /** Streaming twin of [[elderRay]]. Spec-pinned. */
-  def liveElderRay(bars: org.apache.spark.sql.Dataset[streaming.OhlcBarRow])
-      : org.apache.spark.sql.Dataset[streaming.ElderScored] =
-    streaming.Streams.streamingElderRay(bars)
-
   /** Wilder parabolic SAR per key: the regime-switching stop-and-
     * reverse recurrence. Oracle-checked as q_psar. */
   def psar(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
            tieBreak: String): DataFrame =
     queries.Breadth30.psar(df, keyCol, tsCol, valCol, tieBreak)
 
-  /** Streaming twin of [[psar]] — the SAME step function. Spec-pinned. */
-  def livePsar(bars: org.apache.spark.sql.Dataset[streaming.OhlcBarRow])
-      : org.apache.spark.sql.Dataset[streaming.PsarScored] =
-    streaming.Streams.streamingPsar(bars)
-
-  /** Stochastic RSI per key: the Wilder RSI series normalized to its
-    * rolling min/max range. Oracle-checked as q_stoch_rsi. */
-  def stochRsi(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-               tieBreak: String): DataFrame =
-    queries.Breadth30.stochRsi(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Chande momentum oscillator per key (windowed up/down cent sums).
-    * Oracle-checked as q_cmo. */
-  def cmo(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-          tieBreak: String): DataFrame =
-    queries.Breadth30.cmo(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Unannualized daily Sortino per key (downside semi-deviation).
-    * Oracle-checked as q_sortino. */
-  def sortino(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-              tieBreak: String): DataFrame =
-    queries.Breadth30.sortino(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** N-day rate of change per key over day-bar closes. Oracle-checked
-    * as q_roc. */
-  def roc(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-          tieBreak: String): DataFrame =
-    queries.Breadth30.roc(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Floor-trader pivot points from the prior day's bar. Oracle-checked
-    * as q_pivot_points. */
-  def pivotPoints(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-                  tieBreak: String): DataFrame =
-    queries.Breadth30.pivotPoints(df, keyCol, tsCol, valCol, tieBreak)
-
   /** WMA(10) per key: the linearly-weighted MA with an integer lag-sum
     * numerator. Oracle-checked as q_wma. */
   def wma(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
           tieBreak: String): DataFrame =
     queries.Breadth31.wma(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Streaming twin of [[wma]] — the window-family twin (O(w) close
-    * ring per key), same integer numerator. Spec-pinned. */
-  def liveWma(bars: org.apache.spark.sql.Dataset[streaming.BarRow])
-      : org.apache.spark.sql.Dataset[streaming.WmaScored] =
-    streaming.Streams.streamingWma(bars)
-
-  /** Hull MA(8): WMA(3) over 2·WMA(4) − WMA(8). Oracle-checked as
-    * q_hma. */
-  def hma(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-          tieBreak: String): DataFrame =
-    queries.Breadth31.hma(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Omega ratio at threshold 0 + win rate per key. Oracle-checked as
-    * q_omega. */
-  def omega(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-            tieBreak: String): DataFrame =
-    queries.Breadth31.omega(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Calmar-style net-move-over-max-drawdown recovery ratio per key.
-    * Oracle-checked as q_calmar. */
-  def calmar(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-             tieBreak: String): DataFrame =
-    queries.Breadth31.calmar(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Drawdown duration per key: longest underwater spell on the bar
-    * grid (gaps-and-islands). Oracle-checked as q_dd_duration. */
-  def ddDuration(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-                 tieBreak: String): DataFrame =
-    queries.Breadth31.ddDuration(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Interpolated bigram LM corpus-likelihood scoring per document.
-    * Oracle-checked as q_bigram_lm. */
-  def bigramLm(spark: SparkSession, dir: String): DataFrame =
-    queries.Breadth31.bigramLm(spark, dir)
-
-  /** Dreiss choppiness index per key (14-bar true-range window).
-    * Oracle-checked as q_choppiness. */
-  def choppiness(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-                 tieBreak: String): DataFrame =
-    queries.Breadth32.choppiness(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Ehlers Fisher transform per key (10-bar range-normalization
-    * recurrence with the ±0.999 clamp). Oracle-checked as q_fisher. */
-  def fisher(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-             tieBreak: String): DataFrame =
-    queries.Breadth32.fisher(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Perplexity keep/drop gate at the corpus 90th percentile over the
-    * unigram-LM scoring. Oracle-checked as q_ppl_gate. */
-  def pplGate(spark: SparkSession, dir: String): DataFrame =
-    queries.Breadth32.pplGate(spark, dir)
-
-  /** Relative vigor index per key: Σ(C−O)/Σ(H−L) over 10 bars + the
-    * 4-bar symmetric signal. Oracle-checked as q_rvi. */
-  def rvi(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-          tieBreak: String): DataFrame =
-    queries.Breadth33.rvi(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Williams Ultimate Oscillator per key (4/8/16-bar buying-pressure
-    * ratios). Oracle-checked as q_ultimate_osc. */
-  def ultimateOsc(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-                  tieBreak: String): DataFrame =
-    queries.Breadth33.ultimateOsc(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Vertical horizontal filter per key (range over path length).
-    * Oracle-checked as q_vhf. */
-  def vhf(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-          tieBreak: String): DataFrame =
-    queries.Breadth33.vhf(df, keyCol, tsCol, valCol, tieBreak)
 
   /** Signed up/down streak length per key (integer recurrence).
     * Oracle-checked as q_streak. */
@@ -1906,93 +691,11 @@ object Graft {
                  tieBreak: String): DataFrame =
     queries.Breadth34.connorsRsi(df, keyCol, tsCol, valCol, tieBreak)
 
-  /** Tokenizer fertility per doc (BPE-ish subwords per whitespace
-    * word). Oracle-checked as q_fertility. */
-  def fertility(docs: DataFrame): DataFrame =
-    queries.Breadth34.fertility(docs)
-
   /** Elder impulse per key: green/red/blue from the joint EMA-13 /
     * MACD-histogram direction. Oracle-checked as q_elder_impulse. */
   def elderImpulse(df: DataFrame, keyCol: String, tsCol: String,
                    valCol: String, tieBreak: String): DataFrame =
     queries.Breadth35.elderImpulse(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** ZigZag 5% swing pivots per key (integer-only recurrence).
-    * Oracle-checked as q_zigzag. */
-  def zigzag(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-             tieBreak: String): DataFrame =
-    queries.Breadth36.zigzag(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Rolling 20-bar one-factor beta per key. Oracle-checked as
-    * q_rolling_beta. */
-  def rollingBeta(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-                  tieBreak: String): DataFrame =
-    queries.Breadth36.rollingBeta(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** ATR(5)/ATR(20) volatility regime ratio per key. Oracle-checked as
-    * q_vol_ratio. */
-  def volRatio(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-               tieBreak: String): DataFrame =
-    queries.Breadth37.volRatio(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Overnight gap decomposition per key. Oracle-checked as
-    * q_gap_stats. */
-  def gapStats(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-               tieBreak: String): DataFrame =
-    queries.Breadth37.gapStats(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Ease of Movement EMV(14) per key — the windowed integer
-    * aggregate-ratio form. Oracle-checked as q_emv. */
-  def emv(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-          tieBreak: String, qtyJsonField: String): DataFrame =
-    queries.Breadth38.emv(df, keyCol, tsCol, valCol, tieBreak, qtyJsonField)
-
-  /** Heaps-law vocabulary growth over corpus deciles. Oracle-checked
-    * as q_vocab_growth. */
-  def vocabGrowth(docs: DataFrame): DataFrame =
-    queries.Breadth38.vocabGrowth(docs)
-
-  /** Market-breadth A/D line + McClellan oscillator (per-day,
-    * cross-sectional). Oracle-checked as q_ad_line. */
-  def adLine(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-             tieBreak: String): DataFrame =
-    queries.Breadth39.adLine(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** New 20-bar highs/lows per day (breadth thrust). Oracle-checked as
-    * q_new_extremes. */
-  def newExtremes(df: DataFrame, keyCol: String, tsCol: String,
-                  valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth39.newExtremes(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Share of keys above their own 20-bar mean, per day (integer
-    * cross-multiplication test). Oracle-checked as q_pct_above_ma. */
-  def pctAboveMa(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-                 tieBreak: String): DataFrame =
-    queries.Breadth40.pctAboveMa(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Cross-sectional dispersion of same-day moves. Oracle-checked as
-    * q_dispersion. */
-  def dispersion(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-                 tieBreak: String): DataFrame =
-    queries.Breadth40.dispersion(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Wald–Wolfowitz runs test on up/down day signs per key.
-    * Oracle-checked as q_runs_test. */
-  def runsTest(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-               tieBreak: String): DataFrame =
-    queries.Breadth41.runsTest(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Cross-sectional trailing-return momentum ranks + deciles per day.
-    * Oracle-checked as q_mom_rank. */
-  def momRank(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-              tieBreak: String): DataFrame =
-    queries.Breadth41.momRank(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Lead–lag cross-correlation panel over the top-key pairs (lags
-    * −2..2, best-lag flagged). Oracle-checked as q_lead_lag. */
-  def leadLag(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-              tieBreak: String): DataFrame =
-    queries.Breadth42.leadLag(df, keyCol, tsCol, valCol, tieBreak)
 
   /** Undirected within-label kNN edge set over an embeddings frame
     * (vec_id, embedding, label). Oracle-checked via q_knn_triangles /
@@ -2017,16 +720,11 @@ object Graft {
     queries.Breadth44.countMin(df, keyCol)
 
   /** Holt double-exponential level/trend/forecast series per key.
-    * Oracle-checked as q_holt; [[liveHolt]] is its streaming twin. */
+    * Oracle-checked as q_holt; `streaming.Streams.streamingHolt`
+    * is its streaming twin. */
   def holt(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
            tieBreak: String): DataFrame =
     queries.Breadth45.holtSeries(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Streaming twin of [[holt]] — the SAME step function on O(1) keyed
-    * state. Spec-pinned bit-equal to the batch fold. */
-  def liveHolt(bars: org.apache.spark.sql.Dataset[streaming.BarRow])
-      : org.apache.spark.sql.Dataset[streaming.HoltScored] =
-    streaming.Streams.streamingHolt(bars)
 
   /** Theil–Sen robust slope per key (low-median pairwise slope).
     * Oracle-checked as q_theil_sen. */
@@ -2055,12 +753,6 @@ object Graft {
     * Oracle-checked as q_source_redundancy. */
   def sourceRedundancy(docs: DataFrame): DataFrame =
     queries.Breadth48.sourceRedundancy(docs)
-
-  /** Block-mean perceptual hash of binary media payloads.
-    * Oracle-checked as q_media_phash / q_phash_neardup. */
-  def mediaBlockHash(media: org.apache.spark.sql.Dataset[
-      multimodal.Multimodal.MediaRow], blocks: Int = 16): DataFrame =
-    multimodal.Multimodal.blockHash(media, blocks)
 
   /** SAX symbolization: rank-quartile PAA segments per key.
     * Oracle-checked as q_sax / q_sax_words. */
@@ -2113,7 +805,7 @@ object Graft {
     queries.Breadth55.turnover(df, keyCol, tsCol, valCol, tieBreak)
 
   /** Information-driven volume bars. Oracle-checked as q_volume_bars;
-    * [[liveVpinBuckets]] streams the same buckets. */
+    * `streaming.Streams.streamingVpinBuckets` streams the same buckets. */
   def volumeBars(df: DataFrame, keyCol: String, tsCol: String,
                  valCol: String, tieBreak: String,
                  qtyJsonField: String): DataFrame =
@@ -2134,109 +826,8 @@ object Graft {
     queries.Breadth58.dollarBars(df, keyCol, tsCol, valCol, tieBreak,
       qtyJsonField)
 
-  /** Lang-ID confusion matrix / per-language precision-recall.
-    * Oracle-checked as q_lang_confusion / q_lang_prf. */
-  def langConfusion(docs: DataFrame): DataFrame =
-    queries.Breadth57.langConfusion(docs)
   def langPrf(docs: DataFrame): DataFrame =
     queries.Breadth57.langPrf(docs)
-
-  /** Streaming VPIN volume buckets — completed buckets only, bit-equal
-    * to the batch construction. Spec-pinned. */
-  def liveVpinBuckets(ticks: org.apache.spark.sql.Dataset[streaming.TickRow],
-                      barVol: Long = queries.Breadth56.BarVol)
-      : org.apache.spark.sql.Dataset[streaming.VpinBucket] =
-    streaming.Streams.streamingVpinBuckets(ticks, barVol)
-
-  /** Streaming three-bar pattern screen — the SAME flag semantics as
-    * the batch q_three_bar_patterns, parity-pinned across batch
-    * splits. */
-  def liveThreeBar(bars: org.apache.spark.sql.Dataset[streaming.OcBarRow])
-      : org.apache.spark.sql.Dataset[streaming.ThreeBarScored] =
-    streaming.Streams.streamingThreeBar(bars)
-
-  /** Streaming count–min cells: the live sketch over a key stream —
-    * d·w keyed counters total. Spec-pinned equal to the batch sketch. */
-  def liveCmsCells(keys: org.apache.spark.sql.Dataset[Long], w: Int = 64)
-      : org.apache.spark.sql.Dataset[streaming.CmsCellState] =
-    streaming.Streams.streamingCmsCells(keys, w)
-
-  /** Streaming twin of [[elderImpulse]] — the SAME step function.
-    * Spec-pinned. */
-  def liveElderImpulse(bars: org.apache.spark.sql.Dataset[streaming.BarRow])
-      : org.apache.spark.sql.Dataset[streaming.ImpulseScored] =
-    streaming.Streams.streamingElderImpulse(bars)
-
-  /** Near-dup threshold sensitivity curve over the shared verified-pair
-    * chain. Oracle-checked as q_dedup_sensitivity. */
-  def dedupSensitivity(spark: SparkSession, dir: String): DataFrame =
-    queries.Breadth35.dedupSensitivity(spark, dir)
-
-  /** k-means cluster balance report (size + corpus share).
-    * Oracle-checked as q_cluster_mixture. */
-  def clusterMixture(spark: SparkSession, dir: String): DataFrame =
-    queries.Breadth35.clusterMixture(spark, dir)
-
-  /** Streaming twin of [[streak]] — the SAME step function.
-    * Spec-pinned. */
-  def liveStreak(bars: org.apache.spark.sql.Dataset[streaming.BarRow])
-      : org.apache.spark.sql.Dataset[streaming.StreakScored] =
-    streaming.Streams.streamingStreak(bars)
-
-  /** Streaming twin of [[connorsRsi]] — the SAME composite step (three
-    * recurrences + the 100-return ring) on O(100) keyed state.
-    * Spec-pinned. */
-  def liveConnorsRsi(bars: org.apache.spark.sql.Dataset[streaming.BarRow])
-      : org.apache.spark.sql.Dataset[streaming.CrsiScored] =
-    streaming.Streams.streamingConnorsRsi(bars)
-
-  /** Streaming twin of [[nviPvi]] — the SAME step function as the
-    * batch fold. Spec-pinned. */
-  def liveNviPvi(bars: org.apache.spark.sql.Dataset[streaming.VolBarRow])
-      : org.apache.spark.sql.Dataset[streaming.NviScored] =
-    streaming.Streams.streamingNviPvi(bars)
-
-  /** Streaming twin of [[trix]]. Spec-pinned. */
-  def liveTrix(bars: org.apache.spark.sql.Dataset[streaming.BarRow])
-      : org.apache.spark.sql.Dataset[streaming.TrixScored28] =
-    streaming.Streams.streamingTrix(bars)
-
-  /** Streaming twin of [[kama]]. Spec-pinned. */
-  def liveKama(bars: org.apache.spark.sql.Dataset[streaming.BarRow])
-      : org.apache.spark.sql.Dataset[streaming.KamaScored] =
-    streaming.Streams.streamingKama(bars)
-
-  /** Parkinson range volatility per key (quantized log-range terms). */
-  def parkinson(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-                tieBreak: String, qtyJsonField: String = "k"): DataFrame =
-    queries.Breadth29.parkinson(df, keyCol, tsCol, valCol, tieBreak,
-      qtyJsonField)
-
-  /** Garman–Klass range+body volatility per key. */
-  def garmanKlass(df: DataFrame, keyCol: String, tsCol: String,
-                  valCol: String, tieBreak: String,
-                  qtyJsonField: String = "k"): DataFrame =
-    queries.Breadth29.garmanKlass(df, keyCol, tsCol, valCol, tieBreak,
-      qtyJsonField)
-
-  /** Kyle-style price-impact OLS slope per key (|Δclose| on volume). */
-  def kyleLambda(df: DataFrame, keyCol: String, tsCol: String,
-                 valCol: String, tieBreak: String,
-                 qtyJsonField: String = "k"): DataFrame =
-    queries.Breadth29.kyleLambda(df, keyCol, tsCol, valCol, tieBreak,
-      qtyJsonField)
-
-  /** Herfindahl–Hirschman volume concentration across keys (one row). */
-  def herfindahl(df: DataFrame, keyCol: String, tsCol: String,
-                 qtyJsonField: String = "k"): DataFrame =
-    queries.Breadth29.herfindahl(df, keyCol, tsCol, qtyJsonField)
-
-  /** Signed feature hashing of token streams into a fixed bucket
-    * space — sparse (doc, bucket, weight) rows, no vocabulary build. */
-  def featureHash(docs: DataFrame, textCol: String = "text",
-                  idCol: String = "doc_id",
-                  buckets: Long = queries.Extensions11.FeatBuckets): DataFrame =
-    queries.Extensions11.featureHash(docs, textCol, idCol, buckets)
 
   // ---- live quote pipeline (the reference ETL, end to end) ------------
 
@@ -2246,11 +837,6 @@ object Graft {
   def stageTick(spark: SparkSession, fetch: () => String, stagingDir: String,
                 tickTime: java.sql.Timestamp): Long =
     sources.Sources.stageTickPayload(spark, fetch, stagingDir, tickTime)
-
-  /** The staged tick log as a streaming frame (`format("graft-ticks")`:
-    * offsets are tick ids, restart resumes from the committed tick). */
-  def tickStream(spark: SparkSession, stagingDir: String): DataFrame =
-    spark.readStream.format("graft-ticks").load(stagingDir)
 
   /** The staged tick log as a batch frame (the backfill read). */
   def tickBacklog(spark: SparkSession, stagingDir: String): DataFrame =
@@ -2269,27 +855,11 @@ object Graft {
     streaming.Streams.startQuoteStream(spark, stagingDir, storePath,
       checkpoint, snapshotPath, trigger)(onSnapshot)
 
-  // ---- crawl cleaning (column expressions, re-exported) ---------------
-
-  /** Remove every '<...>' tag run — see text.Web.stripTags. */
-  def stripTags(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    text.Web.stripTags(c)
-
-  /** Canonical page identity (lower host, no www/query/fragment) — see
-    * text.Web.canonicalUrl. */
-  def canonicalUrl(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    text.Web.canonicalUrl(c)
-
   // ---- round-10 operators (waves 123-136), re-exported ----------------
 
   /** Integer HITS hubs/authorities over a directed (src, dst) edge
     * frame — see queries.Breadth117.hits. */
   def hits(edges: DataFrame): DataFrame = queries.Breadth117.hits(edges)
-
-  /** Multi-source BFS hop histogram over an undirected (id_a, id_b)
-    * edge frame with (node, label) seeds per label. */
-  def hopHistogram(edges: DataFrame, labels: DataFrame): DataFrame =
-    queries.Breadth117.hopHistogram(edges, labels)
 
   /** 1-D local-level Kalman filter per key over daily close bars. */
   def kalman(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
@@ -2308,11 +878,6 @@ object Graft {
                valCol: String, tieBreak: String): DataFrame =
     queries.Breadth119.permTest(df, keyCol, tsCol, valCol, tieBreak)
 
-  /** Benjamini–Hochberg step-up over the permutation p-values. */
-  def bhFdr(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-            tieBreak: String): DataFrame =
-    queries.Breadth119.bhFdr(df, keyCol, tsCol, valCol, tieBreak)
-
   /** 48 h view→click→purchase funnel level histogram (greedy merge). */
   def windowFunnel(df: DataFrame, keyCol: String = "user_id",
                    typeCol: String = "event_type",
@@ -2330,14 +895,6 @@ object Graft {
   /** Product-quantization ADC top-k for the probe vectors. */
   def pqAdc(embeddings: DataFrame, k: Int = 5): DataFrame =
     queries.Breadth121.pqAdc(embeddings, k)
-
-  /** JL sign-projection cosine-distortion report over the kNN pairs. */
-  def rpDistortion(spark: SparkSession, dir: String): DataFrame =
-    queries.Breadth122.rpDistortion(spark, dir)
-
-  /** Cluster-aware vs naive split near-dup leakage report. */
-  def leakageSplit(spark: SparkSession, dir: String): DataFrame =
-    queries.Breadth122.leakageSplit(spark, dir)
 
   /** Per-document duplicate-5-gram corpus coverage. */
   def dupNgramCoverage(docs: DataFrame, idCol: String = "doc_id",
@@ -2362,11 +919,6 @@ object Graft {
   def mmrDiversify(embeddings: DataFrame): DataFrame =
     queries.Breadth126.mmrDiversify(embeddings)
 
-  /** Content-defined chunking + dedup stats over (media_id, kind,
-    * bytes) blobs. */
-  def cdcChunks(media: DataFrame): DataFrame =
-    queries.Breadth127.cdcChunks(media)
-
   /** Per-language over-represented tokens by exact integer lift. */
   def distinctiveTokens(docs: DataFrame): DataFrame =
     queries.Breadth128.distinctiveTokens(docs)
@@ -2374,26 +926,6 @@ object Graft {
   /** Pairwise language vocabulary Jaccard. */
   def vocabOverlap(docs: DataFrame): DataFrame =
     queries.Breadth128.vocabOverlap(docs)
-
-  /** Live Kalman screen — see streaming.Streams.streamingKalman. */
-  def liveKalman(bars: org.apache.spark.sql.Dataset[streaming.BarRow])
-      : org.apache.spark.sql.Dataset[streaming.KalmanScored] =
-    streaming.Streams.streamingKalman(bars)
-
-  /** Live clamped-balance screen. */
-  def liveClampedBalance(bars: org.apache.spark.sql.Dataset[streaming.BarRow])
-      : org.apache.spark.sql.Dataset[streaming.ClampScored] =
-    streaming.Streams.streamingClampedBalance(bars)
-
-  /** Live sequence-match DFA. */
-  def liveSequenceMatch(ev: org.apache.spark.sql.Dataset[streaming.SeqEvent])
-      : org.apache.spark.sql.Dataset[streaming.SeqMatchScored] =
-    streaming.Streams.streamingSequenceMatch(ev)
-
-  /** Live window funnel on bounded anchor-frontier state. */
-  def liveWindowFunnel(ev: org.apache.spark.sql.Dataset[streaming.SeqEvent])
-      : org.apache.spark.sql.Dataset[streaming.FunnelScored] =
-    streaming.Streams.streamingWindowFunnel(ev)
 
   /** Forecast-baseline MAEs + MASE ratios per key. */
   def forecastEval(df: DataFrame, keyCol: String, tsCol: String,
@@ -2423,21 +955,10 @@ object Graft {
   def splitBalance(spark: SparkSession, dir: String): DataFrame =
     queries.Breadth133.splitBalance(spark, dir)
 
-  /** Live Page–Hinkley drift screen. */
-  def livePageHinkley(bars: org.apache.spark.sql.Dataset[streaming.BarRow])
-      : org.apache.spark.sql.Dataset[streaming.PhScored] =
-    streaming.Streams.streamingPageHinkley(bars)
-
   /** CUPED variance reduction over pre/post user halves. */
   def cuped(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
             tieBreak: String): DataFrame =
     queries.Breadth134.cuped(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Live mass-index screen (O(w) ratio ring; full windows only —
-    * exactly the batch q_mass_index rows). */
-  def liveMassIndex(bars: org.apache.spark.sql.Dataset[streaming.OhlcBarRow])
-      : org.apache.spark.sql.Dataset[streaming.MassScored] =
-    streaming.Streams.streamingMassIndex(bars)
 
   /** SimHash near-dup pairs at the corpus-sized combination-banding
     * operating point (hamming ≤ maxHamming; block count from one count
@@ -2594,16 +1115,6 @@ object Graft {
   /** Wald SPRT per event stream: decision, crossing index, LLR. */
   def sprt(events: DataFrame): DataFrame =
     queries.Breadth147.sprt(events)
-
-  /** Live SPRT screen (shared Breadth147.sprtStep on keyed state). */
-  def liveSprt(events: org.apache.spark.sql.Dataset[streaming.SprtEvent])
-      : org.apache.spark.sql.Dataset[streaming.SprtScored] =
-    streaming.Streams.streamingSprt(events)
-
-  /** Live mergeable AMS sketch per source (update stream). */
-  def liveAmsSketch(docs: org.apache.spark.sql.Dataset[streaming.AmsDoc])
-      : org.apache.spark.sql.Dataset[streaming.AmsSnap] =
-    streaming.Streams.streamingAmsSketch(docs)
 
   /** Sequential pipeline-yield funnel: length → exact-dedup → KN
     * perplexity gate, one survival row per stage. */
@@ -2889,18 +1400,4 @@ object Graft {
     * level-wise) over each user's first-8-event journey. */
   def seqPatterns(events: DataFrame): DataFrame =
     queries.Breadth178.seqPatterns(events)
-
-  /** Streaming twin of [[seqPatterns]]' prefix build: per-key bounded
-    * first-8 journey state via `transformWithState` (update stream,
-    * frozen at 8). Spec-pinned equal to the batch prefix across
-    * micro-batch splits — see streaming.Streams.streamingJourney. */
-  def liveJourney(events: org.apache.spark.sql.Dataset[streaming.EventRow])
-      : org.apache.spark.sql.Dataset[streaming.JourneySnap] =
-    streaming.Streams.streamingJourney(events)
-
-  /** Stream-static screen of live journey snapshots against an
-    * offline-mined pattern table ([[seqPatterns]] output) — one row
-    * per (journey, matched pattern), stateless broadcast LIKE join. */
-  def liveJourneyMatches(journeys: DataFrame, patterns: DataFrame): DataFrame =
-    streaming.Streams.journeyMatches(journeys, patterns)
 }

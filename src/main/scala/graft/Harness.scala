@@ -2,15 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared helpers for the two single-session harness mains (Bench,
-  * Verify). */
+/** The storage sweep shared by the single-session harness mains (Bench,
+  * Verify, StageProbe); their session comes from `Graft.session`. */
 object Harness {
 
   /** Drop EVERY cached block in the session — CacheManager entries
     * (plan-level persists) AND RDD-level blocks clearCache cannot see
     * (localCheckpoint generations from the iterative graph queries).
     *
-    * INVARIANT (both call sites): this unpersists localCheckpoint'd
+    * INVARIANT (every call site): this unpersists localCheckpoint'd
     * RDDs too, which permanently destroys them — their lineage is
     * truncated, so they cannot be recomputed and a later action on a
     * frame that still references one throws "checkpoint block not

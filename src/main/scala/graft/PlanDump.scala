@@ -179,12 +179,7 @@ object PlanDump {
     df.queryExecution.explainString(ExplainMode.fromString("formatted")).trim
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Graft.session("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = args.lift(3).getOrElse("/root/testdata/sf0.001")
     if (args.isEmpty) writePlansMd(spark, dir)

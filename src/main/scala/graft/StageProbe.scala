@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted,
   SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic main: run one SparkEntry query (cold, then warm) and print
   * a per-stage task-metric table — executorRunTime vs deserialize vs GC
@@ -19,15 +18,7 @@ object StageProbe {
     val name = args.headOption.getOrElse("q_pagerank_int")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     case class St(var n: Int = 0, var run: Long = 0, var deser: Long = 0,
                   var gc: Long = 0, var cpu: Long = 0, var name: String = "")

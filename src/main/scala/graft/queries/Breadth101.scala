@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.cents
 
 /** Hundred-second wave — exact order-statistics under windows/trims and
   * bounded iterative graph peeling.
@@ -39,9 +40,6 @@ object Breadth101 {
   private val CoreK = 2L
   private val CoreRounds = 8
   private val TrimTenth = 10L
-
-  private def cents(c: Column) =
-    floor(c * lit(100.0) + lit(0.5)).cast("long")
 
   /** Exact trailing-k-bar median of closes per key. */
   private[graft] def rollingMedian(df: DataFrame, keyCol: String,

@@ -4,6 +4,7 @@ import graft.Tables
 import graft.text.Text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Num.{d, q6}
 
 /** Hundred-third wave — retrieval scoring and embedding geometry.
   *
@@ -36,9 +37,6 @@ object Breadth102 {
   private val Terms = Seq("scan", "join", "window")
   private val TopK = 20
 
-  private def q6(c: Column): Column =
-    floor(c * lit(1.0e6) + lit(0.5)).cast("long")
-
   /** BM25 top-k against the fixed three-term query. */
   private[graft] def bm25(docs: DataFrame, textCol: String,
                           k: Int = TopK): DataFrame = {
@@ -54,7 +52,6 @@ object Breadth102 {
       sum(when(col("__tf0") > 0, 1L).otherwise(0L)).as("__df0"),
       sum(when(col("__tf1") > 0, 1L).otherwise(0L)).as("__df1"),
       sum(when(col("__tf2") > 0, 1L).otherwise(0L)).as("__df2"))
-    def d(x: Column) = x.cast("double")
     def idfQ(df: Column, n: Column): Column =
       q6(log((d(n) - d(df) + lit(0.5)) / (d(df) + lit(0.5)) + lit(1.0)))
     def contrib(tf: Column, idf: Column, len: Column, nd: Column,
@@ -89,7 +86,6 @@ object Breadth102 {
 
   /** Per-dimension mean and σ from exact quantized moments. */
   private[graft] def dimStats(emb: DataFrame): DataFrame = {
-    def d(x: Column) = x.cast("double")
     dims(emb).groupBy(col("pos"))
       .agg(count(lit(1)).as("__n"), sum(col("__xq")).as("__s"),
         sum(col("__xq") * col("__xq")).as("__q"))
@@ -102,7 +98,6 @@ object Breadth102 {
 
   /** Cosine-to-centroid spread: n, mean (1e-6-quantized), min, max. */
   private[graft] def isotropy(emb: DataFrame): DataFrame = {
-    def d(x: Column) = x.cast("double")
     val e = dims(emb)
     // centroid dim d = s_d / n — carried as the exact pair (s_d, n)
     val cent = e.groupBy(col("pos").as("__cp"))

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.{d, cents}
 
 /** Hundred-fourth wave — robust outlier fences, process capability, and
   * the Corwin–Schultz high-low spread estimator.
@@ -29,9 +30,6 @@ object Breadth103 {
 
   private val CpkUsl = 300.0  // price spec limits (USL/LSL, dollars)
   private val CpkLsl = 0.0
-
-  private def cents(c: Column) =
-    floor(c * lit(100.0) + lit(0.5)).cast("long")
 
   /** Tukey 1.5·IQR outlier fences per group, rank- and int64-exact. */
   private[graft] def iqrOutliers(df: DataFrame, grpCol: String,
@@ -74,7 +72,6 @@ object Breadth103 {
   /** Cpk per group against the fixed [LSL, USL] spec band. */
   private[graft] def cpk(df: DataFrame, grpCol: String,
                          valCol: String): DataFrame = {
-    def d(x: Column) = x.cast("double")
     val g = df.select(col(grpCol).as("__g"), cents(col(valCol)).as("__c"))
       .groupBy(col("__g"))
       .agg(count(lit(1)).as("__n"), sum(col("__c")).as("__s"),
@@ -93,7 +90,6 @@ object Breadth103 {
   /** Corwin–Schultz 2-day high-low spread proxy per key-day. */
   private[graft] def csSpread(df: DataFrame, keyCol: String, tsCol: String,
                               valCol: String, tieBreak: String): DataFrame = {
-    def d(x: Column) = x.cast("double")
     val w = Window.partitionBy(col(keyCol)).orderBy(col("day").asc)
     val bars = Breadth13.dayBarsCents(df, keyCol, tsCol, valCol, tieBreak)
       .filter(col("low") > 0)

@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.cents
 
 /** Hundred-sixth wave — weighted order statistics and customer
   * trajectory shapes over the warehouse tables.
@@ -28,9 +29,6 @@ import org.apache.spark.sql.functions._
 object Breadth105 {
 
   private val TransTopK = 20
-
-  private def cents(c: Column) =
-    floor(c * lit(100.0) + lit(0.5)).cast("long")
 
   /** Quantity-weighted median extended price per brand. */
   private[graft] def weightedMedian(part: DataFrame,

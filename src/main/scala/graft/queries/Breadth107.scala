@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.{d, q6}
 
 /** Hundred-eighth wave — centroid-proxy hard-negative mining for
   * contrastive training data.
@@ -26,13 +27,9 @@ object Breadth107 {
 
   private val TopK = 20
 
-  private def q6(c: Column): Column =
-    floor(c * lit(1.0e6) + lit(0.5)).cast("long")
-
   /** Global top-k hardest centroid-proxy negatives. */
   private[graft] def hardNegatives(emb: DataFrame,
                                    k: Int = TopK): DataFrame = {
-    def d(x: Column) = x.cast("double")
     val e = emb.select(col("vec_id"), col("label"),
         posexplode(col("embedding").cast("array<double>"))
           .as(Seq("__p0", "__x")))

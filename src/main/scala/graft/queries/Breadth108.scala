@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.{d, cents}
 
 /** Hundred-ninth wave — nonparametric trend, distribution effect size,
   * and the distributed bootstrap.
@@ -32,9 +33,6 @@ object Breadth108 {
   private val BootSeed = "graftboot1"
   private val TwoPow60 = 1152921504606846976L
 
-  private def cents(c: Column) =
-    floor(c * lit(100.0) + lit(0.5)).cast("long")
-
   private def bars(df: DataFrame, keyCol: String, tsCol: String,
                    valCol: String, tieBreak: String): DataFrame =
     Breadth13.dayBarsCents(df, keyCol, tsCol, valCol, tieBreak)
@@ -58,7 +56,6 @@ object Breadth108 {
       .agg(count(lit(1)).as("__nv"), sum(col("__t")).as("__n"),
         sum(col("__t") * (col("__t") - 1L) * (col("__t") * 2L + 5L))
           .as("__tc"))
-    def d(x: Column) = x.cast("double")
     val v = (d(col("__n") * (col("__n") - 1L) * (col("__n") * 2L + 5L)) -
       d(col("__tc"))) / lit(18.0)
     s.join(ties, Seq(keyCol))

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.cents
 
 /** Hundred-tenth wave — exact distribution distances from merged count
   * tables: the drift metrics a data pipeline runs between sources /
@@ -27,8 +28,6 @@ import org.apache.spark.sql.functions._
   * prefix windows; no pairwise join exists anywhere. */
 object Breadth109 {
 
-  private def cents(c: Column) =
-    floor(c * lit(100.0) + lit(0.5)).cast("long")
   private val Dec = org.apache.spark.sql.types.DecimalType(38, 0)
 
   /** Merged count table of one int column for groups a/b of grpCol. */

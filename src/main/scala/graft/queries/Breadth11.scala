@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.cents
 
 /** Eleventh relational wave — distribution-level screens over the tick
   * stream: change-point detection, concentration, and drift. These are
@@ -20,11 +21,6 @@ import org.apache.spark.sql.functions._
   * addition commutes exactly, so no window fold order can move a bit.
   */
 object Breadth11 {
-
-  /** Half-up integer cents from a monetary double — the exact-parity
-    * quantization (floor, not cast: see object doc). */
-  private[graft] def cents(c: Column): Column =
-    floor(c * lit(100.0) + lit(0.5)).cast("long")
 
   /** CUSUM range per key: with c_i the ordered cent series and
     * T = Σc, the mean-centered prefix sum is s_i = Σ_{j≤i} c_j − i·T/n;

@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.{d, q6}
 
 /** Hundred-eleventh wave — serial-structure depth: partial
   * autocorrelation, fixed-period spectral power, randomness of
@@ -27,9 +28,6 @@ import org.apache.spark.sql.functions._
   * of a bar-index modulus — no per-row transcendental survives into
   * an ordered float sum. */
 object Breadth110 {
-
-  private def q6(c: Column): Column =
-    floor(c * lit(1.0e6) + lit(0.5)).cast("long")
 
   private def dayMoves(df: DataFrame, keyCol: String, tsCol: String,
                        valCol: String, tieBreak: String): DataFrame = {
@@ -101,7 +99,6 @@ object Breadth110 {
     val ang = lit(2.0) * lit(math.Pi) *
       pmod(col("__t"), col("period").cast("long")).cast("double") /
       col("period").cast("double")
-    def d(x: Column) = x.cast("double")
     mv.crossJoin(broadcast(ps))
       .withColumn("__qc", q6(d(col("__x")) * cos(ang)))
       .withColumn("__qs", q6(d(col("__x")) * sin(ang)))
@@ -127,7 +124,6 @@ object Breadth110 {
       .withColumn("__d2", lead(col("close"), 1).over(w) - col("close"))
       .withColumn("__n", count(lit(1)).over(
         Window.partitionBy(col(keyCol))))
-    def d(x: Column) = x.cast("double")
     val g = b.groupBy(col(keyCol))
       .agg(max(col("__n")).as("n_days"),
         sum(when(col("__d1").isNotNull && col("__d2").isNotNull &&

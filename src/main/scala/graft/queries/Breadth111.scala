@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.d
 
 /** Hundred-twelfth wave — supplier reliability, lead-lag causality, and
   * price rigidity.
@@ -32,7 +33,6 @@ object Breadth111 {
                                        orders: DataFrame,
                                        lineitem: DataFrame,
                                        k: Int = VendorTopK): DataFrame = {
-    def d(x: Column) = x.cast("double")
     val delays = lineitem
       .select(col("l_orderkey"), col("l_suppkey"),
         col("l_shipdate").cast("date").as("__ship"))
@@ -80,7 +80,6 @@ object Breadth111 {
   private[graft] def grangerLite(df: DataFrame, keyCol: String,
                                  tsCol: String, valCol: String,
                                  tieBreak: String): DataFrame = {
-    def d(x: Column) = x.cast("double")
     val mv = dayMoves(df, keyCol, tsCol, valCol, tieBreak)
     val mkt = mv.groupBy(col("day")).agg(sum(col("__x")).as("__m"))
     val w = Window.partitionBy(col(keyCol)).orderBy(col("day").asc)

@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.{d, q6}
 
 /** Hundred-thirteenth wave — composite band/relative-strength/flow
   * indicators over the bar grid.
@@ -28,10 +29,6 @@ object Breadth112 {
 
   private val BbN = 20
   private val RsN = 10
-
-  private def q6(c: Column): Column =
-    floor(c * lit(1.0e6) + lit(0.5)).cast("long")
-  private def d(x: Column) = x.cast("double")
 
   /** Bollinger(20, 2σ) vs SMA-Keltner(20, 1.5·ATR) squeeze flags. */
   private[graft] def ttmSqueeze(df: DataFrame, keyCol: String,

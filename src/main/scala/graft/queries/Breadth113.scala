@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.{d, q6}
 
 /** Hundred-fourteenth wave — tail- and drawdown-adjusted performance
   * ratios.
@@ -23,10 +24,6 @@ import org.apache.spark.sql.functions._
   * two window passes per key; episode depths are a |episodes|-bounded
   * aggregate. */
 object Breadth113 {
-
-  private def q6(c: Column): Column =
-    floor(c * lit(1.0e6) + lit(0.5)).cast("long")
-  private def d(x: Column) = x.cast("double")
 
   private def dayMoves(df: DataFrame, keyCol: String, tsCol: String,
                        valCol: String, tieBreak: String): DataFrame = {

@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.{d, cents}
 
 /** Hundred-fifteenth wave — retail order-book shape: basket sizes,
   * price dispersion, repurchase loyalty.
@@ -25,10 +26,6 @@ import org.apache.spark.sql.functions._
 object Breadth114 {
 
   private val TopK = 20
-
-  private def cents(c: Column) =
-    floor(c * lit(100.0) + lit(0.5)).cast("long")
-  private def d(x: Column) = x.cast("double")
 
   /** Lines-per-order histogram with mean basket value per size. */
   private[graft] def basketSizeDist(lineitem: DataFrame): DataFrame = {

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.{d, cents}
 
 /** Hundred-sixteenth wave — warehouse temporal shape: SKU seasonality,
   * spend-quantile drift, discount response.
@@ -23,10 +24,6 @@ import org.apache.spark.sql.functions._
   * month, |discount levels|) after one fact pass; quantiles rank
   * per-month count tables. */
 object Breadth115 {
-
-  private def cents(c: Column) =
-    floor(c * lit(100.0) + lit(0.5)).cast("long")
-  private def d(x: Column) = x.cast("double")
 
   /** Quantity share index per (type, ship month-of-year). */
   private[graft] def typeSeasonality(part: DataFrame,

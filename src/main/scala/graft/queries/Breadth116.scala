@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.{d, q6}
 
 /** Hundred-seventeenth wave — embedding label-quality metrics, both
   * LINEAR via centroids (never pairwise).
@@ -22,10 +23,6 @@ import org.apache.spark.sql.functions._
   * centroid table, |V|·|labels| bounded comparisons — the pairwise
   * silhouette's |V|² never appears. */
 object Breadth116 {
-
-  private def q6(c: Column): Column =
-    floor(c * lit(1.0e6) + lit(0.5)).cast("long")
-  private def d(x: Column) = x.cast("double")
 
   /** Per-(vector, label) quantized cosine to every label centroid,
     * with the own/other flag. */

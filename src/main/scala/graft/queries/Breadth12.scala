@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.cents
 
 /** Twelfth relational wave — market-microstructure summaries of the tick
   * stream: time-weighted average price, realized volatility, and feed
@@ -23,7 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object Breadth12 {
 
-  private def cents(c: Column): Column = Breadth11.cents(c)
   private def micros(ts: Column): Column = unix_micros(ts.cast("timestamp"))
 
   /** Per-key-per-day time-weighted average price: each tick's cent price

@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.{d, q6}
 
 /** Hundred-twenty-second wave — product-quantization ANN, the
   * compression tier below the int8 path (q_embed_quant): codes are
@@ -33,10 +34,6 @@ object Breadth121 {
   /** log2(dims per subspace): 64 dims → 8 subspaces of 8. */
   private val SubShift = 3
   private val PqTopK = 5
-
-  private def q6(c: Column): Column =
-    floor(c * lit(1.0e6) + lit(0.5)).cast("long")
-  private def d(x: Column): Column = x.cast("double")
 
   /** Exploded q6 components: (vec_id, label, pos 1-based, m 1-based,
     * xq). */

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Num.{d, q6}
 
 /** Hundred-twenty-third wave — two pipeline-infrastructure operators a
   * 100 TB embedding/dedup platform runs before anything expensive:
@@ -34,10 +35,6 @@ object Breadth122 {
 
   private[graft] val RpOutDims = 16
   private val InDims = 64
-
-  private def q6(c: Column): Column =
-    floor(c * lit(1.0e6) + lit(0.5)).cast("long")
-  private def d(x: Column): Column = x.cast("double")
 
   private def exploded(emb: DataFrame): DataFrame =
     emb.repartition(col("vec_id"))

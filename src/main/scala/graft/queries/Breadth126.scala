@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.{d, q6}
 
 /** Hundred-twenty-seventh wave — **q_mmr_diversify**: Maximal Marginal
   * Relevance re-ranking (Carbonell & Goldstein) of each probe's top-10
@@ -29,10 +30,6 @@ object Breadth126 {
 
   private val CandN = 10
   private val PickK = 5
-
-  private def q6(c: Column): Column =
-    floor(c * lit(1.0e6) + lit(0.5)).cast("long")
-  private def d(x: Column): Column = x.cast("double")
 
   private def exploded(emb: DataFrame): DataFrame =
     emb.repartition(col("vec_id"))

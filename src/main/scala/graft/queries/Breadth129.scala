@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.d
 
 /** Hundred-thirtieth wave — forecast-baseline evaluation and the
   * operations activity grid:
@@ -24,8 +25,6 @@ import org.apache.spark.sql.functions._
   * grid; the grid is one groupBy over the scan with a broadcast
   * 1-row total. */
 object Breadth129 {
-
-  private def d(x: org.apache.spark.sql.Column) = x.cast("double")
 
   /** Baseline one-step error table per key. */
   private[graft] def forecastEval(df: DataFrame, keyCol: String,

@@ -5,6 +5,7 @@ import graft.store.Memo
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.cents
 
 /** Thirteenth relational wave — pattern detection and dispersion
   * diagnostics:
@@ -22,8 +23,6 @@ import org.apache.spark.sql.functions._
   * score is one terminal division of integer operands.
   */
 object Breadth13 {
-
-  private def cents(c: Column): Column = Breadth11.cents(c)
 
   /** Daily integer-cent OHLC bars per key: open/close via the tie-safe
     * explicit-full-frame window (q_ohlc formulation), high/low as plain

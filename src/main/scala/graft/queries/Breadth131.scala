@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.{d, q6}
 
 /** Hundred-thirty-second wave — **q_knn_eval**: leave-one-out k-NN
   * label evaluation over the embedding corpus — the third label-
@@ -29,10 +30,6 @@ object Breadth131 {
 
   private val EvalN = 50
   private val KnnK = 5
-
-  private def q6(c: Column): Column =
-    floor(c * lit(1.0e6) + lit(0.5)).cast("long")
-  private def d(x: Column): Column = x.cast("double")
 
   private[graft] def knnEval(emb: DataFrame): DataFrame = {
     val e = emb.repartition(col("vec_id"))

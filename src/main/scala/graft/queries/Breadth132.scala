@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.{d, q6}
 
 /** Hundred-thirty-third wave — **q_anderson_darling**: the two-sample
   * Anderson–Darling statistic between the 'click' and 'view' value
@@ -35,10 +36,6 @@ import org.apache.spark.sql.functions._
   * rank-bucket the value domain first; at the gate SFs (N ≤ 2·10⁵)
   * the exact-decimal form is the parity-safe choice. */
 object Breadth132 {
-
-  private def d(x: Column): Column = x.cast("double")
-  private def q6(c: Column): Column =
-    floor(c * lit(1.0e6) + lit(0.5)).cast("long")
 
   /** Two-sample AD over the cent-quantized `valCol` of groups a/b of
     * `grpCol`. */

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Num.d
 
 /** Hundred-thirty-fourth wave — **q_split_balance**: stratification QA
   * for the leakage-safe split (Breadth122): per (split, language) the
@@ -17,8 +18,6 @@ import org.apache.spark.sql.functions._
   * two |langs|-bounded aggregates and one broadcast corpus-share
   * join. */
 object Breadth133 {
-
-  private def d(x: Column): Column = x.cast("double")
 
   private def trainFlag(idc: Column): Column =
     (conv(substring(md5(concat_ws("#", lit("split"), idc.cast("string"))),

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.{d, q6}
 
 /** Hundred-thirty-fifth wave — **q_cuped**: CUPED variance reduction
   * (Deng et al.) — the experimentation-platform companion to q_ab_lift:
@@ -25,10 +26,6 @@ import org.apache.spark.sql.functions._
   * Scale shape: one window to split each user's days, two integer
   * aggregates per user, |users|-sized moment aggregates. */
 object Breadth134 {
-
-  private def d(x: Column): Column = x.cast("double")
-  private def q6(c: Column): Column =
-    floor(c * lit(1.0e6) + lit(0.5)).cast("long")
 
   private[graft] def cuped(df: DataFrame, keyCol: String, tsCol: String,
                            valCol: String, tieBreak: String): DataFrame = {

@@ -2,9 +2,10 @@ package graft.queries
 
 import graft.Tables
 import graft.sim.Similarity
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.q6
 
 /** Hundred-thirty-seventh wave — two data-SELECTION schedulers a
   * training pipeline runs after scoring/dedup:
@@ -35,9 +36,6 @@ object Breadth136 {
   private[graft] val KCenters = 8
   private val CurriculumN = 30
   private val Pow32 = 4294967296L
-
-  private def q6(c: Column): Column =
-    floor(c * lit(1.0e6) + lit(0.5)).cast("long")
 
   /** Greedy k-center selection: (pick, vec_id, mcos_q6) — mcos_q6 is
     * the picked vector's max q6-cosine to the PREVIOUSLY selected set

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Num.cents
 
 /** Fourteenth relational wave — cross-series structure:
   *
@@ -81,7 +82,7 @@ object Breadth14 {
   private[graft] def vwap(df: DataFrame, keyCol: String, tsCol: String,
                           valCol: String, qtyJsonField: String): DataFrame =
     df.withColumn("__day", col(tsCol).cast("date"))
-      .withColumn("__c", Breadth11.cents(col(valCol)))
+      .withColumn("__c", cents(col(valCol)))
       .withColumn("__q",
         get_json_object(col("props"), s"$$.$qtyJsonField").cast("long"))
       .groupBy(col(keyCol), col("__day").as("day"))

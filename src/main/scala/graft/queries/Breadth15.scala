@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.cents
 
 /** Fifteenth relational wave — retrospective series reports:
   *
@@ -27,7 +28,7 @@ object Breadth15 {
     val run = Window.partitionBy(col(keyCol))
       .orderBy(col(tsCol).asc, col(tieBreak).asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("__c", Breadth11.cents(col(valCol)))
+    df.withColumn("__c", cents(col(valCol)))
       .withColumn("__rm", min(col("__c")).over(run))
       .groupBy(col(keyCol))
       .agg(count(lit(1)).as("n_ticks"),

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.cents
 
 /** Sixteenth relational wave — dashboard digest reports:
   *
@@ -24,7 +25,7 @@ object Breadth16 {
     * while DuckDB's `isodow` is 1=Monday, so both sides derive ISO. */
   private[graft] def seasonality(df: DataFrame, tsCol: String,
                                  valCol: String): DataFrame =
-    df.withColumn("__c", Breadth11.cents(col(valCol)))
+    df.withColumn("__c", cents(col(valCol)))
       .groupBy(
         // Spark dayofweek: 1=Sunday..7=Saturday -> ISO 1=Monday..7=Sunday
         ((dayofweek(col(tsCol)) + lit(5)) % lit(7) + lit(1)).as("dow_iso"),

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.cents
 
 /** Seventeenth relational wave — Bollinger breakout screening, the one
   * classic band indicator expressible EXACTLY: the breakout test
@@ -30,7 +31,7 @@ object Breadth17 {
       .orderBy(col(tsCol).asc, col(tieBreak).asc)
       .rowsBetween(-w, -1)
     val wL = lit(w.toLong)
-    df.withColumn("__c", Breadth11.cents(col(valCol)))
+    df.withColumn("__c", cents(col(valCol)))
       .withColumn("__n", count(lit(1)).over(frame))
       .withColumn("__sx", sum(col("__c")).over(frame))
       .withColumn("__sxx", sum(col("__c") * col("__c")).over(frame))

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.cents
 
 /** Eighteenth relational wave — completing the window-expressible
   * indicator set:
@@ -32,7 +33,7 @@ object Breadth18 {
     val frame = Window.partitionBy(col(keyCol))
       .orderBy(col(tsCol).asc, col(tieBreak).asc)
       .rowsBetween(-w, -1)
-    df.withColumn("__c", Breadth11.cents(col(valCol)))
+    df.withColumn("__c", cents(col(valCol)))
       .withColumn("__n", count(lit(1)).over(frame))
       .withColumn("__lo", min(col("__c")).over(frame))
       .withColumn("__hi", max(col("__c")).over(frame))
@@ -84,7 +85,7 @@ object Breadth18 {
     val ord = Window.partitionBy(col(keyCol))
       .orderBy(col(tsCol).asc, col(tieBreak).asc)
     val run = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("__c", Breadth11.cents(col(valCol)))
+    df.withColumn("__c", cents(col(valCol)))
       .withColumn("__q", coalesce(
         get_json_object(col("props"), s"$$.$qtyJsonField").cast("long"), lit(0L)))
       .withColumn("__d", col("__c") - lag(col("__c"), 1).over(ord))

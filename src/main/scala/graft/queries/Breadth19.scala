@@ -37,8 +37,6 @@ import org.apache.spark.sql.functions._
   */
 object Breadth19 {
 
-  private def cents(c: Column): Column = Breadth11.cents(c)
-
   private[graft] val A20 = 2.0 / 21.0
   private[graft] val A12 = 2.0 / 13.0
   private[graft] val A26 = 2.0 / 27.0

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.cents
 
 /** Twentieth wave — market-microstructure measures, the risk/liquidity
   * row a portfolio dashboard adds next to price history:
@@ -23,8 +24,6 @@ import org.apache.spark.sql.functions._
   * order in the DuckDB oracle — bit-exact, no rounding anywhere.
   */
 object Breadth20 {
-
-  private def cents(c: Column): Column = Breadth11.cents(c)
 
   /** Market beta per key over calendar-consecutive day-bar close diffs:
     * beta_k = cov(x_k, M) / var(M) with x the key's day-over-day cent

@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.cents
 
 /** Twenty-sixth wave — SQL-surface aggregate completions: the four
   * classic aggregate shapes a warehouse user reaches for that the
@@ -40,8 +41,6 @@ import org.apache.spark.sql.functions._
   * aggregation free.
   */
 object Breadth26 {
-
-  private def cents(c: Column): Column = Breadth11.cents(c)
 
   /** Modal cent value per group: count per (group, value), then ONE
     * rank-window pass over the count table — max count, ties to the

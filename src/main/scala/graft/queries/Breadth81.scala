@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import Num.cents
 
 /** Eighty-second wave — the classic warehouse join shapes (the TPC-H
   * Q3/Q4/Q5 skeletons) over the star schema, in the exact-integer
@@ -34,10 +35,6 @@ object Breadth81 {
   private val Cutoff = "1998-01-01"
   private val LateDays = 90
   private val TopK = 10
-
-  /** cents(x) — the repo-wide exact 2-dp quantizer. */
-  private def cents(c: org.apache.spark.sql.Column) =
-    floor(c * lit(100.0) + lit(0.5)).cast("long")
 
   /** Exact open revenue per order for segment customers, top 10. */
   private[graft] def segmentBacklog(customer: DataFrame, orders: DataFrame,

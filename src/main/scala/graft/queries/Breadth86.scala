@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import Num.cents
 
 /** Eighty-seventh wave — the TPC-H Q10/Q14/Q18 skeletons, same
   * exact-integer revenue discipline as Breadth81.
@@ -29,9 +30,6 @@ object Breadth86 {
   private[graft] val BigQty = 200L
   private[graft] val RetTopN = 20
   private[graft] val BigTopN = 25
-
-  private def cents(c: org.apache.spark.sql.Column) =
-    floor(c * lit(100.0) + lit(0.5)).cast("long")
 
   private def revExpr = (cents(col("l_extendedprice")) *
     (lit(100L) - cents(col("l_discount")))).as("__rev")

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.cents
 
 /** Ninety-first wave — supply-chain service metrics.
   *
@@ -30,9 +31,6 @@ object Breadth90 {
 
   private[graft] val Snapshot = "1998-01-01"
   private[graft] val FillDays = 14
-
-  private def cents(c: org.apache.spark.sql.Column) =
-    floor(c * lit(100.0) + lit(0.5)).cast("long")
 
   private def revExpr = (cents(col("l_extendedprice")) *
     (lit(100L) - cents(col("l_discount")))).as("__rev")

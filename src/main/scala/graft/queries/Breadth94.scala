@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.cents
 
 /** Ninety-fifth wave — calendar anchors and distribution fits.
   *
@@ -71,7 +72,7 @@ object Breadth94 {
         date_trunc("month", col(tsCol).cast("date")).cast("date"))
       .orderBy(col(tsCol).asc, col(tieBreak).asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("__c", Breadth11.cents(col(valCol)))
+    df.withColumn("__c", cents(col(valCol)))
       .withColumn("__q", coalesce(
         get_json_object(col("props"), s"$$.$qtyJsonField").cast("long"),
         lit(0L)))

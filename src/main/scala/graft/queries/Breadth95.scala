@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import Num.cents
 
 /** Ninety-sixth wave — the remaining classic warehouse join shapes,
   * part 1 (the TPC-H Q7/Q8/Q12/Q13 skeletons re-expressed on this
@@ -33,9 +34,6 @@ import org.apache.spark.sql.functions._
   * same aggregate (no second pass); Q13 is two hash aggregates over
   * |customer| rows. */
 object Breadth95 {
-
-  private def cents(c: org.apache.spark.sql.Column) =
-    floor(c * lit(100.0) + lit(0.5)).cast("long")
 
   private def revI(li: DataFrame): DataFrame =
     li.withColumn("__rev",

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import Num.cents
 
 /** Ninety-seventh wave — the remaining classic warehouse join shapes,
   * part 2 (the TPC-H Q2/Q9/Q15/Q17 skeletons on this schema — no
@@ -32,9 +33,6 @@ import org.apache.spark.sql.functions._
   * row explosion; the Q15 scalar max is a broadcast single row; Q9
   * shuffles lineitem once on orderkey after collapsing dims. */
 object Breadth96 {
-
-  private def cents(c: org.apache.spark.sql.Column) =
-    floor(c * lit(100.0) + lit(0.5)).cast("long")
 
   /** Cheapest observed supplier per part (type + size screened). */
   private[graft] def minCostSupplier(part: DataFrame, supplier: DataFrame,

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import Num.cents
 
 /** Ninety-eighth wave — the warehouse EXISTS / NOT-EXISTS / anti-join /
   * disjunctive shapes (the TPC-H Q11/Q16/Q19/Q20/Q21/Q22 skeletons; no
@@ -38,9 +39,6 @@ import org.apache.spark.sql.functions._
   * grain is |order×supp| ≤ |L| and collapses to |orders| before the
   * verdict. */
 object Breadth97 {
-
-  private def cents(c: org.apache.spark.sql.Column) =
-    floor(c * lit(100.0) + lit(0.5)).cast("long")
 
   private def revExpr =
     cents(col("l_extendedprice")) * (lit(100L) - cents(col("l_discount")))

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.{d, cents}
 
 /** Ninety-ninth wave — hypothesis-test depth: the two-sample /
   * dispersion / outlier / rank-dependence tests a stats layer needs
@@ -38,9 +39,6 @@ import org.apache.spark.sql.functions._
   * day-bar chain. */
 object Breadth98 {
 
-  private def cents(c: Column) =
-    floor(c * lit(100.0) + lit(0.5)).cast("long")
-
   /** Welch's t between groups a and b of `grpCol` on cents(valCol). */
   private[graft] def welchT(df: DataFrame, grpCol: String, valCol: String,
                             a: String, b: String): DataFrame = {
@@ -56,7 +54,6 @@ object Breadth98 {
         sum(when(col("__g") === b, col("__c")).otherwise(0L)).as("__sb"),
         sum(when(col("__g") === b, col("__c") * col("__c")).otherwise(0L))
           .as("__qb"))
-    def d(x: Column) = x.cast("double")
     val ma = d(col("__sa")) / d(col("__na"))
     val mb = d(col("__sb")) / d(col("__nb"))
     val va = (d(col("__na")) * d(col("__qa")) - d(col("__sa")) * d(col("__sa"))) /
@@ -148,7 +145,6 @@ object Breadth98 {
       .join(broadcast(g), col("__gg") === col("__g"))
       .groupBy(col("__g"), col("__n"), col("__s"), col("__q"))
       .agg(max(abs(col("__c2") * col("__n") - col("__s"))).as("__md"))
-    def d(x: Column) = x.cast("double")
     val sd = sqrt((d(col("__n")) * d(col("__q")) - d(col("__s")) * d(col("__s"))) /
       (d(col("__n")) * d(col("__n") - 1L)))
     dev.select(col("__g").as("grp"), col("__n").as("n_obs"),
@@ -205,7 +201,6 @@ object Breadth98 {
       sum(col("__pos") * col("__r2")).as("__w2p"),
       sum(col("__cnt") * col("__cnt") * col("__cnt") - col("__cnt"))
         .as("__tc"))
-    def d(x: Column) = x.cast("double")
     val w = d(col("__w2p")) / lit(2.0)
     val mu = d(col("__n") * (col("__n") + 1L)) / lit(4.0)
     val sig2 = d(col("__n") * (col("__n") + 1L) *

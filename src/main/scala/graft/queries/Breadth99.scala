@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Num.d
 
 /** Hundredth wave — forecasting recurrences beyond Holt linear:
   * seasonal, intermittent, and decomposition-based.
@@ -34,9 +35,6 @@ object Breadth99 {
   private val HwG = 1.0 / 4.0   // season
   private val CrA = 1.0 / 10.0  // croston
   private val ThA = 1.0 / 5.0   // theta SES
-
-  private def cents(c: Column) =
-    floor(c * lit(100.0) + lit(0.5)).cast("long")
 
   /** Holt–Winters accumulator — level, trend, the 7 weekday seasonals
     * (Seq: the transformWithState product-encoder note). */
@@ -152,7 +150,6 @@ object Breadth99 {
         sum(col("__i") * col("__i")).as("__sii"),
         sum(col("close")).as("__sy"),
         sum(col("__i") * col("close")).as("__siy"))
-    def d(x: Column) = x.cast("double")
     val slope = d(col("__n") * col("__siy") - col("__si") * col("__sy")) /
       d(col("__n") * col("__sii") - col("__si") * col("__si"))
     val icept = (d(col("__sy")) - col("__slope") * d(col("__si"))) /

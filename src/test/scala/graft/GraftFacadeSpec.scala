@@ -10,6 +10,31 @@ class GraftFacadeSpec extends SparkSpec {
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 
+  test("Graft.session returns the shared session and re-asserts its canon") {
+    val s = Graft.session("local[4]", 4)
+    assert(s eq spark)
+    def canon(): Unit = {
+      assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+      assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+      assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
+      assert(s.conf.get("spark.sql.shuffle.partitions") == "4")
+    }
+    canon()
+    assert(s.sparkContext.uiWebUrl.isEmpty)
+    // GraftExtensions is installed: its SQL function resolves
+    assert(s.sql("SELECT graft_shingles('a b c d', 3, false) AS sh")
+      .collect().head.getSeq[String](0).nonEmpty)
+    try {
+      s.conf.set("spark.sql.session.timeZone", "America/New_York")
+      s.conf.set("spark.sql.shuffle.partitions", "7")
+      assert(Graft.session("local[4]", 4) eq s)
+      canon()
+    } finally {
+      s.conf.set("spark.sql.session.timeZone", "UTC")
+      s.conf.set("spark.sql.shuffle.partitions", "4")
+    }
+  }
+
   test("Graft.snapshot == q_latest") {
     val ev = Tables.events(spark, sf0001)
     val got = Graft.snapshot(ev)
