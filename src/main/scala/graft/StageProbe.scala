@@ -17,7 +17,7 @@ object StageProbe {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q_pagerank_int")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Graft.session(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     case class St(var n: Int = 0, var run: Long = 0, var deser: Long = 0,

@@ -1,10 +1,16 @@
 package graft.streaming
 
 import graft.ops.Latest
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.queries.{Breadth22, Breadth23, Breadth24, Breadth27, Breadth28,
+  Breadth30, Breadth31, Breadth33, Breadth34, Breadth35, Breadth44, Breadth45,
+  Breadth52, Breadth69, Breadth85, Breadth99, Breadth118, Breadth123, Breadth130,
+  Breadth146, Breadth147, Breadth178}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Row shape shared by the typed stateful operators. ts is LocalDateTime
   * so the encoder maps to TIMESTAMP_NTZ — composing with `eventSchema`
@@ -100,10 +106,18 @@ case class BollScored(user_id: Long, event_id: Long, value: Double,
 case class BestTradeSnap(user_id: Long, n_ticks: Long,
                          best_trade_cents: Long)
 
+/** A keyed day bar: the bar twins fold their rows per user in day
+  * order. */
+trait DayBar {
+  def user_id: Long
+  def day: java.time.LocalDate
+}
+
 /** One finalized day bar — the input row of the EMA-family recurrence
   * twins (the batch forms fold day bars, so their streams consume the
   * bar stream, not raw ticks). LocalDate encodes as DATE. */
 case class BarRow(user_id: Long, day: java.time.LocalDate, close_cents: Long)
+    extends DayBar
 
 /** Per-key state of the streaming EMA/MACD fold: the four recurrence
   * values — O(1) per key, the whole reason EMA wants a stream (no
@@ -147,7 +161,7 @@ case class SharpeScored(user_id: Long, day: java.time.LocalDate,
   * that need the full bar (ADX directional movement reads high/low, not
   * just close). */
 case class OhlcBarRow(user_id: Long, day: java.time.LocalDate,
-                      close_cents: Long, high_cents: Long, low_cents: Long)
+                      close_cents: Long, high_cents: Long, low_cents: Long) extends DayBar
 
 /** One scored bar from the live ADX screen (append stream): DI± when
   * the smoothed TR is positive, this bar's DX, ADX on DX-defined bars —
@@ -175,7 +189,7 @@ case class SupertrendScored(user_id: Long, day: java.time.LocalDate,
   * is the one screen whose state needs the bar's first tick too. */
 case class Ohlc4BarRow(user_id: Long, day: java.time.LocalDate,
                        open_cents: Long, high_cents: Long, low_cents: Long,
-                       close_cents: Long)
+                       close_cents: Long) extends DayBar
 
 /** One smoothed candle from the live Heikin-Ashi screen (append
   * stream); scores from the first bar — no warm-up nulls. */
@@ -193,7 +207,7 @@ case class WilderScored(user_id: Long, day: java.time.LocalDate,
   * ADL/Chaikin oscillator reads high/low/close+vol). */
 case class VolBarRow(user_id: Long, day: java.time.LocalDate,
                      high_cents: Long, low_cents: Long, close_cents: Long,
-                     vol: Long)
+                     vol: Long) extends DayBar
 
 /** One scored bar from the live force-index screen (append stream);
   * None on the seed bar — the batch form drops that row (filter on
@@ -319,7 +333,7 @@ case class HwScored(user_id: Long, day: java.time.LocalDate,
 /** One positive-demand day — the input grain of the live Croston
   * screen. */
 case class DemandRow(user_id: Long, day: java.time.LocalDate,
-                     demand: Long)
+                     demand: Long) extends DayBar
 
 /** One scored demand day from the live Croston screen (append
   * stream). */
@@ -358,7 +372,7 @@ case class DisparityScored(user_id: Long, day: java.time.LocalDate,
   * QStick and fractal screens. */
 case class FullBarRow(user_id: Long, day: java.time.LocalDate,
                       open_cents: Long, close_cents: Long,
-                      high_cents: Long, low_cents: Long)
+                      high_cents: Long, low_cents: Long) extends DayBar
 
 /** One scored bar from the live QStick screen (append stream); None
   * during the k-bar warm-up — the batch null. */
@@ -396,7 +410,7 @@ case class VpinBucket(user_id: Long, bar_id: Long, imbalance: Long,
 /** One daily bar carrying open and close — the input of sequence-
   * pattern screens (OhlcBarRow's open-bearing sibling). */
 case class OcBarRow(user_id: Long, day: java.time.LocalDate,
-                    open_cents: Long, close_cents: Long)
+                    open_cents: Long, close_cents: Long) extends DayBar
 
 /** The last ≤2 bars' (open, close) pairs — the keyed ring a three-bar
   * pattern screen carries (O(1) state per key). */
@@ -478,6 +492,28 @@ case class ImpulseScored(user_id: Long, day: java.time.LocalDate,
   * during the ring warm-up — the batch q_wma's full-window stance. */
 case class WmaScored(user_id: Long, day: java.time.LocalDate,
                      close_cents: Long, wma: Option[Double])
+
+/** Croston keyed state: previous demand day + the smoothed pair. */
+case class CrostonState(prevDayEpoch: Long, z: Double, p: Double)
+
+/** VWMA ring state: last ≤win (close, vol) pairs in day order. */
+case class VwmaRing(closes: Seq[Long], vols: Seq[Long])
+
+/** Close-ring state shared by the envelope and disparity screens. */
+case class CloseRing(closes: Seq[Long])
+
+/** Rolling-median ring state: last ≤win closes in day order. */
+case class RollMedRing(closes: Seq[Long])
+
+/** Corwin–Schultz keyed state: the previous bar's high/low and its
+  * 1e-6-quantized log range. */
+case class CsState(prevHigh: Long, prevLow: Long, prevLq: Long)
+
+/** The QStick ring state: last ≤k candle bodies (close − open). */
+case class QstickRing(bodies: Seq[Long])
+
+/** The fractal ring state: last ≤5 full bars awaiting confirmation. */
+case class FractalRing(days: Seq[Long], highs: Seq[Long], lows: Seq[Long])
 
 /** Structured Streaming layer. The reference is a hand-rolled micro-batch
   * pipeline — fetch every 300 s, append one batch-stamped tick, notify,
@@ -757,12 +793,17 @@ object Streams {
     * .RocksDBStateStoreProvider`) — transformWithState refuses the
     * HDFS-backed provider, and RocksDB is what a 100 TB deployment
     * runs anyway (incremental checkpointing, off-heap state). */
-  def keyedStateLatest(ds: Dataset[EventRow]): Dataset[(Long, Long, Double)] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new LatestStateProcessor, TimeMode.None(),
-        OutputMode.Update())
-  }
+  def keyedStateLatest(ds: Dataset[EventRow]): Dataset[(Long, Long, Double)] =
+    // arrival order: a row replaces the state only if strictly newer, so
+    // the fold keeps the batch's first max-(ts, event_id) row, exactly
+    // latestStep's maxByOption; the state is unchanged iff its key is
+    keyedFold(ds)(_.user_id, OutputMode.Update(), "latest",
+        Encoders.product[LatestState], identity)(
+      (_, st, e) => (latestStep(Iterator.single(e), st).getOrElse(st.get), Nil),
+      (user, start, a) =>
+        if (start.exists(s => s.maxTsMicros == a.maxTsMicros &&
+          s.eventId == a.eventId)) None
+        else Some((user, a.eventId, a.value)))
 
   /** The SCHEMA-GENERIC form of [[keyedStateLatest]]: per-key state is
     * the ENTIRE latest event row (nested product encoder — RocksDB
@@ -773,12 +814,14 @@ object Streams {
     * WS push carries (`api/server.js:166-200`), with the same stale-
     * event no-op and (ts, event_id) tie discipline as the narrow form.
     * Same RocksDB-provider contract as [[keyedStateLatest]]. */
-  def keyedStateLatestRows(ds: Dataset[EventRow]): Dataset[EventRow] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new LatestRowStateProcessor, TimeMode.None(),
-        OutputMode.Update())
-  }
+  def keyedStateLatestRows(ds: Dataset[EventRow]): Dataset[EventRow] =
+    keyedFold(ds)(_.user_id, OutputMode.Update(), "latest_row",
+        Encoders.product[LatestRowState], identity)(
+      (_, st, e) => (latestRowStep(Iterator.single(e), st).getOrElse(st.get), Nil),
+      (_, start, a) =>
+        if (start.exists(s => s.maxTsMicros == a.maxTsMicros &&
+          s.row.event_id == a.row.event_id)) None
+        else Some(a.row))
 
   /** Stream-static as-of enrichment on the NATIVE merge operator: each
     * live probe row (key, t, …) picks up the latest static fact at or
@@ -801,6 +844,56 @@ object Streams {
     graft.ops.Latest.asOfJoinNativeValues(facts, probes, key, tsCol,
       probeTsCol, valueCols, tieBreak)
 
+  /** Runs `ds`, grouped by `key`, through one [[KeyedFold]] declared by
+    * (state name, state encoder, in-batch order, step, emit) — the one
+    * `transformWithState` call site. Every twin below is such a
+    * declaration; its output mode, state name and state encoder are its
+    * checkpoint identity and never change. Same RocksDB-provider
+    * requirement as [[keyedStateLatest]]. */
+  private def keyedFold[K: TypeTag, I, S, O: TypeTag](ds: Dataset[I])(
+      key: I => K, mode: OutputMode, stateName: String, enc: Encoder[S],
+      order: Seq[I] => Seq[I])(
+      step: (K, Option[S], I) => (S, IterableOnce[O]),
+      emit: (K, Option[S], S) => IterableOnce[O] =
+        (_: K, _: Option[S], _: S) => Nil): Dataset[O] =
+    ds.groupByKey(key)(ExpressionEncoder[K]())
+      .transformWithState(new KeyedFold(stateName, enc, order, step, emit),
+        TimeMode.None(), mode)(ExpressionEncoder[O]())
+
+  /** The day-bar twins' declaration: keyed by user, bars folded in day
+    * order, rows emitted by `step` (append mode). */
+  private def barFold[I <: DayBar, S, O: TypeTag](ds: Dataset[I],
+      stateName: String, enc: Encoder[S])(
+      step: (Long, Option[S], I) => (S, IterableOnce[O])): Dataset[O] =
+    keyedFold(ds)(_.user_id, OutputMode.Append(), stateName, enc,
+      byDay[I])(step)
+
+  /** In-batch orders: the batch window's (ts, event_id) total order for
+    * ticks, the calendar day for bars, (ts, event_id) at timestamp
+    * precision for the sequence screens. */
+  private def byEvent(rows: Seq[EventRow]): Seq[EventRow] =
+    rows.sortBy(e => (eventMicros(e.ts), e.event_id))
+  private def byDay[I <: DayBar](rows: Seq[I]): Seq[I] =
+    rows.sortBy(_.day.toEpochDay)
+  private def bySeqTime(rows: Seq[SeqEvent]): Seq[SeqEvent] =
+    rows.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
+
+  /** µs event time of a sequence-screen row (monotone in [[bySeqTime]]
+    * order, so within a sorted batch the running fold horizon equals the
+    * batch-start horizon for every row that is not late). */
+  private def seqMicros(ts: java.sql.Timestamp): Long =
+    ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
+
+  /** Update-mode snapshot twins (drawdown, tick health, best trade,
+    * realized vol, Roll spread): ONE scalar accumulator per key, ticks
+    * folded in (ts, event_id) order, one refreshed snapshot per touched
+    * key per micro-batch. */
+  private def tickSnapshot[S, O: TypeTag](ds: Dataset[EventRow],
+      stateName: String, enc: Encoder[S])(step: (Option[S], EventRow) => S)(
+      snap: (Long, S) => O): Dataset[O] =
+    keyedFold(ds)(_.user_id, OutputMode.Update(), stateName, enc, byEvent)(
+      (_, st, e) => (step(st, e), Nil), (user, _, a) => Some(snap(user, a)))
+
   /** Streaming twin of the q_rolling_zscore anomaly screen
     * (`queries.Breadth9.rollingZscore`): each event scored against the 6
     * values before it on its key's timeline, per-key state = the ≤6-deep
@@ -810,12 +903,12 @@ object Streams {
     * respects the timeline (the same in-order caveat as every trailing
     * screen; late data would need a watermarked reorder buffer).
     * Same RocksDB-provider requirement as [[keyedStateLatest]]. */
-  def streamingZscore(ds: Dataset[EventRow]): Dataset[ZScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new RollingZscoreProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingZscore(ds: Dataset[EventRow]): Dataset[ZScored] =
+    keyedFold(ds)(_.user_id, OutputMode.Append(), "zbuf",
+        Encoders.product[ZBuf], byEvent) { (_, st, e) =>
+      val (next, scored) = zscoreStep(st.fold(Seq.empty[Double])(_.vals), e)
+      (ZBuf(next), scored)
+    }
 
   /** Streaming twin of the q_seq_patterns prefix build
     * (`queries.Breadth178.seqPatterns`): per-key state is the first ≤8
@@ -826,12 +919,19 @@ object Streams {
     * ([[journeyMatches]]). Same in-order caveat as every trailing
     * screen, same RocksDB-provider requirement as
     * [[keyedStateLatest]]. */
-  def streamingJourney(ds: Dataset[EventRow]): Dataset[JourneySnap] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new JourneyProcessor, TimeMode.None(),
-        OutputMode.Update())
-  }
+  def streamingJourney(ds: Dataset[EventRow]): Dataset[JourneySnap] =
+    keyedFold(ds)(_.user_id, OutputMode.Update(), "journey",
+        Encoders.product[JourneyBuf], byEvent) { (_, st, e) =>
+      val b = st.getOrElse(JourneyBuf(Seq.empty))
+      if (b.toks.length >= 8) (b, None)
+      else {
+        // encoded-domain token (Breadth178.encodeTok's plain-Scala twin):
+        // journey strings must live in the same alphabet the miner's
+        // LIKE patterns are built from
+        val next = b.toks :+ ("|" + Breadth178.encodeTokScala(e.event_type) + "|")
+        (JourneyBuf(next), Some(JourneySnap(e.user_id, next.length, next.mkString)))
+      }
+    }
 
   /** Stream-static screen of journey snapshots against a mined pattern
     * table (`Breadth178.seqPatterns` output: pattern, len, support):
@@ -880,23 +980,19 @@ object Streams {
     * max_drawdown) row per touched key per micro-batch (update
     * semantics, like [[keyedStateLatest]]). Same in-order caveat and
     * RocksDB-provider requirement as [[streamingZscore]]. */
-  def streamingDrawdown(ds: Dataset[EventRow]): Dataset[DrawdownSnap] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new DrawdownProcessor, TimeMode.None(),
-        OutputMode.Update())
-  }
+  def streamingDrawdown(ds: Dataset[EventRow]): Dataset[DrawdownSnap] =
+    tickSnapshot(ds, "dd", Encoders.product[DrawdownAcc])(drawdownStep) {
+      (user, a) => DrawdownSnap(user, a.nTicks, a.peak, a.maxDd.map(round4))
+    }
 
   /** Streaming twin of the batch q_tick_health screen: largest
     * single-tick move and longest silent gap as O(1) keyed state on
     * `transformWithState` — the live stuck-feed / fat-finger tripwire.
     * Spec-pinned equal to the batch window form on in-order delivery. */
-  def streamingTickHealth(ds: Dataset[EventRow]): Dataset[TickHealthSnap] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new TickHealthProcessor, TimeMode.None(),
-        OutputMode.Update())
-  }
+  def streamingTickHealth(ds: Dataset[EventRow]): Dataset[TickHealthSnap] =
+    tickSnapshot(ds, "th", Encoders.product[TickHealthAcc])(tickHealthStep) {
+      (user, a) => TickHealthSnap(user, a.nTicks, a.maxMove, a.maxGap)
+    }
 
   /** One keyed step of the feed-health fold: quantize to cents exactly as
     * the batch Column form (`floor(v·100 + 0.5)` on the identical
@@ -921,12 +1017,15 @@ object Streams {
     * integer sum of squared cent moves as O(1) keyed state; the float
     * steps (one division, IEEE-exact sqrt) happen only at emit, so the
     * stream and the batch window compute the identical double. */
-  def streamingRealizedVol(ds: Dataset[EventRow]): Dataset[RealizedVolSnap] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new RealizedVolProcessor, TimeMode.None(),
-        OutputMode.Update())
-  }
+  def streamingRealizedVol(ds: Dataset[EventRow]): Dataset[RealizedVolSnap] =
+    tickSnapshot(ds, "rv", Encoders.product[RealizedVolAcc])(realizedVolStep) {
+      (user, a) =>
+        val scored = a.nMoves > 0
+        RealizedVolSnap(user, a.nTicks, a.nMoves,
+          if (scored) Some(a.sumSq) else None,
+          if (scored) Some(math.sqrt(a.sumSq.toDouble / a.nMoves.toDouble) / 100.0)
+          else None)
+    }
 
   /** One keyed step of the realized-vol fold: cents exactly as the batch
     * Column form, squared move accumulated as an exact integer. */
@@ -946,12 +1045,12 @@ object Streams {
     * integer-domain test as the batch Column form, so stream and batch
     * agree bit-for-bit (append mode — one scored row per tick with a
     * full prior window). */
-  def streamingBollinger(ds: Dataset[EventRow]): Dataset[BollScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new BollingerProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingBollinger(ds: Dataset[EventRow]): Dataset[BollScored] =
+    keyedFold(ds)(_.user_id, OutputMode.Append(), "bollbuf",
+        Encoders.product[BollBuf], byEvent) { (_, st, e) =>
+      val (next, scored) = bollingerStep(st.fold(Seq.empty[Long])(_.cents), e)
+      (BollBuf(next), scored)
+    }
 
   /** One keyed step of the Bollinger fold (w=5, k=2 — the q_bollinger
     * parameters): score against the buffered PRIOR window, then push the
@@ -976,12 +1075,10 @@ object Streams {
 
   /** Streaming twin of the batch q_best_trade report: prefix-min cents
     * and best profit as O(1) keyed state — the live backtest floor. */
-  def streamingBestTrade(ds: Dataset[EventRow]): Dataset[BestTradeSnap] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new BestTradeProcessor, TimeMode.None(),
-        OutputMode.Update())
-  }
+  def streamingBestTrade(ds: Dataset[EventRow]): Dataset[BestTradeSnap] =
+    tickSnapshot(ds, "bt", Encoders.product[BestTradeAcc])(bestTradeStep) {
+      (user, a) => BestTradeSnap(user, a.nTicks, a.bestCents)
+    }
 
   /** One keyed step of the best-trade fold (integer throughout). */
   private[streaming] def bestTradeStep(st: Option[BestTradeAcc],
@@ -1000,13 +1097,15 @@ object Streams {
     * Every step is the identical IEEE expression (same operand order) as
     * the batch `aggregate` fold and the DuckDB recursive CTE, so the
     * emitted doubles are bit-equal (append mode — one scored row per
-    * bar). */
-  def streamingEmaMacd(ds: Dataset[BarRow]): Dataset[EmaMacdScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new EmaMacdProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+    * bar). The emit expressions are the batch Column fold's verbatim
+    * (one terminal /100 per value, `(e12 - e26 - sig)/100` for the
+    * histogram — NEVER macd - signal, which differs in the last ulp). */
+  def streamingEmaMacd(ds: Dataset[BarRow]): Dataset[EmaMacdScored] =
+    barFold(ds, "emamacd", Encoders.product[EmaMacdAcc]) { (user, st, b) =>
+      val a = emaMacdStep(st, b.close_cents)
+      (a, Some(EmaMacdScored(user, b.day, b.close_cents, a.e20 / 100.0,
+        (a.e12 - a.e26) / 100.0, a.sig / 100.0, (a.e12 - a.e26 - a.sig) / 100.0)))
+    }
 
   /** One keyed step of the EMA/MACD fold — the Scala twin of the batch
     * Column fold in graft.queries.Breadth19 (constants shared from
@@ -1029,12 +1128,11 @@ object Streams {
   /** Streaming twin of the batch q_rsi_wilder recurrence: previous
     * close + exact integer warm-up sums + the two Wilder averages as
     * O(1) keyed state (append mode — one scored row per bar). */
-  def streamingWilderRsi(ds: Dataset[BarRow]): Dataset[WilderScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new WilderRsiProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingWilderRsi(ds: Dataset[BarRow]): Dataset[WilderScored] =
+    barFold(ds, "wilder", Encoders.product[WilderAcc]) { (user, st, b) =>
+      val a = wilderStep(st, b.close_cents)
+      (a, Some(WilderScored(user, b.day, b.close_cents, wilderRsi(a))))
+    }
 
   /** One keyed step of the Wilder fold — integer gains/losses, the
     * simple-mean seed at the 14th diff, (prev·13 + x)/14 after. */
@@ -1066,13 +1164,19 @@ object Streams {
   /** Streaming twin of the batch q_roll_spread estimator: the serial-
     * covariance sums as O(1) keyed state over the tick stream (update
     * mode — one refreshed per-key row per micro-batch, the emitted
-    * spread the batch expression verbatim). */
-  def streamingRollSpread(ds: Dataset[EventRow]): Dataset[RollSnap] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new RollSpreadProcessor, TimeMode.None(),
-        OutputMode.Update())
-  }
+    * spread the batch expression verbatim: integer covariance
+    * numerator, one division → sqrt → constant scaling, identical
+    * operand order). */
+  def streamingRollSpread(ds: Dataset[EventRow]): Dataset[RollSnap] =
+    tickSnapshot(ds, "roll", Encoders.product[RollAcc])(rollSpreadStep) {
+      (user, a) =>
+        val covNum = a.nPairs * a.sxy - a.sx * a.sy
+        RollSnap(user, a.nPairs, covNum,
+          if (covNum < 0)
+            Some(2.0 * math.sqrt((-covNum).toDouble /
+              (a.nPairs * a.nPairs).toDouble) / 100.0)
+          else None)
+    }
 
   /** One keyed step of the Roll fold: remember the diff, pair it with
     * the previous one, accumulate the integer co-moment sums. */
@@ -1095,12 +1199,14 @@ object Streams {
     * bars: previous close + integer moment sums as O(1) keyed state;
     * emits the running Sharpe after every bar (the last emission per
     * key equals the batch row). */
-  def streamingDailySharpe(ds: Dataset[BarRow]): Dataset[SharpeScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new DailySharpeProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingDailySharpe(ds: Dataset[BarRow]): Dataset[SharpeScored] =
+    barFold(ds, "sharpe", Encoders.product[SharpeAcc]) { (user, st, b) =>
+      val a = sharpeStep(st, b.close_cents)
+      val varNum = a.nDays * a.sxx - a.sx * a.sx
+      (a, Some(SharpeScored(user, b.day, a.nDays,
+        if (varNum > 0) Some(a.sx.toDouble / math.sqrt(varNum.toDouble))
+        else None)))
+    }
 
   /** Streaming twin of the batch q_adx recurrence-of-a-recurrence: the
     * whole directional-movement accumulator (last bar, warm-up sums, the
@@ -1109,75 +1215,75 @@ object Streams {
     * IS the batch fold's (graft.queries.Breadth22.adxStep), so stream ==
     * batch bit-for-bit by construction (append mode — one scored row per
     * bar). */
-  def streamingAdx(ds: Dataset[OhlcBarRow]): Dataset[AdxScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new AdxProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingAdx(ds: Dataset[OhlcBarRow]): Dataset[AdxScored] =
+    barFold(ds, "adx", Encoders.product[Breadth22.AdxAcc]) { (user, st, b) =>
+      val a = Breadth22.adxStep(st, b.high_cents, b.low_cents, b.close_cents)
+      val (dip, dim, dx, adx) = Breadth22.adxOut(a)
+      (a, Some(AdxScored(user, b.day, dip, dim, dx, adx)))
+    }
 
   /** Streaming twin of the batch q_tsi double-smoothed momentum: one
     * TsiAcc per key (previous close + four EMA values), the SAME step
     * function as the batch fold (append mode — one row per bar). */
-  def streamingTsi(ds: Dataset[BarRow]): Dataset[TsiScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new TsiProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingTsi(ds: Dataset[BarRow]): Dataset[TsiScored] =
+    barFold(ds, "tsi", Encoders.product[Breadth23.TsiAcc]) { (user, st, b) =>
+      val a = Breadth23.tsiStep(st, b.close_cents)
+      (a, Some(TsiScored(user, b.day, b.close_cents, Breadth23.tsiOut(a))))
+    }
 
   /** Streaming twin of the batch q_supertrend ratcheted bands: one
     * StAcc per key over the OHLC day-bar stream, the SAME step function
     * as the batch fold (append mode — one row per bar, warm-up rows
     * all-None). */
-  def streamingSupertrend(ds: Dataset[OhlcBarRow]): Dataset[SupertrendScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new SupertrendProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingSupertrend(ds: Dataset[OhlcBarRow]): Dataset[SupertrendScored] =
+    barFold(ds, "supertrend", Encoders.product[Breadth23.StAcc]) { (user, st, b) =>
+      val a = Breadth23.supertrendStep(st, b.high_cents, b.low_cents, b.close_cents)
+      (a, Some(SupertrendScored(user, b.day, b.close_cents, a.atr, a.fub, a.flb,
+        a.up.map(u => if (u) "up" else "down"),
+        a.up.map(u => if (u) a.flb.get else a.fub.get))))
+    }
 
   /** Streaming twin of the batch q_force_index recurrence: one FiAcc
     * per key (previous close + EMA13) over the volume-carrying day-bar
     * stream, the SAME step function as the batch fold (append mode —
     * one row per bar, the seed bar all-None). */
-  def streamingForceIndex(ds: Dataset[VolBarRow]): Dataset[FiScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new FiProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingForceIndex(ds: Dataset[VolBarRow]): Dataset[FiScored] =
+    barFold(ds, "force_index", Encoders.product[Breadth27.FiAcc]) { (user, st, b) =>
+      val a = Breadth27.fiStep(st, b.close_cents, b.vol)
+      (a, Some(FiScored(user, b.day, b.close_cents, a.fi, a.ema)))
+    }
 
   /** Streaming twin of the batch q_adl_chaikin recurrence: one AdlAcc
     * per key (integer ADL quantum + both EMAs), the SAME step function
     * and money-flow quantum as the batch fold (append mode — one row
     * per bar). */
-  def streamingChaikinOsc(ds: Dataset[VolBarRow]): Dataset[AdlScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new AdlOscProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingChaikinOsc(ds: Dataset[VolBarRow]): Dataset[AdlScored] =
+    barFold(ds, "adl_osc", Encoders.product[Breadth27.AdlAcc]) { (user, st, b) =>
+      val a = Breadth27.adlStep(st,
+        Breadth27.mfvQuantum(b.high_cents, b.low_cents, b.close_cents, b.vol))
+      (a, Some(AdlScored(user, b.day, a.adlQ, a.adlQ.toDouble / 1.0e6,
+        (a.e3 - a.e10) / 1.0e6)))
+    }
 
   /** Streaming twin of the batch q_nvi_pvi recurrence: one NviAcc per
     * key (previous close/volume + both indices), the SAME step function
     * as the batch fold (append mode — one row per bar). */
-  def streamingNviPvi(ds: Dataset[VolBarRow]): Dataset[NviScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new NviPviProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingNviPvi(ds: Dataset[VolBarRow]): Dataset[NviScored] =
+    barFold(ds, "nvi_pvi", Encoders.product[Breadth28.NviAcc]) { (user, st, b) =>
+      val a = Breadth28.nviStep(st, b.close_cents, b.vol)
+      (a, Some(NviScored(user, b.day, b.close_cents, a.nvi, a.pvi)))
+    }
 
   /** Streaming twin of the batch q_trix recurrence: one TrixAcc per
     * key (the three EMA stages + previous e3), the SAME step function
-    * as the batch fold (append mode — one row per bar). */
-  def streamingTrix(ds: Dataset[BarRow]): Dataset[TrixScored28] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new TrixProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+    * as the batch fold (append mode — one row per bar). The emitted
+    * rate of change reads the PRE-step state to tell the seed bar. */
+  def streamingTrix(ds: Dataset[BarRow]): Dataset[TrixScored28] =
+    barFold(ds, "trix", Encoders.product[Breadth28.TrixAcc]) { (user, st, b) =>
+      val a = Breadth28.trixStep(st, b.close_cents)
+      (a, Some(TrixScored28(user, b.day, b.close_cents, a.e3,
+        Breadth28.trixOut(st, a))))
+    }
 
   /** Streaming twin of the batch q_mass_index window-over-fold: one
     * MassAcc28 per key — the EMA pair via the SAME step function
@@ -1185,203 +1291,286 @@ object Streams {
     * quanta standing in for the batch's window sum (integer sums are
     * order-free, so ring-sum == window-sum exactly). Emits only full
     * windows, the batch row set (append mode). */
-  def streamingMassIndex(ds: Dataset[OhlcBarRow]): Dataset[MassScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new MassIndexProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingMassIndex(ds: Dataset[OhlcBarRow]): Dataset[MassScored] =
+    barFold(ds, "massindex", Encoders.product[MassAcc28]) { (user, st, b) =>
+      val w = Breadth28.MassW
+      val (pair, q) = Breadth28.massRatioStep(
+        st.map(a => (a.e1, a.e2)), b.high_cents, b.low_cents)
+      val ring = (st.map(_.ring).getOrElse(Seq.empty) :+ q).takeRight(w)
+      (MassAcc28(pair._1, pair._2, ring),
+        if (ring.size < w) None
+        else Some(MassScored(user, b.day, b.close_cents, ring.sum,
+          ring.sum.toDouble / 1.0e8)))
+    }
 
   /** Streaming twin of the batch q_kama recurrence: one KamaAcc per
     * key (the O(w) close ring + the adaptive MA), the SAME step
     * function as the batch fold (append mode — warm-up rows None). */
-  def streamingKama(ds: Dataset[BarRow]): Dataset[KamaScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new KamaProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingKama(ds: Dataset[BarRow]): Dataset[KamaScored] =
+    barFold(ds, "kama", Encoders.product[Breadth28.KamaAcc]) { (user, st, b) =>
+      val a = Breadth28.kamaStep(st, b.close_cents)
+      (a, Some(KamaScored(user, b.day, b.close_cents, a.kama.map(_ / 100.0))))
+    }
 
   /** Streaming twin of the batch q_ewma_vol recurrence: one EwmaVolAcc
     * per key (previous close + running variance), the SAME RiskMetrics
-    * step as the batch fold (append mode — first bar None). */
-  def streamingEwmaVol(ds: Dataset[BarRow]): Dataset[EwmaVolScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new EwmaVolProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+    * step as the batch fold (append mode — first bar None), emitted in
+    * the price domain with the batch form's exact √v/100. */
+  def streamingEwmaVol(ds: Dataset[BarRow]): Dataset[EwmaVolScored] =
+    barFold(ds, "ewmavol", Encoders.product[Breadth69.EwmaVolAcc]) { (user, st, b) =>
+      val a = Breadth69.ewmaVolStep(st, b.close_cents)
+      (a, Some(EwmaVolScored(user, b.day, b.close_cents,
+        a.v.map(math.sqrt(_) / 100.0))))
+    }
 
   /** Streaming twin of the batch q_holt_winters recurrence: one HwAcc
     * (level, trend, 7 weekday seasonals) per key, the SAME step as the
     * batch fold — the weekday comes from the bar's calendar day, so a
     * micro-batch split can't rotate the season (append mode). */
-  def streamingHoltWinters(ds: Dataset[BarRow]): Dataset[HwScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new HoltWintersProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingHoltWinters(ds: Dataset[BarRow]): Dataset[HwScored] =
+    barFold(ds, "hw", Encoders.product[Breadth99.HwAcc]) { (user, st, b) =>
+      val w = b.day.getDayOfWeek.getValue % 7 // ISO Mon=1..Sun=7 → 0=Sun
+      val (next, o) = Breadth99.hwStep(st, b.close_cents.toDouble, w)
+      (next, Some(HwScored(user, b.day, o.level / 100.0, o.trend / 100.0,
+        o.seasonal / 100.0, o.fitted.map(_ / 100.0))))
+    }
 
   /** Streaming twin of the batch q_croston recurrence: per key, the
     * previous demand day + the (z, p) pair; the calendar-day gap is
     * derived from the carried previous day, exactly the batch lag
     * (append mode — the first demand day seeds z=d, p=1). */
-  def streamingCroston(ds: Dataset[DemandRow]): Dataset[CrostonScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new CrostonProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingCroston(ds: Dataset[DemandRow]): Dataset[CrostonScored] =
+    barFold(ds, "croston", Encoders.product[CrostonState]) { (user, st, r) =>
+      val gap = st.fold(1.0)(s => (r.day.toEpochDay - s.prevDayEpoch).toDouble)
+      val a = Breadth99.crostonStep(st.map(s => Breadth99.CrAcc(s.z, s.p)),
+        r.demand.toDouble, gap)
+      (CrostonState(r.day.toEpochDay, a.z, a.p),
+        Some(CrostonScored(user, r.day, r.demand, a.z, a.p, a.z / a.p)))
+    }
 
   /** Streaming twin of the batch q_rolling_median window: an O(7)
     * close ring per key; the emit is the SAME sorted low/high middle
-    * pick as the batch frame (append mode). */
+    * pick as the batch frame, (lo+hi)/200 (append mode). */
   def streamingRollingMedian(ds: Dataset[BarRow],
-                             win: Int = 7): Dataset[RollMedScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new RollingMedianProcessor(win), TimeMode.None(),
-        OutputMode.Append())
-  }
+                             win: Int = 7): Dataset[RollMedScored] =
+    barFold(ds, "rollmed", Encoders.product[RollMedRing]) { (user, st, b) =>
+      val cs = (st.fold(Seq.empty[Long])(_.closes) :+ b.close_cents).takeRight(win)
+      val sorted = cs.sorted
+      val m = sorted.size
+      val med = (sorted((m + 1) / 2 - 1) + sorted(m / 2)).toDouble / 200.0
+      (RollMedRing(cs), Some(RollMedScored(user, b.day,
+        b.close_cents.toDouble / 100.0, m.toLong, med)))
+    }
 
   /** Streaming twin of the batch q_cs_spread: the previous bar's
     * (high, low, quantized log-range) per key; the SAME α assembly and
     * 6-dp-rounded spread as the batch form (append mode — a key's
-    * first bar emits nothing, the batch's lag-null row). */
-  def streamingCsSpread(ds: Dataset[OhlcBarRow]): Dataset[CsSpreadScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new CsSpreadProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+    * first bar emits nothing, the batch's lag-null row). Bars with
+    * low ≤ 0 are skipped without touching state, exactly the batch
+    * pre-lag filter. */
+  def streamingCsSpread(ds: Dataset[OhlcBarRow]): Dataset[CsSpreadScored] =
+    keyedFold(ds)(_.user_id, OutputMode.Append(), "csspread",
+        Encoders.product[CsState],
+        rows => byDay(rows).filter(_.low_cents > 0)) {
+      (user, st, b) =>
+        val lq = math.floor(math.log(b.high_cents.toDouble /
+          b.low_cents.toDouble) * 1.0e6 + 0.5).toLong
+        val scored = st.map { p =>
+          val h2 = math.max(b.high_cents, p.prevHigh)
+          val l2 = math.min(b.low_cents, p.prevLow)
+          val gq = math.floor(math.log(h2.toDouble / l2.toDouble) * 1.0e6 +
+            0.5).toLong
+          val beta = (lq * lq + p.prevLq * p.prevLq).toDouble
+          val gamma = (gq * gq).toDouble
+          val den = 3.0 - 2.0 * math.sqrt(2.0)
+          val alpha = (math.sqrt(2.0 * beta) - math.sqrt(beta)) / den -
+            math.sqrt(gamma / den)
+          val ea = math.exp(alpha / 1.0e6)
+          CsSpreadScored(user, b.day, java.math.BigDecimal
+            .valueOf(2.0 * (ea - 1.0) / (1.0 + ea))
+            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue())
+        }
+        (CsState(b.high_cents, b.low_cents, lq), scored)
+    }
 
   /** Streaming twin of the batch q_vwma window: an O(n) (close, vol)
     * ring per key; the emit is the SAME Σcv/Σv single division as the
     * batch frame (append mode; input = bars that HAVE a day volume,
     * the batch inner-join row set). */
   def streamingVwma(ds: Dataset[VolBarRow],
-                    win: Int = 10): Dataset[VwmaScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new VwmaProcessor(win), TimeMode.None(),
-        OutputMode.Append())
-  }
+                    win: Int = 10): Dataset[VwmaScored] =
+    barFold(ds, "vwma", Encoders.product[VwmaRing]) { (user, st, b) =>
+      val cs = (st.fold(Seq.empty[Long])(_.closes) :+ b.close_cents).takeRight(win)
+      val vs = (st.fold(Seq.empty[Long])(_.vols) :+ b.vol).takeRight(win)
+      val spv = cs.zip(vs).map { case (c, v) => c * v }.sum
+      val sv = vs.sum
+      (VwmaRing(cs, vs), Some(VwmaScored(user, b.day,
+        b.close_cents.toDouble / 100.0,
+        if (sv > 0) Some(spv.toDouble / sv.toDouble / 100.0) else None)))
+    }
 
   /** Streaming twin of the batch q_envelope: an O(n) close ring; the
     * SAME integer-product band edges and cross-multiplied breakout
     * flags (append mode). */
   def streamingEnvelope(ds: Dataset[BarRow], win: Int = 20,
-                        permille: Long = 25L): Dataset[EnvScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new EnvelopeProcessor(win, permille),
-        TimeMode.None(), OutputMode.Append())
-  }
+                        permille: Long = 25L): Dataset[EnvScored] =
+    barFold(ds, "envelope", Encoders.product[CloseRing]) { (user, st, b) =>
+      val cs = (st.fold(Seq.empty[Long])(_.closes) :+ b.close_cents).takeRight(win)
+      val s = cs.sum; val m = cs.size.toLong
+      (CloseRing(cs), Some(EnvScored(user, b.day, b.close_cents.toDouble / 100.0,
+        s.toDouble / m.toDouble / 100.0,
+        (s * (1000L + permille)).toDouble / (m * 1000L).toDouble / 100.0,
+        (s * (1000L - permille)).toDouble / (m * 1000L).toDouble / 100.0,
+        b.close_cents * m * 1000L > s * (1000L + permille),
+        b.close_cents * m * 1000L < s * (1000L - permille))))
+    }
 
   /** Streaming twin of the batch q_disparity: an O(n) close ring; the
     * SAME 100·c·m/Σc single division (append mode). */
   def streamingDisparity(ds: Dataset[BarRow],
-                         win: Int = 13): Dataset[DisparityScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new DisparityProcessor(win), TimeMode.None(),
-        OutputMode.Append())
-  }
+                         win: Int = 13): Dataset[DisparityScored] =
+    barFold(ds, "disparity", Encoders.product[CloseRing]) { (user, st, b) =>
+      val cs = (st.fold(Seq.empty[Long])(_.closes) :+ b.close_cents).takeRight(win)
+      val s = cs.sum; val m = cs.size.toLong
+      (CloseRing(cs), Some(DisparityScored(user, b.day,
+        b.close_cents.toDouble / 100.0,
+        (b.close_cents * m * 100L).toDouble / s.toDouble)))
+    }
 
   /** Streaming twin of the batch q_qstick window: an O(k) candle-body
     * ring per key; the emit is the SAME integer sum / (k·100) as the
     * batch frame (append mode — warm-up rows None). */
   def streamingQstick(ds: Dataset[FullBarRow],
-                      k: Int = 5): Dataset[QstickScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new QstickProcessor(k), TimeMode.None(),
-        OutputMode.Append())
-  }
+                      k: Int = 5): Dataset[QstickScored] =
+    barFold(ds, "qstick", Encoders.product[QstickRing]) { (user, st, b) =>
+      val bodies = (st.fold(Seq.empty[Long])(_.bodies) :+
+        (b.close_cents - b.open_cents)).takeRight(k)
+      (QstickRing(bodies), Some(QstickScored(user, b.day,
+        if (bodies.size == k) Some(bodies.sum.toDouble / (k * 100.0))
+        else None)))
+    }
 
   /** Streaming twin of the batch q_fractals pattern: an O(5) full-bar
     * ring per key; a swing is emitted two bars after its day (the
     * ±2-bar confirmation lag), with exactly the batch rows — the final
     * two bars of any prefix are unconfirmable in BOTH forms. */
-  def streamingFractals(ds: Dataset[FullBarRow]): Dataset[FractalScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new FractalsProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingFractals(ds: Dataset[FullBarRow]): Dataset[FractalScored] =
+    barFold(ds, "fractals", Encoders.product[FractalRing]) { (user, st, b) =>
+      val r = st.getOrElse(FractalRing(Seq.empty, Seq.empty, Seq.empty))
+      val s = FractalRing((r.days :+ b.day.toEpochDay).takeRight(5),
+        (r.highs :+ b.high_cents).takeRight(5),
+        (r.lows :+ b.low_cents).takeRight(5))
+      val out = Seq.newBuilder[FractalScored]
+      if (s.days.size == 5) {
+        // the CENTER bar is judged once both confirming bars exist
+        val day = java.time.LocalDate.ofEpochDay(s.days(2))
+        val h = s.highs; val l = s.lows
+        if (h(2) > h(0) && h(2) > h(1) && h(2) > h(3) && h(2) > h(4))
+          out += FractalScored(user, day, "high", h(2))
+        if (l(2) < l(0) && l(2) < l(1) && l(2) < l(3) && l(2) < l(4))
+          out += FractalScored(user, day, "low", l(2))
+      }
+      (s, out.result())
+    }
 
   /** Streaming twin of the batch q_dema recurrence: one DemaAcc per key
     * (two chained EMA stages), the SAME step function as the batch fold
-    * (append mode — one row per bar). */
-  def streamingDema(ds: Dataset[BarRow]): Dataset[DemaScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new DemaProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+    * (append mode — one row per bar), emitted in the price domain. */
+  def streamingDema(ds: Dataset[BarRow]): Dataset[DemaScored] =
+    barFold(ds, "dema", Encoders.product[Breadth28.DemaAcc]) { (user, st, b) =>
+      val a = Breadth28.demaStep(st, b.close_cents)
+      (a, Some(DemaScored(user, b.day, b.close_cents, (2.0 * a.e1 - a.e2) / 100.0)))
+    }
 
   /** Streaming twin of the batch q_ppo recurrence: one PpoAcc per key
-    * (the MACD EMA pair), the SAME step function (append mode). */
-  def streamingPpo(ds: Dataset[BarRow]): Dataset[PpoScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new PpoProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+    * (the MACD EMA pair), the SAME step function and zero-EMA null
+    * (append mode). */
+  def streamingPpo(ds: Dataset[BarRow]): Dataset[PpoScored] =
+    barFold(ds, "ppo", Encoders.product[Breadth28.PpoAcc]) { (user, st, b) =>
+      val a = Breadth28.ppoStep(st, b.close_cents)
+      (a, Some(PpoScored(user, b.day, b.close_cents,
+        if (a.e26 != 0.0) Some(100.0 * (a.e12 - a.e26) / a.e26) else None)))
+    }
 
   /** Streaming twin of the batch q_kalman recurrence: one KalmanAcc
     * per key (posterior mean/variance/gain), the SAME step function
     * (append mode — one row per bar). */
-  def streamingKalman(ds: Dataset[BarRow]): Dataset[KalmanScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new KalmanProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingKalman(ds: Dataset[BarRow]): Dataset[KalmanScored] =
+    barFold(ds, "kalman", Encoders.product[Breadth118.KalmanAcc]) { (user, st, b) =>
+      val a = Breadth118.kalmanStep(st, b.close_cents)
+      (a, Some(KalmanScored(user, b.day, b.close_cents, a.x / 100.0, a.k)))
+    }
 
   /** Streaming twin of the batch q_page_hinkley drift detector: one
     * PhAcc per key, the SAME step function (append mode). */
-  def streamingPageHinkley(ds: Dataset[BarRow]): Dataset[PhScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new PageHinkleyProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingPageHinkley(ds: Dataset[BarRow]): Dataset[PhScored] =
+    barFold(ds, "pagehinkley", Encoders.product[Breadth130.PhAcc]) { (user, st, b) =>
+      val a = Breadth130.phStep(st, b.close_cents)
+      (a, Some(PhScored(user, b.day, b.close_cents, a.m, a.m - a.minM, a.alarmed)))
+    }
 
   /** Streaming twin of the batch q_clamped_balance recurrence: one
     * ClampAcc per key (prev close + clamped balance), the SAME step
     * function (append mode). */
-  def streamingClampedBalance(ds: Dataset[BarRow]): Dataset[ClampScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new ClampProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingClampedBalance(ds: Dataset[BarRow]): Dataset[ClampScored] =
+    barFold(ds, "clamp", Encoders.product[Breadth123.ClampAcc]) { (user, st, b) =>
+      val a = Breadth123.clampStep(st, b.close_cents)
+      (a, Some(ClampScored(user, b.day, b.close_cents, a.bal)))
+    }
 
   /** Streaming twin of the batch q_sprt decision: the SAME
     * Breadth147.sprtStep folded on O(1) keyed state per stream
     * (append mode — one verdict row per observation; cross-batch late
-    * rows drop and count, the funnel-twin convention). */
-  def streamingSprt(ds: Dataset[SprtEvent]): Dataset[SprtScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.stream)
-      .transformWithState(new SprtProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+    * rows drop and count, the funnel-twin convention: the decision
+    * index is order-sensitive). */
+  def streamingSprt(ds: Dataset[SprtEvent]): Dataset[SprtScored] =
+    keyedFold(ds)(_.stream, OutputMode.Append(), "sprt",
+        Encoders.product[SprtState], _.sortBy(e => (e.ts.getTime, e.event_id))) {
+      (stream, st, e) =>
+        val s = st.getOrElse(SprtState(0L, 0L, decided = false, -1L, 0L,
+          Long.MinValue, 0L))
+        val t = e.ts.getTime
+        if (t < s.maxTs) (s.copy(nLate = s.nLate + 1), None)
+        else {
+          val prev =
+            if (s.k == 0) None
+            else Some(Breadth147.SprtAcc(s.k, s.llr, s.decided, s.kd, s.llrd))
+          val acc = Breadth147.sprtStep(prev, e.x)
+          val decision =
+            if (!acc.decided) "continue"
+            else if (acc.llrd >= Breadth147.BoundQ) "accept_h1"
+            else "accept_h0"
+          (SprtState(acc.k, acc.llr, acc.decided, acc.kd, acc.llrd,
+            math.max(s.maxTs, t), s.nLate),
+            Some(SprtScored(stream, acc.k, e.x, acc.llr, decision, s.nLate)))
+        }
+    }
 
   /** Live AMS F₂ sketch, keyed by source (update mode): one 5-sum
     * integer sketch per source whose ELEMENT-WISE SUM across keys
     * equals the batch global sketch (Breadth146.amsSketches) — the
     * mergeability that makes the sketch the warehouse-scale path.
     * Token order is irrelevant (integer sums commute), so no late-row
-    * guard is needed. */
-  def streamingAmsSketch(ds: Dataset[AmsDoc]): Dataset[AmsSnap] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.source)
-      .transformWithState(new AmsProcessor, TimeMode.None(),
-        OutputMode.Update())
-  }
+    * guard is needed and documents fold in arrival order. JVM md5 sign
+    * twin, spec-pinned equal to the SQL sign. */
+  def streamingAmsSketch(ds: Dataset[AmsDoc]): Dataset[AmsSnap] =
+    keyedFold(ds)(_.source, OutputMode.Update(), "ams",
+        Encoders.product[(Long, Seq[Long])], identity)(
+      (_, st, d) => {
+        val k = Breadth146.AmsK
+        var (n, sums) = st.getOrElse((0L, Seq.fill(k)(0L)))
+        val acc = sums.toArray
+        Breadth146.tokensJvm(d.text).foreach { tok =>
+          n += 1
+          var j = 0
+          while (j < k) {
+            acc(j) += Breadth146.amsSignJvm(tok, j)
+            j += 1
+          }
+        }
+        ((n, acc.toSeq), Nil)
+      },
+      (source, _, a) => Some(AmsSnap(source, a._1, a._2)))
 
   /** Streaming twin of the batch q_sequence_match regex: the pattern
     * `s[^e]*p` ("a signup converts with no error between") compiled to
@@ -1392,12 +1581,26 @@ object Streams {
     * verdict on the same prefix. Cross-batch late rows (event time
     * below an earlier batch's fold horizon) are dropped and counted in
     * `n_late` — loud, never a silent divergence. */
-  def streamingSequenceMatch(ds: Dataset[SeqEvent]): Dataset[SeqMatchScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new SeqMatchProcessor, TimeMode.None(),
-        OutputMode.Update())
-  }
+  def streamingSequenceMatch(ds: Dataset[SeqEvent]): Dataset[SeqMatchScored] =
+    keyedFold(ds)(_.user_id, OutputMode.Update(), "seqmatch",
+        Encoders.product[(Boolean, Boolean, Long, Long, Long)], bySeqTime)(
+      (_, st, e) => {
+        // state: (active signup, matched, events, fold horizon, late rows)
+        val (active, matched, n, maxTs, nLate) =
+          st.getOrElse((false, false, 0L, Long.MinValue, 0L))
+        val t = seqMicros(e.ts)
+        if (t < maxTs) ((active, matched, n, maxTs, nLate + 1), Nil)
+        else {
+          val (a2, m2) = e.initial match {
+            case "s" => (true, matched)
+            case "e" => (false, matched)
+            case "p" => (active, matched || active)
+            case _ => (active, matched)
+          }
+          ((a2, m2, n + 1, math.max(maxTs, t), nLate), Nil)
+        }
+      },
+      (user, _, s) => Some(SeqMatchScored(user, s._3, s._2, s._5)))
 
   /** Streaming twin of the batch q_window_funnel: per key, the live
     * view→click→purchase level under the 48 h deadline, on BOUNDED
@@ -1410,41 +1613,100 @@ object Streams {
     * cross-batch late rows (event time below an earlier batch's fold
     * horizon — the pruned state could pair them differently than the
     * batch greedy) are dropped and counted in `n_late`, never folded
-    * silently. */
+    * silently.
+    *
+    * Event semantics mirror the batch greedy exactly: a view opens a
+    * pending anchor; the EARLIEST later click pairs every pending view
+    * (those within deadline join the frontier, the rest die — any later
+    * click is later still); a purchase strictly after some frontier
+    * click and within its anchor's deadline completes level 3
+    * (absorbing). */
   def streamingWindowFunnel(ds: Dataset[SeqEvent],
                             windowUs: Long = graft.queries.Breadth120
-                              .FunnelWindowUs): Dataset[FunnelScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new FunnelProcessor(windowUs), TimeMode.None(),
-        OutputMode.Update())
-  }
+                              .FunnelWindowUs): Dataset[FunnelScored] =
+    keyedFold(ds)(_.user_id, OutputMode.Update(), "funnel",
+        Encoders.product[FunnelState], bySeqTime)(
+      (_, st, e) => {
+        var s = st.getOrElse(FunnelState(0, Seq.empty, Seq.empty, Long.MinValue, 0L))
+        val t = seqMicros(e.ts)
+        if (t < s.maxTs) s = s.copy(nLate = s.nLate + 1)
+        else if (s.level < 3) {
+          e.initial match {
+            case "v" =>
+              s = s.copy(level = math.max(s.level, 1),
+                pendingViews = s.pendingViews :+ t, maxTs = t)
+            case "c" =>
+              val (alive, _) = s.pendingViews.filter(_ < t)
+                .partition(v => t <= v + windowUs)
+              val kept = s.pendingViews.filterNot(_ < t)
+              val newFrontier = s.frontier ++ alive.map(v => (t, v + windowUs))
+              s = s.copy(
+                level = if (alive.nonEmpty) math.max(s.level, 2) else s.level,
+                pendingViews = kept,
+                frontier = newFrontier.filter(_._2 >= t), maxTs = t)
+            case "p" =>
+              if (s.frontier.exists(f => t > f._1 && t <= f._2))
+                s = s.copy(level = 3, pendingViews = Seq.empty,
+                  frontier = Seq.empty, maxTs = t)
+              else s = s.copy(maxTs = t)
+            case _ => s = s.copy(maxTs = t)
+          }
+          // prune anchors no in-order future purchase can complete and
+          // pending views no in-order future click can pair in-window
+          if (s.level < 3)
+            s = s.copy(frontier = s.frontier.filter(_._2 >= s.maxTs),
+              pendingViews = s.pendingViews.filter(_ + windowUs >= s.maxTs))
+        }
+        (s, Nil)
+      },
+      (user, _, s) => Some(FunnelScored(user, s.level, s.nLate)))
 
   /** Streaming twin of the batch q_vpin volume buckets: O(1) keyed
     * state (last close, cumulative volume, the open bucket's running
     * imbalance); a completed bucket is emitted the moment a tick opens
-    * a higher bucket — the same bucket boundaries and tick-rule signs
-    * as the batch construction, so emitted buckets are bit-equal to
-    * the batch per-bar rows (the key's open bucket stays unemitted,
-    * exactly the rows a live screen cannot know yet). */
+    * a higher bucket — the same bucket boundaries (bucket id = pre-tick
+    * cumulative div barVol) and tick-rule signs as the batch
+    * construction, so emitted buckets are bit-equal to the batch
+    * per-bar rows (the key's open bucket stays unemitted, exactly the
+    * rows a live screen cannot know yet). */
   def streamingVpinBuckets(ds: Dataset[TickRow],
-                           barVol: Long): Dataset[VpinBucket] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new VpinProcessor(barVol), TimeMode.None(),
-        OutputMode.Append())
-  }
+                           barVol: Long): Dataset[VpinBucket] =
+    keyedFold(ds)(_.user_id, OutputMode.Append(), "vpin",
+        Encoders.product[VpinState], _.sortBy(_.seq)) { (user, st, t) =>
+      var s = st.getOrElse(VpinState(None, 0L, 0L, 0L, 0L))
+      val bar = s.cum / barVol // pre-tick cumulative → this tick's bucket
+      val done =
+        if (bar > s.barId) {
+          val b = VpinBucket(user, s.barId, math.abs(s.imb), s.vol)
+          s = s.copy(barId = bar, imb = 0L, vol = 0L)
+          Some(b)
+        } else None
+      val sv = s.prevClose match {
+        case Some(p) if t.cents > p => t.vol
+        case Some(p) if t.cents < p => -t.vol
+        case _ => 0L
+      }
+      (VpinState(Some(t.cents), s.cum + t.vol, s.barId, s.imb + sv,
+        s.vol + t.vol), done)
+    }
 
   /** Streaming twin of the batch q_three_bar_patterns: a ≤2-bar
     * (open, close) ring per key, each arriving bar scored by the SAME
-    * pure flag function (`Breadth52.threeBarFlags`), parity-pinned
-    * against the batch lag-window form across micro-batch splits. */
-  def streamingThreeBar(ds: Dataset[OcBarRow]): Dataset[ThreeBarScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new ThreeBarProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+    * pure flag function (`Breadth52.threeBarFlags`; false until three
+    * bars exist, the batch null→false stance), parity-pinned against
+    * the batch lag-window form across micro-batch splits. */
+  def streamingThreeBar(ds: Dataset[OcBarRow]): Dataset[ThreeBarScored] =
+    barFold(ds, "ring", Encoders.product[ThreeBarRing]) { (user, st, b) =>
+      val prev = st.fold(Seq.empty[OcPair])(_.prev)
+      val (tws, tbc, ms) = prev match {
+        case Seq(p2, p1) =>
+          Breadth52.threeBarFlags(p2.o, p2.c, p1.o, p1.c,
+            b.open_cents, b.close_cents)
+        case _ => (false, false, false)
+      }
+      (ThreeBarRing((prev :+ OcPair(b.open_cents, b.close_cents)).takeRight(2)),
+        Some(ThreeBarScored(user, b.day, tws, tbc, ms)))
+    }
 
   /** Streaming twin of the batch count-min build (q_count_min /
     * q_cms_width_curve): each arriving key fans out to its d (row,
@@ -1456,87 +1718,101 @@ object Streams {
     * cardinality — the whole point of sketching a 100 TB stream. */
   def streamingCmsCells(keys: Dataset[Long], w: Int): Dataset[CmsCellState] = {
     import keys.sparkSession.implicits._
-    keys.flatMap { k =>
-      graft.queries.Breadth44.CmsHashes.zipWithIndex.map { case ((a, b), i) =>
-        CmsIncrement(i,
-          ((a * k + b) % graft.queries.Breadth44.CmsP) % w, 1L)
+    val incs = keys.flatMap { k =>
+      Breadth44.CmsHashes.zipWithIndex.map { case ((a, b), i) =>
+        CmsIncrement(i, ((a * k + b) % Breadth44.CmsP) % w, 1L)
       }
     }
-      .groupByKey(c => (c.row, c.bucket))
-      .transformWithState(new CmsCellProcessor, TimeMode.None(),
-        OutputMode.Append())
+    keyedFold(incs)(c => (c.row, c.bucket), OutputMode.Append(), "cms",
+        Encoders.scalaLong, identity)(
+      (_, st, c) => (st.getOrElse(0L) + c.inc, Nil),
+      (cell, _, tot) => Some(CmsCellState(cell._1, cell._2, tot)))
   }
 
   /** Streaming twin of the batch q_holt recurrence: one (level, trend)
     * pair per key, the SAME step function as the batch fold (append
-    * mode — one row per bar). */
-  def streamingHolt(ds: Dataset[BarRow]): Dataset[HoltScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new HoltProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+    * mode — one row per bar); the step's forecast error reads the
+    * PREVIOUS state, so it rides the state row. */
+  def streamingHolt(ds: Dataset[BarRow]): Dataset[HoltScored] =
+    barFold(ds, "holt", Encoders.product[HoltFold]) { (user, st, b) =>
+      val (acc, row) = Breadth45.holtStep(
+        st.map(s => Breadth45.HoltAcc(s.l, s.t)), b.close_cents.toDouble)
+      (HoltFold(acc.l, acc.t, row.fcErr), Some(HoltScored(user, b.day,
+        b.close_cents, acc.l / 100.0, acc.t / 100.0, (acc.l + acc.t) / 100.0,
+        row.fcErr.map(_ / 100.0))))
+    }
 
   /** Streaming twin of the batch q_elder_ray: one EMA-13 double per key,
     * bull/bear power computed at emit from the bar's high/low with the
     * batch form's exact expressions (append mode). */
-  def streamingElderRay(ds: Dataset[OhlcBarRow]): Dataset[ElderScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new ElderRayProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingElderRay(ds: Dataset[OhlcBarRow]): Dataset[ElderScored] =
+    barFold(ds, "elder", Encoders.scalaDouble) { (user, st, b) =>
+      val e = st.fold(b.close_cents.toDouble)(p =>
+        Breadth28.ElderA * b.close_cents + (1.0 - Breadth28.ElderA) * p)
+      (e, Some(ElderScored(user, b.day, b.close_cents, e / 100.0,
+        (b.high_cents - e) / 100.0, (b.low_cents - e) / 100.0)))
+    }
 
   /** Streaming twin of the batch q_wma weighted MA — the WINDOW-family
     * twin (an O(w) close ring per key rather than a scalar recurrence):
-    * the same integer lag-sum numerator as the batch form, emitted once
-    * the ring fills (append mode). */
-  def streamingWma(ds: Dataset[BarRow]): Dataset[WmaScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new WmaProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+    * the same integer lag-sum numerator as the batch form (weight w on
+    * the newest close), emitted once the ring fills (append mode). */
+  def streamingWma(ds: Dataset[BarRow]): Dataset[WmaScored] =
+    barFold(ds, "wma", Encoders.product[WmaRing]) { (user, st, b) =>
+      val w = Breadth31.WmaN
+      val closes = (st.fold(Seq.empty[Long])(_.closes) :+ b.close_cents).takeRight(w)
+      val wma =
+        if (closes.length < w) None
+        else {
+          val num = closes.zipWithIndex.map { case (c, k) => (k + 1) * c }.sum
+          Some(num.toDouble / (w * (w + 1) / 2).toDouble / 100.0)
+        }
+      (WmaRing(closes), Some(WmaScored(user, b.day, b.close_cents, wma)))
+    }
 
   /** Streaming twin of the batch q_streak integer recurrence (append
     * mode, O(1) state). */
-  def streamingStreak(ds: Dataset[BarRow]): Dataset[StreakScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new StreakProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingStreak(ds: Dataset[BarRow]): Dataset[StreakScored] =
+    barFold(ds, "streak", Encoders.product[StreakAcc]) { (user, st, b) =>
+      val a = StreakAcc(b.close_cents, st.fold(0L)(p =>
+        Breadth33.streakStep(p.streak, b.close_cents, p.pc)))
+      (a, Some(StreakScored(user, b.day, b.close_cents, a.streak)))
+    }
 
   /** Streaming twin of the batch q_connors_rsi composite: the SAME
     * `crsiStep` (three recurrences + the 100-return ring) on keyed
     * state — the composite-accumulator demonstration that a flagship
-    * multi-component screen streams with O(100) state per key. */
-  def streamingConnorsRsi(ds: Dataset[BarRow]): Dataset[CrsiScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new ConnorsRsiProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+    * multi-component screen streams with O(100) state per key. The
+    * state carries the 0-based bar count the warm-up gates read. */
+  def streamingConnorsRsi(ds: Dataset[BarRow]): Dataset[CrsiScored] =
+    barFold(ds, "crsi", Encoders.product[CrsiState]) { (user, st, b) =>
+      val n = st.map(_.n + 1L).getOrElse(0L)
+      val a = Breadth34.crsiStep(st.map(_.acc), b.close_cents, n.toInt)
+      (CrsiState(n, a), Some(CrsiScored(user, b.day, b.close_cents, a.streak,
+        a.rsi3, a.rsi2, a.pr,
+        (a.rsi3, a.rsi2, a.pr) match {
+          case (Some(x), Some(y), Some(z)) => Some((x + y + z) / 3.0)
+          case _ => None
+        })))
+    }
 
   /** Streaming twin of the batch q_elder_impulse classification — the
     * SAME `impulseStep` (EMA-13 + MACD joint direction), append mode,
-    * O(1) state. */
-  def streamingElderImpulse(ds: Dataset[BarRow]): Dataset[ImpulseScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new ElderImpulseProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+    * O(1) state; the per-bar class rides in the state row. */
+  def streamingElderImpulse(ds: Dataset[BarRow]): Dataset[ImpulseScored] =
+    barFold(ds, "impulse", Encoders.product[ImpulseState]) { (user, st, b) =>
+      val (a, cls) = Breadth35.impulseStep(st.map(_.acc), b.close_cents)
+      (ImpulseState(a, cls), Some(ImpulseScored(user, b.day, b.close_cents, cls)))
+    }
 
   /** Streaming twin of the batch q_psar stop-and-reverse: one PsarAcc
     * per key (regime, SAR, EP, AF, the 2-bar clamp ring), the SAME
     * step function as the batch fold (append mode). */
-  def streamingPsar(ds: Dataset[OhlcBarRow]): Dataset[PsarScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new PsarProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingPsar(ds: Dataset[OhlcBarRow]): Dataset[PsarScored] =
+    barFold(ds, "psar", Encoders.product[Breadth30.PsarAcc]) { (user, st, b) =>
+      val a = Breadth30.psarStep(st, b.high_cents, b.low_cents)
+      (a, Some(PsarScored(user, b.day, b.close_cents, a.sar / 100.0, a.up)))
+    }
 
   /** Streaming twin of the batch q_variance_ratio aggregate: the
     * incremental `Breadth85.vrStep` fold — O(q) move ring + six exact
@@ -1544,22 +1820,23 @@ object Streams {
     * LAST emit per key equals the batch per-key row bit-for-bit
     * (append mode; StreamingVrSpec pins the parity across micro-batch
     * splits). */
-  def streamingVarianceRatio(ds: Dataset[BarRow]): Dataset[VrScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new VrProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def streamingVarianceRatio(ds: Dataset[BarRow]): Dataset[VrScored] =
+    barFold(ds, "vr", Encoders.product[Breadth85.VrAcc]) { (user, st, b) =>
+      val a = Breadth85.vrStep(st, b.close_cents)
+      (a, Some(VrScored(user, b.day, b.close_cents, a.n1, a.n2, Breadth85.vrOf(a))))
+    }
 
   /** Streaming twin of the batch q_heikin_ashi smoothed candles: one
     * HaAcc per key over the open-carrying day-bar stream, the SAME step
-    * function as the batch fold (append mode — one row per bar). */
-  def streamingHeikinAshi(ds: Dataset[Ohlc4BarRow]): Dataset[HaScored] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new HaProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+    * and emit expressions as the batch fold (append mode — one row per
+    * bar). */
+  def streamingHeikinAshi(ds: Dataset[Ohlc4BarRow]): Dataset[HaScored] =
+    barFold(ds, "heikin", Encoders.product[Breadth24.HaAcc]) { (user, st, b) =>
+      val a = Breadth24.haStep(st, b.open_cents, b.high_cents, b.low_cents,
+        b.close_cents)
+      val r = Breadth24.haOut(a, b.high_cents, b.low_cents)
+      (a, Some(HaScored(user, b.day, r.ha_open, r.ha_high, r.ha_low, r.ha_close)))
+    }
 
   /** One keyed step of the Sharpe fold (integer moments only). */
   private[graft] def sharpeStep(st: Option[SharpeAcc], closeCents: Long): SharpeAcc =
@@ -1844,1372 +2121,39 @@ object Streams {
       .start()
 }
 
-/** Keyed processor behind [[Streams.keyedStateLatest]]: ONE ValueState
-  * row per key (bounded by |keys|, not history), updated via the shared
-  * `latestStep` tie discipline. Stateless construction — everything
-  * stateful is acquired from the handle in init, so the instance is
-  * safely serialized to executors and re-initialized per partition. */
-class LatestStateProcessor
-    extends StatefulProcessor[Long, EventRow, (Long, Long, Double)] {
-  @transient private var latest: ValueState[LatestState] = _
+/** The one keyed-state fold behind every `transformWithState` twin in
+  * [[Streams]]. Per micro-batch and key it reads the key's state (None
+  * on first sight), puts the batch's rows in the twin's in-batch
+  * `order`, folds each row through `step` (which may emit rows), emits
+  * once from the start and end state (`emit`), and writes the state
+  * once. ONE ValueState row per key, bounded by |keys|, never history.
+  * Constructor args serialize with the instance; the state handle is
+  * acquired in init, so executors re-initialize safely per partition. */
+final class KeyedFold[K, I, S, O](stateName: String, enc: Encoder[S],
+    order: Seq[I] => Seq[I],
+    step: (K, Option[S], I) => (S, IterableOnce[O]),
+    emit: (K, Option[S], S) => IterableOnce[O])
+    extends StatefulProcessor[K, I, O] {
+  @transient private var state: ValueState[S] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    latest = getHandle.getValueState[LatestState]("latest",
-      org.apache.spark.sql.Encoders.product[LatestState], TTLConfig.NONE)
+    state = getHandle.getValueState[S](stateName, enc, TTLConfig.NONE)
 
-  override def handleInputRows(user: Long, events: Iterator[EventRow],
-                               timerValues: TimerValues): Iterator[(Long, Long, Double)] = {
-    val current = if (latest.exists()) Some(latest.get()) else None
-    Streams.latestStep(events, current) match {
-      case Some(cand) =>
-        latest.update(cand)
-        Iterator((user, cand.eventId, cand.value))
-      case None => Iterator.empty
-    }
-  }
-}
-
-/** The schema-generic latest-per-key processor: full-row keyed state,
-  * full-row deltas (see [[Streams.keyedStateLatestRows]]). */
-class LatestRowStateProcessor
-    extends StatefulProcessor[Long, EventRow, EventRow] {
-  @transient private var latest: ValueState[LatestRowState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    latest = getHandle.getValueState[LatestRowState]("latest_row",
-      org.apache.spark.sql.Encoders.product[LatestRowState], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, events: Iterator[EventRow],
-                               timerValues: TimerValues): Iterator[EventRow] = {
-    val current = if (latest.exists()) Some(latest.get()) else None
-    Streams.latestRowStep(events, current) match {
-      case Some(cand) =>
-        latest.update(cand)
-        Iterator(cand.row)
-      case None => Iterator.empty
-    }
-  }
-}
-
-/** Scaffolding shared by the update-mode fold twins (drawdown, tick
-  * health, best trade, realized vol): ONE scalar accumulator per key in
-  * the state store (|keys|-bounded, never history), micro-batch rows
-  * folded in (ts, event_id) order — the batch window's total order —
-  * and one refreshed snapshot emitted per touched key per micro-batch.
-  * A new twin is a `step` + `snap` pair (~8 lines). Constructor args
-  * (state name, encoder) serialize with the instance; everything
-  * stateful is acquired from the handle in init, so executors
-  * re-initialize safely per partition. */
-abstract class SnapshotFoldProcessor[A, O](stateName: String,
-    enc: org.apache.spark.sql.Encoder[A])
-    extends StatefulProcessor[Long, EventRow, O] {
-  @transient private var acc: ValueState[A] = _
-
-  protected def step(st: Option[A], e: EventRow): A
-  protected def snap(user: Long, a: A): O
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    acc = getHandle.getValueState[A](stateName, enc, TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, events: Iterator[EventRow],
+  override def handleInputRows(key: K, rows: Iterator[I],
                                timerValues: TimerValues): Iterator[O] = {
-    var st = if (acc.exists()) Some(acc.get()) else None
-    val sorted = events.toSeq.sortBy(e => (Streams.eventMicros(e.ts), e.event_id))
-    if (sorted.isEmpty) Iterator.empty
-    else {
-      sorted.foreach { e => st = Some(step(st, e)) }
-      val a = st.get
-      acc.update(a)
-      Iterator(snap(user, a))
-    }
-  }
-}
-
-/** Scaffolding shared by the append-mode screen twins (z-score,
-  * Bollinger): a BOUNDED buffer per key (the batch form's ROWS frame
-  * held verbatim), every input row scored against it in (ts, event_id)
-  * order — zero-or-more output rows per input row. */
-abstract class ScoredFoldProcessor[B, O](stateName: String,
-    enc: org.apache.spark.sql.Encoder[B])
-    extends StatefulProcessor[Long, EventRow, O] {
-  @transient private var buf: ValueState[B] = _
-
-  protected def empty: B
-  protected def step(buf: B, e: EventRow): (B, Option[O])
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    buf = getHandle.getValueState[B](stateName, enc, TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, events: Iterator[EventRow],
-                               timerValues: TimerValues): Iterator[O] = {
-    var b = if (buf.exists()) buf.get() else empty
+    val start = if (state.exists()) Some(state.get()) else None
+    var st = start
     val out = Seq.newBuilder[O]
-    events.toSeq.sortBy(e => (Streams.eventMicros(e.ts), e.event_id)).foreach { e =>
-      val (next, scored) = step(b, e)
-      b = next
-      scored.foreach(out += _)
-    }
-    buf.update(b)
-    out.result().iterator
-  }
-}
-
-/** Scaffolding shared by the day-bar recurrence twins (EMA/MACD, Wilder
-  * RSI): a scalar recurrence accumulator per key, bars folded in day
-  * order, one scored row per bar. */
-abstract class BarFoldProcessor[A, O](stateName: String,
-    enc: org.apache.spark.sql.Encoder[A])
-    extends StatefulProcessor[Long, BarRow, O] {
-  @transient private var acc: ValueState[A] = _
-
-  protected def step(st: Option[A], closeCents: Long): A
-  protected def score(user: Long, b: BarRow, a: A): O
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    acc = getHandle.getValueState[A](stateName, enc, TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, bars: Iterator[BarRow],
-                               timerValues: TimerValues): Iterator[O] = {
-    var st = if (acc.exists()) Some(acc.get()) else None
-    val out = Seq.newBuilder[O]
-    bars.toSeq.sortBy(_.day.toEpochDay).foreach { b =>
-      val a = step(st, b.close_cents)
-      st = Some(a)
-      out += score(user, b, a)
-    }
-    st.foreach(acc.update)
-    out.result().iterator
-  }
-}
-
-/** BarFoldProcessor's OHLC sibling: the same scalar-accumulator-per-key
-  * shape over full [[OhlcBarRow]] bars (for recurrences that read
-  * high/low, not just close). */
-abstract class OhlcBarFoldProcessor[A, O](stateName: String,
-    enc: org.apache.spark.sql.Encoder[A])
-    extends StatefulProcessor[Long, OhlcBarRow, O] {
-  @transient private var acc: ValueState[A] = _
-
-  protected def step(st: Option[A], b: OhlcBarRow): A
-  protected def score(user: Long, b: OhlcBarRow, a: A): O
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    acc = getHandle.getValueState[A](stateName, enc, TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, bars: Iterator[OhlcBarRow],
-                               timerValues: TimerValues): Iterator[O] = {
-    var st = if (acc.exists()) Some(acc.get()) else None
-    val out = Seq.newBuilder[O]
-    bars.toSeq.sortBy(_.day.toEpochDay).foreach { b =>
-      val a = step(st, b)
-      st = Some(a)
-      out += score(user, b, a)
-    }
-    st.foreach(acc.update)
-    out.result().iterator
-  }
-}
-
-/** BarFoldProcessor's volume-carrying sibling: the same
-  * scalar-accumulator-per-key shape over [[VolBarRow]] bars (for
-  * recurrences that read the bar's traded volume). */
-abstract class VolBarFoldProcessor[A, O](stateName: String,
-    enc: org.apache.spark.sql.Encoder[A])
-    extends StatefulProcessor[Long, VolBarRow, O] {
-  @transient private var acc: ValueState[A] = _
-
-  protected def step(st: Option[A], b: VolBarRow): A
-  protected def score(user: Long, b: VolBarRow, a: A): O
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    acc = getHandle.getValueState[A](stateName, enc, TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, bars: Iterator[VolBarRow],
-                               timerValues: TimerValues): Iterator[O] = {
-    var st = if (acc.exists()) Some(acc.get()) else None
-    val out = Seq.newBuilder[O]
-    bars.toSeq.sortBy(_.day.toEpochDay).foreach { b =>
-      val a = step(st, b)
-      st = Some(a)
-      out += score(user, b, a)
-    }
-    st.foreach(acc.update)
-    out.result().iterator
-  }
-}
-
-/** Keyed processor behind [[Streams.streamingForceIndex]] — the batch
-  * step verbatim (graft.queries.Breadth27.fiStep). */
-class FiProcessor
-    extends VolBarFoldProcessor[graft.queries.Breadth27.FiAcc, FiScored](
-      "force_index",
-      org.apache.spark.sql.Encoders.product[graft.queries.Breadth27.FiAcc]) {
-  protected def step(st: Option[graft.queries.Breadth27.FiAcc],
-                     b: VolBarRow): graft.queries.Breadth27.FiAcc =
-    graft.queries.Breadth27.fiStep(st, b.close_cents, b.vol)
-  protected def score(user: Long, b: VolBarRow,
-                      a: graft.queries.Breadth27.FiAcc): FiScored =
-    FiScored(user, b.day, b.close_cents, a.fi, a.ema)
-}
-
-/** Keyed processor behind [[Streams.streamingChaikinOsc]] — the batch
-  * money-flow quantum and fold step verbatim (graft.queries.Breadth27
-  * .mfvQuantum / .adlStep). */
-class AdlOscProcessor
-    extends VolBarFoldProcessor[graft.queries.Breadth27.AdlAcc, AdlScored](
-      "adl_osc",
-      org.apache.spark.sql.Encoders.product[graft.queries.Breadth27.AdlAcc]) {
-  protected def step(st: Option[graft.queries.Breadth27.AdlAcc],
-                     b: VolBarRow): graft.queries.Breadth27.AdlAcc =
-    graft.queries.Breadth27.adlStep(st,
-      graft.queries.Breadth27.mfvQuantum(b.high_cents, b.low_cents,
-        b.close_cents, b.vol))
-  protected def score(user: Long, b: VolBarRow,
-                      a: graft.queries.Breadth27.AdlAcc): AdlScored =
-    AdlScored(user, b.day, a.adlQ, a.adlQ.toDouble / 1.0e6,
-      (a.e3 - a.e10) / 1.0e6)
-}
-
-/** Keyed processor behind [[Streams.streamingNviPvi]] — the batch step
-  * verbatim (graft.queries.Breadth28.nviStep). */
-class NviPviProcessor
-    extends VolBarFoldProcessor[graft.queries.Breadth28.NviAcc, NviScored](
-      "nvi_pvi",
-      org.apache.spark.sql.Encoders.product[graft.queries.Breadth28.NviAcc]) {
-  protected def step(st: Option[graft.queries.Breadth28.NviAcc],
-                     b: VolBarRow): graft.queries.Breadth28.NviAcc =
-    graft.queries.Breadth28.nviStep(st, b.close_cents, b.vol)
-  protected def score(user: Long, b: VolBarRow,
-                      a: graft.queries.Breadth28.NviAcc): NviScored =
-    NviScored(user, b.day, b.close_cents, a.nvi, a.pvi)
-}
-
-/** Keyed processor behind [[Streams.streamingTrix]] — the batch step
-  * verbatim (graft.queries.Breadth28.trixStep / trixOut). Implemented
-  * directly (not via BarFoldProcessor) because the emitted
-  * rate-of-change needs the PRE-step state to distinguish the seed
-  * bar. */
-class TrixProcessor
-    extends StatefulProcessor[Long, BarRow, TrixScored28] {
-  @transient private var acc: ValueState[graft.queries.Breadth28.TrixAcc] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    acc = getHandle.getValueState[graft.queries.Breadth28.TrixAcc]("trix",
-      org.apache.spark.sql.Encoders.product[graft.queries.Breadth28.TrixAcc],
-      TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, bars: Iterator[BarRow],
-                               timerValues: TimerValues)
-      : Iterator[TrixScored28] = {
-    var st = if (acc.exists()) Some(acc.get()) else None
-    val out = Seq.newBuilder[TrixScored28]
-    bars.toSeq.sortBy(_.day.toEpochDay).foreach { b =>
-      val a = graft.queries.Breadth28.trixStep(st, b.close_cents)
-      out += TrixScored28(user, b.day, b.close_cents, a.e3,
-        graft.queries.Breadth28.trixOut(st, a))
-      st = Some(a)
-    }
-    st.foreach(acc.update)
-    out.result().iterator
-  }
-}
-
-/** Keyed processor behind [[Streams.streamingKama]] — the batch step
-  * verbatim (graft.queries.Breadth28.kamaStep; the acc's Option field
-  * already encodes the warm-up, so the plain bar scaffold fits). */
-class KamaProcessor
-    extends BarFoldProcessor[graft.queries.Breadth28.KamaAcc, KamaScored](
-      "kama",
-      org.apache.spark.sql.Encoders.product[graft.queries.Breadth28.KamaAcc]) {
-  protected def step(st: Option[graft.queries.Breadth28.KamaAcc],
-                     closeCents: Long): graft.queries.Breadth28.KamaAcc =
-    graft.queries.Breadth28.kamaStep(st, closeCents)
-  protected def score(user: Long, b: BarRow,
-                      a: graft.queries.Breadth28.KamaAcc): KamaScored =
-    KamaScored(user, b.day, b.close_cents, a.kama.map(_ / 100.0))
-}
-
-/** Keyed processor behind [[Streams.streamingMassIndex]] — the batch
-  * `Breadth28.massRatioStep` on O(w) keyed state (EMA pair + ratio
-  * ring); a row is emitted only when the ring holds MassW quanta, the
-  * batch's full-windows-only contract. */
-class MassIndexProcessor
-    extends OhlcBarFoldEmitProcessor[MassAcc28, MassScored](
-      "massindex",
-      org.apache.spark.sql.Encoders.product[MassAcc28]) {
-  private val w = graft.queries.Breadth28.MassW
-  protected def step(st: Option[MassAcc28], b: OhlcBarRow): MassAcc28 = {
-    val (pair, q) = graft.queries.Breadth28.massRatioStep(
-      st.map(a => (a.e1, a.e2)), b.high_cents, b.low_cents)
-    MassAcc28(pair._1, pair._2,
-      ((st.map(_.ring).getOrElse(Seq.empty)) :+ q).takeRight(w))
-  }
-  protected def score(user: Long, b: OhlcBarRow,
-                      a: MassAcc28): Option[MassScored] =
-    if (a.ring.size < w) None
-    else {
-      val s = a.ring.sum
-      Some(MassScored(user, b.day, b.close_cents, s, s.toDouble / 1.0e8))
-    }
-}
-
-/** [[OhlcBarFoldProcessor]] with OPTIONAL emission (warm-up bars emit
-  * nothing — the batch full-window contract of the mass index). */
-abstract class OhlcBarFoldEmitProcessor[A, O](stateName: String,
-    enc: org.apache.spark.sql.Encoder[A])
-    extends StatefulProcessor[Long, OhlcBarRow, O] {
-  @transient private var acc: ValueState[A] = _
-
-  protected def step(st: Option[A], b: OhlcBarRow): A
-  protected def score(user: Long, b: OhlcBarRow, a: A): Option[O]
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    acc = getHandle.getValueState[A](stateName, enc, TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, bars: Iterator[OhlcBarRow],
-                               timerValues: TimerValues): Iterator[O] = {
-    var st = if (acc.exists()) Some(acc.get()) else None
-    val out = Seq.newBuilder[O]
-    bars.toSeq.sortBy(_.day.toEpochDay).foreach { b =>
-      val a = step(st, b)
-      st = Some(a)
-      score(user, b, a).foreach(out += _)
-    }
-    st.foreach(acc.update)
-    out.result().iterator
-  }
-}
-
-/** Keyed processor behind [[Streams.streamingDema]] — the batch
-  * `Breadth28.demaStep` on O(1) keyed state, emit in the price domain
-  * with the batch form's exact expression. */
-class DemaProcessor
-    extends BarFoldProcessor[graft.queries.Breadth28.DemaAcc, DemaScored](
-      "dema",
-      org.apache.spark.sql.Encoders.product[graft.queries.Breadth28.DemaAcc]) {
-  protected def step(st: Option[graft.queries.Breadth28.DemaAcc],
-                     closeCents: Long): graft.queries.Breadth28.DemaAcc =
-    graft.queries.Breadth28.demaStep(st, closeCents)
-  protected def score(user: Long, b: BarRow,
-                      a: graft.queries.Breadth28.DemaAcc): DemaScored =
-    DemaScored(user, b.day, b.close_cents, (2.0 * a.e1 - a.e2) / 100.0)
-}
-
-/** Keyed processor behind [[Streams.streamingKalman]] — the batch
-  * `Breadth118.kalmanStep` on O(1) keyed state, emit in the price
-  * domain with the batch form's exact x/100 and gain. */
-class KalmanProcessor
-    extends BarFoldProcessor[graft.queries.Breadth118.KalmanAcc,
-      KalmanScored](
-      "kalman",
-      org.apache.spark.sql.Encoders.product[
-        graft.queries.Breadth118.KalmanAcc]) {
-  protected def step(st: Option[graft.queries.Breadth118.KalmanAcc],
-                     closeCents: Long): graft.queries.Breadth118.KalmanAcc =
-    graft.queries.Breadth118.kalmanStep(st, closeCents)
-  protected def score(user: Long, b: BarRow,
-                      a: graft.queries.Breadth118.KalmanAcc): KalmanScored =
-    KalmanScored(user, b.day, b.close_cents, a.x / 100.0, a.k)
-}
-
-/** Keyed processor behind [[Streams.streamingPageHinkley]] — the
-  * batch `Breadth130.phStep` on O(1) keyed state. */
-class PageHinkleyProcessor
-    extends BarFoldProcessor[graft.queries.Breadth130.PhAcc, PhScored](
-      "pagehinkley",
-      org.apache.spark.sql.Encoders.product[
-        graft.queries.Breadth130.PhAcc]) {
-  protected def step(st: Option[graft.queries.Breadth130.PhAcc],
-                     closeCents: Long): graft.queries.Breadth130.PhAcc =
-    graft.queries.Breadth130.phStep(st, closeCents)
-  protected def score(user: Long, b: BarRow,
-                      a: graft.queries.Breadth130.PhAcc): PhScored =
-    PhScored(user, b.day, b.close_cents, a.m, a.m - a.minM, a.alarmed)
-}
-
-/** Keyed processor behind [[Streams.streamingClampedBalance]] — the
-  * batch `Breadth123.clampStep` on O(1) keyed state. */
-class ClampProcessor
-    extends BarFoldProcessor[graft.queries.Breadth123.ClampAcc,
-      ClampScored](
-      "clamp",
-      org.apache.spark.sql.Encoders.product[
-        graft.queries.Breadth123.ClampAcc]) {
-  protected def step(st: Option[graft.queries.Breadth123.ClampAcc],
-                     closeCents: Long): graft.queries.Breadth123.ClampAcc =
-    graft.queries.Breadth123.clampStep(st, closeCents)
-  protected def score(user: Long, b: BarRow,
-                      a: graft.queries.Breadth123.ClampAcc): ClampScored =
-    ClampScored(user, b.day, b.close_cents, a.bal)
-}
-
-/** Keyed processor behind [[Streams.streamingSprt]] — the batch
-  * `Breadth147.sprtStep` on O(1) keyed state. Rows fold in
-  * (ts, event_id) order within each batch; a row below an earlier
-  * batch's horizon drops and counts (the decision index is
-  * order-sensitive). */
-class SprtProcessor
-    extends StatefulProcessor[String, SprtEvent, SprtScored] {
-  @transient private var st: ValueState[SprtState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[SprtState]("sprt",
-      org.apache.spark.sql.Encoders.product[SprtState], TTLConfig.NONE)
-
-  override def handleInputRows(stream: String, rows: Iterator[SprtEvent],
-                               timerValues: TimerValues)
-      : Iterator[SprtScored] = {
-    var s = if (st.exists()) st.get()
-      else SprtState(0L, 0L, decided = false, -1L, 0L, Long.MinValue, 0L)
-    val out = Seq.newBuilder[SprtScored]
-    val lateFloor = s.maxTs
-    rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-      val t = e.ts.getTime
-      if (t < lateFloor) s = s.copy(nLate = s.nLate + 1)
-      else {
-        val prev =
-          if (s.k == 0) None
-          else Some(graft.queries.Breadth147.SprtAcc(
-            s.k, s.llr, s.decided, s.kd, s.llrd))
-        val acc = graft.queries.Breadth147.sprtStep(prev, e.x)
-        s = SprtState(acc.k, acc.llr, acc.decided, acc.kd, acc.llrd,
-          math.max(s.maxTs, t), s.nLate)
-        val decision =
-          if (!acc.decided) "continue"
-          else if (acc.llrd >= graft.queries.Breadth147.BoundQ) "accept_h1"
-          else "accept_h0"
-        out += SprtScored(stream, acc.k, e.x, acc.llr, decision, s.nLate)
-      }
-    }
-    st.update(s)
-    out.result().iterator
-  }
-}
-
-/** Keyed processor behind [[Streams.streamingAmsSketch]] — the
-  * mergeable 5-sum tug-of-war sketch on O(1) keyed state (JVM md5
-  * sign twin, spec-pinned equal to the SQL sign). */
-class AmsProcessor
-    extends StatefulProcessor[String, AmsDoc, AmsSnap] {
-  @transient private var st: ValueState[(Long, Seq[Long])] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[(Long, Seq[Long])]("ams",
-      org.apache.spark.sql.Encoders.product[(Long, Seq[Long])],
-      TTLConfig.NONE)
-
-  override def handleInputRows(source: String, rows: Iterator[AmsDoc],
-                               timerValues: TimerValues)
-      : Iterator[AmsSnap] = {
-    val k = graft.queries.Breadth146.AmsK
-    var (n, sums) = if (st.exists()) st.get() else (0L, Seq.fill(k)(0L))
-    val acc = sums.toArray
-    rows.foreach { d =>
-      graft.queries.Breadth146.tokensJvm(d.text).foreach { tok =>
-        n += 1
-        var j = 0
-        while (j < k) {
-          acc(j) += graft.queries.Breadth146.amsSignJvm(tok, j)
-          j += 1
-        }
-      }
-    }
-    st.update((n, acc.toSeq))
-    Iterator.single(AmsSnap(source, n, acc.toSeq))
-  }
-}
-
-/** Keyed processor behind [[Streams.streamingSequenceMatch]] — the
-  * `s[^e]*p` DFA on O(1) keyed state: `active` = a signup with no
-  * error since, `matched` absorbing. Rows fold in (ts, event_id)
-  * order within each batch (the arrival-order convention of the bar
-  * twins). */
-class SeqMatchProcessor
-    extends StatefulProcessor[Long, SeqEvent, SeqMatchScored] {
-  @transient private var st:
-    ValueState[(Boolean, Boolean, Long, Long, Long)] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[(Boolean, Boolean, Long, Long, Long)](
-      "seqmatch",
-      org.apache.spark.sql.Encoders.product[
-        (Boolean, Boolean, Long, Long, Long)],
-      TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, rows: Iterator[SeqEvent],
-                               timerValues: TimerValues)
-      : Iterator[SeqMatchScored] = {
-    var (active, matched, n, maxTs, nLate) =
-      if (st.exists()) st.get() else (false, false, 0L, Long.MinValue, 0L)
-    // the funnel twin's late-row guard: an event-time row below what an
-    // earlier batch folded is dropped and counted (the DFA is
-    // order-sensitive — a late 'e' would otherwise rewrite history
-    // silently); within a batch the sort handles order
-    val lateFloor = maxTs
-    rows.toSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-      .foreach { e =>
-      val t = e.ts.getTime * 1000L + (e.ts.getNanos / 1000L) % 1000L
-      if (t < lateFloor) nLate += 1
-      else {
-        e.initial match {
-          case "s" => active = true
-          case "e" => active = false
-          case "p" => if (active) matched = true
-          case _ =>
-        }
-        n += 1
-        maxTs = math.max(maxTs, t)
-      }
-    }
-    st.update((active, matched, n, maxTs, nLate))
-    Iterator.single(SeqMatchScored(user, n, matched, nLate))
-  }
-}
-
-/** Keyed processor behind [[Streams.streamingWindowFunnel]]. Event
-  * semantics mirror the batch greedy exactly: a view opens a pending
-  * anchor; the EARLIEST later click pairs every pending view (those
-  * within deadline join the frontier, the rest die — any later click
-  * is later still); a purchase strictly after some frontier click and
-  * within its anchor's deadline completes level 3 (absorbing). */
-class FunnelProcessor(windowUs: Long)
-    extends StatefulProcessor[Long, SeqEvent, FunnelScored] {
-  @transient private var st: ValueState[FunnelState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[FunnelState]("funnel",
-      org.apache.spark.sql.Encoders.product[FunnelState], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, rows: Iterator[SeqEvent],
-                               timerValues: TimerValues)
-      : Iterator[FunnelScored] = {
-    var s = if (st.exists()) st.get()
-            else FunnelState(0, Seq.empty, Seq.empty, Long.MinValue, 0L)
-    // late-row guard: an event whose time precedes what an EARLIER
-    // batch already folded could pair differently than the batch greedy
-    // (state was pruned against maxTs) — drop it and COUNT it, so
-    // out-of-order input surfaces in n_late instead of diverging
-    // silently (within a batch, the sort handles order)
-    val lateFloor = s.maxTs
-    rows.toSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-      .foreach { e =>
-        val t = e.ts.getTime * 1000L + (e.ts.getNanos / 1000L) % 1000L
-        if (t < lateFloor) s = s.copy(nLate = s.nLate + 1)
-        else if (s.level < 3) {
-          e.initial match {
-            case "v" =>
-              s = s.copy(level = math.max(s.level, 1),
-                pendingViews = s.pendingViews :+ t, maxTs = t)
-            case "c" =>
-              val (alive, _) = s.pendingViews.filter(_ < t)
-                .partition(v => t <= v + windowUs)
-              val kept = s.pendingViews.filterNot(_ < t)
-              val newFrontier = s.frontier ++ alive.map(v => (t, v + windowUs))
-              s = s.copy(
-                level = if (alive.nonEmpty) math.max(s.level, 2) else s.level,
-                pendingViews = kept,
-                frontier = newFrontier.filter(_._2 >= t), maxTs = t)
-            case "p" =>
-              if (s.frontier.exists(f => t > f._1 && t <= f._2))
-                s = s.copy(level = 3, pendingViews = Seq.empty,
-                  frontier = Seq.empty, maxTs = t)
-              else s = s.copy(maxTs = t)
-            case _ => s = s.copy(maxTs = t)
-          }
-          // prune anchors no in-order future purchase can complete and
-          // pending views no in-order future click can pair in-window
-          if (s.level < 3)
-            s = s.copy(frontier = s.frontier.filter(_._2 >= s.maxTs),
-              pendingViews = s.pendingViews.filter(_ + windowUs >= s.maxTs))
-        }
-      }
-    st.update(s)
-    Iterator.single(FunnelScored(user, s.level, s.nLate))
-  }
-}
-
-/** Keyed processor behind [[Streams.streamingEwmaVol]] — the batch
-  * `Breadth69.ewmaVolStep` on O(1) keyed state, emit in the price
-  * domain with the batch form's exact √v/100. */
-class EwmaVolProcessor
-    extends BarFoldProcessor[graft.queries.Breadth69.EwmaVolAcc,
-      EwmaVolScored](
-      "ewmavol",
-      org.apache.spark.sql.Encoders.product[
-        graft.queries.Breadth69.EwmaVolAcc]) {
-  protected def step(st: Option[graft.queries.Breadth69.EwmaVolAcc],
-                     closeCents: Long): graft.queries.Breadth69.EwmaVolAcc =
-    graft.queries.Breadth69.ewmaVolStep(st, closeCents)
-  protected def score(user: Long, b: BarRow,
-                      a: graft.queries.Breadth69.EwmaVolAcc): EwmaVolScored =
-    EwmaVolScored(user, b.day, b.close_cents,
-      a.v.map(math.sqrt(_) / 100.0))
-}
-
-/** Keyed processor behind [[Streams.streamingHoltWinters]] — the batch
-  * `Breadth99.hwStep` on O(7) keyed state; the 0=Sunday weekday is
-  * derived from the bar's calendar day exactly as the batch's
-  * dayofweek−1. */
-class HoltWintersProcessor
-    extends StatefulProcessor[Long, BarRow, HwScored] {
-  @transient private var acc: ValueState[graft.queries.Breadth99.HwAcc] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    acc = getHandle.getValueState[graft.queries.Breadth99.HwAcc]("hw",
-      org.apache.spark.sql.Encoders.product[graft.queries.Breadth99.HwAcc],
-      TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, bars: Iterator[BarRow],
-                               timerValues: TimerValues)
-      : Iterator[HwScored] = {
-    var st = if (acc.exists()) Some(acc.get()) else None
-    val out = Seq.newBuilder[HwScored]
-    bars.toSeq.sortBy(_.day.toEpochDay).foreach { b =>
-      val w = b.day.getDayOfWeek.getValue % 7 // ISO Mon=1..Sun=7 → 0=Sun
-      val (next, o) = graft.queries.Breadth99.hwStep(st,
-        b.close_cents.toDouble, w)
+    order(rows.toSeq).foreach { r =>
+      val (next, emitted) = step(key, st, r)
       st = Some(next)
-      out += HwScored(user, b.day, o.level / 100.0, o.trend / 100.0,
-        o.seasonal / 100.0, o.fitted.map(_ / 100.0))
+      out ++= emitted
     }
-    st.foreach(acc.update)
+    st.foreach { end =>
+      out ++= emit(key, start, end)
+      state.update(end)
+    }
     out.result().iterator
-  }
-}
-
-/** Croston keyed state: previous demand day + the smoothed pair. */
-case class CrostonState(prevDayEpoch: Long, z: Double, p: Double)
-
-/** Keyed processor behind [[Streams.streamingCroston]] — the batch
-  * `Breadth99.crostonStep`; the inter-demand gap comes from the
-  * carried previous day (the batch lag), first gap 1. */
-class CrostonProcessor
-    extends StatefulProcessor[Long, DemandRow, CrostonScored] {
-  @transient private var acc: ValueState[CrostonState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    acc = getHandle.getValueState[CrostonState]("croston",
-      org.apache.spark.sql.Encoders.product[CrostonState], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, rows: Iterator[DemandRow],
-                               timerValues: TimerValues)
-      : Iterator[CrostonScored] = {
-    var st = if (acc.exists()) Some(acc.get()) else None
-    val out = Seq.newBuilder[CrostonScored]
-    rows.toSeq.sortBy(_.day.toEpochDay).foreach { r =>
-      val gap = st match {
-        case None => 1.0
-        case Some(s) => (r.day.toEpochDay - s.prevDayEpoch).toDouble
-      }
-      val prev = st.map(s => graft.queries.Breadth99.CrAcc(s.z, s.p))
-      val a = graft.queries.Breadth99.crostonStep(prev, r.demand.toDouble,
-        gap)
-      st = Some(CrostonState(r.day.toEpochDay, a.z, a.p))
-      out += CrostonScored(user, r.day, r.demand, a.z, a.p, a.z / a.p)
-    }
-    st.foreach(acc.update)
-    out.result().iterator
-  }
-}
-
-/** VWMA ring state: last ≤win (close, vol) pairs in day order. */
-case class VwmaRing(closes: Seq[Long], vols: Seq[Long])
-
-/** Keyed processor behind [[Streams.streamingVwma]] — the batch
-  * frame's exact Σcv/Σv. */
-class VwmaProcessor(win: Int)
-    extends StatefulProcessor[Long, VolBarRow, VwmaScored] {
-  @transient private var ring: ValueState[VwmaRing] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    ring = getHandle.getValueState[VwmaRing]("vwma",
-      org.apache.spark.sql.Encoders.product[VwmaRing], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, bars: Iterator[VolBarRow],
-                               timerValues: TimerValues)
-      : Iterator[VwmaScored] = {
-    var (cs, vs) = if (ring.exists()) {
-      val r = ring.get(); (r.closes, r.vols)
-    } else (Seq.empty[Long], Seq.empty[Long])
-    val out = Seq.newBuilder[VwmaScored]
-    bars.toSeq.sortBy(_.day.toEpochDay).foreach { b =>
-      cs = (cs :+ b.close_cents).takeRight(win)
-      vs = (vs :+ b.vol).takeRight(win)
-      val spv = cs.zip(vs).map { case (c, v) => c * v }.sum
-      val sv = vs.sum
-      val vwma = if (sv > 0)
-        Some(spv.toDouble / sv.toDouble / 100.0) else None
-      out += VwmaScored(user, b.day, b.close_cents.toDouble / 100.0, vwma)
-    }
-    ring.update(VwmaRing(cs, vs))
-    out.result().iterator
-  }
-}
-
-/** Close-ring state shared by the envelope and disparity screens. */
-case class CloseRing(closes: Seq[Long])
-
-/** Keyed processor behind [[Streams.streamingEnvelope]] — the batch
-  * integer-product band edges and cross-multiplied flags verbatim. */
-class EnvelopeProcessor(win: Int, permille: Long)
-    extends StatefulProcessor[Long, BarRow, EnvScored] {
-  @transient private var ring: ValueState[CloseRing] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    ring = getHandle.getValueState[CloseRing]("envelope",
-      org.apache.spark.sql.Encoders.product[CloseRing], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, bars: Iterator[BarRow],
-                               timerValues: TimerValues)
-      : Iterator[EnvScored] = {
-    var cs = if (ring.exists()) ring.get().closes else Seq.empty[Long]
-    val out = Seq.newBuilder[EnvScored]
-    bars.toSeq.sortBy(_.day.toEpochDay).foreach { b =>
-      cs = (cs :+ b.close_cents).takeRight(win)
-      val s = cs.sum; val m = cs.size.toLong
-      out += EnvScored(user, b.day, b.close_cents.toDouble / 100.0,
-        s.toDouble / m.toDouble / 100.0,
-        (s * (1000L + permille)).toDouble / (m * 1000L).toDouble / 100.0,
-        (s * (1000L - permille)).toDouble / (m * 1000L).toDouble / 100.0,
-        b.close_cents * m * 1000L > s * (1000L + permille),
-        b.close_cents * m * 1000L < s * (1000L - permille))
-    }
-    ring.update(CloseRing(cs))
-    out.result().iterator
-  }
-}
-
-/** Keyed processor behind [[Streams.streamingDisparity]] — the batch
-  * 100·c·m/Σc single division. */
-class DisparityProcessor(win: Int)
-    extends StatefulProcessor[Long, BarRow, DisparityScored] {
-  @transient private var ring: ValueState[CloseRing] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    ring = getHandle.getValueState[CloseRing]("disparity",
-      org.apache.spark.sql.Encoders.product[CloseRing], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, bars: Iterator[BarRow],
-                               timerValues: TimerValues)
-      : Iterator[DisparityScored] = {
-    var cs = if (ring.exists()) ring.get().closes else Seq.empty[Long]
-    val out = Seq.newBuilder[DisparityScored]
-    bars.toSeq.sortBy(_.day.toEpochDay).foreach { b =>
-      cs = (cs :+ b.close_cents).takeRight(win)
-      val s = cs.sum; val m = cs.size.toLong
-      out += DisparityScored(user, b.day, b.close_cents.toDouble / 100.0,
-        (b.close_cents * m * 100L).toDouble / s.toDouble)
-    }
-    ring.update(CloseRing(cs))
-    out.result().iterator
-  }
-}
-
-/** Rolling-median ring state: last ≤win closes in day order. */
-case class RollMedRing(closes: Seq[Long])
-
-/** Keyed processor behind [[Streams.streamingRollingMedian]] — an O(w)
-  * close ring; the emit is the batch frame's exact sorted low/high
-  * middle pick, (lo+hi)/200. */
-class RollingMedianProcessor(win: Int)
-    extends StatefulProcessor[Long, BarRow, RollMedScored] {
-  @transient private var ring: ValueState[RollMedRing] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    ring = getHandle.getValueState[RollMedRing]("rollmed",
-      org.apache.spark.sql.Encoders.product[RollMedRing], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, bars: Iterator[BarRow],
-                               timerValues: TimerValues)
-      : Iterator[RollMedScored] = {
-    var cs = if (ring.exists()) ring.get().closes else Seq.empty[Long]
-    val out = Seq.newBuilder[RollMedScored]
-    bars.toSeq.sortBy(_.day.toEpochDay).foreach { b =>
-      cs = (cs :+ b.close_cents).takeRight(win)
-      val sorted = cs.sorted
-      val m = sorted.size
-      val med = (sorted((m + 1) / 2 - 1) + sorted(m / 2)).toDouble / 200.0
-      out += RollMedScored(user, b.day, b.close_cents.toDouble / 100.0,
-        m.toLong, med)
-    }
-    ring.update(RollMedRing(cs))
-    out.result().iterator
-  }
-}
-
-/** Corwin–Schultz keyed state: the previous bar's high/low and its
-  * 1e-6-quantized log range. */
-case class CsState(prevHigh: Long, prevLow: Long, prevLq: Long)
-
-/** Keyed processor behind [[Streams.streamingCsSpread]] — the batch
-  * q_cs_spread arithmetic verbatim: quantized 2-day log ranges, the α
-  * IEEE chain, spread 6-dp-rounded via BigDecimal (Spark round
-  * semantics). Bars with low ≤ 0 are skipped without touching state,
-  * exactly the batch pre-lag filter. */
-class CsSpreadProcessor
-    extends StatefulProcessor[Long, OhlcBarRow, CsSpreadScored] {
-  @transient private var acc: ValueState[CsState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    acc = getHandle.getValueState[CsState]("csspread",
-      org.apache.spark.sql.Encoders.product[CsState], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, bars: Iterator[OhlcBarRow],
-                               timerValues: TimerValues)
-      : Iterator[CsSpreadScored] = {
-    var st = if (acc.exists()) Some(acc.get()) else None
-    val out = Seq.newBuilder[CsSpreadScored]
-    bars.toSeq.sortBy(_.day.toEpochDay)
-      .filter(_.low_cents > 0).foreach { b =>
-      val lq = math.floor(math.log(b.high_cents.toDouble /
-        b.low_cents.toDouble) * 1.0e6 + 0.5).toLong
-      st.foreach { p =>
-        val h2 = math.max(b.high_cents, p.prevHigh)
-        val l2 = math.min(b.low_cents, p.prevLow)
-        val gq = math.floor(math.log(h2.toDouble / l2.toDouble) * 1.0e6 +
-          0.5).toLong
-        val beta = (lq * lq + p.prevLq * p.prevLq).toDouble
-        val gamma = (gq * gq).toDouble
-        val den = 3.0 - 2.0 * math.sqrt(2.0)
-        val alpha = (math.sqrt(2.0 * beta) - math.sqrt(beta)) / den -
-          math.sqrt(gamma / den)
-        val ea = math.exp(alpha / 1.0e6)
-        val spread = java.math.BigDecimal
-          .valueOf(2.0 * (ea - 1.0) / (1.0 + ea))
-          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-        out += CsSpreadScored(user, b.day, spread)
-      }
-      st = Some(CsState(b.high_cents, b.low_cents, lq))
-    }
-    st.foreach(acc.update)
-    out.result().iterator
-  }
-}
-
-/** The QStick ring state: last ≤k candle bodies (close − open). */
-case class QstickRing(bodies: Seq[Long])
-
-/** Keyed processor behind [[Streams.streamingQstick]] — an O(k) body
-  * ring; emits the batch window's exact Σbody/(k·100) once full. */
-class QstickProcessor(k: Int)
-    extends StatefulProcessor[Long, FullBarRow, QstickScored] {
-  @transient private var ring: ValueState[QstickRing] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    ring = getHandle.getValueState[QstickRing]("qstick",
-      org.apache.spark.sql.Encoders.product[QstickRing], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, bars: Iterator[FullBarRow],
-                               timerValues: TimerValues)
-      : Iterator[QstickScored] = {
-    var st = if (ring.exists()) ring.get() else QstickRing(Seq.empty)
-    val out = Seq.newBuilder[QstickScored]
-    bars.toSeq.sortBy(_.day.toEpochDay).foreach { b =>
-      st = QstickRing(
-        (st.bodies :+ (b.close_cents - b.open_cents)).takeRight(k))
-      out += QstickScored(user, b.day,
-        if (st.bodies.size == k) Some(st.bodies.sum.toDouble / (k * 100.0))
-        else None)
-    }
-    ring.update(st)
-    out.result().iterator
-  }
-}
-
-/** The fractal ring state: last ≤5 full bars awaiting confirmation. */
-case class FractalRing(days: Seq[Long], highs: Seq[Long], lows: Seq[Long])
-
-/** Keyed processor behind [[Streams.streamingFractals]] — a 5-bar
-  * ring; the CENTER bar is judged once both confirming bars exist,
-  * emitting the batch q_fractals rows with a two-bar lag. */
-class FractalsProcessor
-    extends StatefulProcessor[Long, FullBarRow, FractalScored] {
-  @transient private var ring: ValueState[FractalRing] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    ring = getHandle.getValueState[FractalRing]("fractals",
-      org.apache.spark.sql.Encoders.product[FractalRing], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, bars: Iterator[FullBarRow],
-                               timerValues: TimerValues)
-      : Iterator[FractalScored] = {
-    var st = if (ring.exists()) ring.get()
-      else FractalRing(Seq.empty, Seq.empty, Seq.empty)
-    val out = Seq.newBuilder[FractalScored]
-    bars.toSeq.sortBy(_.day.toEpochDay).foreach { b =>
-      st = FractalRing((st.days :+ b.day.toEpochDay).takeRight(5),
-        (st.highs :+ b.high_cents).takeRight(5),
-        (st.lows :+ b.low_cents).takeRight(5))
-      if (st.days.size == 5) {
-        val day = java.time.LocalDate.ofEpochDay(st.days(2))
-        val h = st.highs; val l = st.lows
-        if (h(2) > h(0) && h(2) > h(1) && h(2) > h(3) && h(2) > h(4))
-          out += FractalScored(user, day, "high", h(2))
-        if (l(2) < l(0) && l(2) < l(1) && l(2) < l(3) && l(2) < l(4))
-          out += FractalScored(user, day, "low", l(2))
-      }
-    }
-    ring.update(st)
-    out.result().iterator
-  }
-}
-
-/** Keyed processor behind [[Streams.streamingPpo]] — the batch
-  * `Breadth28.ppoStep` on O(1) keyed state, emit with the batch form's
-  * exact ratio and zero-EMA null. */
-class PpoProcessor
-    extends BarFoldProcessor[graft.queries.Breadth28.PpoAcc, PpoScored](
-      "ppo",
-      org.apache.spark.sql.Encoders.product[graft.queries.Breadth28.PpoAcc]) {
-  protected def step(st: Option[graft.queries.Breadth28.PpoAcc],
-                     closeCents: Long): graft.queries.Breadth28.PpoAcc =
-    graft.queries.Breadth28.ppoStep(st, closeCents)
-  protected def score(user: Long, b: BarRow,
-                      a: graft.queries.Breadth28.PpoAcc): PpoScored =
-    PpoScored(user, b.day, b.close_cents,
-      if (a.e26 != 0.0) Some(100.0 * (a.e12 - a.e26) / a.e26) else None)
-}
-
-/** Keyed processor behind [[Streams.streamingVpinBuckets]] — the
-  * volume-bucket fold: bucket id = pre-tick cumulative div barVol
-  * (the batch q_volume_bars boundary), tick-rule signed volume
-  * accumulated per open bucket, completed buckets emitted on
-  * rollover. */
-class VpinProcessor(barVol: Long)
-    extends StatefulProcessor[Long, TickRow, VpinBucket] {
-  @transient private var st: ValueState[VpinState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[VpinState]("vpin",
-      org.apache.spark.sql.Encoders.product[VpinState], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, ticks: Iterator[TickRow],
-                               timerValues: TimerValues): Iterator[VpinBucket] = {
-    var s = if (st.exists()) st.get() else VpinState(None, 0L, 0L, 0L, 0L)
-    val out = Seq.newBuilder[VpinBucket]
-    ticks.toSeq.sortBy(_.seq).foreach { t =>
-      val bar = s.cum / barVol // pre-tick cumulative → this tick's bucket
-      if (bar > s.barId) {
-        out += VpinBucket(user, s.barId, math.abs(s.imb), s.vol)
-        s = s.copy(barId = bar, imb = 0L, vol = 0L)
-      }
-      val sv = s.prevClose match {
-        case Some(p) if t.cents > p => t.vol
-        case Some(p) if t.cents < p => -t.vol
-        case _ => 0L
-      }
-      s = VpinState(Some(t.cents), s.cum + t.vol, s.barId,
-        s.imb + sv, s.vol + t.vol)
-    }
-    st.update(s)
-    out.result().iterator
-  }
-}
-
-/** Keyed processor behind [[Streams.streamingThreeBar]] — a ≤2-bar
-  * ring per key; flags come from `Breadth52.threeBarFlags` (false
-  * until three bars exist, the batch null→false stance). */
-class ThreeBarProcessor
-    extends StatefulProcessor[Long, OcBarRow, ThreeBarScored] {
-  @transient private var ring: ValueState[ThreeBarRing] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    ring = getHandle.getValueState[ThreeBarRing]("ring",
-      org.apache.spark.sql.Encoders.product[ThreeBarRing], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, bars: Iterator[OcBarRow],
-                               timerValues: TimerValues): Iterator[ThreeBarScored] = {
-    var prev = if (ring.exists()) ring.get().prev else Nil
-    val out = Seq.newBuilder[ThreeBarScored]
-    bars.toSeq.sortBy(_.day.toEpochDay).foreach { b =>
-      val (tws, tbc, ms) = prev match {
-        case Seq(p2, p1) =>
-          graft.queries.Breadth52.threeBarFlags(p2.o, p2.c, p1.o, p1.c,
-            b.open_cents, b.close_cents)
-        case _ => (false, false, false)
-      }
-      out += ThreeBarScored(user, b.day, tws, tbc, ms)
-      prev = (prev :+ OcPair(b.open_cents, b.close_cents)).takeRight(2)
-    }
-    ring.update(ThreeBarRing(prev))
-    out.result().iterator
-  }
-}
-
-/** Keyed processor behind [[Streams.streamingCmsCells]] — one long
-  * counter per (row, bucket) cell, summed across batches. */
-class CmsCellProcessor
-    extends StatefulProcessor[(Int, Long), CmsIncrement, CmsCellState] {
-  @transient private var cell: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    cell = getHandle.getValueState[Long]("cms",
-      org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-
-  override def handleInputRows(key: (Int, Long),
-                               rows: Iterator[CmsIncrement],
-                               timerValues: TimerValues): Iterator[CmsCellState] = {
-    val add = rows.map(_.inc).sum
-    val tot = (if (cell.exists()) cell.get() else 0L) + add
-    cell.update(tot)
-    Iterator.single(CmsCellState(key._1, key._2, tot))
-  }
-}
-
-/** Keyed processor behind [[Streams.streamingHolt]] — the batch
-  * `Breadth45.holtStep` on O(1) keyed state; the step's emit row (which
-  * carries the previous-state forecast error) IS the state row. */
-class HoltProcessor
-    extends BarFoldProcessor[HoltFold, HoltScored](
-      "holt", org.apache.spark.sql.Encoders.product[HoltFold]) {
-  protected def step(st: Option[HoltFold], closeCents: Long): HoltFold = {
-    val (acc, row) = graft.queries.Breadth45.holtStep(
-      st.map(s => graft.queries.Breadth45.HoltAcc(s.l, s.t)),
-      closeCents.toDouble)
-    HoltFold(acc.l, acc.t, row.fcErr)
-  }
-  protected def score(user: Long, b: BarRow, a: HoltFold): HoltScored =
-    HoltScored(user, b.day, b.close_cents, a.l / 100.0, a.t / 100.0,
-      (a.l + a.t) / 100.0, a.fcErr.map(_ / 100.0))
-}
-
-/** Keyed processor behind [[Streams.streamingElderRay]] — the EMA-13
-  * recurrence as a bare double ValueState, bull/bear power from the
-  * bar's high/low at emit. */
-class ElderRayProcessor
-    extends OhlcBarFoldProcessor[Double, ElderScored](
-      "elder", org.apache.spark.sql.Encoders.scalaDouble) {
-  protected def step(st: Option[Double], b: OhlcBarRow): Double =
-    st match {
-      case None => b.close_cents.toDouble
-      case Some(p) =>
-        graft.queries.Breadth28.ElderA * b.close_cents +
-          (1.0 - graft.queries.Breadth28.ElderA) * p
-    }
-  protected def score(user: Long, b: OhlcBarRow, e: Double): ElderScored =
-    ElderScored(user, b.day, b.close_cents, e / 100.0,
-      (b.high_cents - e) / 100.0, (b.low_cents - e) / 100.0)
-}
-
-/** Keyed processor behind [[Streams.streamingWma]] — an O(w) close
-  * ring per key; the emit numerator is the SAME integer lag sum as the
-  * batch q_wma (weight w on the newest close). */
-class WmaProcessor
-    extends BarFoldProcessor[WmaRing, WmaScored](
-      "wma", org.apache.spark.sql.Encoders.product[WmaRing]) {
-  private val W = graft.queries.Breadth31.WmaN
-  protected def step(st: Option[WmaRing], closeCents: Long): WmaRing =
-    WmaRing((st.map(_.closes).getOrElse(Nil) :+ closeCents).takeRight(W))
-  protected def score(user: Long, b: BarRow, a: WmaRing): WmaScored = {
-    val wma =
-      if (a.closes.length < W) None
-      else {
-        val num = a.closes.zipWithIndex.map { case (c, k) => (k + 1) * c }.sum
-        Some(num.toDouble / (W * (W + 1) / 2).toDouble / 100.0)
-      }
-    WmaScored(user, b.day, b.close_cents, wma)
-  }
-}
-
-/** Keyed processor behind [[Streams.streamingStreak]] — the batch
-  * `Breadth33.streakStep` on O(1) keyed state. */
-/** Keyed processor behind [[Streams.streamingVarianceRatio]] — the
-  * batch `Breadth85.vrStep`/`vrOf` verbatim on an O(q) state row. */
-class VrProcessor
-    extends BarFoldProcessor[graft.queries.Breadth85.VrAcc, VrScored](
-      "vr", org.apache.spark.sql.Encoders.product[
-        graft.queries.Breadth85.VrAcc]) {
-  protected def step(st: Option[graft.queries.Breadth85.VrAcc],
-                     closeCents: Long): graft.queries.Breadth85.VrAcc =
-    graft.queries.Breadth85.vrStep(st, closeCents)
-  protected def score(user: Long, b: BarRow,
-                      a: graft.queries.Breadth85.VrAcc): VrScored =
-    VrScored(user, b.day, b.close_cents, a.n1, a.n2,
-      graft.queries.Breadth85.vrOf(a))
-}
-
-class StreakProcessor
-    extends BarFoldProcessor[StreakAcc, StreakScored](
-      "streak", org.apache.spark.sql.Encoders.product[StreakAcc]) {
-  protected def step(st: Option[StreakAcc], closeCents: Long): StreakAcc =
-    st match {
-      case None => StreakAcc(closeCents, 0L)
-      case Some(a) => StreakAcc(closeCents,
-        graft.queries.Breadth33.streakStep(a.streak, closeCents, a.pc))
-    }
-  protected def score(user: Long, b: BarRow, a: StreakAcc): StreakScored =
-    StreakScored(user, b.day, b.close_cents, a.streak)
-}
-
-/** Keyed processor behind [[Streams.streamingConnorsRsi]] — the batch
-  * `Breadth34.crsiStep` verbatim; the state carries the 0-based bar
-  * count the warm-up gates read. */
-class ConnorsRsiProcessor
-    extends BarFoldProcessor[CrsiState, CrsiScored](
-      "crsi", org.apache.spark.sql.Encoders.product[CrsiState]) {
-  protected def step(st: Option[CrsiState], closeCents: Long): CrsiState = {
-    val n = st.map(_.n + 1L).getOrElse(0L)
-    CrsiState(n,
-      graft.queries.Breadth34.crsiStep(st.map(_.acc), closeCents, n.toInt))
-  }
-  protected def score(user: Long, b: BarRow, s: CrsiState): CrsiScored = {
-    val a = s.acc
-    CrsiScored(user, b.day, b.close_cents, a.streak, a.rsi3, a.rsi2, a.pr,
-      (a.rsi3, a.rsi2, a.pr) match {
-        case (Some(x), Some(y), Some(z)) => Some((x + y + z) / 3.0)
-        case _ => None
-      })
-  }
-}
-
-/** Keyed processor behind [[Streams.streamingElderImpulse]] — the
-  * batch `Breadth35.impulseStep` verbatim; the per-bar class rides in
-  * the state row. */
-class ElderImpulseProcessor
-    extends BarFoldProcessor[ImpulseState, ImpulseScored](
-      "impulse", org.apache.spark.sql.Encoders.product[ImpulseState]) {
-  protected def step(st: Option[ImpulseState], closeCents: Long): ImpulseState = {
-    val (a, cls) =
-      graft.queries.Breadth35.impulseStep(st.map(_.acc), closeCents)
-    ImpulseState(a, cls)
-  }
-  protected def score(user: Long, b: BarRow, s: ImpulseState): ImpulseScored =
-    ImpulseScored(user, b.day, b.close_cents, s.cls)
-}
-
-/** Keyed processor behind [[Streams.streamingPsar]] — the batch
-  * `Breadth30.psarStep` on O(1) keyed state (the 2-bar clamp ring
-  * rides inside the accumulator), price-domain emit like the batch
-  * form. */
-class PsarProcessor
-    extends OhlcBarFoldProcessor[graft.queries.Breadth30.PsarAcc, PsarScored](
-      "psar",
-      org.apache.spark.sql.Encoders.product[graft.queries.Breadth30.PsarAcc]) {
-  protected def step(st: Option[graft.queries.Breadth30.PsarAcc],
-                     b: OhlcBarRow): graft.queries.Breadth30.PsarAcc =
-    graft.queries.Breadth30.psarStep(st, b.high_cents, b.low_cents)
-  protected def score(user: Long, b: OhlcBarRow,
-                      a: graft.queries.Breadth30.PsarAcc): PsarScored =
-    PsarScored(user, b.day, b.close_cents, a.sar / 100.0, a.up)
-}
-
-/** Keyed processor behind [[Streams.streamingHeikinAshi]] — the batch
-  * step and emit expressions verbatim (graft.queries.Breadth24). The
-  * one fold whose bar carries the OPEN, so it folds [[Ohlc4BarRow]]
-  * directly rather than through the OHLC sibling. */
-class HaProcessor
-    extends StatefulProcessor[Long, Ohlc4BarRow, HaScored] {
-  @transient private var acc: ValueState[graft.queries.Breadth24.HaAcc] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    acc = getHandle.getValueState[graft.queries.Breadth24.HaAcc]("heikin",
-      org.apache.spark.sql.Encoders.product[graft.queries.Breadth24.HaAcc],
-      TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, bars: Iterator[Ohlc4BarRow],
-                               timerValues: TimerValues): Iterator[HaScored] = {
-    var st = if (acc.exists()) Some(acc.get()) else None
-    val out = Seq.newBuilder[HaScored]
-    bars.toSeq.sortBy(_.day.toEpochDay).foreach { b =>
-      val a = graft.queries.Breadth24.haStep(st, b.open_cents, b.high_cents,
-        b.low_cents, b.close_cents)
-      st = Some(a)
-      val r = graft.queries.Breadth24.haOut(a, b.high_cents, b.low_cents)
-      out += HaScored(user, b.day, r.ha_open, r.ha_high, r.ha_low, r.ha_close)
-    }
-    st.foreach(acc.update)
-    out.result().iterator
-  }
-}
-
-/** Keyed processor behind [[Streams.streamingAdx]] — the batch step and
-  * emit expressions verbatim (graft.queries.Breadth22). */
-class AdxProcessor
-    extends OhlcBarFoldProcessor[graft.queries.Breadth22.AdxAcc, AdxScored](
-      "adx", org.apache.spark.sql.Encoders.product[graft.queries.Breadth22.AdxAcc]) {
-  protected def step(st: Option[graft.queries.Breadth22.AdxAcc],
-                     b: OhlcBarRow): graft.queries.Breadth22.AdxAcc =
-    graft.queries.Breadth22.adxStep(st, b.high_cents, b.low_cents, b.close_cents)
-  protected def score(user: Long, b: OhlcBarRow,
-                      a: graft.queries.Breadth22.AdxAcc): AdxScored = {
-    val (dip, dim, dx, adx) = graft.queries.Breadth22.adxOut(a)
-    AdxScored(user, b.day, dip, dim, dx, adx)
-  }
-}
-
-/** Keyed processor behind [[Streams.streamingTsi]] — the batch step and
-  * emit expressions verbatim (graft.queries.Breadth23). */
-class TsiProcessor
-    extends BarFoldProcessor[graft.queries.Breadth23.TsiAcc, TsiScored](
-      "tsi", org.apache.spark.sql.Encoders.product[graft.queries.Breadth23.TsiAcc]) {
-  protected def step(st: Option[graft.queries.Breadth23.TsiAcc],
-                     closeCents: Long): graft.queries.Breadth23.TsiAcc =
-    graft.queries.Breadth23.tsiStep(st, closeCents)
-  protected def score(user: Long, b: BarRow,
-                      a: graft.queries.Breadth23.TsiAcc): TsiScored =
-    TsiScored(user, b.day, b.close_cents, graft.queries.Breadth23.tsiOut(a))
-}
-
-/** Keyed processor behind [[Streams.streamingSupertrend]] — the batch
-  * step and emit expressions verbatim (graft.queries.Breadth23). */
-class SupertrendProcessor
-    extends OhlcBarFoldProcessor[graft.queries.Breadth23.StAcc, SupertrendScored](
-      "supertrend", org.apache.spark.sql.Encoders.product[graft.queries.Breadth23.StAcc]) {
-  protected def step(st: Option[graft.queries.Breadth23.StAcc],
-                     b: OhlcBarRow): graft.queries.Breadth23.StAcc =
-    graft.queries.Breadth23.supertrendStep(st, b.high_cents, b.low_cents,
-      b.close_cents)
-  protected def score(user: Long, b: OhlcBarRow,
-                      a: graft.queries.Breadth23.StAcc): SupertrendScored =
-    SupertrendScored(user, b.day, b.close_cents, a.atr, a.fub, a.flb,
-      a.up.map(u => if (u) "up" else "down"),
-      a.up.map(u => if (u) a.flb.get else a.fub.get))
-}
-
-/** Keyed processor behind [[Streams.streamingZscore]]: ONE ≤6-deep value
-  * buffer per key — O(frame) state, the batch q_rolling_zscore window
-  * held verbatim. */
-/** Keyed processor behind [[Streams.streamingJourney]]: bounded first-8
-  * prefix per key, one snapshot per growth, frozen at 8. */
-class JourneyProcessor
-    extends ScoredFoldProcessor[JourneyBuf, JourneySnap]("journey",
-      org.apache.spark.sql.Encoders.product[JourneyBuf]) {
-  protected def empty: JourneyBuf = JourneyBuf(Seq.empty)
-  protected def step(b: JourneyBuf, e: EventRow): (JourneyBuf, Option[JourneySnap]) =
-    if (b.toks.length >= 8) (b, None)
-    else {
-      // encoded-domain token (Breadth178.encodeTok's plain-Scala twin):
-      // journey strings must live in the same alphabet the miner's
-      // LIKE patterns are built from
-      val next = b.toks :+
-        ("|" + graft.queries.Breadth178.encodeTokScala(e.event_type) + "|")
-      (JourneyBuf(next),
-        Some(JourneySnap(e.user_id, next.length, next.mkString)))
-    }
-}
-
-class RollingZscoreProcessor
-    extends ScoredFoldProcessor[ZBuf, ZScored]("zbuf",
-      org.apache.spark.sql.Encoders.product[ZBuf]) {
-  protected def empty: ZBuf = ZBuf(Seq.empty)
-  protected def step(b: ZBuf, e: EventRow): (ZBuf, Option[ZScored]) = {
-    val (next, scored) = Streams.zscoreStep(b.vals, e)
-    (ZBuf(next), scored)
-  }
-}
-
-/** Keyed processor behind [[Streams.streamingDrawdown]]: the running-max
-  * window of the batch form collapsed to one DrawdownAcc per key. */
-class DrawdownProcessor
-    extends SnapshotFoldProcessor[DrawdownAcc, DrawdownSnap]("dd",
-      org.apache.spark.sql.Encoders.product[DrawdownAcc]) {
-  protected def step(st: Option[DrawdownAcc], e: EventRow): DrawdownAcc =
-    Streams.drawdownStep(st, e)
-  protected def snap(user: Long, a: DrawdownAcc): DrawdownSnap =
-    DrawdownSnap(user, a.nTicks, a.peak, a.maxDd.map(Streams.round4))
-}
-
-/** Keyed processor behind [[Streams.streamingTickHealth]]: one
-  * TickHealthAcc per key — the batch lag window collapsed to one row. */
-class TickHealthProcessor
-    extends SnapshotFoldProcessor[TickHealthAcc, TickHealthSnap]("th",
-      org.apache.spark.sql.Encoders.product[TickHealthAcc]) {
-  protected def step(st: Option[TickHealthAcc], e: EventRow): TickHealthAcc =
-    Streams.tickHealthStep(st, e)
-  protected def snap(user: Long, a: TickHealthAcc): TickHealthSnap =
-    TickHealthSnap(user, a.nTicks, a.maxMove, a.maxGap)
-}
-
-/** Keyed processor behind [[Streams.streamingBollinger]]: one ≤5-deep
-  * cent buffer per key. */
-class BollingerProcessor
-    extends ScoredFoldProcessor[BollBuf, BollScored]("bollbuf",
-      org.apache.spark.sql.Encoders.product[BollBuf]) {
-  protected def empty: BollBuf = BollBuf(Seq.empty)
-  protected def step(b: BollBuf, e: EventRow): (BollBuf, Option[BollScored]) = {
-    val (next, scored) = Streams.bollingerStep(b.cents, e)
-    (BollBuf(next), scored)
-  }
-}
-
-/** Keyed processor behind [[Streams.streamingBestTrade]]. */
-class BestTradeProcessor
-    extends SnapshotFoldProcessor[BestTradeAcc, BestTradeSnap]("bt",
-      org.apache.spark.sql.Encoders.product[BestTradeAcc]) {
-  protected def step(st: Option[BestTradeAcc], e: EventRow): BestTradeAcc =
-    Streams.bestTradeStep(st, e)
-  protected def snap(user: Long, a: BestTradeAcc): BestTradeSnap =
-    BestTradeSnap(user, a.nTicks, a.bestCents)
-}
-
-/** Keyed processor behind [[Streams.streamingEmaMacd]]: one EmaMacdAcc
-  * per key; the emit expressions are the batch Column fold's verbatim
-  * (one terminal /100 per value, `(e12 - e26 - sig)/100` for the
-  * histogram — NEVER macd - signal, which differs in the last ulp). */
-class EmaMacdProcessor
-    extends BarFoldProcessor[EmaMacdAcc, EmaMacdScored]("emamacd",
-      org.apache.spark.sql.Encoders.product[EmaMacdAcc]) {
-  protected def step(st: Option[EmaMacdAcc], closeCents: Long): EmaMacdAcc =
-    Streams.emaMacdStep(st, closeCents)
-  protected def score(user: Long, b: BarRow, a: EmaMacdAcc): EmaMacdScored =
-    EmaMacdScored(user, b.day, b.close_cents, a.e20 / 100.0,
-      (a.e12 - a.e26) / 100.0, a.sig / 100.0, (a.e12 - a.e26 - a.sig) / 100.0)
-}
-
-/** Keyed processor behind [[Streams.streamingWilderRsi]]. */
-class WilderRsiProcessor
-    extends BarFoldProcessor[WilderAcc, WilderScored]("wilder",
-      org.apache.spark.sql.Encoders.product[WilderAcc]) {
-  protected def step(st: Option[WilderAcc], closeCents: Long): WilderAcc =
-    Streams.wilderStep(st, closeCents)
-  protected def score(user: Long, b: BarRow, a: WilderAcc): WilderScored =
-    WilderScored(user, b.day, b.close_cents, Streams.wilderRsi(a))
-}
-
-/** Keyed processor behind [[Streams.streamingRollSpread]] — the
-  * batch emit expression verbatim (integer covariance numerator, one
-  * division → sqrt → constant scaling, identical operand order). */
-class RollSpreadProcessor
-    extends SnapshotFoldProcessor[RollAcc, RollSnap]("roll",
-      org.apache.spark.sql.Encoders.product[RollAcc]) {
-  protected def step(st: Option[RollAcc], e: EventRow): RollAcc =
-    Streams.rollSpreadStep(st, e)
-  protected def snap(user: Long, a: RollAcc): RollSnap = {
-    val covNum = a.nPairs * a.sxy - a.sx * a.sy
-    RollSnap(user, a.nPairs, covNum,
-      if (covNum < 0)
-        Some(2.0 * math.sqrt((-covNum).toDouble /
-          (a.nPairs * a.nPairs).toDouble) / 100.0)
-      else None)
-  }
-}
-
-/** Keyed processor behind [[Streams.streamingDailySharpe]]. */
-class DailySharpeProcessor
-    extends BarFoldProcessor[SharpeAcc, SharpeScored]("sharpe",
-      org.apache.spark.sql.Encoders.product[SharpeAcc]) {
-  protected def step(st: Option[SharpeAcc], closeCents: Long): SharpeAcc =
-    Streams.sharpeStep(st, closeCents)
-  protected def score(user: Long, b: BarRow, a: SharpeAcc): SharpeScored = {
-    val varNum = a.nDays * a.sxx - a.sx * a.sx
-    SharpeScored(user, b.day, a.nDays,
-      if (varNum > 0) Some(a.sx.toDouble / math.sqrt(varNum.toDouble))
-      else None)
-  }
-}
-
-/** Keyed processor behind [[Streams.streamingRealizedVol]]. */
-class RealizedVolProcessor
-    extends SnapshotFoldProcessor[RealizedVolAcc, RealizedVolSnap]("rv",
-      org.apache.spark.sql.Encoders.product[RealizedVolAcc]) {
-  protected def step(st: Option[RealizedVolAcc], e: EventRow): RealizedVolAcc =
-    Streams.realizedVolStep(st, e)
-  protected def snap(user: Long, a: RealizedVolAcc): RealizedVolSnap = {
-    val scored = a.nMoves > 0
-    RealizedVolSnap(user, a.nTicks, a.nMoves,
-      if (scored) Some(a.sumSq) else None,
-      if (scored) Some(math.sqrt(a.sumSq.toDouble / a.nMoves.toDouble) / 100.0)
-      else None)
   }
 }
 

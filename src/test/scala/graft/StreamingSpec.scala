@@ -1959,4 +1959,120 @@ class StreamingSpec extends SparkSpec {
       }
     }
   }
+
+  /** Output rows (as strings, sorted) of `twin` over `batches` fed to one
+    * query with the RocksDB provider; with `restartAt = Some(i)` the
+    * query is stopped before batch i and restarted from its checkpoint. */
+  private def twinRun[T: org.apache.spark.sql.Encoder](batches: Seq[Seq[T]],
+      mode: String, restartAt: Option[Int])(
+      twin: org.apache.spark.sql.Dataset[T] => org.apache.spark.sql.DataFrame)
+      : Seq[String] = {
+    implicit val sqlCtx = spark.sqlContext
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try {
+      val ckpt = Files.createTempDirectory("graft_twin_ckpt").toString
+      val mem = MemoryStream[T]
+      val got = scala.collection.mutable.ArrayBuffer.empty[String]
+      def start(): org.apache.spark.sql.streaming.StreamingQuery =
+        twin(mem.toDS()).writeStream.option("checkpointLocation", ckpt)
+          .outputMode(mode)
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+            got.synchronized { got ++= b.collect().map(_.toString) }: Unit
+          }.start()
+      var q = start()
+      batches.zipWithIndex.foreach { case (b, i) =>
+        if (restartAt.contains(i)) { q.stop(); q = start() }
+        mem.addData(b: _*); q.processAllAvailable()
+      }
+      q.stop()
+      got.synchronized(got.toSeq.sorted)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("streamingForceIndex (VolBarRow) survives a checkpointed " +
+    "stop/restart: output equals the uninterrupted run") {
+    import graft.streaming.VolBarRow
+    val bars = Seq((1060L, 950L, 1040L, 10L), (1100L, 1000L, 1020L, 25L),
+      (1150L, 1010L, 1140L, 7L), (1100L, 1100L, 1100L, 12L),
+      (1120L, 1040L, 1100L, 31L), (1300L, 1090L, 1280L, 4L))
+      .zipWithIndex.flatMap { case ((h, l, c, v), i) =>
+        Seq(VolBarRow(1L, java.time.LocalDate.of(2024, 1, i + 1), h, l, c, v),
+          VolBarRow(2L, java.time.LocalDate.of(2024, 1, i + 1), h + 5, l, c - 3,
+            v + 1)) }
+    val batches = Seq(bars.take(4), bars.slice(4, 8), bars.drop(8))
+    def run(r: Option[Int]) =
+      twinRun(batches, "append", r)(ds => Streams.streamingForceIndex(ds).toDF())
+    val whole = run(None)
+    assert(whole.size === bars.size)
+    assert(run(Some(1)) === whole, "restart after batch 0")
+    assert(run(Some(2)) === whole, "restart after batch 1")
+  }
+
+  test("streamingVpinBuckets (TickRow) survives a checkpointed " +
+    "stop/restart with an open bucket straddling it") {
+    import graft.streaming.TickRow
+    val barVol = 500L
+    // key 1: 450 of bucket 0's volume lands before the restart, 200 more
+    // after it, and the 4th tick closes bucket 0 (volume 650)
+    val ticks = Seq((1L, 100L, 300L), (1L, 120L, 150L), (2L, 50L, 490L),
+      (1L, 90L, 200L), (1L, 110L, 400L), (2L, 60L, 20L), (2L, 55L, 600L),
+      (1L, 130L, 50L))
+      .zipWithIndex.map { case ((k, c, v), i) => TickRow(k, i.toLong, c, v) }
+    val batches = Seq(ticks.take(3), ticks.slice(3, 6), ticks.drop(6))
+    def run(r: Option[Int]) = twinRun(batches, "append", r)(ds =>
+      Streams.streamingVpinBuckets(ds, barVol).toDF())
+    val whole = run(None)
+    val restarted = run(Some(1))
+    assert(restarted === whole)
+    // bucket 0 of key 1 holds its three ticks across the restart:
+    // signed volume 0 + 150 - 200, volume 300 + 150 + 200
+    assert(restarted.contains("[1,0,50,650]"), restarted)
+    assert(whole.size === 3, whole)
+  }
+
+  test("streamingSprt (String key) survives a checkpointed stop/restart: " +
+    "output equals the uninterrupted run") {
+    import graft.streaming.SprtEvent
+    val evs = (0 until 60).flatMap { i =>
+      val ts = java.sql.Timestamp.valueOf(
+        f"2024-01-01 00:${i / 60}%02d:${i % 60}%02d")
+      Seq(SprtEvent("a", i.toLong + 1, ts, if ((i + 1) % 7 == 0) 1L else 0L),
+        SprtEvent("b", i.toLong + 101, ts, if (i % 3 == 0) 1L else 0L))
+    }
+    val batches = Seq(evs.take(40), evs.slice(40, 80), evs.drop(80))
+    def run(r: Option[Int]) =
+      twinRun(batches, "append", r)(ds => Streams.streamingSprt(ds).toDF())
+    val whole = run(None)
+    assert(whole.size === evs.size)
+    assert(whole.exists(_.contains("accept_h0")), "stream a decides")
+    assert(run(Some(1)) === whole, "restart after batch 0")
+    assert(run(Some(2)) === whole, "restart after batch 1")
+  }
+
+  test("streamingWindowFunnel's late-row guard survives a checkpointed " +
+    "stop/restart: a row older than the pre-restart horizon counts in " +
+    "n_late") {
+    import graft.streaming.SeqEvent
+    def ev(u: Long, i: Long, t: String, sec: Long) =
+      SeqEvent(u, i, new java.sql.Timestamp(1700000000000L + sec * 1000L), t)
+    // batch 0 folds key 1 up to sec 150; after the restart a view at
+    // sec 120 is late, and the purchase completes the pre-restart pair
+    val batches = Seq(
+      Seq(ev(1, 1, "v", 100), ev(1, 2, "c", 150), ev(2, 3, "v", 100)),
+      Seq(ev(1, 4, "v", 120), ev(1, 5, "p", 200), ev(2, 6, "c", 130)))
+    def run(r: Option[Int]) = twinRun(batches, "update", r)(ds =>
+      Streams.streamingWindowFunnel(ds).toDF())
+    val whole = run(None)
+    val restarted = run(Some(1))
+    assert(restarted === whole)
+    assert(restarted.contains("[1,3,1]"),
+      s"level 3 with the late view counted: $restarted")
+    assert(restarted.contains("[2,2,0]"), restarted)
+  }
 }
