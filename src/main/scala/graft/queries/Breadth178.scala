@@ -170,7 +170,7 @@ object Breadth178 {
     * ENCODED domain (the '>'-separated `pattern` column too), so the
     * streaming screen rebuilds LIKE templates from mined patterns
     * without re-encoding. Shared: Column form here, plain-Scala twin
-    * [[encodeTokScala]] for the streaming JourneyProcessor, SQL twin
+    * [[encodeTokScala]] for the `Streams.streamingJourney` twin, SQL twin
     * [[encodeTokSql]] for the oracle. */
   private[graft] def encodeTok(c: Column): Column =
     replace(replace(replace(replace(replace(

@@ -1930,7 +1930,12 @@ object Streams {
     * `derive`, writes the result as this batch's generation
     * (overwrite-idempotent), applies retention (only the new generation
     * and its base stay — the base so a replay of THIS batch can still
-    * find it), and returns a fresh frame over the committed dir. */
+    * find it). One materialization per batch: the base is read with the
+    * schema `derive(None)` analyzes to (no inference job), the snapshot
+    * is collected once in its own order, written from those driver rows
+    * as one file and returned as a `LocalRelation` over them — consumers
+    * collect it with no Spark job, even after retention deletes its
+    * directory. Bound: one generation, |keys| rows, on the driver. */
   private def foldGeneration(ss: SparkSession, snapshotPath: String,
                              batchId: Long)
                             (derive: Option[DataFrame] => DataFrame): DataFrame = {
@@ -1940,14 +1945,18 @@ object Streams {
     val prevGen = newestCommitted(gens.filter(_._1 < batchId))
       .orElse(newestCommitted(gens.filter(_._1 > batchId)))
     val snapDir = s"$snapshotPath/batch_id=$batchId"
-    derive(prevGen.map(g => ss.read.parquet(g._2.toString)))
-      .write.mode("overwrite").parquet(snapDir)
+    val fresh = derive(None)
+    val derived = prevGen.fold(fresh)(g =>
+      derive(Some(ss.read.schema(fresh.schema).parquet(g._2.toString))))
+    val local = ss.createDataFrame(java.util.Arrays.asList(derived.collect(): _*),
+      derived.schema)
+    local.coalesce(1).write.mode("overwrite").parquet(snapDir)
     val keep = Set(batchId) ++ prevGen.map(_._1)
     gens.filterNot(g => keep.contains(g._1)).foreach { case (_, dir) =>
       dir.getFileSystem(ss.sessionState.newHadoopConf())
         .delete(dir, true): Unit
     }
-    ss.read.parquet(snapDir)
+    local
   }
 
   /** The reference's full tick, as one streaming query. Per micro-batch:
@@ -1964,11 +1973,11 @@ object Streams {
     *     `snapshotPath/batch_id=N` (also overwrite-idempotent: replaying
     *     batch N against snapshot N is a fixpoint);
     *  3. `onSnapshot` receives the new snapshot (the WS-broadcast seam,
-    *     S4/S5 — fan out to many clients via SnapshotFanout). CONSUME IT
-    *     WITHIN THE CALLBACK: the frame is lazy over the generation
-    *     directory, which retention deletes once two newer generations
-    *     exist — a deferred action on a stored frame can hit
-    *     FileNotFoundException.
+    *     S4/S5 — fan out to many clients via SnapshotFanout) as a
+    *     driver-local frame over the generation's rows: clients collect
+    *     it with no Spark job, and it stays readable after retention
+    *     deletes the generation directory. Bound: one generation,
+    *     |keys| rows, held on the driver per tick.
     *
     * Restart recovery: the freshest snapshot generation is rediscovered
     * from the directory listing (including after a checkpoint reset —
@@ -2001,7 +2010,7 @@ object Streams {
               .unionByName(batchCols))
           case None => latestSnapshot(batchCols)
         }
-        onSnapshot(snap.drop("batch_id"), batchId)
+        onSnapshot(snap, batchId)
       }
       .start()
 
@@ -2011,11 +2020,13 @@ object Streams {
     * `format("graft-ticks")` ⇒ shape (P1–P5, tick-constant stamp,
     * `Ingest.shapeTicks`) ⇒ idempotent store generation ⇒ incremental
     * latest-per-SYMBOL snapshot ⇒ `onSnapshot` (the S4/S5 push seam,
-    * fan out via [[SnapshotFanout]]). Store and snapshot follow the
-    * same overwrite/`_SUCCESS`/retention discipline as
-    * `startSnapshotStream` (shared `foldGeneration`): replayed batches
-    * are fixpoints, checkpoint resets inherit the surviving
-    * generation — and the SOURCE side of a restart re-reads no payload
+    * fan out via [[SnapshotFanout]]; the frame is driver-local, |symbols|
+    * rows in dashboard order, so every client reads the same rows with no
+    * Spark job). A tick runs three Spark jobs: store write, snapshot
+    * collect, generation write. Store and snapshot follow the same
+    * overwrite/`_SUCCESS`/retention discipline as `startSnapshotStream`
+    * (shared `foldGeneration`): replayed batches are fixpoints,
+    * checkpoint resets inherit the surviving generation — and the SOURCE side of a restart re-reads no payload
     * it already processed, because offsets are committed tick ids.
     * Per-tick cost ∝ |symbols| + |batch|, never |history|. */
   def startQuoteStream(spark: SparkSession, stagingDir: String,
@@ -2035,9 +2046,10 @@ object Streams {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           shaped.write.mode("overwrite").parquet(s"$storePath/batch_id=$batchId")
-          val snap = foldGeneration(ss, snapshotPath, batchId) {
-            case Some(p) => quoteSnapshot(p.unionByName(shaped))
-            case None => quoteSnapshot(shaped)
+          // base ∪ tick is bounded by |symbols| + |tick|: one task runs
+          // the window and the global sort with no exchange
+          val snap = foldGeneration(ss, snapshotPath, batchId) { base =>
+            quoteSnapshot(base.fold(shaped)(_.unionByName(shaped)).coalesce(1))
           }
           onSnapshot(snap, batchId)
         } finally shaped.unpersist(blocking = false): Unit
@@ -2157,11 +2169,13 @@ final class KeyedFold[K, I, S, O](stateName: String, enc: Encoder[S],
   }
 }
 
-/** Multi-client fan-out of snapshot pushes — the reference broadcasts to
-  * ALL open sockets and tolerates per-client failure
-  * (`api/server.js:166-193`): one client's exception is recorded, the
-  * rest still receive the snapshot. Register/unregister is concurrent
-  * (clients connect and drop while ticks fire). */
+/** Multi-client fan-out of snapshot pushes — the reference queries once,
+  * broadcasts the same rows to ALL open sockets and tolerates per-client
+  * failure (`api/server.js:166-193`): one client's exception is recorded,
+  * the rest still receive the snapshot. The snapshot streams hand it a
+  * driver-local frame, so each client's read costs no Spark job and the
+  * client count does not change a tick's job count. Register/unregister
+  * is concurrent (clients connect and drop while ticks fire). */
 final class SnapshotFanout {
   private val clients =
     new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, Long) => Unit]

@@ -12,23 +12,6 @@ class MemoSpec extends SparkSpec {
   private def builds(name: String): Long =
     Memo.stats(spark).find(_.name == name).map(_.builds).getOrElse(0L)
 
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.graft.SparkInternals.flushListenerBus(sc)
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      org.apache.spark.graft.SparkInternals.flushListenerBus(sc)
-      (r, jobs.get())
-    } finally sc.removeSparkListener(l)
-  }
-
   private def storeDirs(): Set[String] =
     Option(Memo.root.toFile.list()).map(_.toSet).getOrElse(Set.empty)
 

@@ -17,4 +17,36 @@ abstract class SparkSpec extends AnyFunSuite {
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Runs `body` under the RocksDB state store provider, which
+    * `transformWithState` requires, and restores the previous setting. */
+  def withRocks[A](body: => A): A = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** `body`'s result and the number of Spark jobs started while it ran
+    * (the listener bus is drained before and after). */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graft.SparkInternals.flushListenerBus(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.graft.SparkInternals.flushListenerBus(sc)
+      (r, jobs.get())
+    } finally sc.removeSparkListener(l)
+  }
 }

@@ -207,10 +207,7 @@ class StreamingSpec extends SparkSpec {
     "restart and the folded deltas equal the generation-fold snapshot on the same input") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.EventRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       val ckpt = Files.createTempDirectory("graft_tws_ckpt").toString
       def er(id: Long, minute: Int, user: Long, v: Double) =
         EventRow(id, java.time.LocalDateTime.parse(f"2024-01-01T10:$minute%02d:00"),
@@ -286,11 +283,6 @@ class StreamingSpec extends SparkSpec {
       // and its (id, value) projection equals the narrow form's fold
       assert(foldedRows.view.mapValues(e => (e.event_id, e.value)).toMap
         == folded.toMap)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -299,10 +291,7 @@ class StreamingSpec extends SparkSpec {
     "seqPatterns prefix over the SAME events (exactly-once state)") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.EventRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       val ckpt = Files.createTempDirectory("graft_journey_ckpt").toString
       def er(id: Long, minute: Int, user: Long, typ: String) =
         EventRow(id, java.time.LocalDateTime.parse(f"2024-01-01T10:$minute%02d:00"),
@@ -342,11 +331,6 @@ class StreamingSpec extends SparkSpec {
       assert(folded.toMap == want,
         s"post-restart journeys diverged from the batch prefix: " +
           s"$folded vs $want")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -356,10 +340,7 @@ class StreamingSpec extends SparkSpec {
     "exactly like an independent subsequence check") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.EventRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       def er(id: Long, minute: Int, user: Long, typ: String) =
         EventRow(id, java.time.LocalDateTime.parse(f"2024-01-01T10:$minute%02d:00"),
           user, typ, 1.0, "{}")
@@ -416,11 +397,6 @@ class StreamingSpec extends SparkSpec {
         s"pattern screen diverged: $matches vs $expected")
       // the frozen-at-8 user matched only the pure-'a' patterns
       assert(matches.filter(_._1 == 4L).map(_._2) == Set("a", "a>a", "a>a>a"))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -428,10 +404,7 @@ class StreamingSpec extends SparkSpec {
     "on in-order delivery, including the zero-variance null") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.EventRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       def er(id: Long, minute: Int, user: Long, v: Double) =
         EventRow(id, java.time.LocalDateTime.parse(f"2024-01-01T10:$minute%02d:00"),
           user, "click", v, "{}")
@@ -463,11 +436,6 @@ class StreamingSpec extends SparkSpec {
       assert(got.exists { case (u, _, _, _, z) => u == 2L && z.isEmpty })
       assert(got.exists { case (u, id, _, _, z) =>
         u == 1L && id == 7L && z.exists(_ > 3) })
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -475,10 +443,7 @@ class StreamingSpec extends SparkSpec {
     "on in-order delivery, including the zero-peak null") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.EventRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       def er(id: Long, minute: Int, user: Long, v: Double) =
         EventRow(id, java.time.LocalDateTime.parse(f"2024-01-01T10:$minute%02d:00"),
           user, "tick", v, "{}")
@@ -507,11 +472,6 @@ class StreamingSpec extends SparkSpec {
       // worst drawdown really is the 12 -> 3 trough; zero-peak key is null
       assert(got.exists { case (u, _, _, dd) => u == 1L && dd.contains(0.75) })
       assert(got.exists { case (u, _, _, dd) => u == 2L && dd.isEmpty })
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -840,6 +800,68 @@ class StreamingSpec extends SparkSpec {
     assert(stored == Set(("btc", 1.0), ("eth", 2.0), ("btc", 3.0), ("eth", 9.0)))
   }
 
+  test("a quote tick materializes its snapshot once: at most 3 Spark jobs " +
+    "whatever the fanout client count, rows pushed in dashboard order, and " +
+    "the pushed frame outlives its generation directory") {
+    import graft.sources.Sources
+    import graft.streaming.SnapshotFanout
+    import scala.jdk.CollectionConverters._
+    def ts(s: Int) = Timestamp.valueOf(f"2024-03-01 00:00:$s%02d")
+    def coin(sym: String, price: Double, cap: String) =
+      s"""{"symbol":"$sym","name":"$sym coin","current_price":$price,"market_cap":$cap}"""
+    def capRows(df: org.apache.spark.sql.DataFrame): Seq[(String, Option[Double])] =
+      df.select("symbol", "market_cap").collect().toSeq
+        .map(r => r.getString(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
+    // two null market caps and a three-way market-cap tie across the ticks
+    val tick1 = Seq(coin("BTC", 1.0, "9.0"), coin("ETH", 2.0, "5.0"),
+      coin("DOGE", 0.1, "null"), coin("ADA", 0.5, "5.0"))
+    val tick2 = Seq(coin("BTC", 3.0, "9.5"), coin("XRP", 0.6, "5.0"),
+      coin("SOL", 4.0, "null"))
+    val dashboard = Seq("btc" -> Some(9.5), "ada" -> Some(5.0), "eth" -> Some(5.0),
+      "xrp" -> Some(5.0), "doge" -> None, "sol" -> None)
+    /** Jobs of the second tick, what each client got for it, the frame
+      * handed to onSnapshot and that tick's generation directory. */
+    def run(clients: Int) = {
+      val root = Files.createTempDirectory("graft_qjobs").toString
+      def stage(coins: Seq[String], t: Timestamp): Unit =
+        Sources.stageTickPayload(spark, () => coins.mkString("[", ",", "]"),
+          s"$root/ticks", t): Unit
+      val fanout = new SnapshotFanout
+      val pushed = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[(String, Option[Double])])]
+      (0 until clients).foreach { c =>
+        fanout.register(s"client-$c", (df, b) => pushed.add(b -> capRows(df)): Unit)
+      }
+      var last: (org.apache.spark.sql.DataFrame, Long) = null
+      stage(tick1, ts(1))
+      val q = Streams.startQuoteStream(spark, s"$root/ticks", s"$root/store",
+          s"$root/ckpt", s"$root/snap", Trigger.ProcessingTime(0)) { (snap, b) =>
+        last = (snap, b)
+        fanout.broadcast(snap, b): Unit
+      }
+      try {
+        q.processAllAvailable()
+        val (_, jobs) = jobsDuring { stage(tick2, ts(2)); q.processAllAvailable() }
+        val (frame, batch) = last
+        val got = pushed.asScala.toSeq.collect { case (b, rows) if b == batch => rows }
+        (jobs, got, frame, s"$root/snap/batch_id=$batch")
+      } finally q.stop()
+    }
+    val (jobs1, got1, _, _) = run(1)
+    val (jobs3, got3, frame, genDir) = run(3)
+    assert(jobs1 <= 3, s"a quote tick ran $jobs1 Spark jobs")
+    assert(jobs3 == jobs1, s"3 fanout clients: $jobs3 jobs, 1 client: $jobs1")
+    assert(got1 == Seq(dashboard), s"$got1")
+    assert(got3 == Seq.fill(3)(dashboard), s"$got3")
+    // the generation is one file holding the same rows in the same order
+    val parts = new java.io.File(genDir).listFiles().map(_.getName)
+      .filter(_.endsWith(".parquet"))
+    assert(parts.length == 1, parts.mkString(", "))
+    assert(capRows(spark.read.parquet(genDir)) == dashboard)
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(genDir))
+    assert(!new java.io.File(genDir).exists())
+    assert(capRows(frame) == dashboard, "the pushed frame is driver-local")
+  }
+
   test("merge stream accepts a MAP-typed data column: excluded from the " +
     "tie-break (window ORDER BY on a map throws), carried through the merge") {
     implicit val sqlCtx = spark.sqlContext
@@ -898,10 +920,7 @@ class StreamingSpec extends SparkSpec {
     "window form on in-order delivery, across batch boundaries") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.EventRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       def er(id: Long, minute: Int, user: Long, v: Double) =
         EventRow(id, java.time.LocalDateTime.parse(f"2024-01-01T10:$minute%02d:00"),
           user, "tick", v, "{}")
@@ -933,11 +952,6 @@ class StreamingSpec extends SparkSpec {
         u == 1L && move.contains(250L) && gap.contains(180000000L) })
       assert(got.exists { case (u, _, move, gap) =>
         u == 2L && move.isEmpty && gap.isEmpty })
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -945,10 +959,7 @@ class StreamingSpec extends SparkSpec {
     "bit-for-bit, across batch boundaries; single-tick key unscored") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.EventRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       def er(id: Long, minute: Int, user: Long, v: Double) =
         EventRow(id, java.time.LocalDateTime.parse(f"2024-01-01T10:$minute%02d:00"),
           user, "tick", v, "{}")
@@ -977,11 +988,6 @@ class StreamingSpec extends SparkSpec {
         sq.contains(250000L) && vol.contains(math.sqrt(125000.0) / 100.0) })
       assert(got.exists { case (u, _, m, sq, vol) => u == 2L && m == 0L &&
         sq.isEmpty && vol.isEmpty })
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -989,10 +995,7 @@ class StreamingSpec extends SparkSpec {
     "trough-then-peak spanning a batch boundary") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.EventRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       def er(id: Long, minute: Int, user: Long, v: Double) =
         EventRow(id, java.time.LocalDateTime.parse(f"2024-01-01T10:$minute%02d:00"),
           user, "tick", v, "{}")
@@ -1017,11 +1020,6 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(got == want, s"stream vs batch: $got vs $want")
       assert(got == Set((1L, 5L, 400L)))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1029,10 +1027,7 @@ class StreamingSpec extends SparkSpec {
     "bit-for-bit, the prior window spanning a batch boundary") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.EventRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       def er(id: Long, minute: Int, v: Double) =
         EventRow(id, java.time.LocalDateTime.parse(f"2024-01-01T10:$minute%02d:00"),
           1L, "tick", v, "{}")
@@ -1061,11 +1056,6 @@ class StreamingSpec extends SparkSpec {
       assert(got == want, s"stream vs batch: $got vs $want")
       assert(got.exists { case (id, _, _, _, up, dn) => id == 6L && !up && dn })
       assert(got.exists { case (id, _, _, _, up, dn) => id == 7L && up && !dn })
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1073,10 +1063,7 @@ class StreamingSpec extends SparkSpec {
     "across micro-batches (incl. the DX and ADX warm-up boundaries)") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.OhlcBarRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       // 10 OHLC day bars with direction reversals (h >= c >= l so a
       // three-tick day reproduces the bar exactly: high, low, close)
       val bars = Seq( // (close, high, low) cents
@@ -1118,11 +1105,6 @@ class StreamingSpec extends SparkSpec {
       // boundary sanity: DX first defined at bar 4, ADX at bar 6
       assert(got.take(3).forall(_._2(2).isEmpty))
       assert(got(3)._2(2).isDefined && got(4)._2(3).isEmpty && got(5)._2(3).isDefined)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1130,10 +1112,7 @@ class StreamingSpec extends SparkSpec {
     "across micro-batch splits (incl. the supertrend band seed boundary)") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.{BarRow, OhlcBarRow}
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       val bars = Seq( // (close, high, low) cents, with reversals
         (1000L, 1050L, 980L), (1100L, 1120L, 990L), (1050L, 1130L, 1040L),
         (1200L, 1210L, 1000L), (1150L, 1260L, 1100L), (1080L, 1160L, 1020L),
@@ -1184,11 +1163,6 @@ class StreamingSpec extends SparkSpec {
         .sortBy(_._1).toSeq
       assert(gotS === wantS, "supertrend stream vs batch")
       assert(gotS.nonEmpty && gotS.size === 8) // 10 bars - 2 warm-up
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1196,10 +1170,7 @@ class StreamingSpec extends SparkSpec {
     "splits (the ring fill crosses a batch boundary)") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.BarRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       val closes = Seq(1000L, 1040L, 990L, 1100L, 1075L, 1120L, 1060L,
         1145L, 1130L, 1190L, 1170L, 1210L, 1180L, 1240L)
       val rows = closes.zipWithIndex.map { case (c, i) =>
@@ -1242,11 +1213,6 @@ class StreamingSpec extends SparkSpec {
         .sortBy(_._1).toSeq
       assert(gotI === wantI, "impulse stream vs batch")
       assert(gotI.map(_._2).distinct.size > 1, "fixture exercises classes")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1254,10 +1220,7 @@ class StreamingSpec extends SparkSpec {
     "micro-batch splits (the 100-return ring fill crosses a boundary)") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.BarRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       // 103 bars: alternating moves, then a spike — pct_rank scores on
       // the last two bars only (the ring fills at bar 101)
       val closes = (0 until 102).map(i =>
@@ -1304,11 +1267,6 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r => (r.getDate(0).toString, r.getLong(1)))
         .sortBy(_._1).toSeq
       assert(gotS === wantS, "streak stream vs batch")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1317,10 +1275,7 @@ class StreamingSpec extends SparkSpec {
     "post-restart output still equals batch bit-for-bit") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.BarRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       val ckpt = Files.createTempDirectory("graft_crsi_ckpt").toString
       val closes = (0 until 102).map(i =>
         if (i % 2 == 0) 10000L + (i % 7) * 3 else 10010L + (i % 5) * 2) :+ 20000L
@@ -1367,11 +1322,6 @@ class StreamingSpec extends SparkSpec {
       assert(got.sortBy(_._1).toSeq === want, "restarted stream vs batch")
       assert(got.count(_._4.nonEmpty) === 2,
         "the ring-scored bars land AFTER the restart")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1379,10 +1329,7 @@ class StreamingSpec extends SparkSpec {
     "splits (a regime reversal lands at a batch boundary)") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.OhlcBarRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       val bars = Seq( // (close, high, low) cents: uptrend, crash, recovery
         (1000L, 1050L, 980L), (1100L, 1120L, 1060L), (1180L, 1200L, 1150L),
         (1250L, 1270L, 1210L), (900L, 950L, 880L), (850L, 890L, 820L),
@@ -1416,11 +1363,6 @@ class StreamingSpec extends SparkSpec {
       assert(got.size === 10)
       // the fixture really exercises both regimes
       assert(got.exists(_._3) && got.exists(!_._3))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1428,10 +1370,7 @@ class StreamingSpec extends SparkSpec {
     "micro-batch splits (the open-carrying bar stream)") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.Ohlc4BarRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       val bars = Seq( // (o, h, l, c) cents
         (1000L, 1060L, 950L, 1040L), (1040L, 1100L, 1000L, 1020L),
         (1020L, 1150L, 1010L, 1140L), (1140L, 1160L, 1050L, 1060L),
@@ -1466,11 +1405,6 @@ class StreamingSpec extends SparkSpec {
           r.getDouble(2), r.getDouble(3), r.getDouble(4))).sortBy(_._1).toSeq
       assert(got === want, "heikin-ashi stream vs batch")
       assert(got.size === 7)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1478,10 +1412,7 @@ class StreamingSpec extends SparkSpec {
     "recurrences bit-for-bit across micro-batch splits (incl. a doji bar)") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.VolBarRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       val bars = Seq( // (h, l, c, vol) cents; bar 4 is a doji (h == l)
         (1060L, 950L, 1040L, 10L), (1100L, 1000L, 1020L, 25L),
         (1150L, 1010L, 1140L, 7L), (1100L, 1100L, 1100L, 12L),
@@ -1537,11 +1468,6 @@ class StreamingSpec extends SparkSpec {
       // the doji bar contributed exactly zero flow: its adl_q equals the
       // previous bar's
       assert(gotA(3)._2 === gotA(2)._2)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1550,10 +1476,7 @@ class StreamingSpec extends SparkSpec {
     "survive in the state store)") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.OhlcBarRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       // 11 day bars: (high, low, close) cents with doji (h==l) included
       val bars = Seq(
         (1100L, 1000L, 1050L), (1200L, 1080L, 1090L), (1150L, 1150L, 1150L),
@@ -1597,11 +1520,6 @@ class StreamingSpec extends SparkSpec {
           r.getLong(2), r.getDouble(3))).sortBy(_._1).toSeq
       assert(got.sortBy(_._1).toSeq === want, "mass-index stream vs batch")
       assert(want.size === bars.size - graft.queries.Breadth28.MassW + 1)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1610,10 +1528,7 @@ class StreamingSpec extends SparkSpec {
     "warm-up boundary and a volume tie)") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.{BarRow, VolBarRow}
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       val bars = Seq( // (close, vol) — vol down/up/tie transitions included
         (1000L, 10L), (1100L, 5L), (1210L, 20L), (1100L, 20L),
         (1155L, 8L), (1270L, 30L), (1200L, 2L), (1320L, 2L), (1250L, 40L))
@@ -1722,11 +1637,6 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r => (r.getDate(0).toString, r.getDouble(1),
           r.getDouble(2), r.getDouble(3))).sortBy(_._1).toSeq
       assert(gotE === wantE, "elder ray stream vs batch")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1734,10 +1644,7 @@ class StreamingSpec extends SparkSpec {
     "the series split across micro-batches (incl. the RSI warm-up boundary)") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.BarRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       // 20 daily bars with sign-alternating moves; cents chosen so the
       // doubles exercise non-terminating binary fractions (the /100, the
       // alpha products) — any operand-order drift between the stream's
@@ -1789,11 +1696,6 @@ class StreamingSpec extends SparkSpec {
       assert(gotW === wantW, "wilder rsi stream vs batch")
       // the warm-up boundary: bars 1..14 unscored, bar 15+ scored
       assert(gotW.take(14).forall(_._3.isEmpty) && gotW.drop(14).forall(_._3.isDefined))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1801,10 +1703,7 @@ class StreamingSpec extends SparkSpec {
     "the remembered trough pairs with a post-restart peak)") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.EventRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       val ckpt = Files.createTempDirectory("graft_bt_ckpt").toString
       def er(id: Long, minute: Int, v: Double) =
         EventRow(id, java.time.LocalDateTime.parse(f"2024-01-01T10:$minute%02d:00"),
@@ -1829,11 +1728,6 @@ class StreamingSpec extends SparkSpec {
       q2.processAllAvailable(); q2.stop()
       assert(snaps(1L) === ((3L, 400L)),
         "lost state would restart the fold and miss the trough->peak pair")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1841,10 +1735,7 @@ class StreamingSpec extends SparkSpec {
     "q_sharpe bit-for-bit, series split across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.{BarRow, EventRow}
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       // --- roll spread over ticks: bid-ask bounce with drift ---
       val vals = Seq(9.5, 10.5, 9.6, 10.6, 9.4, 10.5, 9.7, 10.8)
       def er(id: Long, minute: Int, v: Double) =
@@ -1900,11 +1791,6 @@ class StreamingSpec extends SparkSpec {
       assert((gotSharpe._2, gotSharpe._3) === wantSharpe,
         s"sharpe stream $gotSharpe vs batch $wantSharpe")
       assert(wantSharpe._2.isDefined)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1912,10 +1798,7 @@ class StreamingSpec extends SparkSpec {
     "post-restart bar folds from the remembered EMAs, bit-equal to batch)") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.BarRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       val ckpt = Files.createTempDirectory("graft_ema_ckpt").toString
       val closes = Seq(1000L, 1123L, 957L, 1201L, 1066L, 1300L)
       val bars = closes.zipWithIndex.map { case (c, i) =>
@@ -1952,11 +1835,6 @@ class StreamingSpec extends SparkSpec {
       assert(rows.size === closes.size)
       wantEma.foreach { case (d, e) => assert(rows(d)._1 === e, s"ema20 at $d") }
       wantMacd.foreach { case (d, m) => assert(rows(d)._2 === m, s"macd at $d") }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1968,11 +1846,7 @@ class StreamingSpec extends SparkSpec {
       twin: org.apache.spark.sql.Dataset[T] => org.apache.spark.sql.DataFrame)
       : Seq[String] = {
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       val ckpt = Files.createTempDirectory("graft_twin_ckpt").toString
       val mem = MemoryStream[T]
       val got = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -1989,9 +1863,6 @@ class StreamingSpec extends SparkSpec {
       }
       q.stop()
       got.synchronized(got.toSeq.sorted)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 

@@ -13,11 +13,7 @@ class StreamingVrSpec extends SparkSpec {
   test("streamingVarianceRatio last emit == batch aggregate across " +
     "micro-batch splits") {
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       val closes = Seq(1000L, 1040L, 990L, 1100L, 1075L, 1120L, 1060L,
         1145L, 1130L, 1190L, 1170L, 1210L, 1180L, 1240L)
       val rows = closes.zipWithIndex.map { case (c, i) =>
@@ -49,13 +45,6 @@ class StreamingVrSpec extends SparkSpec {
       assert(last._2 === batch.getLong(1), "n_days")
       assert(last._3 === batch.getLong(2), "n_windows")
       assert(last._4 === Some(batch.getDouble(3)), "vr bit parity")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

@@ -10,20 +10,9 @@ import org.apache.spark.sql.functions._
 class Wave107Spec extends SparkSpec {
   import spark.implicits._
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-      "RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("streamingHoltWinters == batch q_holt_winters bit-for-bit " +
     "across a micro-batch split") {
-    withRocksDb {
+    withRocks {
       implicit val sqlCtx = spark.sqlContext
       val closes = Seq(1000L, 1020L, 990L, 1050L, 1050L, 1010L, 1110L,
         1090L, 1200L)
@@ -58,7 +47,7 @@ class Wave107Spec extends SparkSpec {
 
   test("streamingCroston == batch q_croston bit-for-bit across a " +
     "micro-batch split, gaps carried through the state") {
-    withRocksDb {
+    withRocks {
       implicit val sqlCtx = spark.sqlContext
       // demand days 1, 2, 5, 12 with sizes 10, 5, 20, 7
       val days = Seq((1, 10L), (2, 5L), (5, 20L), (12, 7L))

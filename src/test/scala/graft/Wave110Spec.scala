@@ -9,20 +9,9 @@ import org.apache.spark.sql.functions._
 class Wave110Spec extends SparkSpec {
   import spark.implicits._
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-      "RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("streamingRollingMedian == batch q_rolling_median bit-for-bit " +
     "across a micro-batch split") {
-    withRocksDb {
+    withRocks {
       implicit val sqlCtx = spark.sqlContext
       val closes = Seq(1000L, 1020L, 990L, 1050L, 1050L, 1010L, 1110L,
         1090L, 1200L, 950L)
@@ -54,7 +43,7 @@ class Wave110Spec extends SparkSpec {
 
   test("streamingCsSpread == batch q_cs_spread bit-for-bit across a " +
     "micro-batch split") {
-    withRocksDb {
+    withRocks {
       implicit val sqlCtx = spark.sqlContext
       val hls = Seq((200L, 100L), (400L, 200L), (300L, 250L),
         (500L, 300L), (450L, 400L))

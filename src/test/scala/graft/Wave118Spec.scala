@@ -9,17 +9,6 @@ import org.apache.spark.sql.functions._
 class Wave118Spec extends SparkSpec {
   import spark.implicits._
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-      "RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private val closes = Seq(1000L, 1020L, 990L, 1050L, 1050L, 1010L,
     1110L, 1090L, 1200L, 950L, 980L, 1030L)
   private val vols = Seq(5L, 3L, 8L, 2L, 9L, 1L, 4L, 7L, 6L, 2L, 3L, 5L)
@@ -31,7 +20,7 @@ class Wave118Spec extends SparkSpec {
     .withColumn("ts", to_timestamp_ntz(col("at"))).drop("at")
 
   test("streamingVwma == batch q_vwma across a micro-batch split") {
-    withRocksDb {
+    withRocks {
       implicit val sqlCtx = spark.sqlContext
       val rows0 = closes.zip(vols).zipWithIndex.map { case ((c, v), i) =>
         VolBarRow(1L, java.time.LocalDate.of(2024, 1, i + 1), c, c, c, v) }
@@ -58,7 +47,7 @@ class Wave118Spec extends SparkSpec {
 
   test("streamingEnvelope and streamingDisparity == their batch twins " +
     "across micro-batch splits") {
-    withRocksDb {
+    withRocks {
       implicit val sqlCtx = spark.sqlContext
       val rows0 = closes.zipWithIndex.map { case (c, i) =>
         BarRow(1L, java.time.LocalDate.of(2024, 1, i + 1), c) }

@@ -101,11 +101,7 @@ class Wave124Spec extends SparkSpec {
     "micro-batch splits") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.{BarRow, Streams}
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
     val closes = Seq(1000L, 1100L, 1210L, 1100L, 1155L, 1270L, 1200L)
     val rows = closes.zipWithIndex.map { case (c, i) =>
       BarRow(1L, java.time.LocalDate.of(2024, 1, i + 1), c) }
@@ -130,13 +126,6 @@ class Wave124Spec extends SparkSpec {
       .map(r => (r.getDate(0).toString, r.getDouble(1), r.getDouble(2)))
       .sortBy(_._1).toSeq
     assert(gotS === gotB)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

@@ -43,11 +43,7 @@ class Wave129Spec extends SparkSpec {
     "micro-batch splits (a clamp landing on the boundary)") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.BarRow
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       val closes = Seq(1000L, 1100L, 800L, 850L, 1200L, 900L)
       val rows = closes.zipWithIndex.map { case (c, i) =>
         BarRow(1L, java.time.LocalDate.of(2024, 1, i + 1), c) }
@@ -74,13 +70,6 @@ class Wave129Spec extends SparkSpec {
         .sortBy(_._1).toSeq
       assert(gotS === gotB)
       assert(gotS.map(_._2) === Seq(0L, 100L, 0L, 50L, 400L, 100L))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

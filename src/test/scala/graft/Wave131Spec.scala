@@ -14,11 +14,7 @@ class Wave131Spec extends SparkSpec {
   test("streamingSequenceMatch == batch q_sequence_match verdicts " +
     "across splits (error on the batch boundary resets the signup)") {
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       // user 1: s v | e | s p  → matched (second signup converts)
       // user 2: s | e | p      → NOT matched (error between)
       // user 3: p s v          → NOT matched (wrong order)
@@ -63,13 +59,6 @@ class Wave131Spec extends SparkSpec {
       assert(fin === batch)
       assert(fin(1L)._2 === true && fin(2L)._2 === false &&
         fin(3L)._2 === false)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

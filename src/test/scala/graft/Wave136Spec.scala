@@ -14,11 +14,7 @@ class Wave136Spec extends SparkSpec {
   test("streamingWindowFunnel == batch q_window_funnel histogram " +
     "across splits") {
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       val H = 3600L // seconds; window is 48 h
       // (user, idx, type, offset seconds)
       val evs = Seq(
@@ -74,24 +70,13 @@ class Wave136Spec extends SparkSpec {
       val streamHist = finals.values.groupBy(identity)
         .map { case (l, v) => l -> v.size.toLong }
       assert(streamHist === batchHist)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("funnel + sequence-match late-row guard: a cross-batch " +
     "out-of-order event is dropped and COUNTED, never folded silently") {
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       def ev(u: Long, i: Long, t: String, sec: Long) =
         SeqEvent(u, i, new java.sql.Timestamp(1700000000000L + sec * 1000L),
           t.take(1))
@@ -120,13 +105,6 @@ class Wave136Spec extends SparkSpec {
       assert(sl.head.getBoolean(2) === true,
         "the late error is dropped, so the signup still converts")
       assert(sl.head.getLong(3) === 1L, "late error counted in n_late")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

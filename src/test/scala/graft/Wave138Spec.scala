@@ -37,11 +37,7 @@ class Wave138Spec extends SparkSpec {
     "across splits (the alarm fires mid-stream)") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.BarRow
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       val closes = Seq.fill(8)(1000L) ++ Seq.fill(10)(1700L)
       val rows = closes.zipWithIndex.map { case (c, i) =>
         BarRow(1L, java.time.LocalDate.of(2024, 1, i + 1), c) }
@@ -68,13 +64,6 @@ class Wave138Spec extends SparkSpec {
           r.getBoolean(3))).sortBy(_._1).toSeq
       assert(gotS === gotB)
       assert(gotS.exists(_._4) && !gotS.head._4)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

@@ -10,17 +10,6 @@ import org.apache.spark.sql.functions._
 class Wave156Spec extends SparkSpec {
   import spark.implicits._
 
-  private def withRocks(body: => Unit): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("streamingSprt last emit == batch q_sprt across micro-batch " +
     "splits") { withRocks {
     implicit val sqlCtx = spark.sqlContext

@@ -58,10 +58,7 @@ class Wave45Spec extends SparkSpec {
     val barRows = closes.zipWithIndex.map { case (c, i) =>
       BarRow(1L, java.time.LocalDate.of(2024, 1, i + 1), c) }
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       val mem = MemoryStream[BarRow]
       val q = Streams.streamingHolt(mem.toDS())
         .writeStream.format("memory").queryName("holt_snap")
@@ -70,13 +67,6 @@ class Wave45Spec extends SparkSpec {
         mem.addData(rg.map(barRows): _*); q.processAllAvailable()
       }
       q.stop()
-    } finally {
-      prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
     val got = spark.table("holt_snap")
       .select("day", "level", "trend", "forecast", "fc_err")

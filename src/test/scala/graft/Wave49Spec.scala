@@ -26,10 +26,7 @@ class Wave49Spec extends SparkSpec {
   test("streamingCmsCells: the live sketch equals the batch sketch " +
     "over the same arrivals, across micro-batch splits") {
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       val keys = (0L until 300L).map(_ % 37L) // skewed arrivals
       val mem = MemoryStream[Long]
       val q = Streams.streamingCmsCells(mem.toDS(), 16)
@@ -39,13 +36,6 @@ class Wave49Spec extends SparkSpec {
         mem.addData(rg.map(keys): _*); q.processAllAvailable()
       }
       q.stop()
-    } finally {
-      prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
     // last emit per cell = the live sketch
     val live = spark.table("cms_snap")

@@ -21,10 +21,7 @@ class Wave55Spec extends SparkSpec {
     val ocRows = bars.zipWithIndex.map { case ((o, c), i) =>
       OcBarRow(1L, java.time.LocalDate.of(2024, 1, i + 1), o, c) }
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       val mem = MemoryStream[OcBarRow]
       val q = Streams.streamingThreeBar(mem.toDS())
         .writeStream.format("memory").queryName("threebar_snap")
@@ -35,13 +32,6 @@ class Wave55Spec extends SparkSpec {
         mem.addData(rg.map(ocRows): _*); q.processAllAvailable()
       }
       q.stop()
-    } finally {
-      prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
     val got = spark.table("threebar_snap")
       .select("day", "three_white_soldiers", "three_black_crows",

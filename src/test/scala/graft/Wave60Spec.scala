@@ -38,10 +38,7 @@ class Wave60Spec extends SparkSpec {
       }.sortBy(r => (r._1, r._2))
     }
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
       val mem = MemoryStream[TickRow]
       val q = Streams.streamingVpinBuckets(mem.toDS(), barVol)
         .writeStream.format("memory").queryName("vpin_snap")
@@ -50,13 +47,6 @@ class Wave60Spec extends SparkSpec {
         mem.addData(rg.map(ticks): _*); q.processAllAvailable()
       }
       q.stop()
-    } finally {
-      prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
     val got = spark.table("vpin_snap")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),

@@ -39,11 +39,7 @@ class Wave71Spec extends SparkSpec {
   test("streamingEwmaVol == batch q_ewma_vol bit-for-bit across a " +
     "micro-batch split") {
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocks {
     val closes = Seq(1000L, 1020L, 990L, 1050L, 1050L, 1010L, 1110L)
     val barRows = closes.zipWithIndex.map { case (c, i) =>
       BarRow(1L, java.time.LocalDate.of(2024, 1, i + 1), c) }
@@ -70,13 +66,6 @@ class Wave71Spec extends SparkSpec {
       .sortBy(_._1).toSeq
     assert(got === want)
     assert(got.size === 7 && got.head._2 === None)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 

@@ -29,20 +29,9 @@ class Wave78Spec extends SparkSpec {
       math.max(o, c), math.min(o, c))
   }
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("streamingQstick and streamingFractals match their batch forms " +
     "across micro-batch splits") {
-    withRocksDb {
+    withRocks {
       implicit val sqlCtx = spark.sqlContext
       val memQ = MemoryStream[FullBarRow]
       val qq = Streams.streamingQstick(memQ.toDS())
