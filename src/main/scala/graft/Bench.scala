@@ -29,25 +29,10 @@ object Bench {
     // wall time alone cannot distinguish driver-machine contention from a
     // real regression (round-10: chain_day_vols 0.97→32.4 s across rounds
     // with untouched code; round-11: the same ambiguity for the graph
-    // tier, which only chain lines could adjudicate).
-    val taskMs = new java.util.concurrent.atomic.AtomicLong
-    val shufMb = new java.util.concurrent.atomic.AtomicLong // bytes, read+write
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            taskMs.addAndGet(m.executorRunTime)
-            shufMb.addAndGet(m.shuffleReadMetrics.totalBytesRead +
-              m.shuffleWriteMetrics.bytesWritten)
-          }
-        }
-      })
-    def snapshot(): (Long, Long) = {
-      org.apache.spark.graft.SparkInternals.flushListenerBus(spark.sparkContext)
-      (taskMs.get(), shufMb.get())
-    }
+    // tier, which only chain lines could adjudicate). Executor CPU time
+    // next to run time is what tells the two apart.
+    val metrics = Metrics.attach(spark)
+    val start = metrics.snapshot()
     // SPARK_GRAFT_BENCH_RUNS: warm repeats after the discarded cold run
     // (default 3 → median-of-3). 0 = report the cold run itself — the
     // scale-step harness times each query once (an sf10 query can cost
@@ -57,35 +42,54 @@ object Bench {
     // EVERY query line carries task/shuffle attribution (round-11
     // verdict: a cluster of graph queries moved 3.5–9× driver-to-driver
     // on unchanged code and only chain lines had the metrics to say box
-    // vs work). task_s ≈ wall·threads ⇒ the work itself is that big;
-    // wall ≫ task_s/threads ⇒ the box was oversubscribed. Cold and warm
-    // are attributed separately — warm runs reread the cold run's
-    // per-line caches, so their task_s is the marginal cost. memo_builds
+    // vs work). task_s ≈ cpu_s ⇒ the work itself is that big; task_s ≫
+    // cpu_s ⇒ tasks waited for a core, the box was oversubscribed. Cold
+    // and warm are attributed separately — warm runs reread the cold
+    // run's per-line caches, so their task_s is the marginal cost. memo_builds
     // counts the memo store builds of the cold run: a consumer line that
     // builds a chain's entry is paying for that chain.
     val queryMeta = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def memoBuilds(): Long = graft.store.Memo.stats(spark).map(_.builds).sum
-    def timedWarm(name: String)(body: => Unit): (String, Double) = {
-      val (tc0, sc0) = snapshot()
+    // The cold run's account also splits the line's wall into frame
+    // construction (build_ms, timed inside the timed body; it holds the
+    // frame's own eager analysis and any memo build the query body
+    // runs) and the Catalyst phases of the queries that ran.
+    def timedWarm(name: String)(
+        build: => org.apache.spark.sql.DataFrame): (String, Double) = {
+      var buildNs = 0L
+      def body(): Unit = {
+        val t0 = System.nanoTime()
+        val df = build
+        buildNs = System.nanoTime() - t0
+        df.count(): Unit
+      }
+      val c0 = metrics.snapshot()
       val b0 = memoBuilds()
-      val cold = once(name)(body)
-      val (tc1, sc1) = snapshot()
+      val cold = once(name)(body())
+      val c = metrics.since(c0)
+      val buildMs = buildNs / 1e6
       val builds = memoBuilds() - b0
-      def emit(taskS: Double, shufMbV: Double): Unit =
+      def emit(taskS: Double, cpuS: Double, shufMbV: Double): Unit =
         queryMeta(name) =
-          s"""{"cold":${r3(cold)},"task_cold_s":${r3((tc1 - tc0) / 1e3)},""" +
-            s""""shuf_cold_mb":${r3((sc1 - sc0) / 1e6)},"memo_builds":$builds,""" +
-            s""""task_s":${r3(taskS)},"shuf_mb":${r3(shufMbV)}}"""
-      if (cold < 0 || warmRuns == 0) { emit(-1.0, -1.0); name -> cold }
+          s"""{"cold":${r3(cold)},"task_cold_s":${r3(c.runS)},""" +
+            s""""shuf_cold_mb":${r3(c.shuffleB / 1e6)},"memo_builds":$builds,""" +
+            s""""task_s":${r3(taskS)},"cpu_s":${r3(cpuS)},"shuf_mb":${r3(shufMbV)},""" +
+            s""""cpu_cold_s":${r3(c.cpuS)},"gc_cold_s":${r3(c.gcS)},""" +
+            s""""spill_cold_mb":${r3(c.spillB / 1e6)},""" +
+            s""""peak_mem_mb":${r3(c.peakMemB / 1e6)},"jobs":${c.jobs},""" +
+            s""""stages":${c.stages},"tasks":${c.tasks},"build_ms":${r3(buildMs)},""" +
+            s""""analysis_ms":${c.analysisMs},"optimization_ms":${c.optimizationMs},""" +
+            s""""planning_ms":${c.planningMs}}"""
+      if (cold < 0 || warmRuns == 0) { emit(-1.0, -1.0, -1.0); name -> cold }
       else {
         val runs = (1 to warmRuns).map { _ =>
-          val (t0, s0) = snapshot()
-          val w = once(name)(body)
-          val (t1, s1) = snapshot()
-          (w, (t1 - t0) / 1e3, (s1 - s0) / 1e6)
+          val w0 = metrics.snapshot()
+          val w = once(name)(body())
+          val m = metrics.since(w0)
+          (w, m.runS, m.cpuS, m.shuffleB / 1e6)
         }
         def med(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
-        emit(med(runs.map(_._2)), med(runs.map(_._3)))
+        emit(med(runs.map(_._2)), med(runs.map(_._3)), med(runs.map(_._4)))
         name -> (if (runs.exists(_._1 < 0)) -1.0 else med(runs.map(_._1)))
       }
     }
@@ -123,12 +127,13 @@ object Bench {
     val chainMeta = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def timedChain(c: graft.queries.Chains.Chain): (String, Double) = {
       val name = c.name
-      val (t0, s0) = snapshot()
+      val c0 = metrics.snapshot()
       val w1 = once(name) { c(spark, sfDir).count(): Unit }
-      val (t1, s1) = snapshot()
-      val (w2, t2, s2) =
-        if (w1 < 0 || warmRuns == 0) (-1.0, t1, s1)
-        else {
+      val m1 = metrics.since(c0)
+      val (w2, m2) =
+        if (w1 < 0 || warmRuns == 0) {
+          (-1.0, metrics.since(metrics.snapshot())) // nothing ran: all zero
+        } else {
           // sweep BETWEEN the two timings (outside both timed sections):
           // run #1's leftover persists/checkpoints otherwise tax run #2
           // with block-eviction and GC pressure run #1 never paid —
@@ -137,6 +142,7 @@ object Bench {
           // everything itself from parquet-backed upstreams, so nothing
           // it references is cached (the Harness.sweepStorage invariant).
           sweepStorage()
+          val c2 = metrics.snapshot()
           val w = once(s"$name#2") {
             // noop sink, NOT count(): count() lets the optimizer
             // column-prune a map-only rebuild down to a parquet row-count
@@ -150,13 +156,13 @@ object Bench {
             try df.unpersist(blocking = false)
             catch { case scala.util.control.NonFatal(_) => }
           }
-          val (t, sh) = snapshot()
-          (w, t, sh)
+          (w, metrics.since(c2))
         }
       chainMeta(name) =
         s"""{"wall1":${r3(w1)},"wall2":${r3(w2)},""" +
-          s""""task1_s":${r3((t1 - t0) / 1e3)},"task2_s":${r3((t2 - t1) / 1e3)},""" +
-          s""""shuf1_mb":${r3((s1 - s0) / 1e6)},"shuf2_mb":${r3((s2 - s1) / 1e6)}}"""
+          s""""task1_s":${r3(m1.runS)},"task2_s":${r3(m2.runS)},""" +
+          s""""cpu1_s":${r3(m1.cpuS)},"cpu2_s":${r3(m2.cpuS)},""" +
+          s""""shuf1_mb":${r3(m1.shuffleB / 1e6)},"shuf2_mb":${r3(m2.shuffleB / 1e6)}}"""
       val best = if (w2 >= 0) math.min(w1, w2) else w1
       name -> best
     }
@@ -169,7 +175,7 @@ object Bench {
     val results = chain ++ SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => selected(name) }
       .map { case (name, fn) =>
-        val line = timedWarm(name) { fn(spark, sfDir).count(): Unit }
+        val line = timedWarm(name)(fn(spark, sfDir))
         sweepStorage() // this line's persists must not tax the next line
         line
       }
@@ -195,8 +201,18 @@ object Bench {
         s""""builds":${m.builds},"build_s":${r3(m.buildMs / 1e3)},""" +
         s""""mb":${r3(m.bytes / 1e6)}}"""
     }.mkString("{", ",", "}")
+    // The whole run's contention verdict: executor run time over CPU time
+    // above this bound means tasks mostly waited for a core, so walls
+    // measure the box, not the work (the bound perfbench's
+    // host.contended uses).
+    val contendedOver = 3.0
+    val whole = metrics.since(start)
+    val runOverCpu = if (whole.cpuNs > 0) whole.runS / whole.cpuS else 0.0
+    val contended = runOverCpu > contendedOver
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","failures":$failures,"warm":true,"queries":$qs,"chains":$chains,"qmeta":$qmeta,"memo":$memo,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","failures":$failures,"warm":true,""" +
+      s""""contended":$contended,"run_over_cpu":${r3(runOverCpu)},"contended_over":{"run_over_cpu":$contendedOver},""" +
+      s""""queries":$qs,"chains":$chains,"qmeta":$qmeta,"memo":$memo,"sf":"$sfDir"}"""
     // Emit both ways: bare line on real stdout (build.sbt sets
     // run/outputStrategy := StdoutOutput so sbt does not "[info]"-prefix
     // it), and a file a consumer can read without scraping sbt logs.

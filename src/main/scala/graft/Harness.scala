@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The storage sweep shared by the single-session harness mains (Bench,
-  * Verify, StageProbe); their session comes from `Graft.session`. */
+  * Verify); their session comes from `Graft.session`. */
 object Harness {
 
   /** Drop EVERY cached block in the session — CacheManager entries

@@ -71,12 +71,8 @@ object Breadth101 {
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
 
   /** Mutual-kNN undirected edges: kept only where BOTH endpoints rank
-    * each other top-k (canonical a<b orientation). */
-  private[graft] def mutualKnnEdges(emb: DataFrame): DataFrame =
-    mutualFromDirected(Breadth43.knnDirected(emb))
-
-  /** The mutual filter over an ALREADY-BUILT directed edge frame — the
-    * memoized-chain entry (q_kcore previously re-ran the whole kNN
+    * each other top-k (canonical a<b orientation), filtered from an
+    * ALREADY-BUILT directed edge frame — the memoized-chain entry (q_kcore previously re-ran the whole kNN
     * build inside the query; the shared chain_knn_edges frame makes
     * its bench number the peel's marginal cost). */
   private[graft] def mutualFromDirected(d: DataFrame): DataFrame =

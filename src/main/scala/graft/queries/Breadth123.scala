@@ -28,8 +28,6 @@ import org.apache.spark.sql.functions._
   * bar grid + O(L) per key. */
 object Breadth123 {
 
-  private val GramN = 5
-
   /** Per-document duplicate-5-gram coverage. */
   private[graft] def dupNgramCoverage(docs: DataFrame, idCol: String,
                                       textCol: String): DataFrame = {

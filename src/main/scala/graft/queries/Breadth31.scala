@@ -38,7 +38,6 @@ object Breadth31 {
 
   private[graft] val WmaN = 10
   private[graft] val WmaDen = WmaN * (WmaN + 1) / 2 // 55
-  private[graft] val HmaN = 8
   private[graft] val BigramLambda = 4.0 / 5.0
 
   /** Integer lag-weighted numerator Σ_{j=0..n−1} (n−j)·close_{t−j} —

@@ -23,9 +23,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * The seam between "the network" and "the engine" is a durable tick
   * log: each poll stages its raw payload as ONE immutable file
   * `tick-<epochMs>.json` ([[Sources.stageTickPayload]] — atomic
-  * tmp+rename, skip-on-error exactly like `pollTick`). The source then
-  * owns real STREAMING SEMANTICS over that log, which the earlier
-  * file-stage + `readStream.parquet` approximation could not:
+  * tmp+rename, a failed fetch or parse skips the tick). The source then
+  * owns real STREAMING SEMANTICS over that log, which a file-stage +
+  * `readStream.parquet` approximation could not:
   *
   *   - offsets ARE tick ids (epoch ms): `latestOffset` = newest staged
   *     tick; a batch is the ticks in `(start, end]`. Spark persists the

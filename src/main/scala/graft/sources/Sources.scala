@@ -31,72 +31,11 @@ object Sources {
       .select("q.*")
   }
 
-  /** Same parse as a reusable column transform for streaming frames whose
-    * `value` column carries one payload per micro-batch record. */
-  def quotesFromPayloadColumn(df: DataFrame, payloadCol: String): DataFrame =
-    df.select(explode(from_json(col(payloadCol), ArrayType(quoteSchema))).as("q"))
-      .select("q.*")
-
-  /** One tick of the reference's polling ETL loop
-    * (`etl/crypto_etl.py:40-52,154-157`), composed end to end: call
-    * `fetch` (the network seam — the only thing a real deployment swaps
-    * in), parse the payload, shape + batch-stamp it (graft.ops.Ingest),
-    * and stage it as one tick-keyed parquet directory that a file-source
-    * stream tails (`spark.readStream.parquet(stagingDir)` — the S6
-    * trigger then carries it into the snapshot pipeline).
-    *
-    * A failed fetch or parse SKIPS the tick — the reference logs and
-    * sleeps to the next tick rather than dying (`etl/crypto_etl.py:
-    * 47-52`); here that is a logged 0-row return, and the tick directory
-    * is never created, so downstream consumers see nothing partial.
-    * Overwrite into `tick=<ms>` makes a re-run of the same tick
-    * idempotent. Returns rows staged; 0 = a legitimately EMPTY payload
-    * (healthy tick, nothing staged), -1 = a SKIPPED tick (fetch/parse
-    * failure) — a monitor must distinguish the two, as the reference's
-    * log-and-skip does. */
-  def pollTick(spark: SparkSession, fetch: () => String, stagingDir: String,
-               tickTime: java.sql.Timestamp): Long =
-    try {
-      val payload = fetch()
-      // from_json never throws (PERMISSIVE → null on malformed input),
-      // so an API returning an HTML error page would otherwise be
-      // indistinguishable from a healthy empty array — probe the parse
-      // result explicitly so parse failure really takes the -1 path.
-      // The top-level-shape check matters too: from_json with an
-      // ArrayType schema WRAPS a top-level JSON object into a
-      // one-element array, so an error body like {"error":"rate
-      // limited"} would parse "successfully", shape to zero valid rows,
-      // and read as a healthy empty tick (0) instead of a skip (-1).
-      if (!payload.trim.startsWith("["))
-        throw new IllegalArgumentException("payload is not a JSON array")
-      import spark.implicits._
-      val parsed = Seq(payload).toDF("payload")
-        .select(from_json(col("payload"), ArrayType(quoteSchema)).as("q"))
-        .head()
-      if (parsed.isNullAt(0))
-        throw new IllegalArgumentException("unparseable payload (not a JSON array)")
-      // persist: both the row count and the staging write consume the
-      // parse+shape pipeline — without it every tick parses twice
-      val shaped = graft.ops.Ingest.shapeBatch(
-          quotesFromJsonPayload(spark, payload), tickTime)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = shaped.count()
-        if (n > 0)
-          shaped.write.mode("overwrite").parquet(s"$stagingDir/tick=${tickTime.getTime}")
-        n
-      } finally shaped.unpersist(blocking = false): Unit
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[graft.Sources.pollTick] tick skipped: ${e.getMessage}")
-        -1L
-    }
-
   /** One poll of the upstream API staged into the tick log the
     * `graft-ticks` DataSourceV2 source ([[QuoteTicks]]) streams from:
-    * fetch the payload, validate it is a JSON array (the same
-    * non-array/error-body rejection `pollTick` does — with the SAME
-    * parser the source's reader uses, so "staged" implies "readable"),
+    * fetch the payload, validate it is a JSON array (an error body or
+    * malformed text is rejected — with the SAME parser the source's
+    * reader uses, so "staged" implies "readable"),
     * and write the RAW bytes as one immutable `tick-<ms>.json` file via
     * tmp-file + atomic rename — a reader can never observe a torn
     * payload, and a re-run of the same tick overwrites idempotently.

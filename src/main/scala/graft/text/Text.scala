@@ -53,10 +53,6 @@ object Text {
     * for exact dedup at any scale (hash-groupBy; identical in DuckDB). */
   def fingerprint(c: Column): Column = md5(norm(c))
 
-  /** 32-bit token hash: first 8 hex chars of md5, parsed base-16.
-    * (DuckDB mirror: `('0x' || substr(md5(t),1,8))::BIGINT`.) */
-  def tokenHash32(c: Column): Column = conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-
   /** 64-bit token hash as a raw bit pattern: md5 hex[1..8] in bits
     * 32..63, hex[9..16] in bits 0..31. The shiftleft wraps into the sign
     * bit for high halves ≥ 2³¹ — intentional; consumers treat the long

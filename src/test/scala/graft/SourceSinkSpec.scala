@@ -46,39 +46,6 @@ class SourceSinkSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters: [isnotnull(event_date"), plan.take(500))
   }
 
-  test("polling loop end to end: fetch → parse → stage → stream, with a " +
-    "failed tick skipped (reference skip-on-error semantics)") {
-    val staging = Files.createTempDirectory("graft_poll").toString + "/staged"
-    val good1 = """[{"symbol":"BTC","name":"Bitcoin","current_price":1.0}]"""
-    val good3 =
-      """[{"symbol":"BTC","name":"Bitcoin","current_price":3.0},
-        |{"symbol":"ETH","name":"Ether","current_price":2.0}]""".stripMargin
-    def ts(day: Int) = java.sql.Timestamp.valueOf(f"2024-02-0$day 00:00:00")
-    // tick 1 succeeds, tick 2's fetch dies (network: -1 = SKIPPED,
-    // distinguishable from an empty-but-healthy payload), tick 3 succeeds
-    assert(Sources.pollTick(spark, () => good1, staging, ts(1)) == 1L)
-    assert(Sources.pollTick(spark,
-      () => throw new java.io.IOException("connection refused"), staging, ts(2)) == -1L)
-    assert(Sources.pollTick(spark, () => good3, staging, ts(3)) == 2L)
-    // a malformed payload is a SKIPPED tick too (-1), NOT a healthy
-    // empty one — from_json's null-on-malformed is probed explicitly
-    assert(Sources.pollTick(spark, () => "not json at all", staging, ts(4)) == -1L)
-    // a genuinely empty array IS healthy: 0 rows, no error
-    assert(Sources.pollTick(spark, () => "[]", staging, ts(5)) == 0L)
-    // the staged ticks flow through a file-source stream — the actual S1
-    // wiring: poll loop stages, Structured Streaming tails
-    val q = spark.readStream.schema(Ingest.pricesSchema).parquet(staging)
-      .writeStream.format("memory").queryName("poll_out").start()
-    q.processAllAvailable(); q.stop()
-    val out = spark.table("poll_out")
-      .select("symbol", "current_price").as[(String, Double)].collect().toSet
-    assert(out == Set(("btc", 1.0), ("btc", 3.0), ("eth", 2.0)),
-      s"only successful ticks may surface: $out")
-    // re-running a tick (at-least-once poll scheduler) stays idempotent
-    assert(Sources.pollTick(spark, () => good1, staging, ts(1)) == 1L)
-    assert(spark.read.schema(Ingest.pricesSchema).parquet(staging).count() == 3)
-  }
-
   test("graft-ticks DataSourceV2 micro-batch source: offsets are tick ids, " +
     "a restart resumes from the committed offset, rows match the batch parse") {
     val dir = Files.createTempDirectory("graft_dsv2").toString + "/ticks"
@@ -96,6 +63,10 @@ class SourceSinkSpec extends SparkSpec {
       () => throw new java.io.IOException("connection refused"), dir, ts(2)) == -1L)
     assert(Sources.stageTickPayload(spark, () => """{"error":"rate limited"}""",
       dir, ts(3)) == -1L) // error body = skip, not an empty tick
+    // a malformed payload is a skipped tick too, NOT a healthy empty one
+    assert(Sources.stageTickPayload(spark, () => "not json at all", dir, ts(3)) == -1L)
+    // a genuinely empty array IS healthy: staged, 0 rows, no error
+    assert(Sources.stageTickPayload(spark, () => "[]", dir, ts(3)) == 0L)
     assert(Sources.stageTickPayload(spark, () => p2, dir, ts(4)) == 2L)
 
     type QuoteRow = (String, String, Option[Double], Option[Double], Option[Double], Long)

@@ -8,6 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * factory the mains use. */
 object TestSession {
   lazy val spark: SparkSession = Graft.session("local[4]", 4)
+  /** The session's metrics listener, attached on first use. */
+  lazy val metrics: Metrics = Metrics.attach(spark)
 }
 
 abstract class SparkSpec extends AnyFunSuite {
@@ -34,19 +36,9 @@ abstract class SparkSpec extends AnyFunSuite {
   /** `body`'s result and the number of Spark jobs started while it ran
     * (the listener bus is drained before and after). */
   def jobsDuring[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.graft.SparkInternals.flushListenerBus(sc)
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      org.apache.spark.graft.SparkInternals.flushListenerBus(sc)
-      (r, jobs.get())
-    } finally sc.removeSparkListener(l)
+    val m = TestSession.metrics
+    val s0 = m.snapshot()
+    val r = body
+    (r, m.since(s0).jobs.toInt)
   }
 }
