@@ -1,45 +1,47 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.{Ranked, TopKWithRest}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType}
 
 /** Top-K + "Other" rollup and percent-of-total — the dashboard's doughnut
   * prep, done client-side in the reference (`frontend/src/App.js:97-142`:
   * sort desc → slice(0,7) → sum the remainder into one "Other" bucket →
   * percent-of-total in the tooltip).
   *
-  * Scale notes: the top-K side compiles to `TakeOrderedAndProject`
-  * (per-partition heap + driver merge of K rows — no global sort), and the
-  * remainder is a left-anti join against the K-row set (broadcast) followed
-  * by a partial+final aggregate. Nothing here materializes a global sort or
-  * a single-partition window, so the same plan holds at 1000 executors.
+  * Scale notes: the rollup is ONE aggregate pass
+  * ([[graft.functions.TopKWithRest]] through `udaf`): each partition keeps
+  * a k-entry buffer plus the sum of what it evicted, and the buffers merge
+  * in one partial + final aggregate — no global sort, no join, no cached
+  * input, so a call leaves nothing behind in the session's cache and the
+  * same plan holds at 1000 executors.
   */
 object TopK {
 
   /** `df` must be pre-aggregated (one row per key). Keeps the top `k` rows
     * by (`valueCol` desc nulls last, `keyCol` asc) and rolls every other
-    * row into one `otherLabel` row summing `valueCol`. No remainder → no
-    * "Other" row (reference guard, `frontend/src/App.js:105,125`).
-    * `keyCol` must be a string column (the rollup label shares it).
+    * row into one `otherLabel` row summing `valueCol`. No non-null
+    * remainder → no "Other" row (reference guard,
+    * `frontend/src/App.js:105,125`); empty input → no rows. `keyCol` must
+    * be a string column (the rollup label shares it) and `valueCol` a
+    * double column. With `totalCol`, every row also carries the sum of
+    * all non-null values of `df` in that column.
     */
   def topKPlusOther(df: DataFrame, keyCol: String, valueCol: String, k: Int,
-                    otherLabel: String = "Other"): DataFrame = {
-    // The pre-agg feeds THREE consumers (top-K, the anti-join remainder,
-    // and — in the typical percent-of-total composition — the grand
-    // total); persisted so the upstream aggregation runs once, not three
-    // times. Safe at scale: `df` is one row per key by contract, i.e.
-    // already aggregate-sized, and MEMORY_AND_DISK spills. Lifecycle:
-    // the cache lives inside the returned plan for the session; looping
-    // callers should spark.catalog.clearCache() between corpora (same
-    // note as the Dedup posting-list caches).
-    val keyed = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val top = keyed.orderBy(col(valueCol).desc_nulls_last, col(keyCol).asc).limit(k)
-    val other = keyed
-      .join(broadcast(top.select(keyCol)), Seq(keyCol), "left_anti")
-      .agg(sum(col(valueCol)).as(valueCol))
-      .filter(col(valueCol).isNotNull)
-      .select(lit(otherLabel).as(keyCol), col(valueCol))
-    top.select(keyCol, valueCol).unionByName(other)
+                    otherLabel: String = "Other",
+                    totalCol: Option[String] = None): DataFrame = {
+    val Seq(kt, vt) = df.select(keyCol, valueCol).schema.map(_.dataType)
+    require(kt == StringType, s"topKPlusOther: key column $keyCol must be StringType, got $kt")
+    require(vt == DoubleType, s"topKPlusOther: value column $valueCol must be DoubleType, got $vt")
+    val rollup = udaf(TopKWithRest(k), Encoders.product[Ranked])
+    val r = df.agg(rollup(col(keyCol), col(valueCol)).as("r"))
+    val other = array(struct(lit(otherLabel).as("key"), col("r.rest").as("value")))
+    val rows = when(col("r.rest").isNull, col("r.top"))
+      .otherwise(concat(col("r.top"), other))
+    r.select(explode(rows).as("e"), col("r.total").as("total"))
+      .select(Seq(col("e.key").as(keyCol), col("e.value").as(valueCol)) ++
+        totalCol.map(col("total").as(_)): _*)
   }
 
   /** Adds `pctCol` = value / total * 100, rounded to `scale`. The grand

@@ -18,6 +18,8 @@ class GraftFacadeSpec extends SparkSpec {
       assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
       assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
       assert(s.conf.get("spark.sql.shuffle.partitions") == "4")
+      assert(s.conf.get("spark.sql.sources.parallelPartitionDiscovery.parallelism") ==
+        s.sparkContext.defaultParallelism.toString)
     }
     canon()
     assert(s.sparkContext.uiWebUrl.isEmpty)
@@ -27,12 +29,32 @@ class GraftFacadeSpec extends SparkSpec {
     try {
       s.conf.set("spark.sql.session.timeZone", "America/New_York")
       s.conf.set("spark.sql.shuffle.partitions", "7")
+      s.conf.set("spark.sql.sources.parallelPartitionDiscovery.parallelism", "10000")
       assert(Graft.session("local[4]", 4) eq s)
       canon()
     } finally {
       s.conf.set("spark.sql.session.timeZone", "UTC")
       s.conf.set("spark.sql.shuffle.partitions", "4")
     }
+  }
+
+  test("reading a tree of 48 batch_id=N directories lists in at most " +
+    "one task per core") {
+    val root = java.nio.file.Files.createTempDirectory("graft_listing")
+    val dir = root.resolve("store").toString
+    try {
+      spark.range(48).select(col("id").as("v"), col("id").cast("int").as("batch_id"))
+        .write.partitionBy("batch_id").parquet(dir)
+      val m = TestSession.metrics
+      val s0 = m.snapshot()
+      // a given schema skips the footer read, so the listing is the one job
+      val df = spark.read.schema("v LONG, batch_id INT").parquet(dir)
+      val listed = m.since(s0)
+      assert(listed.jobs == 1 && listed.tasks > 0, s"listing ran no job: $listed")
+      assert(listed.tasks <= spark.sparkContext.defaultParallelism,
+        s"${listed.tasks} listing tasks for 48 directories")
+      assert(df.count() == 48)
+    } finally graft.Fs.deleteRecursively(root.toFile)
   }
 
   test("Graft.snapshot == q_latest") {

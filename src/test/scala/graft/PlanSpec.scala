@@ -133,13 +133,37 @@ class PlanSpec extends SparkSpec {
       "probe grid must come from a broadcast cross join, not a cartesian shuffle")
   }
 
-  test("q_topk_other plans TakeOrderedAndProject + broadcast anti-join") {
+  test("q_topk_other is one partial + final rollup over one scan: no cache, no anti-join") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, ScalaAggregator}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
     val df = SparkEntry.queries("q_topk_other")(spark, sf0001)
-    df.count()
+    df.collect() // count() would plan a different query; this finalizes AQE
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("TakeOrderedAndProject"), p.take(500))
-    assert(p.contains("LeftAnti"), p.take(500))
-    assert(!p.contains("SortMergeJoin"), "anti join must broadcast the K rows")
+    assert(!p.contains("InMemoryRelation") && !p.contains("InMemoryTableScan"), p)
+    assert(!p.contains("LeftAnti"), p)
+    // the operators that run: AQE stages unwrapped, a reused exchange is
+    // a leaf (its producer ran once, elsewhere in the tree)
+    def ran(n: SparkPlan): Seq[SparkPlan] = n match {
+      case a: AdaptiveSparkPlanExec => ran(a.executedPlan)
+      case s: QueryStageExec => ran(s.plan)
+      case r: ReusedExchangeExec => Seq(r)
+      case o => o +: o.children.flatMap(ran)
+    }
+    val nodes = ran(df.queryExecution.executedPlan)
+    val rollupModes = nodes.collect { case a: ObjectHashAggregateExec => a }
+      .flatMap(_.aggregateExpressions)
+      .collect { case e if (e.aggregateFunction match {
+        case s: ScalaAggregator[_, _, _] => s.agg.isInstanceOf[graft.functions.TopKWithRest]
+        case _ => false
+      }) => e.mode }
+    // one partial pass over the input; every final reads its shuffle
+    // output directly (withPercentOfTotal's total re-reads it, reused)
+    assert(rollupModes.count(_ == Partial) == 1, s"$rollupModes\n$p")
+    assert(rollupModes.forall(m => m == Partial || m == Final), s"$rollupModes\n$p")
+    assert(nodes.count(_.isInstanceOf[FileSourceScanExec]) == 1, s"orders scanned more than once:\n$p")
   }
 
   test("q_simhash pairs join on band keys, not on the block column alone") {

@@ -48,6 +48,44 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("topKPlusOther and topWithOther equal a driver-side reference: " +
+    "nulls last, value ties by key, n around k, all-null remainder, empty") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("bucket", StringType), StructField("rev", DoubleType)))
+    // small integers: many ties, and sums exact in any merge order
+    val value: Gen[Option[Double]] = Gen.frequency(
+      1 -> Gen.const(None), 4 -> Gen.choose(0, 6).map(v => Some(v.toDouble)))
+    val k = 3
+    val edges = Seq(
+      Nil, // empty input: no rows
+      List(Some(1.0), Some(2.0)), // n < k
+      List(Some(1.0), None, Some(2.0)), // n = k, a null in the top
+      List.fill(4)(Some(2.0)), // n = k + 1, all tied: the key decides
+      List(Some(5.0), Some(4.0), Some(3.0), None, None), // all-null remainder: no Other
+      List.fill(4)(Some(0.0))) // total 0: null pct
+    (edges ++ samples(Gen.choose(0, 9).flatMap(Gen.listOfN(_, value)), 12)).foreach { vs =>
+      // distinct keys whose string order is not their index order
+      val keyed = vs.zipWithIndex.map { case (v, i) => (s"k${i * 7 % 11}", v) }
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(
+        keyed.map { case (b, v) => Row(b, v.map(Double.box).orNull) }, 3), schema)
+      val sorted = keyed.sortBy { case (b, v) => (v.isEmpty, -v.getOrElse(0.0), b) }
+      val rest = sorted.drop(k).flatMap(_._2)
+      val want = sorted.take(k) ++ (if (rest.isEmpty) Nil else Seq("Other" -> Some(rest.sum)))
+      val total = want.flatMap(_._2).sum
+      val wantPct = want.map { case (b, v) => (b, v, v.filter(_ => total != 0).map(x =>
+        BigDecimal(100 * x / total).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble)) }
+      def opt(r: Row, i: Int) = if (r.isNullAt(i)) None else Some(r.getDouble(i))
+      val got = TopK.topKPlusOther(df, "bucket", "rev", k).collect().toSeq
+        .map(r => (r.getString(0), opt(r, 1)))
+      assert(got == want, s"input $keyed")
+      val gotPct = Graft.topWithOther(df, "bucket", "rev", k).collect().toSeq
+        .map(r => (r.getString(0), opt(r, 1), opt(r, 2)))
+      assert(gotPct == wantPct, s"input $keyed")
+    }
+  }
+
   test("simhash band candidates are COMPLETE for any pair within the " +
     "hamming bound (pigeonhole, random hashes and flip sets)") {
     import graft.dedup.Dedup

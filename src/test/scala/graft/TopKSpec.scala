@@ -38,6 +38,26 @@ class TopKSpec extends SparkSpec {
     assert(math.abs(s - 100.0) < 0.1)
   }
 
+  test("topWithOther scans once and caches nothing: ≤ 2 jobs over 100 " +
+    "rows, the session's cache stays empty") {
+    spark.catalog.clearCache()
+    val (out, jobs) = jobsDuring(Graft.topWithOther(agg(100), "bucket", "rev").collect())
+    assert(out.length == 8)
+    // a looping caller that never unpersists must not grow the cache
+    assert(spark.sharedState.cacheManager.isEmpty, "topWithOther left a cached plan")
+    assert(jobs <= 2, s"$jobs jobs")
+  }
+
+  test("topKPlusOther names a key column that is not a string and a " +
+    "value column that is not a double") {
+    val byKey = intercept[IllegalArgumentException](
+      TopK.topKPlusOther(agg(3).withColumn("bucket", $"bucket".cast("int")), "bucket", "rev", 2))
+    assert(byKey.getMessage.contains("key column bucket must be StringType"), byKey.getMessage)
+    val byValue = intercept[IllegalArgumentException](
+      Graft.topWithOther(agg(3).withColumn("rev", $"rev".cast("long")), "bucket", "rev"))
+    assert(byValue.getMessage.contains("value column rev must be DoubleType"), byValue.getMessage)
+  }
+
   test("topNPerGroup keeps n rows per group in order") {
     val df = Seq(("a", 1.0), ("a", 3.0), ("a", 2.0), ("b", 9.0))
       .toDF("g", "v")
