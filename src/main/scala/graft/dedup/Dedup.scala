@@ -188,10 +188,10 @@ object Dedup {
     * rounding hazard. `isEval` partitions the corpus (rows matching =
     * eval set, rest = train).
     *
-    * Persist lifecycle (here and in boilerplateRatio/simhashNearDups/
-    * minhashNearDups): the posting-list cache lives inside the returned
-    * plan and stays for the session — callers looping over many corpora
-    * should `spark.catalog.clearCache()` between them. */
+    * Persist lifecycle (here and in boilerplateRatio/jaccardProbeAll):
+    * the posting-list cache lives inside the returned plan and stays for
+    * the session — callers looping over many corpora should
+    * `spark.catalog.clearCache()` between them. */
   def ngramContainment(docs: DataFrame, idCol: String, textCol: String,
                        shingleLen: Int, isEval: Column): DataFrame = {
     val post = docs.select(col(idCol), isEval.as("__eval"),
@@ -255,10 +255,12 @@ object Dedup {
                               shingleLen: Int, numHashes: Int,
                               bands: Int, threshold: Double): DataFrame = {
     val rowsPerBand = numHashes / bands
-    // persist: the bucket self-join reads the band table twice, and
-    // without it the signature-side plan runs once per side.
+    // Not cached: the candidate self-join and `jaccardVerify` reference
+    // the band table 10 times, and a cached table costs one cache-stage
+    // job per reference, which ran concurrently and made the task count
+    // of a pass vary. Uncached, AQE reuses the signature shuffle, so the
+    // signature-side plan still runs once per call.
     val bandDf = lshBands(sigs, idCol, bands, rowsPerBand)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cands = lshCandidates(bandDf, idCol)
     jaccardVerify(cands, docs, idCol, textCol, shingleLen)
       .filter(col("jaccard") >= threshold)

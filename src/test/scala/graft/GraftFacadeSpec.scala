@@ -17,11 +17,13 @@ class GraftFacadeSpec extends SparkSpec {
       assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
       assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
       assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
+      assert(s.conf.get("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
       assert(s.conf.get("spark.sql.shuffle.partitions") == "4")
       assert(s.conf.get("spark.sql.sources.parallelPartitionDiscovery.parallelism") ==
         s.sparkContext.defaultParallelism.toString)
     }
     canon()
+    assert(s.conf.get("spark.sql.codegen.cache.maxEntries") == "512")
     assert(s.sparkContext.uiWebUrl.isEmpty)
     // GraftExtensions is installed: its SQL function resolves
     assert(s.sql("SELECT graft_shingles('a b c d', 3, false) AS sh")
@@ -30,6 +32,7 @@ class GraftFacadeSpec extends SparkSpec {
       s.conf.set("spark.sql.session.timeZone", "America/New_York")
       s.conf.set("spark.sql.shuffle.partitions", "7")
       s.conf.set("spark.sql.sources.parallelPartitionDiscovery.parallelism", "10000")
+      s.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
       assert(Graft.session("local[4]", 4) eq s)
       canon()
     } finally {
@@ -55,6 +58,22 @@ class GraftFacadeSpec extends SparkSpec {
         s"${listed.tasks} listing tasks for 48 directories")
       assert(df.count() == 48)
     } finally graft.Fs.deleteRecursively(root.toFile)
+  }
+
+  test("a persisted few-hundred-row frame is read in at most one task " +
+    "per core, not one per shuffle partition") {
+    withConf("spark.sql.shuffle.partitions", "32") {
+      val df = spark.range(300).groupBy((col("id") % 100).as("k")).count().persist()
+      try {
+        df.write.format("noop").mode("overwrite").save() // builds the cache
+        val m = TestSession.metrics
+        val s0 = m.snapshot()
+        df.write.format("noop").mode("overwrite").save()
+        val read = m.since(s0)
+        assert(read.tasks > 0 && read.tasks <= spark.sparkContext.defaultParallelism,
+          s"${read.tasks} tasks to read a 100-row cached frame")
+      } finally df.unpersist(blocking = true)
+    }
   }
 
   test("Graft.snapshot == q_latest") {

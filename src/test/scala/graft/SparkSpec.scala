@@ -20,18 +20,22 @@ abstract class SparkSpec extends AnyFunSuite {
   }
   val sf0001 = "/root/testdata/sf0.001"
 
-  /** Runs `body` under the RocksDB state store provider, which
-    * `transformWithState` requires, and restores the previous setting. */
-  def withRocks[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
+  /** Runs `body` with the session conf `key` set to `value`, and
+    * restores the previous setting. */
+  def withConf[A](key: String, value: String)(body: => A): A = {
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    spark.conf.set(key, value)
     try body finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
   }
+
+  /** Runs `body` under the RocksDB state store provider, which
+    * `transformWithState` requires. */
+  def withRocks[A](body: => A): A =
+    withConf("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   /** `body`'s result and the number of Spark jobs started while it ran
     * (the listener bus is drained before and after). */

@@ -74,6 +74,64 @@ class TextDedupSpec extends SparkSpec {
     assert(out == Set((1L, 2L)))
   }
 
+  /** Runs `body` on the path of a parquet corpus of `n` 40-token
+    * documents where every fifth document repeats its predecessor with
+    * one token changed (a near-duplicate at Jaccard ≈ 0.95). */
+  private def withCorpus[A](n: Int)(body: String => A): A = {
+    val root = java.nio.file.Files.createTempDirectory("graft_corpus")
+    val dir = root.resolve("documents").toString
+    try {
+      val rnd = new scala.util.Random(17)
+      val texts = (0 until n).foldLeft(Vector.empty[String]) { (acc, i) =>
+        acc :+ (if (i % 5 == 4) acc.last.replaceFirst("w\\d+$", "CHANGED")
+                else Seq.fill(40)(s"w${rnd.nextInt(500)}").mkString(" "))
+      }
+      texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+        .write.parquet(dir)
+      body(dir)
+    } finally graft.Fs.deleteRecursively(root.toFile)
+  }
+
+  test("Graft.nearDupPairs caches nothing and scans the documents once " +
+    "for signatures and once for verification") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    object plans extends AdaptiveSparkPlanHelper
+    withCorpus(60) { dir =>
+      val pairs = Graft.nearDupPairs(spark.read.parquet(dir))
+      assert(pairs.collect().nonEmpty)
+      // the final adaptive plan of the query that ran; a reused exchange
+      // is a leaf, so each scan counted here ran
+      val p = pairs.queryExecution.executedPlan
+      assert(plans.collect(p) { case s: InMemoryTableScanExec => s }.isEmpty,
+        s"nearDupPairs reads a cached relation:\n$p")
+      assert(plans.collect(p) { case s: FileSourceScanExec => s }.size == 2,
+        s"documents scanned other than once per side of the pipeline:\n$p")
+    }
+  }
+
+  test("a curation pass (nearDupPairs persisted, then dedupKeepList, then " +
+    "clearCache) runs the same number of tasks every time") {
+    val m = TestSession.metrics
+    withCorpus(200) { dir =>
+      // Spark's default width, the benchmark's
+      val tasks = withConf("spark.sql.shuffle.partitions", "32") {
+        (1 to 5).map { _ =>
+          val docs = spark.read.parquet(dir)
+          val s0 = m.snapshot()
+          val pairs = Graft.nearDupPairs(docs).persist()
+          pairs.write.format("noop").mode("overwrite").save()
+          Graft.dedupKeepList(docs, pairs).filter(col("keep"))
+            .write.format("noop").mode("overwrite").save()
+          spark.catalog.clearCache()
+          m.since(s0).tasks
+        }
+      }
+      assert(tasks.distinct.size == 1, s"tasks per pass: $tasks")
+    }
+  }
+
   test("simhashNearDups at the degenerate maxHamming >= 64 bound returns " +
     "ALL in-block pairs, including exact complements") {
     // two unrelated docs whose simhashes differ widely (plus any pair at
