@@ -36,7 +36,8 @@ object Graft {
     * already exists, so the runtime canon (shuffle width, UTC, ns-parquet
     * handling, AQE also inside cached plans, listing parallelism) is
     * re-asserted on the returned session either way; the code-generation
-    * cache size is create-time canon.
+    * cache size and the fork-free local filesystem (graft.Fs) are
+    * create-time canon.
     * `spark.sql.extensions` is create-time-only: an inherited session
     * keeps graft SQL functions/rules only if it was built with them —
     * the one contract `session()` cannot retrofit (the facade's Column
@@ -52,6 +53,17 @@ object Graft {
       // vectors, `local[4]`), and the cache is LRU, so every later pass
       // compiled all 222 again. 512 holds a pass; warm passes compile 0.
       .config("spark.sql.codegen.cache.maxEntries", "512")
+      // Static: without the native Hadoop library, the stock `file:`
+      // filesystem forks `chmod` per directory made and file created, and
+      // `readlink` per link check of a checkpoint-log rename. A JFR
+      // recording of perfbench's `tick_live` (seed 7, `local[4]`, 4-core
+      // box) counted about 41 child processes per tick: 24 `chmod` (store
+      // and snapshot writes, offset and commit logs, staged payload) and
+      // 16 `readlink`, at about 1.3 ms each (0.01 ms through java.nio);
+      // the offset and commit log writes took 14-15 ms each. Through
+      // graft.Fs a tick forks none, and they take 1 ms.
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
       .getOrCreate()
     s.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
     s.conf.set("spark.sql.session.timeZone", "UTC")

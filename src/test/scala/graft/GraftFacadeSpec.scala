@@ -24,6 +24,17 @@ class GraftFacadeSpec extends SparkSpec {
     }
     canon()
     assert(s.conf.get("spark.sql.codegen.cache.maxEntries") == "512")
+    // The local filesystem as the engine reaches it: through the JVM-wide
+    // FileSystem cache and through FileContext (checkpoint logs). The
+    // cache is keyed by scheme and user, not by conf, so a `file:`
+    // FileSystem built before the session would stay the stock class
+    // and this fails; FsSpec builds its filesystems with `new` so it
+    // never fills the cache.
+    val conf = s.sessionState.newHadoopConf()
+    assert(org.apache.hadoop.fs.FileSystem.get(new java.net.URI("file:///"), conf)
+      .getClass == classOf[NioLocalFileSystem])
+    assert(org.apache.hadoop.fs.FileContext.getLocalFSFileContext(conf)
+      .getDefaultFileSystem.getClass == classOf[NioLocalFs])
     assert(s.sparkContext.uiWebUrl.isEmpty)
     // GraftExtensions is installed: its SQL function resolves
     assert(s.sql("SELECT graft_shingles('a b c d', 3, false) AS sh")

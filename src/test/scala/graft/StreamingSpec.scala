@@ -862,6 +862,46 @@ class StreamingSpec extends SparkSpec {
     assert(capRows(frame) == dashboard, "the pushed frame is driver-local")
   }
 
+  test("a quote tick starts no child process from Hadoop's Shell: no " +
+    "chmod per file or directory, no readlink per checkpoint-log rename") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("graft_qforks").toString
+    def stage(t: Int): Unit =
+      Graft.stageTick(spark, () => s"""[{"symbol":"BTC","name":"Bitcoin",
+        |"current_price":$t.0,"market_cap":9.0}]""".stripMargin,
+        s"$root/ticks", Timestamp.valueOf(f"2024-03-01 00:00:$t%02d")): Unit
+    stage(1)
+    val q = Graft.startQuoteStream(spark, s"$root/ticks", s"$root/store",
+      s"$root/ckpt", s"$root/snap", Trigger.ProcessingTime(0))((_, _) => ())
+    val jfr = Files.createTempFile("graft_qforks", ".jfr")
+    try {
+      q.processAllAvailable()
+      val rec = new Recording()
+      try {
+        rec.enable("jdk.ProcessStart").withStackTrace()
+        rec.start()
+        stage(2); q.processAllAvailable()
+        rec.stop()
+        rec.dump(jfr)
+      } finally rec.close()
+      // Filtered on the frame, not the thread: Spark's Cleaner thread
+      // may fork an `rm -rf` of its own, which is not the tick's.
+      val forks = RecordingFile.readAllEvents(jfr).asScala.collect {
+        case e if e.getEventType.getName == "jdk.ProcessStart" && e.getStackTrace != null &&
+            e.getStackTrace.getFrames.asScala
+              .exists(_.getMethod.getType.getName == "org.apache.hadoop.util.Shell") =>
+          e.getString("command")
+      }
+      assert(forks.isEmpty, s"${forks.size} Hadoop forks in one tick")
+    } finally {
+      q.stop()
+      Files.deleteIfExists(jfr)
+      graft.Fs.deleteRecursively(new java.io.File(root))
+    }
+  }
+
   test("merge stream accepts a MAP-typed data column: excluded from the " +
     "tie-break (window ORDER BY on a map throws), carried through the merge") {
     implicit val sqlCtx = spark.sqlContext
