@@ -1,13 +1,17 @@
 package graft.streaming
 
+import java.util.concurrent.CompletionException
+
 import graft.ops.Latest
 import graft.queries.{Breadth22, Breadth23, Breadth24, Breadth27, Breadth28,
   Breadth30, Breadth31, Breadth33, Breadth34, Breadth35, Breadth44, Breadth45,
   Breadth52, Breadth69, Breadth85, Breadth99, Breadth118, Breadth123, Breadth130,
   Breadth146, Breadth147, Breadth178}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types._
 import scala.reflect.runtime.universe.TypeTag
@@ -1896,28 +1900,22 @@ object Streams {
     * — works on HDFS/S3/local alike (java.io.File would silently return
     * nothing on a remote store and collapse every snapshot to the
     * current batch's keys). */
-  private def listBatchDirs(spark: SparkSession,
-                            path: String): Seq[(Long, org.apache.hadoop.fs.Path)] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.filter(_.isDirectory).flatMap { st =>
+  private def listBatchDirs(fs: FileSystem, root: Path): Seq[(Long, Path)] =
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.filter(_.isDirectory).flatMap { st =>
       st.getPath.getName match {
         case n if n.startsWith("batch_id=") =>
           n.stripPrefix("batch_id=").toLongOption.map(_ -> st.getPath)
         case _ => None
       }
     }
-  }
 
   /** A generation is only trustworthy if its write COMMITTED — the
     * _SUCCESS marker distinguishes a torn crash-interrupted directory
     * (which must never be folded into the next snapshot) from a
     * complete one. */
-  private def isCommitted(spark: SparkSession,
-                          dir: org.apache.hadoop.fs.Path): Boolean =
-    dir.getFileSystem(spark.sessionState.newHadoopConf())
-      .exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))
+  private def isCommitted(fs: FileSystem, dir: Path): Boolean =
+    fs.exists(new Path(dir, "_SUCCESS"))
 
   /** Shared generation fold — the crash-recovery core of both
     * snapshot-maintaining streams. Discovers the fold base (newest
@@ -1939,9 +1937,11 @@ object Streams {
   private def foldGeneration(ss: SparkSession, snapshotPath: String,
                              batchId: Long)
                             (derive: Option[DataFrame] => DataFrame): DataFrame = {
-    val gens = listBatchDirs(ss, snapshotPath)
-    def newestCommitted(c: Seq[(Long, org.apache.hadoop.fs.Path)]) =
-      c.sortBy(-_._1).find(g => isCommitted(ss, g._2))
+    val root = new Path(snapshotPath)
+    val fs = root.getFileSystem(ss.sessionState.newHadoopConf())
+    val gens = listBatchDirs(fs, root)
+    def newestCommitted(c: Seq[(Long, Path)]) =
+      c.sortBy(-_._1).find(g => isCommitted(fs, g._2))
     val prevGen = newestCommitted(gens.filter(_._1 < batchId))
       .orElse(newestCommitted(gens.filter(_._1 > batchId)))
     val snapDir = s"$snapshotPath/batch_id=$batchId"
@@ -1953,10 +1953,33 @@ object Streams {
     local.coalesce(1).write.mode("overwrite").parquet(snapDir)
     val keep = Set(batchId) ++ prevGen.map(_._1)
     gens.filterNot(g => keep.contains(g._1)).foreach { case (_, dir) =>
-      dir.getFileSystem(ss.sessionState.newHadoopConf())
-        .delete(dir, true): Unit
+      fs.delete(dir, true): Unit
     }
     local
+  }
+
+  /** Writes `batch` to `storePath/batch_id=N` (overwrite-idempotent) on a
+    * pooled thread while `fold` runs on the caller's: they share no data,
+    * so their Spark jobs run side by side. Returns `fold`'s result once
+    * the write has ended, so `onSnapshot` and the checkpoint commit
+    * follow both writes. The write is waited out whatever the fold did,
+    * so a failed or stopped batch leaves no job behind (a stop cancels
+    * the query's job group, which the write carries); then the fold's
+    * error, else the write's own, is thrown unwrapped. */
+  private def besideStoreWrite[T](batch: DataFrame, storePath: String, batchId: Long)
+                                 (fold: => T): T = {
+    val write = Bridge.async(batch.sparkSession) {
+      batch.write.mode("overwrite").parquet(s"$storePath/batch_id=$batchId")
+    }
+    val folded = try fold catch {
+      case e: Throwable =>
+        // join ignores interrupts: the write ends before the batch does
+        scala.util.Try(write.join())
+        throw e
+    }
+    try write.join()
+    catch { case e: CompletionException => throw e.getCause }
+    folded
   }
 
   /** The reference's full tick, as one streaming query. Per micro-batch:
@@ -1964,7 +1987,8 @@ object Streams {
     *  1. the raw batch lands in `storePath/batch_id=N` with OVERWRITE —
     *     foreachBatch is at-least-once, so a batch replayed after a crash
     *     between write and checkpoint commit rewrites its own partition
-    *     instead of appending duplicate rows to the history store;
+    *     instead of appending duplicate rows to the history store. It
+    *     runs beside step 2 (`besideStoreWrite`) and ends before step 3;
     *  2. the snapshot is maintained INCREMENTALLY: latest-per-key over
     *     (previous snapshot ∪ new batch) — per-tick cost ∝ |keys| +
     *     |batch|, not |history| (latest-per-key is an associative fold,
@@ -1993,8 +2017,6 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        batch.write.mode("overwrite").parquet(s"$storePath/batch_id=$batchId")
         // fold-base discovery, commit, retention, and checkpoint-reset
         // inheritance live in foldGeneration (shared with the merge
         // stream). Known marginal edge: resetting the checkpoint when
@@ -2004,11 +2026,13 @@ object Streams {
         // and snapshotRecompute over the store remains the
         // full-recovery path.
         val batchCols = batch.drop("batch_id")
-        val snap = foldGeneration(ss, snapshotPath, batchId) {
-          case Some(p) => latestSnapshot(
-            p.select(batchCols.columns.map(col).toSeq: _*)
-              .unionByName(batchCols))
-          case None => latestSnapshot(batchCols)
+        val snap = besideStoreWrite(batch, storePath, batchId) {
+          foldGeneration(batch.sparkSession, snapshotPath, batchId) {
+            case Some(p) => latestSnapshot(
+              p.select(batchCols.columns.map(col).toSeq: _*)
+                .unionByName(batchCols))
+            case None => latestSnapshot(batchCols)
+          }
         }
         onSnapshot(snap, batchId)
       }
@@ -2022,8 +2046,9 @@ object Streams {
     * latest-per-SYMBOL snapshot ⇒ `onSnapshot` (the S4/S5 push seam,
     * fan out via [[SnapshotFanout]]; the frame is driver-local, |symbols|
     * rows in dashboard order, so every client reads the same rows with no
-    * Spark job). A tick runs three Spark jobs: store write, snapshot
-    * collect, generation write. Store and snapshot follow the same
+    * Spark job). A tick runs three Spark jobs: the store write runs
+    * beside the snapshot collect and the generation write, which follow
+    * each other (`besideStoreWrite`). Store and snapshot follow the same
     * overwrite/`_SUCCESS`/retention discipline as `startSnapshotStream`
     * (shared `foldGeneration`): replayed batches are fixpoints,
     * checkpoint resets inherit the surviving generation — and the SOURCE side of a restart re-reads no payload
@@ -2039,20 +2064,18 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        // store write + snapshot fold both consume the shaped batch —
-        // persist so shaping runs once, released before the tick ends
+        // the store write and the fold each shape the replayable tick
+        // (deterministic: the stamp is each row's tick time); a cache
+        // shared by two jobs that start together would serialize them
         val shaped = graft.ops.Ingest.shapeTicks(batch)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          shaped.write.mode("overwrite").parquet(s"$storePath/batch_id=$batchId")
+        val snap = besideStoreWrite(shaped, storePath, batchId) {
           // base ∪ tick is bounded by |symbols| + |tick|: one task runs
           // the window and the global sort with no exchange
-          val snap = foldGeneration(ss, snapshotPath, batchId) { base =>
+          foldGeneration(batch.sparkSession, snapshotPath, batchId) { base =>
             quoteSnapshot(base.fold(shaped)(_.unionByName(shaped)).coalesce(1))
           }
-          onSnapshot(snap, batchId)
-        } finally shaped.unpersist(blocking = false): Unit
+        }
+        onSnapshot(snap, batchId)
       }
       .start()
 

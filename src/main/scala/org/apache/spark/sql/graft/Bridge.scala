@@ -1,9 +1,12 @@
 package org.apache.spark.sql.graft
 
+import java.util.concurrent.CompletableFuture
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Column ⇄ catalyst Expression bridge. Spark 4 made the converters
   * `private[sql]` (Column now wraps a ColumnNode), so extension libraries
@@ -26,4 +29,16 @@ object Bridge {
   def analyzed(df: DataFrame): LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.analyzed
+
+  /** Daemon threads: a pending write never keeps the JVM alive. */
+  private lazy val asyncPool =
+    org.apache.spark.util.ThreadUtils.newDaemonCachedThreadPool("graft-async")
+
+  /** Runs `body` on a pooled thread with the caller's active session and
+    * local properties: a job it starts carries the caller's job group
+    * (so a streaming query's stop cancels it) and nests under the
+    * caller's SQL execution id. The caller must wait for the future. */
+  def async[T](spark: SparkSession)(body: => T): CompletableFuture[T] =
+    SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], asyncPool)(body)
 }

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import graft.streaming.Streams
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -860,6 +860,115 @@ class StreamingSpec extends SparkSpec {
     org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(genDir))
     assert(!new java.io.File(genDir).exists())
     assert(capRows(frame) == dashboard, "the pushed frame is driver-local")
+  }
+
+  /** Stages quote tick `t` (BTC moves, one new coin) under `root`. */
+  private def stageQuote(root: String, t: Int): Unit =
+    Graft.stageTick(spark, () => s"""[{"symbol":"BTC","name":"Bitcoin",
+      |"current_price":$t.0,"market_cap":9.0},{"symbol":"C$t","name":"coin $t",
+      |"current_price":1.0,"market_cap":$t.0}]""".stripMargin,
+      s"$root/ticks", Timestamp.valueOf(f"2024-03-01 00:00:$t%02d")): Unit
+
+  private def startQuotes(root: String) =
+    Graft.startQuoteStream(spark, s"$root/ticks", s"$root/store",
+      s"$root/ckpt", s"$root/snap", Trigger.ProcessingTime(0))((_, _) => ())
+
+  test("a failed store write ends the quote stream with its own error and " +
+    "no job left running; a restart on the same checkpoint replays the tick " +
+    "to the uninterrupted run's store partitions and snapshot generation") {
+    import org.apache.spark.graft.SparkInternals
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    def rows(dir: String) = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+    // uninterrupted: ticks 1-3 are batches 0-2
+    val ref = Files.createTempDirectory("graft_qfail_ref").toString
+    stageQuote(ref, 1)
+    val q0 = startQuotes(ref)
+    try (1 to 3).foreach { t =>
+      if (t > 1) stageQuote(ref, t)
+      q0.processAllAvailable()
+    } finally q0.stop()
+    val root = Files.createTempDirectory("graft_qfail").toString
+    stageQuote(root, 1)
+    val q1 = startQuotes(root)
+    val err = try {
+      q1.processAllAvailable()
+      stageQuote(root, 2); q1.processAllAvailable()
+      // a regular file where the store's partitions go: batch 2's write
+      // cannot make store/batch_id=2 (a file AT store/batch_id=2 would
+      // not do — an overwrite deletes whatever stands at its own path)
+      Files.move(Paths.get(s"$root/store"), Paths.get(s"$root/store-aside"))
+      Files.createFile(Paths.get(s"$root/store"))
+      stageQuote(root, 3)
+      intercept[StreamingQueryException](q1.processAllAvailable())
+    } finally q1.stop()
+    // the write's own error, not a future's wrapper around it
+    assert(err.getCause.isInstanceOf[org.apache.hadoop.fs.ParentNotDirectoryException] &&
+      err.getCause.getMessage.contains(s"$root/store"), err)
+    SparkInternals.flushListenerBus(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+      s"jobs still running: ${spark.sparkContext.statusTracker.getActiveJobIds.mkString(", ")}")
+    // mend the store and restart on the same checkpoint: batch 2 replays
+    Files.delete(Paths.get(s"$root/store"))
+    Files.move(Paths.get(s"$root/store-aside"), Paths.get(s"$root/store"))
+    val q2 = startQuotes(root)
+    try q2.processAllAvailable() finally q2.stop()
+    assert(q2.recentProgress.map(_.batchId).contains(2L))
+    (0 to 2).foreach { b =>
+      assert(rows(s"$root/store/batch_id=$b") == rows(s"$ref/store/batch_id=$b"), s"store batch $b")
+    }
+    assert(rows(s"$root/snap/batch_id=2") == rows(s"$ref/snap/batch_id=2"))
+  }
+
+  test("every job of a quote tick, the pooled-thread store write included, " +
+    "carries the query's job group, and a stop mid-tick leaves no job running") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicReference
+    import org.apache.spark.graft.SparkInternals
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]
+    val started = new AtomicReference(new CountDownLatch(1))
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        groups.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
+        started.get.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      // two queries in turn: a pooled thread kept from the first must
+      // not lend the first query's group to the second's store write
+      (1 to 2).foreach { i =>
+        val root = Files.createTempDirectory(s"graft_qgroup$i").toString
+        stageQuote(root, 1)
+        val q = startQuotes(root)
+        try {
+          q.processAllAvailable()
+          SparkInternals.flushListenerBus(sc)
+          groups.clear()
+          stageQuote(root, 2); q.processAllAvailable()
+          SparkInternals.flushListenerBus(sc)
+          val tick = groups.asScala.toSeq
+          // the tick wrote its store partition, so its job is among these
+          assert(Files.isDirectory(Paths.get(s"$root/store/batch_id=1")))
+          assert(tick.nonEmpty && tick.forall(_ == q.runId.toString),
+            s"query ${q.runId}: job groups $tick")
+        } finally q.stop()
+      }
+      val root = Files.createTempDirectory("graft_qstop").toString
+      stageQuote(root, 1)
+      val q = startQuotes(root)
+      try {
+        q.processAllAvailable()
+        started.set(new CountDownLatch(1))
+        stageQuote(root, 2)
+        assert(started.get.await(60, TimeUnit.SECONDS), "the tick started no job")
+      } finally q.stop()
+      SparkInternals.flushListenerBus(sc)
+      assert(sc.statusTracker.getActiveJobIds.isEmpty,
+        s"jobs still running after stop: ${sc.statusTracker.getActiveJobIds.mkString(", ")}")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("a quote tick starts no child process from Hadoop's Shell: no " +
