@@ -497,32 +497,6 @@ object Graft {
                 tieBreak: String): DataFrame =
     queries.Breadth19.wilderRsiSeries(df, keyCol, tsCol, valCol, tieBreak)
 
-  /** Wilder's directional movement system per key (DI+/DI−, DX,
-    * ADX) — the trend-strength recurrence-of-a-recurrence, one O(L)
-    * fold per key over calendar-bounded day bars. */
-  def adx(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-          tieBreak: String): DataFrame =
-    queries.Breadth22.adxSeries(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** True strength index per key: double EMA smoothing (13, 25) of the
-    * day-over-day momentum and its absolute value, one O(L) fold per
-    * key over calendar-bounded day bars. */
-  def tsi(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-          tieBreak: String): DataFrame =
-    queries.Breadth23.tsiSeries(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Supertrend per key: Wilder ATR-3 bands with the classic ratchet
-    * and flip rule — the trailing-stop overlay. */
-  def supertrend(df: DataFrame, keyCol: String, tsCol: String,
-                 valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth23.supertrendSeries(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Heikin-Ashi smoothed candles per key: the dyadic midpoint
-    * recurrence, one O(L) fold per key over daily bars. */
-  def heikinAshi(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-                 tieBreak: String): DataFrame =
-    queries.Breadth24.heikinAshi(df, keyCol, tsCol, valCol, tieBreak)
-
   /** Historical VaR + expected shortfall per key from the exact
     * ceil(n/5) day-move tail — order statistics, no interpolation. */
   def varEs(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
@@ -630,116 +604,6 @@ object Graft {
                 tieBreak: String): DataFrame =
     queries.Breadth28.massIndex(df, keyCol, tsCol, valCol, tieBreak)
 
-  /** DEMA(10) per key: Mulloy's lag-compensated double EMA — the
-    * Recurrence combinator's new-indicator template (one step function,
-    * batch + stream). Oracle-checked as q_dema. */
-  def dema(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-           tieBreak: String): DataFrame =
-    queries.Breadth28.dema(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** PPO(12,26) per key: MACD normalized to the slow EMA — scale-free
-    * momentum, comparable across price levels. Oracle-checked as
-    * q_ppo. */
-  def ppo(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-          tieBreak: String): DataFrame =
-    queries.Breadth28.ppo(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** RiskMetrics EWMA volatility (λ = 0.94) per key over day moves.
-    * Oracle-checked as q_ewma_vol. */
-  def ewmaVol(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-              tieBreak: String): DataFrame =
-    queries.Breadth69.ewmaVol(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Additive Holt–Winters(7) level/trend/weekday-season per key.
-    * Oracle-checked as q_holt_winters. */
-  def holtWinters(df: DataFrame, keyCol: String, tsCol: String,
-                  valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth99.holtWinters(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Croston's intermittent-demand forecast over positive day demands.
-    * Oracle-checked as q_croston. */
-  def croston(df: DataFrame, keyCol: String, tsCol: String,
-              qtyJsonField: String): DataFrame =
-    queries.Breadth99.croston(df, keyCol, tsCol, qtyJsonField)
-
-  /** Exact trailing-window median of day-bar closes per key.
-    * Oracle-checked as q_rolling_median. */
-  def rollingMedian(df: DataFrame, keyCol: String, tsCol: String,
-                    valCol: String, tieBreak: String,
-                    win: Int = 7): DataFrame =
-    queries.Breadth101.rollingMedian(df, keyCol, tsCol, valCol, tieBreak,
-      win)
-
-  /** Corwin–Schultz 2-day high-low spread proxy per key-day.
-    * Oracle-checked as q_cs_spread. */
-  def csSpread(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-               tieBreak: String): DataFrame =
-    queries.Breadth103.csSpread(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Trailing volume-weighted moving average per key-day.
-    * Oracle-checked as q_vwma. */
-  def vwma(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-           tieBreak: String, qtyJsonField: String, n: Int = 10): DataFrame =
-    queries.Breadth106.vwma(df, keyCol, tsCol, valCol, tieBreak,
-      qtyJsonField, n)
-
-  /** SMA envelope with integer-exact breakout flags. Oracle-checked as
-    * q_envelope. */
-  def envelope(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-               tieBreak: String, n: Int = 20,
-               permille: Long = 25L): DataFrame =
-    queries.Breadth106.envelope(df, keyCol, tsCol, valCol, tieBreak, n,
-      permille)
-
-  /** Disparity index 100·close/SMA per key-day. Oracle-checked as
-    * q_disparity. */
-  def disparity(df: DataFrame, keyCol: String, tsCol: String,
-                valCol: String, tieBreak: String, n: Int = 13): DataFrame =
-    queries.Breadth106.disparity(df, keyCol, tsCol, valCol, tieBreak, n)
-
-  /** Lo–MacKinlay variance ratio VR(q) per key from exact integer sums.
-    * Oracle-checked as q_variance_ratio. */
-  def varianceRatio(df: DataFrame, keyCol: String, tsCol: String,
-                    valCol: String, tieBreak: String, q: Int = 5): DataFrame =
-    queries.Breadth85.varianceRatio(df, keyCol, tsCol, valCol, tieBreak, q)
-
-  /** Elder Ray per key: EMA-13 mid + bull/bear power from the bar
-    * high/low. Oracle-checked as q_elder_ray. */
-  def elderRay(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-               tieBreak: String): DataFrame =
-    queries.Breadth28.elderRay(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Wilder parabolic SAR per key: the regime-switching stop-and-
-    * reverse recurrence. Oracle-checked as q_psar. */
-  def psar(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-           tieBreak: String): DataFrame =
-    queries.Breadth30.psar(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** WMA(10) per key: the linearly-weighted MA with an integer lag-sum
-    * numerator. Oracle-checked as q_wma. */
-  def wma(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-          tieBreak: String): DataFrame =
-    queries.Breadth31.wma(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Signed up/down streak length per key (integer recurrence).
-    * Oracle-checked as q_streak. */
-  def streak(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-             tieBreak: String): DataFrame =
-    queries.Breadth33.streak(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Connors RSI per key: (RSI3(close) + RSI2(streak) + PctRank₁₀₀)/3 —
-    * three recurrences + a 100-return ring in ONE fold. Oracle-checked
-    * as q_connors_rsi. */
-  def connorsRsi(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
-                 tieBreak: String): DataFrame =
-    queries.Breadth34.connorsRsi(df, keyCol, tsCol, valCol, tieBreak)
-
-  /** Elder impulse per key: green/red/blue from the joint EMA-13 /
-    * MACD-histogram direction. Oracle-checked as q_elder_impulse. */
-  def elderImpulse(df: DataFrame, keyCol: String, tsCol: String,
-                   valCol: String, tieBreak: String): DataFrame =
-    queries.Breadth35.elderImpulse(df, keyCol, tsCol, valCol, tieBreak)
-
   /** Undirected within-label kNN edge set over an embeddings frame
     * (vec_id, embedding, label). Oracle-checked via q_knn_triangles /
     * q_link_predict / q_graph_components. */
@@ -763,8 +627,7 @@ object Graft {
     queries.Breadth44.countMin(df, keyCol)
 
   /** Holt double-exponential level/trend/forecast series per key.
-    * Oracle-checked as q_holt; `streaming.Streams.streamingHolt`
-    * is its streaming twin. */
+    * Oracle-checked as q_holt. */
   def holt(df: DataFrame, keyCol: String, tsCol: String, valCol: String,
            tieBreak: String): DataFrame =
     queries.Breadth45.holtSeries(df, keyCol, tsCol, valCol, tieBreak)
@@ -847,8 +710,7 @@ object Graft {
                valCol: String, tieBreak: String): DataFrame =
     queries.Breadth55.turnover(df, keyCol, tsCol, valCol, tieBreak)
 
-  /** Information-driven volume bars. Oracle-checked as q_volume_bars;
-    * `streaming.Streams.streamingVpinBuckets` streams the same buckets. */
+  /** Information-driven volume bars. Oracle-checked as q_volume_bars. */
   def volumeBars(df: DataFrame, keyCol: String, tsCol: String,
                  valCol: String, tieBreak: String,
                  qtyJsonField: String): DataFrame =

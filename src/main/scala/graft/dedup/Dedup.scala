@@ -92,8 +92,8 @@ object Dedup {
     * per-band structs) — a union of per-band selects would re-run the
     * whole upstream MinHash aggregation once per band. */
   /** The per-row array of (band_idx, band_key) structs over signature
-    * columns h0..h{numHashes-1} — shared by the batch band table and the
-    * streaming screen so the band definition cannot drift. */
+    * columns h0..h{numHashes-1}, which [[lshBands]] explodes into the
+    * band table. */
   def lshBandStructs(bands: Int, rowsPerBand: Int): Column =
     array((0 until bands).map { b =>
       val cols = (b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"h$i"))
@@ -664,10 +664,9 @@ object Dedup {
     * corpus-wide hash fold (~6 task-s at sf0.1). Row-wise simhash keeps
     * the block column on the row: no shuffle, no join-back (the grouped
     * form previously cost an explode + 64-way bit aggregation + join).
-    * Streaming inputs bypass the memo by construction (the streaming
-    * screen uses streamingSimhashNearDups). Exposed so the bench can
-    * time the one-time fold on its OWN line (chain_simhash_sigs) per
-    * the shared-intermediate attribution contract (round-14 verdict):
+    * Exposed so the bench can time the one-time fold on its OWN line
+    * (chain_simhash_sigs) per the shared-intermediate attribution
+    * contract (round-14 verdict):
     * consumers' numbers stay their marginal band-join cost. */
   def simhashSigTable(docs: DataFrame, idCol: String, textCol: String,
                       blockCol: String): DataFrame =

@@ -28,9 +28,7 @@ case class Bar(close: Long, high: Long, low: Long, vol: Long)
   * bar rows and one O(L) loop per KEY (one UDF call per key — losing
   * codegen costs nothing at that granularity). The fold order is the
   * day order — identical to the DuckDB recursive-CTE oracles' join
-  * order — and a step function is shared VERBATIM with its streaming
-  * twin's transformWithState processor, so batch, stream and oracle
-  * agree bit-for-bit.
+  * order — so batch and oracle agree bit-for-bit.
   *
   * At 100 TB the shape holds: the shuffle is the |keys|·|days| bar grid
   * (already memoized session-wide via graft.store.Memo), the

@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** Sessionization: split each key's event stream into sessions separated
   * by inactivity gaps — THE canonical event-log transform (and the batch
-  * twin of Structured Streaming's `session_window`, which the streaming
-  * layer uses; this formulation is also expressible in ANSI SQL for the
-  * oracle).
+  * twin of Structured Streaming's `session_window`; this formulation is
+  * also expressible in ANSI SQL for the oracle).
   *
   * One window partition per key in time order: flag rows whose gap from
   * the previous event exceeds the timeout, running-sum the flags into a

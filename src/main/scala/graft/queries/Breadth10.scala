@@ -20,11 +20,10 @@ import org.apache.spark.sql.functions._
   * All four are ONE window shuffle on the series key: per-key state is a
   * running scalar (drawdown), a bounded ROWS frame (RSI, SMA), or the
   * |days|-sized bar aggregate (gap) — each form survives 100 TB because
-  * no window ever orders more than one key's rows, and the bounded
-  * frames lift verbatim to `transformWithState` (see
-  * `Streams.streamingDrawdown`). Float discipline matches the parity
-  * rules: comparisons and divisions use identical operands in both
-  * engines; rounding happens once, at the emit boundary.
+  * no window ever orders more than one key's rows. Float discipline
+  * matches the parity rules: comparisons and divisions use identical
+  * operands in both engines; rounding happens once, at the emit
+  * boundary.
   */
 object Breadth10 {
 
@@ -126,7 +125,7 @@ object Breadth10 {
         .orderBy(col("user_id").asc)),
 
     // 14-period RSI per tick (momentum oscillator). Bounded trailing
-    // frame — the state a streaming twin would hold is 14 deltas per key.
+    // frame of 14 deltas per key.
     "q_rsi" -> ((s, dir) =>
       rsi(Tables.events(s, dir), "user_id", "value",
         Seq(col("ts").asc, col("event_id").asc), period = 14)

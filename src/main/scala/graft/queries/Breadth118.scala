@@ -17,9 +17,7 @@ import org.apache.spark.sql.functions._
   *    x ← x + K·(z − x), P ← (1 − K)·P⁻. The fold is the shared
   *    Recurrence combinator; the oracle's recursive CTE repeats the
   *    SAME IEEE operand order, so the unrounded doubles hash-match
-  *    bit-exactly (the q_holt_winters precedent). A streaming twin
-  *    (`Streams.streamingKalman`) runs `kalmanStep` verbatim on O(1)
-  *    RocksDB keyed state.
+  *    bit-exactly (the q_holt_winters precedent).
   *  - **q_dtw_market**: dynamic-time-warping distance from each key's
   *    close series to the MARKET series (the per-day rank-exact lower
   *    median close across keys) — "which keys move like the market,
@@ -45,12 +43,11 @@ object Breadth118 {
   private[graft] val KalmanR = 64.0
 
   /** Kalman accumulator: posterior mean (cents), posterior variance,
-    * and this step's gain — the streaming twin's O(1) ValueState. */
+    * and this step's gain, O(1) per key. */
   private[graft] case class KalmanAcc(x: Double, p: Double, k: Double)
 
-  /** One local-level Kalman step — shared verbatim by batch and
-    * stream. The first bar seeds x = z, P = R (gain 1 by convention:
-    * the seed IS the observation). */
+  /** One local-level Kalman step of the batch fold. The first bar seeds
+    * x = z, P = R (gain 1 by convention: the seed IS the observation). */
   private[graft] def kalmanStep(st: Option[KalmanAcc], c: Long): KalmanAcc =
     st match {
       case None => KalmanAcc(c.toDouble, KalmanR, 1.0)

@@ -19,9 +19,8 @@ import org.apache.spark.sql.functions._
   *    clamped at zero — b_t = max(0, b_{t-1} + Δclose_t), the
   *    inventory/withdrawal semantics. The clamp makes it a true
   *    recurrence (no window frame or prefix-sum rewrite expresses it):
-  *    all-integer fold on the shared combinator, recursive-CTE oracle,
-  *    and a transformWithState streaming twin on the SAME step
-  *    (`Streams.streamingClampedBalance`).
+  *    all-integer fold on the shared combinator and a recursive-CTE
+  *    oracle.
   *
   * Scale shape: grams partial-aggregate map-side and the gram count
   * table is |distinct grams|-bounded; the balance fold is the memoized
@@ -60,11 +59,11 @@ object Breadth123 {
       .orderBy(col(idCol).asc)
   }
 
-  /** Clamp accumulator: previous close + clamped balance — the
-    * streaming twin's O(1) ValueState. */
+  /** Clamp accumulator: previous close + clamped balance, O(1) per
+    * key. */
   private[graft] case class ClampAcc(prevClose: Long, bal: Long)
 
-  /** One clamped-balance step — shared verbatim by batch and stream.
+  /** One clamped-balance step of the batch fold.
     * The first bar opens flat (balance 0, no move). */
   private[graft] def clampStep(st: Option[ClampAcc], c: Long): ClampAcc =
     st match {

@@ -11,11 +11,9 @@ import org.apache.spark.sql.functions._
   * the cumulative deviation m_t = m_{t−1} + (x_t − mean_t − δ), its
   * running minimum, and the absorbing alarm flag for
   * m_t − min m > λ. δ = 0.5 and λ = 500 cent units are binary-exact
-  * doubles; every step is the same IEEE operand order in the fold,
-  * the oracle's recursive CTE and the streaming twin
-  * (`Streams.streamingPageHinkley` — verbatim step on O(1) RocksDB
-  * state), so the unrounded doubles hash-match (the q_kalman
-  * precedent).
+  * doubles; every step is the same IEEE operand order in the fold and
+  * the oracle's recursive CTE, so the unrounded doubles hash-match (the
+  * q_kalman precedent).
   *
   * Scale shape: the memoized bar grid + one O(L) fold per key. */
 object Breadth130 {
@@ -24,11 +22,11 @@ object Breadth130 {
   private[graft] val PhDelta = 0.5
   private[graft] val PhLambda = 500.0
 
-  /** Page–Hinkley accumulator — the streaming twin's ValueState. */
+  /** Page–Hinkley accumulator, O(1) per key. */
   private[graft] case class PhAcc(n: Long, sum: Long, m: Double,
                                   minM: Double, alarmed: Boolean)
 
-  /** One Page–Hinkley step — shared verbatim by batch and stream. */
+  /** One Page–Hinkley step of the batch fold. */
   private[graft] def phStep(st: Option[PhAcc], c: Long): PhAcc = {
     val prev = st.getOrElse(PhAcc(0L, 0L, 0.0, 0.0, alarmed = false))
     val n = prev.n + 1

@@ -34,14 +34,8 @@ object Breadth146 {
 
   private[graft] val AmsK = 5
 
-  /** JVM twin of Text.tokens (lower + trim + collapse whitespace +
-    * split) for the streaming processor. */
-  def tokensJvm(s: String): Seq[String] =
-    s.trim.toLowerCase(java.util.Locale.ROOT)
-      .replaceAll("\\s+", " ").split(" ", -1).toSeq
-
-  /** JVM twin of [[amsSign]] — the same md5 bit parity, for the
-    * streaming processor and driver-side reference checks. */
+  /** JVM twin of [[amsSign]] — the same md5 bit parity, for
+    * driver-side reference checks. */
   def amsSignJvm(tok: String, j: Int): Long = {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest((tok + "#" + j).getBytes("UTF-8"))

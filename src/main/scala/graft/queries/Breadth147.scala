@@ -27,8 +27,7 @@ import org.apache.spark.sql.functions._
   * per-experiment key at production scale — thousands of concurrent
   * experiments shard naturally), one min-index aggregate, one join
   * back on (stream, index) for the crossing row. Nothing global: the
-  * decision is per-key state O(1) — the same recurrence the streaming
-  * tier's transformWithState twins carry.
+  * decision is per-key state O(1).
   */
 object Breadth147 {
 
@@ -43,25 +42,6 @@ object Breadth147 {
   /** floor(1e6·ln((1−β)/α)) at α = β = 0.05 → ln 19. */
   private[graft] val BoundQ: Long =
     math.floor(1.0e6 * math.log(19.0)).toLong
-
-  /** O(1) per-stream SPRT state: observation count, running LLR, and
-    * the (absorbing) decision snapshot. */
-  case class SprtAcc(k: Long, llr: Long, decided: Boolean,
-                     kd: Long, llrd: Long)
-
-  /** The shared batch/streaming step: fold one Bernoulli observation.
-    * The batch window implementation computes exactly this recurrence
-    * (prefix sums + first crossing); the streaming twin folds it on
-    * keyed state — parity is by shared constants AND shared algebra. */
-  def sprtStep(st: Option[SprtAcc], x: Long): SprtAcc = {
-    val p = st.getOrElse(SprtAcc(0L, 0L, decided = false, -1L, 0L))
-    val k = p.k + 1
-    val llr = p.llr + (if (x == 1L) IncSucc else IncFail)
-    if (p.decided) p.copy(k = k, llr = llr)
-    else if (llr >= BoundQ || llr <= -BoundQ)
-      SprtAcc(k, llr, decided = true, k, llr)
-    else SprtAcc(k, llr, decided = false, -1L, 0L)
-  }
 
   /** Per-stream LLR trajectory rows (stream, k, x, llr). */
   private[graft] def sprtPath(events: DataFrame): DataFrame = {

@@ -167,11 +167,11 @@ object Breadth178 {
     * no longer corrupt LIKE matching or token boundaries, a bug class
     * the differential could not catch because the oracle shares the
     * construction. Patterns and journey strings live entirely in the
-    * ENCODED domain (the '>'-separated `pattern` column too), so the
-    * streaming screen rebuilds LIKE templates from mined patterns
-    * without re-encoding. Shared: Column form here, plain-Scala twin
-    * [[encodeTokScala]] for the `Streams.streamingJourney` twin, SQL twin
-    * [[encodeTokSql]] for the oracle. */
+    * ENCODED domain (the '>'-separated `pattern` column too), so LIKE
+    * templates rebuild from mined patterns without re-encoding. Shared:
+    * Column form here, plain-Scala twin [[encodeTokScala]] (the
+    * reference in StoreGcSpec), SQL twin [[encodeTokSql]] for the
+    * oracle. */
   private[graft] def encodeTok(c: Column): Column =
     replace(replace(replace(replace(replace(
       c, lit("~"), lit("~t")), lit("%"), lit("~p")), lit("_"), lit("~u")),

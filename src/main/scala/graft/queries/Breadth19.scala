@@ -25,10 +25,9 @@ import org.apache.spark.sql.functions._
   * histories (the round-7 ADVICE item this closes). The fold order is
   * the day order — identical to the DuckDB recursive-CTE oracle's join
   * order — and every step is the same IEEE double expression with the
-  * same operand order, so batch (both forms), stream
-  * (graft.streaming.Streams.streamingEmaMacd / streamingWilderRsi) and
-  * oracle agree bit-for-bit (Wave19Spec pins loop == HOF == step
-  * function; the driver oracle re-proves loop == DuckDB at three SFs).
+  * same operand order, so batch (both forms) and oracle agree
+  * bit-for-bit (Wave19Spec pins loop == HOF; the driver oracle re-proves
+  * loop == DuckDB at three SFs).
   *
   * Seeding conventions (pinned in all three engines): EMA seeds at the
   * first close (EMA_1 = c_1), the MACD signal seeds at the first MACD

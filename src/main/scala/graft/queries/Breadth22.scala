@@ -31,9 +31,8 @@ import org.apache.spark.sql.functions._
   * Exact parity: +DM/−DM/TR and their warm-up sums are integers; the
   * smoothed averages and the DX float sum accumulate in DAY ORDER with
   * the same IEEE expression and operand order in all three engines —
-  * the batch fold (one Scala step function), the streaming twin
-  * (graft.streaming.Streams.streamingAdx runs the SAME step), and the
-  * DuckDB oracle's two chained recursive CTEs (the DMI recurrence, then
+  * the batch fold (one Scala step function) and the DuckDB oracle's
+  * two chained recursive CTEs (the DMI recurrence, then
   * the ADX recurrence over its dx rows) — so the driver compare is
   * bit-for-bit.
   *
@@ -49,8 +48,7 @@ object Breadth22 {
 
   /** The full per-bar accumulator, OUTPUTS INCLUDED (outDx is this
     * bar's DX or None — ADX is only emitted on DX-defined bars, exactly
-    * the oracle's left-join shape). O(1) per key; the streaming twin
-    * persists it verbatim as RocksDB ValueState. */
+    * the oracle's left-join shape). O(1) per key. */
   private[graft] case class AdxAcc(
       lastH: Long, lastL: Long, lastC: Long,
       j: Long, spdm: Long, smdm: Long, str: Long,
@@ -58,8 +56,7 @@ object Breadth22 {
       k: Long, sdx: Double, adx: Option[Double],
       outDx: Option[Double])
 
-  /** One keyed step of the ADX fold — shared verbatim by the batch
-    * array fold and the streaming processor. */
+  /** One keyed step of the ADX array fold. */
   private[graft] def adxStep(st: Option[AdxAcc], h: Long, l: Long,
                              c: Long): AdxAcc = {
     val n = AdxN

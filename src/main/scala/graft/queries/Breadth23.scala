@@ -19,9 +19,7 @@ import org.apache.spark.sql.functions._
   *
   * Exact parity: momenta and true ranges are integer cents; every
   * smoothed value is the same IEEE expression with the same operand
-  * order in the batch fold, the streaming twins
-  * (graft.streaming.Streams.streamingTsi / streamingSupertrend run the
-  * SAME step functions), and the DuckDB oracle — TSI as one recursive
+  * order in the batch fold and the DuckDB oracle — TSI as one recursive
   * CTE, Supertrend as TWO chained recursions (the ATR recurrence, then
   * the band/trend recurrence over its banded rows — the q_adx oracle's
   * two-stage shape). Band comparisons run close-as-double against the
@@ -39,12 +37,12 @@ object Breadth23 {
   private[graft] val StMult = 2.0
 
   /** TSI accumulator: previous close + the four EMA values (None until
-    * their seeds). O(1) per key — the streaming twin's ValueState. */
+    * their seeds). O(1) per key. */
   private[graft] case class TsiAcc(lastC: Long,
                                    e13: Option[Double], e25: Option[Double],
                                    e13a: Option[Double], e25a: Option[Double])
 
-  /** One keyed TSI step — shared verbatim by batch fold and stream.
+  /** One keyed TSI step of the batch fold.
     * EMA13 seeds at the first momentum, EMA25 at the first EMA13 value
     * (the q_macd signal-seed convention). */
   private[graft] def tsiStep(st: Option[TsiAcc], c: Long): TsiAcc = st match {
@@ -83,7 +81,7 @@ object Breadth23 {
                                   fub: Option[Double], flb: Option[Double],
                                   up: Option[Boolean])
 
-  /** One keyed Supertrend step — shared verbatim by batch and stream.
+  /** One keyed Supertrend step of the batch fold.
     * ATR is house-convention Wilder (simple-mean seed at bar StAtrN,
     * (prev·(n−1)+tr)/n after); bands seed at the first ATR bar with
     * trend = close > upper band; after that the classic ratchet: the

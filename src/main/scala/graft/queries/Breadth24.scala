@@ -105,10 +105,10 @@ object Breadth24 {
   }
 
   /** Heikin-Ashi accumulator: the previous HA open/close — O(1) per
-    * key, the streaming twin's ValueState. Dyadic by induction. */
+    * key. Dyadic by induction. */
   private[graft] case class HaAcc(haO: Double, haC: Double)
 
-  /** One keyed Heikin-Ashi step — shared verbatim by batch and stream.
+  /** One keyed Heikin-Ashi step of the batch fold.
     * Seed: haO₁ = (O+C)/2; step: haOᵢ = (haOᵢ₋₁ + haCᵢ₋₁)/2; always
     * haC = (O+H+L+C)/4. Every value is a dyadic rational (exact IEEE). */
   private[graft] def haStep(st: Option[HaAcc], o: Long, h: Long, l: Long,

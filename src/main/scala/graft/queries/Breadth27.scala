@@ -40,10 +40,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: one groupBy to the |keys|·|days| bar table, one
   * (key, day) vol aggregate joined on the bar grid, then per-key
   * windows (CMF/DPO) or one executor-local O(L) fold per key
-  * (ADL-osc, force index — the EMA-family shape). Streaming twins for
-  * both recurrences ride the transformWithState scaffolding over a
-  * volume-carrying bar stream (graft.streaming.Streams
-  * .streamingForceIndex / streamingChaikinOsc).
+  * (ADL-osc, force index — the EMA-family shape).
   */
 object Breadth27 {
 
@@ -75,15 +72,6 @@ object Breadth27 {
       .groupBy(col(keyCol), col("__day").as("day"))
       .agg(sum(col("__q")).as("__v"))
       .filter(col("__v").isNotNull)
-
-  /** The per-bar money-flow quantum as a plain function — shared
-    * verbatim by the streaming twin; the Column expression in
-    * [[volBars]] computes the identical IEEE steps (spec-pinned). */
-  private[graft] def mfvQuantum(h: Long, l: Long, c: Long, v: Long): Long =
-    if (h != l)
-      math.floor(1.0e6 * ((2L * c - h - l) * v).toDouble / (h - l).toDouble)
-        .toLong
-    else 0L
 
   /** OHLC bars joined with day volume and the per-bar money-flow
     * quantum mfv_q = floor(1e6·(2C−H−L)·v/(H−L)) (0 on doji bars). */
@@ -138,15 +126,14 @@ object Breadth27 {
           lit(DpoW * 100.0)).as("dpo"))
   }
 
-  /** Force-index accumulator: previous close + the EMA13 value — the
-    * streaming twin's O(1) ValueState. */
+  /** Force-index accumulator: previous close + the EMA13 value, O(1)
+    * per key. */
   private[graft] case class FiAcc(prevClose: Long, fi: Option[Long],
                                   ema: Option[Double])
 
-  /** One force-index step — shared verbatim by batch and stream. The
-    * first bar only seeds the previous close; from the second bar,
-    * fi = (C_t − C_{t−1})·v_t (integer cents·qty) and the EMA13 seeds
-    * at the first fi. */
+  /** One force-index step of the batch fold. The first bar only seeds
+    * the previous close; from the second bar, fi = (C_t − C_{t−1})·v_t
+    * (integer cents·qty) and the EMA13 seeds at the first fi. */
   private[graft] def fiStep(st: Option[FiAcc], c: Long, v: Long): FiAcc =
     st match {
       case None => FiAcc(c, None, None)
@@ -160,12 +147,12 @@ object Breadth27 {
     }
 
   /** ADL/Chaikin accumulator: the running integer ADL quantum plus the
-    * two EMAs — the streaming twin's O(1) ValueState. */
+    * two EMAs, O(1) per key. */
   private[graft] case class AdlAcc(adlQ: Long, e3: Double, e10: Double)
 
-  /** One ADL/Chaikin-oscillator step — shared verbatim by batch and
-    * stream. adl_q accumulates the bar's money-flow quantum; both EMAs
-    * seed at the first ADL value and read the NEW adl each step. */
+  /** One ADL/Chaikin-oscillator step of the batch fold. adl_q
+    * accumulates the bar's money-flow quantum; both EMAs seed at the
+    * first ADL value and read the NEW adl each step. */
   private[graft] def adlStep(st: Option[AdlAcc], mfvQ: Long): AdlAcc =
     st match {
       case None => AdlAcc(mfvQ, mfvQ.toDouble, mfvQ.toDouble)

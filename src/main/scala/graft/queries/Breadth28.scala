@@ -30,11 +30,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: one groupBy to the |keys|·|days| bar table, one
   * executor-local O(L) fold per key (EMA-family shape; KAMA's state
   * is an O(w) close ring, constant per key), and for the mass index
-  * one additional key window over the folded ratio rows. Streaming
-  * twins for NVI/PVI (volume-carrying bars), TRIX and KAMA ride the
-  * transformWithState scaffolding; the mass index's window-over-fold
-  * hybrid rides an O(w) ratio ring (Streams.streamingMassIndex),
-  * bit-equal to the batch via the shared `massRatioStep`.
+  * one additional key window over the folded ratio rows.
   */
 object Breadth28 {
 
@@ -49,11 +45,11 @@ object Breadth28 {
   private[graft] val DemaN = 10
   private[graft] val DemaA = 2.0 / (DemaN + 1.0)
 
-  /** NVI/PVI accumulator — the streaming twin's O(1) ValueState. */
+  /** NVI/PVI accumulator, O(1) per key. */
   private[graft] case class NviAcc(prevClose: Long, prevVol: Long,
                                    nvi: Double, pvi: Double)
 
-  /** One NVI/PVI step — shared verbatim by batch and stream. Both
+  /** One NVI/PVI step of the batch fold. Both
     * indices seed at 1000; on a volume DOWN day the NVI multiplies by
     * (1 + roc), on a volume UP day the PVI does; equal volume moves
     * neither. roc = (C_t − C_{t−1})/C_{t−1} in the cents domain; a
@@ -125,11 +121,10 @@ object Breadth28 {
     KamaAcc(ring, kama)
   }
 
-  /** DEMA accumulator: the two chained EMA stages — the streaming
-    * twin's O(1) ValueState. */
+  /** DEMA accumulator: the two chained EMA stages, O(1) per key. */
   private[graft] case class DemaAcc(e1: Double, e2: Double)
 
-  /** One DEMA step — shared verbatim by batch and stream. Both stages
+  /** One DEMA step of the batch fold. Both stages
     * seed at the first close; e2 smooths the SAME step's new e1 (the
     * TRIX chaining convention). DEMA = 2·e1 − e2 at emit. */
   private[graft] def demaStep(st: Option[DemaAcc], c: Long): DemaAcc =
@@ -141,9 +136,8 @@ object Breadth28 {
     }
 
   /** DEMA(10) per key — Mulloy's lag-compensated double EMA, the
-    * combinator's new-indicator demonstration: one step function + one
-    * emit struct, batch below and stream via [[graft.streaming.Streams
-    * .streamingDema]], both on the same `demaStep`. Emitted in the
+    * combinator's new-indicator demonstration: one step function
+    * (`demaStep`) + one emit struct. Emitted in the
     * price domain (one terminal /100, mirrored by the oracle). */
   private[graft] def dema(df: DataFrame, keyCol: String, tsCol: String,
                           valCol: String, tieBreak: String): DataFrame =
@@ -259,9 +253,7 @@ object Breadth28 {
     * Recurrence fold (e2 reads the SAME step's new e1); the window sum
     * rides on the emitted quanta. */
   /** One mass-index EMA-pair step over a bar's range, emitting the
-    * 1e-8-quantized ratio — shared VERBATIM by the batch fold and the
-    * streaming ring twin (Streams.streamingMassIndex), so the two are
-    * bit-equal by construction. */
+    * 1e-8-quantized ratio. */
   private[graft] def massRatioStep(st: Option[(Double, Double)],
                                    high: Long, low: Long)
       : ((Double, Double), Long) = {

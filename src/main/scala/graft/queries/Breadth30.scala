@@ -32,11 +32,7 @@ import org.apache.spark.sql.functions._
   * one groupBy shuffle shared session-wide; PSAR is one executor-local
   * O(L) fold per key (O(1) state: regime, SAR, EP, AF, a 2-bar
   * high/low ring); the window queries are one key-partitioned window
-  * each; Sortino/n-day stats are one hash aggregate. Streaming twin
-  * for PSAR via transformWithState (the same step function verbatim);
-  * StochRSI's window-over-fold hybrid stays batch (the mass-index
-  * stance — a streaming form needs an RSI ring, deferred until a user
-  * asks).
+  * each; Sortino/n-day stats are one hash aggregate.
   */
 object Breadth30 {
 
@@ -46,7 +42,7 @@ object Breadth30 {
   private[graft] val CmoW = 14
   private[graft] val RocN = 10
 
-  /** PSAR accumulator — the streaming twin's O(1) ValueState: regime
+  /** PSAR accumulator, O(1) per key: regime
     * flag, SAR (cents-domain double), extreme point (integer cents),
     * acceleration factor, and the prior two bars' low/high (the
     * Wilder clamp ring; both slots seed at bar 1's values so the
@@ -55,7 +51,7 @@ object Breadth30 {
                                     af: Double, l1: Long, l2: Long,
                                     h1: Long, h2: Long)
 
-  /** One PSAR step — shared verbatim by batch and stream. Seed: long
+  /** One PSAR step of the batch fold. Seed: long
     * regime, SAR at bar 1's low, EP at its high, AF = 0.02. Step:
     * SAR' = SAR + AF·(EP − SAR), clamped against the prior two bars'
     * lows (long) / highs (short); the current bar piercing the clamped

@@ -112,8 +112,7 @@ object Breadth33 {
 
   /** One signed-streak step (integer-only): up day extends a positive
     * run (or starts one), down day extends a negative run, unchanged
-    * close resets to 0. Shared by the batch fold and any future
-    * streaming twin. */
+    * close resets to 0. */
   private[graft] def streakStep(prev: Long, c: Long, pc: Long): Long =
     if (c > pc) (if (prev > 0) prev + 1 else 1L)
     else if (c < pc) (if (prev < 0) prev - 1 else -1L)

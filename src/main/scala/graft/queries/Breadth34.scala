@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   * fold and in the oracle's list-carrying recursion. Fertility is an
   * integer count ratio.
   *
-  * Scale shape: one bar-grid fold per key with O(1)+O(100) state (the
-  * streaming-twin shape); fertility is a map-only projection.
+  * Scale shape: one bar-grid fold per key with O(1)+O(100) state;
+  * fertility is a map-only projection.
   */
 object Breadth34 {
 

@@ -43,8 +43,7 @@ object Breadth45 {
                                     fcErr: Option[Double])
 
   /** One Holt step: seed (ℓ=c, t=0) on the first bar; the forecast
-    * error compares this close to the PREVIOUS state's ℓ+t. Shared
-    * verbatim with the streaming twin. */
+    * error compares this close to the PREVIOUS state's ℓ+t. */
   private[graft] def holtStep(st: Option[HoltAcc], c: Double)
       : (HoltAcc, HoltRow) = st match {
     case None =>

@@ -27,22 +27,6 @@ object Breadth52 {
 
   private[graft] val BopWin = 5
 
-  /** The three-bar verdicts as one pure function of the last three
-    * bars' (open, close) — shared semantics with the Column form below,
-    * pinned equal by the streaming parity spec; what the live screen's
-    * keyed ring evaluates per arriving bar. */
-  private[graft] def threeBarFlags(o2: Long, c2: Long, o1: Long, c1: Long,
-                                   o: Long, c: Long)
-      : (Boolean, Boolean, Boolean) = {
-    val tws = c2 > o2 && c1 > o1 && c > o && c1 > c2 && c > c1 &&
-      o1 >= o2 && o1 <= c2 && o >= o1 && o <= c1
-    val tbc = c2 < o2 && c1 < o1 && c < o && c1 < c2 && c < c1 &&
-      o1 <= o2 && o1 >= c2 && o <= o1 && o >= c1
-    val ms = c2 < o2 && c > o &&
-      math.abs(c1 - o1) * 3L <= math.abs(c2 - o2) && c * 2L > o2 + c2
-    (tws, tbc, ms)
-  }
-
   private[graft] def threeBarPatterns(df: DataFrame, keyCol: String,
                                       tsCol: String, valCol: String,
                                       tieBreak: String): DataFrame = {

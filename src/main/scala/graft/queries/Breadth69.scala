@@ -12,9 +12,7 @@ import org.apache.spark.sql.functions._
   *    λ=0.94 exponentially-weighted variance of day-bar cent moves,
   *    v_t = λ·v_{t−1} + (1−λ)·x_t², seeded at the first move's x²,
   *    emitted as √v in the price domain. A [[graft.ops.Recurrence]]
-  *    fold (O(1) state per key) with a transformWithState streaming
-  *    twin on the SAME step function ([[graft.streaming.Streams
-  *    .streamingEwmaVol]]). x² stays an exact integer product before
+  *    fold (O(1) state per key). x² stays an exact integer product before
   *    the one cast; λ is written as a division (94/100) in BOTH
   *    engines so neither parses a DECIMAL literal.
   *  - **q_qstick**: Chande's QStick(5) — the 5-bar SMA of the candle

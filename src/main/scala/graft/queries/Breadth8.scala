@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   *    window pass over that reduced set — the all-pairs dominance
   *    self-join (O(n²) over parts) never happens;
   *  - snapshot time travel: two committed generations of a keyed store
-  *    (the layout `Streams.startSnapshotStream` maintains) read back
+  *    (the layout `Streams.startQuoteStream` maintains) read back
   *    side by side — "what changed since the snapshot" is a join of two
   *    generation scans, not an event-log replay;
   *  - robust outlier screen (median absolute deviation): the

@@ -112,44 +112,6 @@ object Breadth85 {
       .orderBy(col(keyCol).asc)
   }
 
-  /** O(q) per-key state of the incremental VR fold: previous close, the
-    * last q−1 moves, and the six exact integer sums the batch aggregate
-    * keeps. (Seq, not Vector — the product encoder contract.) */
-  case class VrAcc(prevClose: Long, ring: Seq[Long], n1: Long, sx: Long,
-                   sxx: Long, n2: Long, ss: Long, sss: Long)
-
-  /** One bar of the incremental VR fold — the same integer sums the
-    * batch window/aggregate form accumulates, updated in O(1). */
-  private[graft] def vrStep(st: Option[VrAcc], close: Long,
-                            q: Int = VrQ): VrAcc = st match {
-    case None => VrAcc(close, Seq.empty, 0L, 0L, 0L, 0L, 0L, 0L)
-    case Some(a) =>
-      val x = close - a.prevClose
-      val n1 = a.n1 + 1
-      if (a.ring.size == q - 1) {
-        val qs = a.ring.sum + x
-        VrAcc(close, (a.ring :+ x).takeRight(q - 1), n1, a.sx + x,
-          a.sxx + x * x, a.n2 + 1, a.ss + qs, a.sss + qs * qs)
-      } else
-        VrAcc(close, a.ring :+ x, n1, a.sx + x, a.sxx + x * x,
-          a.n2, a.ss, a.sss)
-  }
-
-  /** The VR emitted from a fold state — the batch formula verbatim
-    * (same operand order, same 6-dp HALF_UP round). */
-  private[graft] def vrOf(a: VrAcc, q: Int = VrQ): Option[Double] = {
-    val v1num = a.n1 * a.sxx - a.sx * a.sx
-    if (a.n2 > 1 && v1num > 0) {
-      val v1 = v1num.toDouble / (a.n1 * a.n1).toDouble
-      val vq = (a.n2 * a.sss - a.ss * a.ss).toDouble /
-        (a.n2 * a.n2).toDouble
-      // valueOf = the double's shortest repr — bit-matched to Spark's
-      // round(col, 6) semantics (NOT the exact-binary BigDecimal ctor)
-      Some(java.math.BigDecimal.valueOf(vq / (q.toDouble * v1))
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue())
-    } else None
-  }
-
   val defs: Map[String, Q] = Map(
     "q_variance_ratio" -> ((s, dir) =>
       varianceRatio(Tables.events(s, dir), "user_id", "ts", "value",

@@ -37,12 +37,12 @@ object Breadth99 {
   private val ThA = 1.0 / 5.0   // theta SES
 
   /** Holt–Winters accumulator — level, trend, the 7 weekday seasonals
-    * (Seq: the transformWithState product-encoder note). */
+    * (Seq, not Vector: the product encoder handles Seq fields). */
   private[graft] case class HwAcc(l: Double, t: Double, s: Seq[Double])
   private[graft] case class HwOut(level: Double, trend: Double,
                                   seasonal: Double, fitted: Option[Double])
 
-  /** One HW step — shared verbatim by batch and stream. `w` is the
+  /** One HW step of the batch fold. `w` is the
     * 0=Sunday..6 weekday of the bar's day. */
   private[graft] def hwStep(st: Option[HwAcc], c: Double,
                             w: Int): (HwAcc, HwOut) = st match {
@@ -90,7 +90,7 @@ object Breadth99 {
   /** Croston accumulator: smoothed demand size + inter-demand gap. */
   private[graft] case class CrAcc(z: Double, p: Double)
 
-  /** One Croston step — shared verbatim by batch and stream. */
+  /** One Croston step of the batch fold. */
   private[graft] def crostonStep(st: Option[CrAcc], d: Double,
                                  g: Double): CrAcc = st match {
     case None => CrAcc(d, g)

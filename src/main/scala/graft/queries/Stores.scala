@@ -159,7 +159,7 @@ object Stores {
   val TimeTravelCutoff = "2024-01-15 00:00:00"
 
   /** A two-generation keyed snapshot store (the `batch_id=N` committed-
-    * generation layout `Streams.startSnapshotStream` maintains): per-user
+    * generation layout `Streams.startQuoteStream` maintains): per-user
     * last-wins state as of `TimeTravelCutoff` (generation 0) and current
     * (generation 1). Each generation is |keys|-sized — reading "the state
     * as of the snapshot" is a key-sized scan, not an event-log replay. */

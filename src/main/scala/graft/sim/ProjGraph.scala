@@ -268,7 +268,8 @@ object ProjGraph {
   /** Bit-exact Scala twin of `round(Similarity.cosine(a, b), 6)`: the
     * same single left-to-right fold as the native codegen expression
     * (dot/na/nb accumulated together, result dot/(√na·√nb)), then
-    * Spark's HALF_UP decimal rounding (the Streams.round4 pattern).
+    * Spark's HALF_UP decimal rounding (BigDecimal of the double's
+    * shortest representation).
     * Zero norm → None, matching the expression's null. */
   private[graft] def roundedCosine(a: Array[Float],
                                    b: Array[Float]): Option[Double] = {

@@ -80,35 +80,6 @@ class AsofNativeSpec extends SparkSpec {
     assert(gotWindow === want, "union+window tolerance")
   }
 
-  test("stream-static as-of: the native merge enriches streaming probes " +
-    "per micro-batch, equal to the batch form across a batch split") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val f = facts(Seq(
-      ("a", 10L, 1L, 1.0), ("a", 20L, 2L, 2.0), ("a", 20L, 3L, 2.5),
-      ("a", 30L, 4L, 3.0), ("b", 15L, 5L, 9.0)))
-    val allProbes = Seq(
-      ("a", 5L), ("a", 20L),            // batch 1
-      ("a", 25L), ("b", 15L), ("c", 50L)) // batch 2
-    val mem = MemoryStream[(String, Long)]
-    val streamed = graft.streaming.Streams.streamStaticAsof(
-      mem.toDF().toDF("k", "pts"), f, "k", "ts", "pts", Seq("v"), "tb")
-    assert(streamed.isStreaming, "the enriched frame must stay a stream")
-    val got = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Option[Double])]
-    val q = streamed.writeStream.outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.select(col("k"), col("pts"), col("asof_v")).collect().foreach(r =>
-          got += ((r.getString(0), r.getLong(1),
-            if (r.isNullAt(2)) None else Some(r.getDouble(2))))): Unit
-      }.start()
-    mem.addData(allProbes.take(2): _*); q.processAllAvailable()
-    mem.addData(allProbes.drop(2): _*); q.processAllAvailable()
-    q.stop()
-    // batch ground truth over the CONCATENATED probes — the split must
-    // be invisible (no stream-side state to get wrong)
-    assert(got.sortBy(t => (t._1, t._2)).toSeq === run(f, probes(allProbes)))
-  }
-
   test("null keys and null times match nothing, on either side") {
     val f = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(

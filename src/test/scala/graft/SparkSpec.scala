@@ -31,12 +31,6 @@ abstract class SparkSpec extends AnyFunSuite {
     }
   }
 
-  /** Runs `body` under the RocksDB state store provider, which
-    * `transformWithState` requires. */
-  def withRocks[A](body: => A): A =
-    withConf("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
-
   /** `body`'s result and the number of Spark jobs started while it ran
     * (the listener bus is drained before and after). */
   def jobsDuring[T](body: => T): (T, Int) = {

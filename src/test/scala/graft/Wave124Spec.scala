@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.Breadth118
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Fixtures for the hundred-nineteenth wave (Breadth118 Kalman filter +
@@ -95,37 +94,5 @@ class Wave124Spec extends SparkSpec {
     assert(byKey(2L) === 0L)
     assert(byKey(1L) === byKey(3L) && byKey(1L) > 0L)
     assert(got.forall(r => r.getLong(1) === 3L && r.getLong(2) === 3L))
-  }
-
-  test("streamingKalman == batch q_kalman bit-for-bit across " +
-    "micro-batch splits") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.{BarRow, Streams}
-    withRocks {
-    val closes = Seq(1000L, 1100L, 1210L, 1100L, 1155L, 1270L, 1200L)
-    val rows = closes.zipWithIndex.map { case (c, i) =>
-      BarRow(1L, java.time.LocalDate.of(2024, 1, i + 1), c) }
-    val mem = MemoryStream[BarRow]
-    val q = Streams.streamingKalman(mem.toDS())
-      .writeStream.format("memory").queryName("kalman_snap")
-      .outputMode("append").start()
-    Seq(0 until 2, 2 until 5, 5 until 7).foreach { rg =>
-      mem.addData(rg.map(rows): _*); q.processAllAvailable()
-    }
-    q.stop()
-    val tick = closes.zipWithIndex.map { case (c, i) =>
-      (1L, c.toDouble / 100.0, i * 10L + 1, f"2024-01-${i + 1}%02d 15:00:00")
-    }.toDF("user_id", "value", "event_id", "at")
-      .withColumn("ts", to_timestamp_ntz(col("at"))).drop("at")
-    val gotS = spark.table("kalman_snap")
-      .select("day", "kalman", "gain").collect()
-      .map(r => (r.getDate(0).toString, r.getDouble(1), r.getDouble(2)))
-      .sortBy(_._1).toSeq
-    val gotB = Breadth118.kalman(tick, "user_id", "ts", "value", "event_id")
-      .select("day", "kalman", "gain").collect()
-      .map(r => (r.getDate(0).toString, r.getDouble(1), r.getDouble(2)))
-      .sortBy(_._1).toSeq
-    assert(gotS === gotB)
-    }
   }
 }

@@ -1,9 +1,6 @@
 package graft
 
 import graft.queries.Breadth123
-import graft.streaming.Streams
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 /** Fixtures for the hundred-twenty-fourth wave (Breadth123 dup-5-gram
   * coverage + clamped balance). */
@@ -37,39 +34,5 @@ class Wave129Spec extends SparkSpec {
     assert(st.bal === 0L)
     st = Breadth123.clampStep(Some(st), 850L)    // +50 from the floor
     assert(st.bal === 50L)
-  }
-
-  test("streamingClampedBalance == batch q_clamped_balance across " +
-    "micro-batch splits (a clamp landing on the boundary)") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.BarRow
-    withRocks {
-      val closes = Seq(1000L, 1100L, 800L, 850L, 1200L, 900L)
-      val rows = closes.zipWithIndex.map { case (c, i) =>
-        BarRow(1L, java.time.LocalDate.of(2024, 1, i + 1), c) }
-      val mem = MemoryStream[BarRow]
-      val q = Streams.streamingClampedBalance(mem.toDS())
-        .writeStream.format("memory").queryName("clamp_snap")
-        .outputMode("append").start()
-      // split right after the clamp-to-zero bar
-      Seq(0 until 3, 3 until 6).foreach { rg =>
-        mem.addData(rg.map(rows): _*); q.processAllAvailable()
-      }
-      q.stop()
-      val tick = closes.zipWithIndex.map { case (c, i) =>
-        (1L, c.toDouble / 100.0, i * 10L + 1,
-          f"2024-01-${i + 1}%02d 15:00:00")
-      }.toDF("user_id", "value", "event_id", "at")
-        .withColumn("ts", to_timestamp_ntz(col("at"))).drop("at")
-      val gotS = spark.table("clamp_snap").select("day", "balance")
-        .collect().map(r => (r.getDate(0).toString, r.getLong(1)))
-        .sortBy(_._1).toSeq
-      val gotB = Breadth123.clampedBalance(tick, "user_id", "ts",
-        "value", "event_id").select("day", "balance")
-        .collect().map(r => (r.getDate(0).toString, r.getLong(1)))
-        .sortBy(_._1).toSeq
-      assert(gotS === gotB)
-      assert(gotS.map(_._2) === Seq(0L, 100L, 0L, 50L, 400L, 100L))
-    }
   }
 }

@@ -1,13 +1,10 @@
 package graft
 
 import graft.queries.Breadth19
-import graft.streaming.Streams
 import org.apache.spark.sql.functions._
 
 /** Closed-form fixtures for the nineteenth wave (Breadth19 EMA-family
-  * recurrences), plus the cross-pin that the batch Column fold computes
-  * the SAME doubles as the Scala step functions the streaming
-  * processors run — the lemma the stream==batch parity builds on. */
+  * recurrences). */
 class Wave19Spec extends SparkSpec {
   import spark.implicits._
 
@@ -26,53 +23,6 @@ class Wave19Spec extends SparkSpec {
       .orderBy("day").select("close_cents", "ema")
       .as[(Long, Double)].collect().toSeq
     assert(got === Seq.fill(5)((300L, 3.0)))
-  }
-
-  test("ema/macd: batch Column fold == the streaming step function, bit-for-bit") {
-    val closes = Seq(10.0, 12.0, 11.0, 15.0, 14.5, 9.0, 9.25, 13.0)
-    val batch = Breadth19.macdSeries(ticks(dailySeries(1L, closes)),
-      "user_id", "ts", "value", "event_id")
-      .orderBy("day").select("close_cents", "macd", "macd_signal", "hist")
-      .as[(Long, Double, Double, Double)].collect().toSeq
-    val batchEma = Breadth19.emaSeries(ticks(dailySeries(1L, closes)),
-      "user_id", "ts", "value", "event_id", n = 20)
-      .orderBy("day").select("ema").as[Double].collect().toSeq
-    // reference: the exact fold the streaming processor runs
-    var st: Option[graft.streaming.EmaMacdAcc] = None
-    val ref = closes.map { v =>
-      val c = math.floor(v * 100.0 + 0.5).toLong
-      val a = Streams.emaMacdStep(st, c)
-      st = Some(a)
-      (c, a.e20 / 100.0, (a.e12 - a.e26) / 100.0, a.sig / 100.0,
-        (a.e12 - a.e26 - a.sig) / 100.0)
-    }
-    assert(batch === ref.map(r => (r._1, r._3, r._4, r._5)))
-    assert(batchEma === ref.map(_._2))
-    // macd of a first bar is exactly 0 (fast == slow == seed)
-    assert(batch.head._2 === 0.0 && batch.head._3 === 0.0)
-  }
-
-  test("wilder rsi: warm-up nulls through bar 15, then the smoothed value; " +
-    "batch fold == streaming step") {
-    // 20 bars alternating +2/-1 cents steps around 10.00
-    val closes = (0 until 20).scanLeft(10.0) { (v, i) =>
-      if (i % 2 == 0) v + 0.02 else v - 0.01
-    }.tail
-    val batch = Breadth19.wilderRsiSeries(ticks(dailySeries(1L, closes)),
-      "user_id", "ts", "value", "event_id")
-      .orderBy("day").select("close_cents", "rsi_wilder")
-      .as[(Long, Option[Double])].collect().toSeq
-    var st: Option[graft.streaming.WilderAcc] = None
-    val ref = closes.map { v =>
-      val c = math.floor(v * 100.0 + 0.5).toLong
-      val a = Streams.wilderStep(st, c)
-      st = Some(a)
-      (c, Streams.wilderRsi(a))
-    }
-    assert(batch === ref)
-    // first 14 diffs are warm-up: bars 1..14 unscored, bar 15 scored
-    assert(batch.take(14).forall(_._2.isEmpty))
-    assert(batch.drop(14).forall(_._2.isDefined))
   }
 
   test("wilder rsi: an all-gains series pins at 100 (zero loss average)") {

@@ -1,12 +1,10 @@
 package graft
 
 import graft.queries.Breadth45
-import graft.streaming.{BarRow, Streams}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Closed-form fixtures for the forty-sixth wave (Breadth45 Holt +
-  * Theil–Sen) and the Holt streaming twin. */
+  * Theil–Sen). */
 class Wave45Spec extends SparkSpec {
   import spark.implicits._
 
@@ -50,38 +48,5 @@ class Wave45Spec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getString(3))).toSeq
     assert(got === Seq((1L, 10L, 1.0, "up")))
-  }
-
-  test("streamingHolt: bit-equal to the batch fold across micro-batch " +
-    "splits") {
-    val closes = Seq(100L, 120L, 90L, 130L, 125L, 140L)
-    val barRows = closes.zipWithIndex.map { case (c, i) =>
-      BarRow(1L, java.time.LocalDate.of(2024, 1, i + 1), c) }
-    implicit val sqlCtx = spark.sqlContext
-    withRocks {
-      val mem = MemoryStream[BarRow]
-      val q = Streams.streamingHolt(mem.toDS())
-        .writeStream.format("memory").queryName("holt_snap")
-        .outputMode("append").start()
-      Seq(0 until 2, 2 until 5, 5 until 6).foreach { rg =>
-        mem.addData(rg.map(barRows): _*); q.processAllAvailable()
-      }
-      q.stop()
-    }
-    val got = spark.table("holt_snap")
-      .select("day", "level", "trend", "forecast", "fc_err")
-      .collect().map(r => (r.getDate(0).toString, r.getDouble(1),
-        r.getDouble(2), r.getDouble(3),
-        if (r.isNullAt(4)) None else Some(r.getDouble(4))))
-      .sortBy(_._1).toSeq
-    val tick = closes.zipWithIndex.map { case (c, i) => (1L, c, i + 1) }
-    val want = Breadth45.holtSeries(ticks(tick),
-        "user_id", "ts", "value", "event_id")
-      .select("day", "level", "trend", "forecast", "fc_err")
-      .collect().map(r => (r.getDate(0).toString, r.getDouble(1),
-        r.getDouble(2), r.getDouble(3),
-        if (r.isNullAt(4)) None else Some(r.getDouble(4))))
-      .sortBy(_._1).toSeq
-    assert(got === want)
   }
 }

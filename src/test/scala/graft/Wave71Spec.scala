@@ -1,13 +1,10 @@
 package graft
 
 import graft.queries.Breadth69
-import graft.streaming.{BarRow, Streams}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Closed-form fixtures for the seventieth wave (Breadth69 EWMA
-  * volatility / QStick / Williams fractals) + the ewma_vol streaming
-  * twin's bit-parity pin. */
+  * volatility / QStick / Williams fractals). */
 class Wave71Spec extends SparkSpec {
   import spark.implicits._
 
@@ -34,39 +31,6 @@ class Wave71Spec extends SparkSpec {
     val want = Seq(None) ++ Seq(v1, v2, v3, v4).map(v =>
       Some(math.sqrt(v) / 100.0))
     assert(got === want)
-  }
-
-  test("streamingEwmaVol == batch q_ewma_vol bit-for-bit across a " +
-    "micro-batch split") {
-    implicit val sqlCtx = spark.sqlContext
-    withRocks {
-    val closes = Seq(1000L, 1020L, 990L, 1050L, 1050L, 1010L, 1110L)
-    val barRows = closes.zipWithIndex.map { case (c, i) =>
-      BarRow(1L, java.time.LocalDate.of(2024, 1, i + 1), c) }
-    val mem = MemoryStream[BarRow]
-    val q = Streams.streamingEwmaVol(mem.toDS())
-      .writeStream.format("memory").queryName("ewmavol_snap")
-      .outputMode("append").start()
-    Seq(0 until 2, 2 until 5, 5 until 7).foreach { rg =>
-      mem.addData(rg.map(barRows): _*); q.processAllAvailable()
-    }
-    q.stop()
-    val tick = closes.zipWithIndex.map { case (c, i) =>
-      (1L, c.toDouble / 100.0, i.toLong, f"2024-01-${i + 1}%02d 15:00:00")
-    }.toDF("user_id", "value", "event_id", "at")
-      .withColumn("ts", to_timestamp_ntz(col("at"))).drop("at")
-    val got = spark.table("ewmavol_snap").select("day", "ewma_vol")
-      .collect().map(r => (r.getDate(0).toString,
-        if (r.isNullAt(1)) None else Some(r.getDouble(1))))
-      .sortBy(_._1).toSeq
-    val want = Graft.ewmaVol(tick, "user_id", "ts", "value", "event_id")
-      .select("day", "ewma_vol")
-      .collect().map(r => (r.getDate(0).toString,
-        if (r.isNullAt(1)) None else Some(r.getDouble(1))))
-      .sortBy(_._1).toSeq
-    assert(got === want)
-    assert(got.size === 7 && got.head._2 === None)
-    }
   }
 
   test("qstick: 5-bar body SMA with full-window warm-up") {
